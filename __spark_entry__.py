@@ -49,10 +49,9 @@ _DRIVER_CHECKED_R01_R02 = {
 # VERDICT.md round 2 — they have exact-oracle evidence, so they yield their
 # window slot to the names that have none.
 _JUDGE_CHECKED_R02 = {
-    "pagerank_bipartite", "streaming_sessionize", "streaming_session_window",
-    "scd2_intervals", "interpolate_linear", "decontaminate_ngram_overlap",
-    "multimodal_resize", "column_profile", "referential_integrity_audit",
-    "triangle_count", "source_mixture_resample", "ntile_deciles",
+    "pagerank_bipartite", "scd2_intervals", "interpolate_linear",
+    "decontaminate_ngram_overlap", "multimodal_resize", "triangle_count",
+    "source_mixture_resample", "ntile_deciles",
 }
 
 

@@ -34,8 +34,12 @@ from .core.session import get_spark
 from .plans import export, ingest, merge, preprocess, validate
 from .sources import kobo, pds, sheets
 
-STAGES = ("ingest", "preprocess", "validate", "merge",
-          "export-landings", "export-tracks")
+#: stage -> its output directory under the lakehouse root, in DAG order
+_OUTPUT_DIRS = {"ingest": "raw", "preprocess": "preprocessed",
+                "validate": "validated", "merge": "merged_trips",
+                "export-landings": "export_landings",
+                "export-tracks": "matched_tracks"}
+STAGES = tuple(_OUTPUT_DIRS)
 
 
 def _points(spark: SparkSession, root: str):
@@ -76,35 +80,27 @@ def run_stage(spark: SparkSession, stage: str, root: str,
             else:
                 loaded[name] = (kobo.read_landed_json(spark, path), dialect)
         out = ingest.ingest_landings(loaded)
-        write_table(out, f"{root}/raw")
     elif stage == "preprocess":
         out = preprocess.preprocess_landings(read_table(spark, f"{root}/raw"))
-        write_table(out, f"{root}/preprocessed")
     elif stage == "validate":
         out = validate.validate_landings(
             read_table(spark, f"{root}/preprocessed"),
             strict_parity=strict_parity)
-        write_table(out, f"{root}/validated")
     elif stage == "merge":
         out = merge.merge_trips(
             read_table(spark, f"{root}/validated"),
             pds.read_trips_csv(spark, f"{root}/landing/trips.csv"),
             sheets.read_devices_csv(spark, f"{root}/landing/devices.csv"))
-        write_table(out, f"{root}/merged_trips")
     elif stage == "export-landings":
         out = export.export_landings(read_table(spark, f"{root}/validated"))
-        write_table(out, f"{root}/export_landings")
     elif stage == "export-tracks":
         out = export.export_matched_tracks(
             read_table(spark, f"{root}/merged_trips"), _points(spark, root))
-        write_table(out, f"{root}/matched_tracks")
     else:
         raise ValueError(f"unknown stage {stage!r}; one of {STAGES}")
-    dest = {"ingest": "raw", "preprocess": "preprocessed",
-            "validate": "validated", "merge": "merged_trips",
-            "export-landings": "export_landings",
-            "export-tracks": "matched_tracks"}[stage]
-    return read_table(spark, f"{root}/{dest}").count()
+    dest = f"{root}/{_OUTPUT_DIRS[stage]}"
+    write_table(out, dest)
+    return read_table(spark, dest).count()
 
 
 def main(argv: list[str] | None = None) -> int:

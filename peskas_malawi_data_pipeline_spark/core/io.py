@@ -15,9 +15,7 @@ get partition pruning; callers opt in via ``partition_by``.
 
 from __future__ import annotations
 
-import datetime as _dt
 import os
-import subprocess
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,33 +34,13 @@ def read_table(spark: SparkSession, path: str, columns: Iterable[str] | None = N
     return df
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
-                fmt: str = "parquet") -> None:
+def write_table(df: DataFrame, path: str,
+                partition_by: list[str] | None = None) -> None:
     """Truncate-and-load (reference `mdb_collection_push`, R/storage.R:80-106)."""
-    writer = df.write.mode("overwrite").format(fmt)
+    writer = df.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
-
-
-def add_version(filename: str, extension: str = "", sha_nchar: int = 7,
-                sep: str = "__") -> str:
-    """Versioned filename helper (reference `add_version`, R/utils.R:30-52).
-
-    Appends ``YYYYmmddHHMMSS_<gitsha{sha_nchar}>`` to ``filename``.
-    """
-    stamp = _dt.datetime.now(_dt.timezone.utc).strftime("%Y%m%d%H%M%S")
-    try:
-        sha = subprocess.run(
-            ["git", "rev-parse", f"--short={sha_nchar}", "HEAD"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    except Exception:
-        sha = "nogit"
-    version = f"{stamp}_{sha}"
-    if extension and not extension.startswith("."):
-        extension = "." + extension
-    return f"{filename}{sep}{version}{extension}"
 
 
 def upsert_partitions(df: DataFrame, path: str,
@@ -150,48 +128,6 @@ def compact_table(spark: SparkSession, path: str, target_files: int,
                if not f.rsplit("/", 1)[-1].startswith("."))
 
 
-def compact_delta_table(spark: SparkSession, path: str,
-                        target_files: int) -> int:
-    """Delta Lake binding of the compaction commit slot: rewrite a Delta
-    table into ``target_files`` files as ONE ACID metadata transaction.
-
-    With a table format the side-directory + ``swap=`` protocol of
-    :func:`compact_table` is unnecessary: Delta reads resolve to a log
-    snapshot, so read → ``repartition(n)`` → ``mode("overwrite")`` of the
-    SAME table is a transactional self-overwrite — the new files and the
-    log entry removing the old ones commit together, and a concurrent
-    reader sees the pre- or post-compaction snapshot, never a partial or
-    missing table (the crash-window the rename swap documents, closed the
-    same way :class:`VersionedParquetTable`'s pointer commit closes it).
-
-    The write sets ``dataChange=false`` (the standard Delta small-file
-    compaction recipe): the commit rewrites the same rows, so marking it a
-    non-data change keeps Delta **streaming** sources from aborting on a
-    detected update and stops concurrent appenders from hitting spurious
-    conflict aborts. Batch-snapshot safety alone (above) does NOT extend
-    to streaming readers without this flag.
-
-    Requires ``delta-spark`` on the session (import-gated; this sandbox
-    prohibits installs, so the binding is exercised by a skip-gated test
-    that records the environment refusal — tests/test_plans.py)."""
-    import importlib.util
-
-    if importlib.util.find_spec("delta") is None:
-        raise ModuleNotFoundError(
-            "delta-spark is not installed; compact_delta_table needs the "
-            "Delta Lake runtime (pip install delta-spark + the "
-            "spark.sql.extensions/catalog confs). Use compact_table with "
-            "a swap= strategy, or VersionedParquetTable.compact, on "
-            "plain parquet.")
-    df = spark.read.format("delta").load(path)
-    (df.repartition(target_files).write.format("delta")
-     .option("dataChange", "false")
-     .mode("overwrite").save(path))
-    return sum(1 for f in
-               spark.read.format("delta").load(path).inputFiles()
-               if not f.rsplit("/", 1)[-1].startswith("."))
-
-
 class VersionedParquetTable:
     """Metadata-commit table: object-store-safe truncate-and-load and
     compaction with NO directory renames — the production ``swap=``
@@ -261,8 +197,7 @@ class VersionedParquetTable:
         directory before the pointer commit, so it is transactional with
         the data: a reader never sees meta from one version with data from
         another. This is the slot idempotent writers use to record their
-        progress marker (e.g. the last applied streaming batch id —
-        streaming.ingest_stream.run_available_now_merge)."""
+        progress marker (e.g. the last applied batch id)."""
         return self._stage_and_commit(df, partition_by, meta, audit=False)
 
     def _stage_and_commit(self, df: DataFrame,
@@ -385,79 +320,3 @@ class VersionedParquetTable:
                 removed.append(path)
         return removed
 
-
-# ---------------------------------------------------------------------------
-# Storage adapters — S4/K1 parity seam
-# ---------------------------------------------------------------------------
-#
-# The reference's inter-stage IR is MongoDB (`mdb_collection_pull` /
-# `mdb_collection_push`, R/storage.R:26-106). The engine's native IR is
-# parquet, but stage plans address storage through this adapter contract so
-# the backend is swappable: ``read(spark, locator, columns)`` returns a
-# DataFrame, ``write(df, locator)`` has truncate-and-load semantics (the
-# whole target is replaced, idempotently — R/storage.R:89-102).
-
-class ParquetAdapter:
-    """Adapter over the native parquet tables (locator = directory path)."""
-
-    def read(self, spark: SparkSession, locator: str,
-             columns: Iterable[str] | None = None) -> DataFrame:
-        return read_table(spark, locator, columns)
-
-    def write(self, df: DataFrame, locator: str,
-              partition_by: list[str] | None = None) -> None:
-        write_table(df, locator, partition_by)
-
-
-class MongoDBAdapter:
-    """Adapter over the MongoDB Spark connector (locator = collection name).
-
-    Reproduces the reference contract exactly: reads pull a whole collection
-    (R/storage.R:26-51), writes are truncate-and-load — the connector's
-    ``SaveMode.Overwrite`` drops the collection then inserts all rows,
-    matching ``remove("{}")`` + insert (R/storage.R:89-102). The reference's
-    column-order metadata document (R/storage.R:36-48) is unnecessary:
-    DataFrame schemas are ordered.
-
-    The connector jar (``org.mongodb.spark:mongo-spark-connector``) is
-    optional at test time; option construction is a pure function so the
-    contract is testable without a live cluster.
-    """
-
-    FORMAT = "mongodb"
-
-    def __init__(self, connection_uri: str, database: str) -> None:
-        self.connection_uri = connection_uri
-        self.database = database
-
-    def options(self, locator: str) -> dict[str, str]:
-        return {
-            "connection.uri": self.connection_uri,
-            "database": self.database,
-            "collection": locator,
-        }
-
-    def read(self, spark: SparkSession, locator: str,
-             columns: Iterable[str] | None = None) -> DataFrame:
-        df = spark.read.format(self.FORMAT).options(**self.options(locator)).load()
-        if columns is not None:
-            df = df.select(*columns)
-        return df
-
-    def write(self, df: DataFrame, locator: str,
-              partition_by: list[str] | None = None) -> None:
-        # partition_by has no MongoDB equivalent; collections are sharded by
-        # server-side shard keys, not writer-side layout
-        (df.write.format(self.FORMAT).mode("overwrite")
-         .options(**self.options(locator)).save())
-
-
-def get_adapter(backend: str, **kwargs):
-    """Resolve a storage adapter: ``"parquet"`` (default IR) or
-    ``"mongodb"`` (reference-parity; pass connection_uri= and database=)."""
-    if backend == "parquet":
-        return ParquetAdapter()
-    if backend == "mongodb":
-        return MongoDBAdapter(**kwargs)
-    raise ValueError(f"unknown storage backend {backend!r}; "
-                     f"expected 'parquet' or 'mongodb'")

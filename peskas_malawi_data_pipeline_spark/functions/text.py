@@ -101,8 +101,7 @@ def md5_prefix_hash(col: Column, seed: str = "", hex_chars: int = 8) -> Column:
     hex chars of md5(seed || value) — 4·``hex_chars`` bits — as a bigint
     (``hex_chars`` ≤ 15 so the value fits int64 exactly). Identical in any
     engine with md5 (DuckDB: ``CAST('0x' || substr(md5(seed || v), 1, n)
-    AS BIGINT)``). The default 8 chars = 32 bits; sketches.kmv_distinct
-    uses 13 (52 bits, clear of double rounding)."""
+    AS BIGINT)``). The default 8 chars = 32 bits."""
     if not 1 <= hex_chars <= 15:
         raise ValueError(f"hex_chars must be in [1, 15] (got {hex_chars})")
     return F.conv(F.substring(F.md5(F.concat(F.lit(seed), col)),

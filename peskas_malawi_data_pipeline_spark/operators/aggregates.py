@@ -66,8 +66,7 @@ def time_bucket_agg(df: DataFrame, ts_col: str, minutes: int,
                     bucket_name: str = "time_bucket") -> DataFrame:
     """A2+E13 — fixed-window event-time aggregation (10-minute GPS track
     rollup, `R/export.R:160-173`): floor the timestamp, group on
-    (bucket, keys). The same shape Structured Streaming uses for windowed
-    aggs, so the streaming variant (streaming.ingest_stream) shares semantics.
+    (bucket, keys).
     """
     from ..functions.expressions import floor_time
 
@@ -209,8 +208,7 @@ def incremental_rollup(state: DataFrame, batch_partials: DataFrame,
     measures belong here — sums, counts, min/max, and anything derivable
     from them downstream (means = sum/count; variance via sum + sum of
     squares). Holistic measures (exact percentiles, distinct counts) do
-    not merge; keep those on the full-scan path or a mergeable sketch
-    (sketches.kmv_distinct).
+    not merge; keep those on the full-scan path.
 
     Plan: unionByName + ONE groupBy. The daily batch is partial-aggregated
     at source (map-side combine shrinks it before any shuffle); the state

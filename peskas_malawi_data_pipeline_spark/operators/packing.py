@@ -120,244 +120,6 @@ def pack_greedy_sequential(df: DataFrame, token_col: str,
     return sharded.groupBy("shard").applyInPandas(pack, schema)
 
 
-def pack_sequences(encoded: DataFrame, ids_col: str = "token_ids",
-                   id_col: str = "doc_id", seq_len: int = 2048,
-                   n_shards: int = 8, boundary_id: int = 0,
-                   with_spans: bool = False) -> DataFrame:
-    """Materialize fixed-length TRAINING SEQUENCES from per-document
-    token-id arrays (``bpe.bpe_encode_ids`` output): per shard, documents
-    are laid back-to-back in ``id_col`` order with a ``boundary_id``
-    marker appended after each document, and the id stream is cut every
-    ``seq_len`` tokens — concat-and-chunk on IDS, the layout an LLM
-    trainer actually loads. Documents may straddle a cut (their ids split
-    across two sequences); the final sequence of each shard is emitted
-    unpadded (``n_tokens < seq_len`` — pad or drop is the trainer's
-    policy, not the pipeline's). Returns one row per sequence:
-    ``(shard, seq_id, input_ids array<long>, n_tokens)``; within a
-    shard, sequence ``seq_id`` covers stream positions
-    ``[seq_id·seq_len, (seq_id+1)·seq_len)`` contiguously.
-
-    ``with_spans=True`` additionally emits ``doc_spans
-    array<struct<doc_id, off, len>>`` — which document owns which slice
-    of the sequence (0-based ``off`` within the sequence; each span
-    INCLUDES the document's trailing boundary token when it falls in
-    this sequence). This is the attention/loss-mask provenance a trainer
-    needs to avoid cross-document attention or to mask per-doc loss;
-    spans are ordered by ``off`` and their lengths sum exactly to
-    ``n_tokens`` (pinned by the `packed_span_stats` oracle). Zero extra
-    shuffles: the span is carried on the SAME fragment row the ids
-    already ride.
-
-    Scale shape: two shuffles total, both moving ≈ the output's own
-    bytes (which is the floor — the materialized sequences ARE that
-    data): the per-shard window for running offsets, then a groupBy
-    (shard, seq_id) whose input is one FRAGMENT per (document,
-    sequence-it-touches) pair — ≈ n_docs + n_sequences rows, each
-    carrying only the id slice that lands in that sequence (never the
-    whole document per sequence). Fragment reassembly is an
-    ``array_sort`` over the few fragments of one sequence (answer-sized
-    per group), not a window. No Python, no driver loop; shards are
-    independent units exactly as in the other packers, so 100 TB runs
-    as ``n_shards`` ≈ cluster-cores independent streams."""
-    if seq_len < 1:
-        raise ValueError(f"seq_len must be >= 1 (got {seq_len})")
-    base = encoded.select(
-        id_col,
-        F.concat(F.col(ids_col).cast("array<long>"),
-                 F.array(F.lit(boundary_id).cast("long"))).alias("__ids"))
-    sharded = _with_shard(base, id_col, n_shards)
-    w = (Window.partitionBy("shard").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    g = (sharded
-         .withColumn("__n", F.size("__ids").cast("long"))
-         .withColumn("__start",
-                     F.coalesce(F.sum("__n").over(w), F.lit(0)))
-         .withColumn("__end", F.col("__start") + F.col("__n")))
-    # one row per (doc, sequence it touches): __n >= 1 always (the
-    # boundary marker), so __end > __start and the sequence range is
-    # never empty
-    frag = g.select(
-        id_col, "shard", "__ids", "__start", "__end",
-        F.explode(F.sequence(F.expr(f"__start div {seq_len}"),
-                             F.expr(f"(__end - 1) div {seq_len}")))
-        .alias("seq_id"))
-    lo = F.greatest(F.col("__start"), F.col("seq_id") * seq_len)
-    hi = F.least(F.col("__end"), (F.col("seq_id") + 1) * seq_len)
-    piece = F.slice(F.col("__ids"),
-                    (lo - F.col("__start") + 1).cast("int"),
-                    (hi - lo).cast("int"))
-    if not with_spans:
-        frags = frag.select(
-            "shard", "seq_id",
-            F.struct(lo.alias("o"), piece.alias("p")).alias("__f"))
-        return (frags.groupBy("shard", "seq_id")
-                .agg(F.flatten(F.transform(
-                    F.array_sort(F.collect_list("__f")), lambda s: s["p"]))
-                    .alias("input_ids"))
-                .withColumn("n_tokens", F.size("input_ids").cast("long")))
-    span = F.struct(
-        F.col(id_col).alias("doc_id"),
-        (lo - F.col("seq_id") * seq_len).cast("long").alias("off"),
-        (hi - lo).cast("long").alias("len"))
-    frags = frag.select(
-        "shard", "seq_id",
-        F.struct(lo.alias("o"), piece.alias("p"), span.alias("s"))
-        .alias("__f"))
-    agg = frags.groupBy("shard", "seq_id").agg(
-        F.array_sort(F.collect_list("__f")).alias("__fs"))
-    return (agg.select(
-        "shard", "seq_id",
-        F.flatten(F.transform(F.col("__fs"), lambda s: s["p"]))
-        .alias("input_ids"),
-        F.transform(F.col("__fs"), lambda s: s["s"]).alias("doc_spans"))
-        .withColumn("n_tokens", F.size("input_ids").cast("long")))
-
-
-#: Schema of the per-shard packing state carried between incremental
-#: batches: total tokens laid so far and the OPEN (partial) final
-#: sequence's ids — ≤ seq_len tokens per shard, answer-sized always.
-PACK_STATE_SCHEMA = ("shard int, stream_len long, tail_ids array<long>")
-
-
-def empty_pack_state(spark) -> DataFrame:
-    """The zero state for :func:`pack_sequences_incremental` (no shard
-    has laid any tokens)."""
-    return spark.createDataFrame([], PACK_STATE_SCHEMA)
-
-
-def pack_sequences_incremental(encoded: DataFrame, state: DataFrame,
-                               ids_col: str = "token_ids",
-                               id_col: str = "doc_id",
-                               seq_len: int = 2048, n_shards: int = 8,
-                               boundary_id: int = 0
-                               ) -> tuple[DataFrame, DataFrame]:
-    """O(increment) sequence packing: pack a NEW batch of encoded
-    documents as a continuation of previously packed output, without
-    touching (or re-emitting) any prior sequence. Returns
-    ``(completed, new_state)``: the sequences this batch COMPLETED
-    (every one exactly ``seq_len`` tokens — the open tail is withheld,
-    it may still grow) and the updated per-shard state
-    (:data:`PACK_STATE_SCHEMA`).
-
-    APPEND-ONLY CONTRACT: every new document's ``id_col`` must sort
-    AFTER every previously packed id (the daily-batch watermark case —
-    monotone ids). Under that contract the concatenation of all
-    batches' ``completed`` plus the final state's open tails is
-    EXACTLY :func:`pack_sequences` over the full corpus (the
-    incremental-equals-full-replay property test pins it): each shard's
-    token stream is the same bytes in the same order, only cut
-    incrementally. Use :func:`pack_state_tails` to materialize the
-    final partial sequences when closing the stream.
-
-    Scale shape: per batch, the increment pays the same two shuffles as
-    the batch packer (per-shard window over NEW docs only, fragment
-    groupBy over NEW fragments only); the state is ``n_shards`` rows
-    carrying at most ``seq_len − 1`` ids each and rides in as a
-    broadcast. A shard with no new documents keeps its open tail via
-    the same fragment path (the tail re-enters as a pseudo-fragment,
-    stays incomplete, and returns to the state unchanged) — no special
-    cases, no corpus-history reads. Spans are not supported on the
-    incremental path (carry provenance per batch if needed).
-
-    EAGER: the sharded (id, __ids) frame and the seqs⋈totals frame are
-    materialized inside this call. Both returned frames derive from the
-    SAME encode lineage twice over (``seqs`` and ``batch_tot`` each
-    scan ``encoded``; ``completed`` and ``new_state`` each re-derive
-    both), so a caller that actions the two returns — and every caller
-    does: the state must be concrete before the next batch reads it —
-    paid the upstream encode ~5× per batch. Measured on the r14 bench
-    box (isolated min-of-3, sf0.1): incremental_pack_stats 11.0 → ~6 s,
-    streaming_incremental_pack 15.5 → ~10 s; at scale the win is a
-    constant factor on every batch's encode leg. The barrier caches
-    only the increment (never history), exactly the frames the batch
-    consumes ≥2×."""
-    if seq_len < 1:
-        raise ValueError(f"seq_len must be >= 1 (got {seq_len})")
-    from ..core.barrier import materialize as _mat
-    st = state.select("shard", "stream_len", "tail_ids")
-    base = encoded.select(
-        id_col,
-        F.concat(F.col(ids_col).cast("array<long>"),
-                 F.array(F.lit(boundary_id).cast("long"))).alias("__ids"))
-    sharded = _mat(_with_shard(base, id_col, n_shards))
-    w = (Window.partitionBy("shard").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    g = (sharded
-         .withColumn("__n", F.size("__ids").cast("long"))
-         .withColumn("__loc", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-         .join(F.broadcast(st.select("shard", "stream_len")), "shard",
-               "left")
-         .withColumn("__start",
-                     F.coalesce(F.col("stream_len"), F.lit(0))
-                     + F.col("__loc"))
-         .withColumn("__end", F.col("__start") + F.col("__n")))
-    frag = g.select(
-        "shard", "__ids", "__start", "__end",
-        F.explode(F.sequence(F.expr(f"__start div {seq_len}"),
-                             F.expr(f"(__end - 1) div {seq_len}")))
-        .alias("seq_id"))
-    lo = F.greatest(F.col("__start"), F.col("seq_id") * seq_len)
-    hi = F.least(F.col("__end"), (F.col("seq_id") + 1) * seq_len)
-    piece = F.slice(F.col("__ids"),
-                    (lo - F.col("__start") + 1).cast("int"),
-                    (hi - lo).cast("int"))
-    new_frags = frag.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.struct(lo.alias("o"), piece.alias("p")).alias("__f"))
-    # the open tail re-enters as a pseudo-fragment at its stream
-    # position [stream_len - len(tail), stream_len) — by construction
-    # len(tail) = stream_len % seq_len, so its seq_id is the open one
-    tail_frags = (st.filter(F.size("tail_ids") > 0)
-                  .select("shard",
-                          F.expr(f"stream_len div {seq_len}")
-                          .cast("long").alias("seq_id"),
-                          F.struct(
-                              (F.col("stream_len")
-                               - F.size("tail_ids")).cast("long")
-                              .alias("o"),
-                              F.col("tail_ids").alias("p"))
-                          .alias("__f")))
-    seqs = (new_frags.unionByName(tail_frags)
-            .groupBy("shard", "seq_id")
-            .agg(F.flatten(F.transform(
-                F.array_sort(F.collect_list("__f")), lambda s: s["p"]))
-                .alias("input_ids"))
-            .withColumn("n_tokens", F.size("input_ids").cast("long")))
-    batch_tot = sharded.groupBy("shard").agg(
-        F.sum(F.size("__ids").cast("long")).alias("__b"))
-    new_tot = _mat(st.select("shard", "stream_len")
-                   .join(batch_tot, "shard", "full")
-                   .select("shard",
-                           (F.coalesce(F.col("stream_len"), F.lit(0))
-                            + F.coalesce(F.col("__b"), F.lit(0)))
-                           .alias("stream_len")))
-    j = _mat(seqs.join(F.broadcast(new_tot), "shard"))
-    done = (F.col("seq_id") + 1) * seq_len <= F.col("stream_len")
-    completed = j.filter(done).select("shard", "seq_id", "input_ids",
-                                      "n_tokens")
-    open_tails = j.filter(~done).select(
-        "shard", F.col("input_ids").alias("tail_ids"))
-    new_state = (new_tot.join(open_tails, "shard", "left")
-                 .select("shard", "stream_len",
-                         F.coalesce(F.col("tail_ids"),
-                                    F.expr("CAST(array() AS array<bigint>)"))
-                         .alias("tail_ids")))
-    return completed, new_state
-
-
-def pack_state_tails(state: DataFrame, seq_len: int = 2048) -> DataFrame:
-    """Materialize a pack state's OPEN sequences as final (unpadded)
-    rows — what :func:`pack_sequences` would have emitted as each
-    shard's last partial sequence. Union with the batches' completed
-    output to close an incremental stream."""
-    return (state.filter(F.size("tail_ids") > 0)
-            .select("shard",
-                    F.expr(f"stream_len div {seq_len}").cast("long")
-                    .alias("seq_id"),
-                    F.col("tail_ids").alias("input_ids"),
-                    F.size("tail_ids").cast("long").alias("n_tokens")))
-
-
 def bin_utilization(packed: DataFrame, target: int = 2048) -> DataFrame:
     """Per-bin fill statistics for a boundary-respecting packing: token sum,
     document count, and utilization in exact integer micro-units

@@ -206,22 +206,9 @@ def mixture_allocation(df: DataFrame, weights: dict[str, int],
     n_sources-row frame — window + projection on an answer-sized frame.
     Feed the targets to :func:`weighted_systematic_sample` per source
     for the physical draw."""
-    avail = (df.groupBy(F.col(source_col).alias("source"))
-             .agg(F.sum(tokens_col).cast("long").alias("available_tokens")))
-    return mixture_allocation_from_totals(materialize(avail), weights,
-                                          total_budget)
-
-
-def mixture_allocation_from_totals(avail: DataFrame,
-                                   weights: dict[str, int],
-                                   total_budget: int) -> DataFrame:
-    """The apportionment core of :func:`mixture_allocation`, taking the
-    per-source availability directly — ``avail`` is an answer-sized
-    (source, available_tokens) frame, e.g. the incrementally-maintained
-    snapshot of a streaming rollup (`streaming_mixture_allocation`), so
-    targets can be re-derived per batch without rescanning the corpus.
-    Same validation, arithmetic, and output contract as the corpus-side
-    entry."""
+    avail = materialize(
+        df.groupBy(F.col(source_col).alias("source"))
+        .agg(F.sum(tokens_col).cast("long").alias("available_tokens")))
     if total_budget < 0:
         raise ValueError(f"total_budget must be >= 0 (got {total_budget})")
     if any(w < 0 for w in weights.values()):

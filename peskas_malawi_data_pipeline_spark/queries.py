@@ -19,7 +19,6 @@ from .core import io
 from .core.barrier import materialize
 from .functions import expressions as E
 from .functions import text as T
-from .functions import web as WEB
 from .operators import aggregates as agg_ops
 from .operators import dedup as dedup_ops
 from .operators import joins as join_ops
@@ -27,7 +26,6 @@ from .operators import packing as pack_ops
 from .operators import sampling as samp_ops
 from .operators import relational as rel_ops
 from .operators import similarity as sim_ops
-from .operators import sketches as sketch_ops
 from .operators import validation as val_ops
 
 # name -> (query_fn, oracle_sql | None)
@@ -1363,58 +1361,6 @@ def mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", T.token_count(F.col("text")).cast("long")
         .alias("n_tokens"))
     return samp_ops.mixture_allocation(docs, _MIX_WEIGHTS, _MIX_BUDGET)
-
-
-@register("streaming_mixture_allocation", REGISTRY["mixture_allocation"][1])
-def streaming_mixture_allocation(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Mixture targets KEPT CURRENT as data lands: documents stream in
-    three micro-batches; each batch's per-source token sums MERGE into a
-    versioned availability snapshot (streaming.run_available_now_merge —
-    state lives in the table, not a state store; the applied-batch
-    marker commits with the data for exactly-once under foreachBatch
-    replay), and the Hamilton apportionment re-derives the targets from
-    the answer-sized snapshot (sampling.mixture_allocation_from_totals)
-    — a mixture designer reads current targets between batches without
-    ever rescanning the corpus. Oracle: the batch `mixture_allocation`
-    SQL verbatim — token sums are order-independent, so the drained
-    snapshot must equal the batch aggregation exactly (the
-    streaming_pinned_split evidence pattern)."""
-    import os
-    import tempfile
-
-    from .core import io as io_ops
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_mix_")
-    landing = os.path.join(work, "landing")
-    # documents carry no timestamp column, so a plain parquet stage is
-    # safe (the INT96 sniff hazard is timestamp-specific)
-    _t(spark, sf_dir, "documents").repartition(3).write.parquet(landing)
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, "
-                      "source string, n_chars long")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(landing))
-    table = io_ops.VersionedParquetTable(os.path.join(work, "avail"))
-
-    def partial(b):
-        return (b.select("source",
-                         T.token_count(F.col("text")).cast("long")
-                         .alias("__t"))
-                .groupBy("source")
-                .agg(F.sum("__t").cast("long").alias("available_tokens")))
-
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now_merge(
-            stream, table, keys=["source"], partial_fn=partial,
-            merges={"available_tokens": "sum"},
-            checkpoint=os.path.join(work, "ckpt"))
-    avail = table.read(spark).select(
-        "source", F.col("available_tokens").cast("long")
-        .alias("available_tokens"))
-    return samp_ops.mixture_allocation_from_totals(
-        materialize(avail), _MIX_WEIGHTS, _MIX_BUDGET)
 
 
 @register("mixture_draw_stats", f"""
@@ -3206,7 +3152,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Structural flatten (N1) and streaming twin of the batch time-bucket agg
+# Structural flatten (N1)
 # ---------------------------------------------------------------------------
 
 @register("flatten_nested_struct", """
@@ -3232,196 +3178,6 @@ def flatten_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.col("l_returnflag").alias("returnflag"),
                  F.col("l_linestatus").alias("linestatus")).alias("flags"))
     return struct_ops.flatten_struct_columns(nested)
-
-
-@register("streaming_time_bucket", """
-SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) * 1000000),
-                '%Y-%m-%d %H:%M:%S') AS time_bucket,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-FROM events
-GROUP BY 1, 2
-""")
-def streaming_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured-Streaming twin of ``time_bucket_agg``, oracle-checked
-    against the BATCH SQL: the events table is staged as a landing
-    directory, read with ``readStream`` + watermark, aggregated with
-    event-time windows, and drained with ``trigger(availableNow)`` through
-    the foreachBatch upsert sink (streaming.run_available_now_upsert) — the
-    resolved upsert log equals the batch aggregation exactly, which is the
-    engine's batch↔stream equivalence contract (DECIMAL sums make it
-    bit-exact despite differing partial-agg orders)."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    # engine-drain spread lever (default no-op; round-13 verdict #5 A/B —
-    # see ingest_stream.spread_stream)
-    ev = st.spread_stream(st.stream_events_dir(spark, landing))
-    agged = (ev.withWatermark("ts", "30 minutes")
-             .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum(_dec(F.col("value"))).alias("__total")))
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    # 4 state partitions: sized to the drain's key volume, not CPU count —
-    # each state-store instance pays per-batch checkpoint/commit overhead
-    # (measured: 8→4 cuts ~20% off every drain at sf0.1)
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now_upsert(agged, out, ckpt)
-    resolved = st.read_upsert_result(spark, out, ["win", "event_type"])
-    return resolved.select(
-        F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("time_bucket"),
-        "event_type", "n",
-        F.round(F.col("__total").cast("double"), 2).alias("total_value"))
-
-
-@register("streaming_enriched_rollup", """
-WITH dim(event_type, category) AS (VALUES
-  ('click', 'engage'), ('view', 'engage'),
-  ('purchase', 'convert'), ('signup', 'convert'), ('error', 'ops'))
-SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT)
-                               * 1000000), '%Y-%m-%d %H:%M:%S') AS hour_bucket,
-       coalesce(d.category, 'other') AS category,
-       CAST(count(*) AS BIGINT) AS n
-FROM events e LEFT JOIN dim d USING (event_type)
-GROUP BY 1, 2
-""")
-def streaming_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment: the event stream left-joins a broadcast
-    static dimension (event_type → category) BEFORE the windowed rollup —
-    the standard streaming enrichment shape (dimension re-read per
-    micro-batch, no state needed for the join side). Drained through the
-    upsert sink for exact batch parity like the other streaming twins."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_enrich_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    dim = spark.createDataFrame(
-        [("click", "engage"), ("view", "engage"),
-         ("purchase", "convert"), ("signup", "convert"), ("error", "ops")],
-        ["event_type", "category"])
-
-    ev = (st.spread_stream(st.stream_events_dir(spark, landing))
-          .join(F.broadcast(dim), "event_type", "left")
-          .withColumn("category", F.coalesce("category", F.lit("other"))))
-    agged = (ev.withWatermark("ts", "30 minutes")
-             .groupBy(F.window("ts", "60 minutes").alias("win"), "category")
-             .agg(F.count(F.lit(1)).alias("n")))
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now_upsert(agged, out, ckpt)
-    resolved = st.read_upsert_result(spark, out, ["win", "category"])
-    return resolved.select(
-        F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss")
-        .alias("hour_bucket"), "category", "n")
-
-
-_SESSIONIZE_ORACLE = """
-WITH ordered AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 1800
-                OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-tagged AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM ordered)
-SELECT user_id, CAST(min(floor(epoch(ts))) AS BIGINT) AS session_start_s,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT) AS duration_s
-FROM tagged GROUP BY user_id, session_no
-"""
-
-
-@register("streaming_sessionize", _SESSIONIZE_ORACLE)
-def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary-stateful streaming (applyInPandasWithState): gap-based
-    sessionization — the aggregation no built-in streaming window expresses.
-    Per-user state holds only the OPEN session, evicted by event-time
-    timeout once the watermark passes last_event + gap; sessions key on
-    their start epoch (eviction-stable, unlike ordinals). Drained through
-    the foreachBatch upsert sink, the result equals the BATCH two-window
-    sessionization exactly — same batch↔stream contract as
-    ``streaming_time_bucket``, proven here for custom state."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-    from .streaming import stateful as sf
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_sess_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    ev = (st.spread_stream(st.stream_events_dir(spark, landing))
-          .withWatermark("ts", "30 minutes")
-          .select("user_id", "ts", "event_id"))
-    sessions = sf.stateful_sessionize(ev, gap_s=1800)
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    # Python-worker stateful path: measured sweep at sf0.1 over state
-    # partitions {2,4,8,16} → {9.6, 5.8, 4.0, 4.5} s. Unlike the JVM
-    # stateful operators (which win at 4 — state-store commit overhead
-    # dominates), the applyInPandasWithState drain is bounded by Python
-    # worker throughput, so more concurrent workers pay off until state
-    # files dominate again at 16.
-    with st.stream_state_partitions(spark, 8):
-        st.run_available_now_upsert(sessions, out, ckpt)
-    return (st.read_upsert_result(spark, out,
-                                  ["user_id", "session_start_s"])
-            .filter(F.col("n_events") >= 0))   # drop tombstoned keys
-
-
-def streaming_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same gap sessionization on ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful successor API (typed named state
-    variables, explicit event-time timers via the processor handle).
-    Identical output contract to ``streaming_sessionize``
-    (_SESSIONIZE_ORACLE); NOT registered in the driver contract because
-    the API's state server requires ``google.protobuf``, absent from this
-    runtime — tests skip when the dependency is missing
-    (test_streaming.test_tws_sessionize_matches_batch)."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-    from .streaming import stateful as sf
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_tws_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    ev = (st.stream_events_dir(spark, landing)
-          .withWatermark("ts", "30 minutes")
-          .select("user_id", "ts", "event_id"))
-    sessions = sf.stateful_sessionize_tws(ev, gap_s=1800)
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    # same Python-worker scaling argument as streaming_sessionize: 8 > 4
-    with st.stream_state_partitions(spark, 8):
-        st.run_available_now_upsert(sessions, out, ckpt)
-    return (st.read_upsert_result(spark, out,
-                                  ["user_id", "session_start_s"])
-            .filter(F.col("n_events") >= 0))   # drop tombstoned keys
 
 
 # ---------------------------------------------------------------------------
@@ -4145,38 +3901,6 @@ def order_status_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.unionByName(f_only)
 
 
-@register("streaming_dedup", """
-SELECT DISTINCT user_id, event_type FROM events
-""")
-def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup: ``dropDuplicates`` as a stateful streaming
-    operator — each (user_id, event_type) key is emitted on first arrival
-    and suppressed thereafter (the incremental form of exact_dedup for a
-    continuously-landing corpus). Drained with availableNow into parquet;
-    the surviving key set equals batch DISTINCT exactly, whatever arrival
-    order the micro-batches took. At scale the dedup state is the distinct
-    key set, hash-partitioned across executors; with an event-time bound,
-    ``dropDuplicatesWithinWatermark`` caps it."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_dedup_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    raw = st.spread_stream(st.stream_events_dir(spark, landing))
-    deduped = raw.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"])
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now(deduped, out, ckpt)
-    return spark.read.parquet(out)
-
-
 @register("embedding_centroids", """
 WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
 x AS (SELECT label, t.i AS dim,
@@ -4470,71 +4194,6 @@ def edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(t.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b")
             .select("id_a", "id_b",
                     F.levenshtein("sa", "sb").cast("long").alias("edit_dist")))
-
-
-@register("streaming_stream_join", """
-SELECT v.user_id,
-       v.event_id AS view_id,
-       c.event_id AS click_id,
-       CAST(floor(epoch(c.ts)) - floor(epoch(v.ts)) AS BIGINT) AS lag_s
-FROM events v
-JOIN events c
-  ON v.user_id = c.user_id
- AND v.event_type = 'view' AND c.event_type = 'click'
- AND c.ts >= v.ts AND c.ts < v.ts + INTERVAL 30 MINUTE
-""")
-def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with watermark-bounded state: each click
-    matched to the same user's views from the preceding 30 minutes, both
-    sides arriving as streams.
-
-    The time-range condition + both watermarks let Spark bound the join
-    state (a view is dropped once the click watermark passes its ts + 30
-    min — without the range the state would grow forever). Inner-join
-    matches are final on emission, so the append-mode drain equals the
-    batch interval join exactly — extending the engine's batch↔stream
-    parity contract to the two-stateful-inputs case. At 100 TB both sides
-    shuffle once on user_id; state per key = the open 30-minute window of
-    views, not history."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_join_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
-               os.path.join(landing, "events.parquet"))
-
-    def side(alias_user, alias_ts, alias_id, etype):
-        raw = st.spread_stream(st.stream_events_dir(spark, landing))
-        return (raw
-                .filter(F.col("event_type") == etype)
-                .select(F.col("user_id").alias(alias_user),
-                        F.col("ts").alias(alias_ts),
-                        F.col("event_id").alias(alias_id))
-                .withWatermark(alias_ts, "30 minutes"))
-
-    views = side("user_id", "v_ts", "view_id", "view")
-    clicks = side("c_user", "c_ts", "click_id", "click")
-    joined = views.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("v_ts"))
-        & (F.col("c_ts") < F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner")
-    out_df = joined.select(
-        "user_id", "view_id", "click_id",
-        (F.unix_timestamp("c_ts") - F.unix_timestamp("v_ts"))
-        .cast("long").alias("lag_s"))
-
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now(out_df, out, ckpt)
-    # explicit schema: a zero-match drain leaves no data files to infer from
-    return spark.read.schema(
-        "user_id long, view_id long, click_id long, lag_s long").parquet(out)
 
 
 @register("multimodal_resize", """
@@ -4883,105 +4542,6 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_ops.pagerank_integer(edges, iterations=5)
 
 
-@register("streaming_session_window", """
-WITH ordered AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-tagged AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM ordered)
-SELECT user_id,
-       CAST(min(epoch_us(ts)) AS BIGINT) AS session_start_us,
-       CAST(max(epoch_us(ts)) + 1800000000 AS BIGINT) AS session_end_us,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM tagged GROUP BY user_id, session_no
-""")
-def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native ``F.session_window`` streaming sessionization — the
-    Spark-first fast path next to ``streaming_sessionize``'s custom
-    applyInPandasWithState operator: the session merge runs in the JVM
-    state store (whole-stage codegen, no Python workers), which is the
-    right default whenever plain gap-sessionization semantics suffice.
-
-    Semantics parity pin: a session window is half-open
-    ``[first, last+gap)``, so an event exactly ``gap`` after its
-    predecessor starts a NEW session — the oracle uses ``>= gap`` (the
-    custom-state twin's oracle uses ``> gap``; both conventions exist,
-    Spark's built-in is half-open). window.end = last event + gap.
-
-    Session windows merge across batches, so Spark only supports APPEND
-    output (a window is final once the watermark passes it). An
-    availableNow drain in append mode would leave the trailing sessions
-    unemitted, so after the data drain a far-future SENTINEL row is staged
-    and a second drain run on the same checkpoint: the sentinel advances
-    the watermark past every real session, flushing them — the standard
-    watermark-flush pattern for exact batch parity from an append sink.
-    Each closed window is emitted exactly once (no upsert resolution
-    needed)."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_swin_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    os.symlink(src, os.path.join(landing, "events.parquet"))
-
-    # spread ON by default here — the session-window agg's map side
-    # sorts + partially merges sessions BEFORE the shuffle, serialized
-    # on the one-task file scan; won 3/3 interleaved 100× A/Bs and tied
-    # at sf0.1 (SCALE.md §10p; PESKAS_STREAM_SPREAD=off to disable)
-    ev = (st.spread_stream(st.stream_events_dir(spark, landing),
-                           default_n=spark.sparkContext.defaultParallelism)
-          .withWatermark("ts", "30 minutes"))
-    agged = (ev.groupBy("user_id",
-                        F.session_window("ts", "30 minutes").alias("win"))
-             .agg(F.count(F.lit(1)).alias("n_events")))
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now(agged, out, ckpt)
-
-        # sentinel one year past the data's edge, matching the file's
-        # physical ts unit so the pinned stream schema still applies
-        # ("zz_" keeps the unit sniff reading the real file first)
-        tsf = pq.read_schema(src).field("ts")
-        unit = getattr(tsf.type, "unit", "us")
-        # the batch read may surface ts as TIMESTAMP_NTZ; the LTZ cast's
-        # session-tz shift is irrelevant under the one-year sentinel margin
-        max_us = _t(spark, sf_dir, "events").agg(
-            F.max(F.unix_micros(F.col("ts").cast("timestamp_ltz")))).first()[0]
-        flush_us = max_us + 365 * 86400 * 1_000_000
-        ts_arr = (pa.array([flush_us * 1000], type=pa.int64()) if unit == "ns"
-                  else pa.array([flush_us], type=pa.timestamp("us")))
-        pq.write_table(pa.table({
-            "event_id": pa.array([-1], type=pa.int64()),
-            "ts": ts_arr,
-            "user_id": pa.array([-1], type=pa.int64()),
-            "event_type": pa.array(["__sentinel__"]),
-            "value": pa.array([0.0], type=pa.float64()),
-            "props": pa.array(["{}"]),
-        }), os.path.join(landing, "zz_sentinel.parquet"))
-        st.run_available_now(agged, out, ckpt)
-
-    return (spark.read.parquet(out)
-            .filter(F.col("user_id") != -1)
-            .select("user_id",
-                    F.unix_micros(F.col("win.start")).alias("session_start_us"),
-                    F.unix_micros(F.col("win.end")).alias("session_end_us"),
-                    "n_events"))
-
-
 @register("decontaminate_ngram_overlap", f"""
 WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
 sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS s FROM toks),
@@ -5153,54 +4713,6 @@ def semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups = pairs.select(F.col("id_b").alias("vec_id"))
     return (clustered.join(dups, "vec_id", "left_anti")
             .select("vec_id", "centroid_id"))
-
-
-@register("kmv_distinct_users", f"""
-WITH h AS (SELECT DISTINCT event_type,
-           CAST('0x' || substr(md5('kmv:' || user_id), 1, 13) AS BIGINT) AS h
-           FROM events WHERE user_id IS NOT NULL),
-r AS (SELECT event_type, h,
-             row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-      FROM h),
-s AS (SELECT event_type, max(h) AS kth, count(*) AS m
-      FROM r WHERE rn <= 64 GROUP BY 1)
-SELECT event_type, CAST(m AS BIGINT) AS sketch_size,
-       CAST(CASE WHEN m < 64 THEN m
-                 ELSE {63 * (1 << 52)} // kth END AS BIGINT) AS est_distinct
-FROM s
-""")
-def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type approximate distinct users via a K-minimum-values
-    sketch — the engine-portable alternative to approx_count_distinct
-    (HLL++ estimates are engine-private; KMV's "k smallest md5 hashes of
-    the distinct values" is a pure set function any engine reproduces
-    bit-for-bit). Integer 52-bit hash space and integer division keep the
-    estimator exact across engines; see operators/sketches.py for the
-    skew-free two-level k-smallest plan."""
-    ev = _t(spark, sf_dir, "events")
-    return sketch_ops.kmv_distinct(ev, "event_type", "user_id", k=64)
-
-
-@register("heavy_hitter_tokens", f"""
-WITH tok AS (SELECT u.t AS tok
-             FROM (SELECT {_DUCK_TOKS} AS t FROM documents), UNNEST(t) AS u(t)),
-tot AS (SELECT count(*) AS n FROM tok)
-SELECT tok, CAST(count(*) AS BIGINT) AS cnt
-FROM tok GROUP BY tok
-HAVING count(*) * 1000000 > (SELECT n FROM tot) * 10000
-""")
-def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact corpus heavy-hitter tokens (> 1% of all occurrences) via the
-    Misra-Gries two-pass in sketches.heavy_hitters: per-partition k-counter
-    candidate summaries (mapInPandas, Arrow), then an exact broadcast-
-    semi-join recount of candidates only — the shuffle carries ≤ k·P
-    candidate rows instead of one row per distinct token, which is the
-    difference between an answer-sized shuffle and a corpus-vocabulary
-    shuffle at 100 TB. The oracle is the naive full groupBy: the two-pass
-    result is provably identical (candidate superset + exact recount)."""
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
-    return sketch_ops.heavy_hitters(tok, "tok", support_ppm=10_000)
 
 
 @register("corpus_shuffle", """
@@ -5526,54 +5038,6 @@ def winsorize_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source",
                     F.col("n_tokens").cast("long").alias("n_tokens"),
                     (clipped * 4).cast("long").alias("winsorized_x4")))
-
-
-@register("token_rank_fluency", f"""
-WITH tok AS (SELECT doc_id, u.t AS tok
-             FROM (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
-                  UNNEST(t) AS u(t)),
-tot AS (SELECT count(*) AS n FROM tok),
-hh AS (SELECT tok, count(*) AS cnt
-       FROM tok GROUP BY tok
-       HAVING count(*) * 1000000 > (SELECT n FROM tot) * 10000),
-ranked AS (SELECT tok, row_number() OVER (ORDER BY cnt DESC, tok) AS rnk
-           FROM hh),
-v AS (SELECT count(*) AS nv FROM ranked)
-SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(coalesce(r.rnk, v.nv + 1)) * 1000000 // count(*) AS BIGINT)
-         AS mean_rank_micro
-FROM tok t LEFT JOIN ranked r ON t.tok = r.tok, v
-GROUP BY t.doc_id
-""")
-def token_rank_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-free fluency/quality proxy (the CCNet-style LM-filter slot
-    without a language model): score each document by the mean corpus-
-    frequency RANK of its tokens — fluent boilerplate-free text is
-    dominated by high-rank (frequent) tokens, OOV-heavy noise scores the
-    sentinel rank |vocab|+1. Ranks, not probabilities, keep the score
-    engine-exact: integer micro-units, no float log anywhere.
-
-    Scale shape — three linear passes, nothing vocabulary-sized shuffles:
-    the vocabulary comes from sketches.heavy_hitters (Misra-Gries
-    candidates + exact answer-sized recount, never a distinct-token
-    shuffle), its ranks from ranking.global_row_number on the ≤100-row
-    heavy set (two-pass, no global window — the oracle's ORDER BY window
-    is exactly the funnel avoided), and the ranked vocabulary broadcasts
-    back onto the exploded token stream for ONE doc_id-keyed aggregation."""
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok"))
-    hh = sketch_ops.heavy_hitters(tok, "tok", support_ppm=10_000)
-    from .operators import ranking
-    ranked = (ranking.global_row_number(
-        hh.withColumn("__neg", -F.col("cnt")), ["__neg", "tok"],
-        out_col="rnk").select("tok", F.col("rnk").cast("long").alias("rnk")))
-    v = ranked.agg(F.count(F.lit(1)).alias("nv"))
-    return (tok.join(F.broadcast(ranked), "tok", "left")
-            .crossJoin(F.broadcast(v))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                 F.expr("CAST(sum(coalesce(rnk, nv + 1)) * 1000000 "
-                        "div count(1) AS BIGINT)").alias("mean_rank_micro")))
 
 
 # Temperature-resampling powers n^α, expressed as compositions of
@@ -6506,7 +5970,7 @@ def _ann_trained_store(c: DataFrame, sf_dir: str, key: tuple, v) -> None:
 #: candidate through one window) loses. The gate input is the product —
 #: not corpus rows — because candidates are what flow through the
 #: window: a 20k corpus probed by 2k queries costs what a 200k corpus
-#: probed by 200 does. Measured (tools/pq_fuse_probe.py, one process
+#: probed by 200 does. Measured (one process
 #: per (size, branch), untimed warmup then min-of-2; n_queries clamps
 #: at 200 across the sweep so candidates = 200·corpus): fused wins at
 #: 4M (2.63 vs 3.09 s, r12), 8M (5.91 vs 6.07) and 12M (5.69 vs 6.47);
@@ -6679,8 +6143,8 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent 1x passes beat one 2x pass. Measured (min-of-2 warm):
     # sf0.1 fused 1.6x faster, 10x fused 2.63 vs 3.09 s, 100x PER-ARM
     # 7.72 vs 9.40 s — gate on the candidate PRODUCT (the thing the
-    # window actually streams), crossover bracketed 12M<->16M candidates
-    # by tools/pq_fuse_probe.py. Both paths produce identical rows
+    # window actually streams), crossover bracketed 12M<->16M candidates.
+    # Both paths produce identical rows
     # (equivalence-tested machinery + the shared oracle, one-row-per-arm
     # shape pinned on both branches). The IVF arms stay per-arm: their
     # coarse quantizers differ, so the list pruning cannot share a pass.
@@ -8079,68 +7543,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.gopher_passes(F.col("g")).alias("passes_gopher"))
 
 
-@register("cdc_merge_apply", """
-WITH c AS (SELECT event_id, user_id, ts, event_type, value,
-                  CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op
-           FROM events),
-thr AS (SELECT max(event_id) // 2 AS t FROM events),
-snap AS (SELECT user_id, event_id, event_type, value, ts FROM (
-   SELECT c.*, row_number() OVER (PARTITION BY user_id
-                                  ORDER BY event_id DESC) AS rn
-   FROM c, thr WHERE event_id <= thr.t) WHERE rn = 1 AND op <> 'D'),
-latest AS (SELECT user_id, op, event_id, event_type, value, ts FROM (
-   SELECT c.*, row_number() OVER (PARTITION BY user_id
-                                  ORDER BY event_id DESC) AS rn
-   FROM c, thr WHERE event_id > thr.t) WHERE rn = 1)
-SELECT user_id,
-       CAST(CASE WHEN l.op IS NOT NULL THEN l.event_id
-                 ELSE s.event_id END AS BIGINT) AS event_id,
-       CASE WHEN l.op IS NOT NULL THEN l.event_type
-            ELSE s.event_type END AS event_type,
-       CASE WHEN l.op IS NOT NULL THEN l.value ELSE s.value END AS value,
-       CAST(epoch_us(CASE WHEN l.op IS NOT NULL THEN l.ts ELSE s.ts END)
-            AS BIGINT) AS ts_us
-FROM snap s FULL JOIN latest l USING (user_id)
-WHERE l.op IS NULL OR l.op <> 'D'
-""")
-def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch CDC MERGE (operators.cdc.merge_apply): the events log plays a
-    Debezium-style changelog — op 'D' for error events, upsert otherwise,
-    event_id as the total order. The first half (by event id) compacts
-    into the keyed snapshot (compact_changelog + drop-deletes — a merge
-    onto empty); the second half then MERGEs onto it: latest change per
-    key wins, deletes remove, untouched keys pass through.
-
-    Why it matters at 100 TB: the reference's truncate-and-load (K1)
-    rewrites the world every run; this plan touches the snapshot with ONE
-    outer join on its key (shuffle-free when the snapshot is bucketed —
-    operators.layout.bucketed_write) and windows only the changelog.
-    Timestamps exported as epoch micros (cross-engine exact under the UTC
-    session pin)."""
-    from .operators import cdc as cdc_ops
-
-    ev = _t(spark, sf_dir, "events")
-    chg = ev.select(
-        "event_id", "user_id", "ts", "event_type", "value",
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"))
-    thr = ev.agg(F.expr("max(event_id) div 2").alias("__thr"))
-    chg = chg.crossJoin(F.broadcast(thr))
-    first = chg.filter(F.col("event_id") <= F.col("__thr")).drop("__thr")
-    second = chg.filter(F.col("event_id") > F.col("__thr")).drop("__thr")
-    snapshot = (cdc_ops.compact_changelog(first, ["user_id"], "event_id")
-                .filter(F.col("op") != "D")
-                .select("user_id", "event_id", "event_type", "value", "ts"))
-    merged = cdc_ops.merge_apply(snapshot, second, ["user_id"],
-                                 seq_col="event_id", op_col="op")
-    return merged.select(
-        "user_id", F.col("event_id").cast("long").alias("event_id"),
-        "event_type", "value",
-        # batch reads may surface ts as TIMESTAMP_NTZ; the LTZ cast is
-        # wall-clock-preserving under the UTC session pin (see _t).
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"))
-
-
 @register("distribution_drift", """
 WITH wk AS (SELECT date_trunc('week', ts) AS wk, event_type FROM events),
 counts AS (SELECT wk, event_type, count(*) AS cnt FROM wk GROUP BY 1, 2),
@@ -8385,252 +7787,6 @@ def prefix_join_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), shingle_n=3, threshold=0.5)
 
 
-@register("streaming_near_dedup", f"""
-WITH {_DUCK_MINHASH_CTES}
-SELECT id_a, id_b FROM mh_pairs
-""")
-def streaming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming NEAR-dup discovery — the stateful streaming twin of the
-    incremental LSH pipeline: documents land continuously; each
-    micro-batch is MinHash-sketched ONCE (materialized), band-joined
-    against the PERSISTED index (dedup.incremental_lsh_pairs: new↔index
-    and new↔new, O(increment) per batch — the settled index↔index pairs
-    are never recomputed), its pairs appended, and its bands appended to
-    the index. The accumulated pair SET equals the batch LSH pair set
-    exactly, independent of arrival order and batching: every pair is
-    discovered in the micro-batch where its LATER member lands. Pair
-    appends are at-least-once under foreachBatch replay; the result is a
-    SET, so the terminal DISTINCT makes the read idempotent (same
-    argument as the oracle's DISTINCT). Documents are staged as three
-    landing files drained one per trigger, so the oracle equality proves
-    a genuinely multi-batch index-growth chain."""
-    import os
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_neardup_")
-    landing = os.path.join(work, "landing")
-    # documents carry no timestamp column, so a plain parquet write is a
-    # safe landing stage (the INT96 sniff hazard is timestamp-specific)
-    _t(spark, sf_dir, "documents").repartition(3).write.parquet(landing)
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, "
-                      "source string, n_chars long")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(landing))
-
-    index_dir = os.path.join(work, "bands")
-    pairs_dir = os.path.join(work, "pairs")
-
-    def step(batch_df, batch_id: int) -> None:
-        # size-adaptive shuffle parallelism (replaces the static
-        # 4-partition pin): the drain is STATELESS (state = the parquet
-        # band index), so each batch sizes its own shuffles from its
-        # input bytes — lo=4 at sf0.1 (where the pin's A/B win was
-        # measured) growing toward batch-CPU parallelism at 100×
-        with st.sized_batch_shuffle(batch_df) as n:
-            s = batch_df.sparkSession
-            # map-side spread: the shingle explode below otherwise runs
-            # at scan parallelism (1 task per landing file) — see
-            # ingest_stream.spread_batch's measured wide-row wall
-            new_bands = materialize(dedup_ops.minhash_bands(
-                st.spread_batch(batch_df, n),
-                num_hashes=8, band_size=2, shingle_n=3))
-            index = (s.read.parquet(index_dir)
-                     if os.path.exists(index_dir)
-                     else new_bands.limit(0))
-            pairs = dedup_ops.incremental_lsh_pairs(new_bands, index,
-                                                    max_bucket=1000)
-            pairs.write.mode("append").parquet(pairs_dir)
-            new_bands.write.mode("append").parquet(index_dir)
-
-    q = (stream.writeStream.foreachBatch(step)
-         .option("checkpointLocation", os.path.join(work, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(pairs_dir).select("id_a", "id_b").distinct()
-
-
-@register("streaming_pinned_split", REGISTRY["pinned_incremental_split"][1])
-def streaming_pinned_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PINNED SPLIT as a continuously-maintained streaming artifact —
-    the production shape of eval-set stability: documents land in
-    micro-batches; the persisted state is the band index, the component
-    snapshot, and the SPLIT snapshot; each batch sketches only its
-    increment, band-joins it against the index
-    (dedup.incremental_lsh_pairs), updates components incrementally, and
-    re-emits the split snapshot with pins honored
-    (dedup.pinned_incremental_split) — previously assigned docs never
-    move, conflicts stay sticky. The corpus is staged as TWO landing
-    files drained in a pinned order (old slice, then the ``doc_id % 7``
-    increment — modification times force the FileStreamSource order), so
-    the final snapshot must equal the BATCH pinned-split replay exactly:
-    batch 1 sees an empty prior (all-new docs take the group hash rule —
-    which IS the batch group split of the old corpus), batch 2 is the
-    increment with batch 1's snapshot as prior. The oracle is therefore
-    pinned_incremental_split's own two-closure SQL, verbatim — the
-    strongest available evidence the streaming path adds no semantics.
-    Snapshots are versioned per batch (write v{{n}}, read the greatest
-    version STRICTLY BELOW n), so a foreachBatch replay is fully
-    idempotent: it reconstructs v{{n}} from v{{n-1}} without ever seeing
-    its own failed attempt's output — in particular the band index never
-    compacts its own v{{n}} back in (which would double-count
-    band_weight and silently trip the hot-bucket cap). The band index is
-    COMPACTED every batch (dedup.compact_band_index: one row per bucket
-    + carried cardinality weight, versioned like the snapshots) — the
-    state a batch reads is bounded by DISTINCT buckets, not by corpus
-    history, and the oracle equality doubles as the compaction
-    invariance proof (same SQL, uncompacted relational closure)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_pinsplit_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    docs = _t(spark, sf_dir, "documents")
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(work, name + "_tmp")
-        df.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(landing, name)
-        shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp)
-
-    import time as _time
-    t0 = _time.time() - 10_000
-    stage(docs.filter(F.col("doc_id") % 7 != 0), "0_old.parquet", t0)
-    stage(docs.filter(F.col("doc_id") % 7 == 0), "1_new.parquet",
-          t0 + 5_000)
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, "
-                      "source string, n_chars long")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(landing))
-
-    index_dir = os.path.join(work, "bands")
-    comp_dir = os.path.join(work, "components")
-    split_dir = os.path.join(work, "split")
-
-    def latest(base: str, before: int | None = None):
-        if not os.path.exists(base):
-            return None
-        vs = sorted(int(d[1:]) for d in os.listdir(base)
-                    if d.startswith("v")
-                    and (before is None or int(d[1:]) < before))
-        return os.path.join(base, f"v{vs[-1]}") if vs else None
-
-    def step(batch_df, batch_id: int) -> None:
-        # size-adaptive shuffle parallelism (replaces the static
-        # 4-partition pin): stateless drain (state = versioned parquet
-        # snapshots), so each batch sizes its own shuffles from its
-        # input bytes — lo=4 at sf0.1 where the pin's A/B win was
-        # measured, growing toward batch-CPU parallelism at 100×
-        with st.sized_batch_shuffle(batch_df) as n:
-            s = batch_df.sparkSession
-            # map-side spread before the shingle explode (see
-            # ingest_stream.spread_batch)
-            new_bands = materialize(dedup_ops.minhash_bands(
-                st.spread_batch(batch_df, n),
-                num_hashes=8, band_size=2, shingle_n=3))
-            # replay idempotency: read the greatest version STRICTLY BELOW
-            # this batch id, so a replayed batch reconstructs v{batch_id}
-            # from v{batch_id-1} deterministically. Reading latest() here
-            # would let a replay see its own failed attempt's v{batch_id} —
-            # harmless for comp/split (overwrite absorbs it) but the index
-            # would compact (own output ∪ new_bands) and double-count
-            # band_weight, pushing under-cap buckets over max_bucket and
-            # silently suppressing candidate pairs.
-            pi = latest(index_dir, before=batch_id)
-            index = (s.read.parquet(pi) if pi else s.createDataFrame(
-                [], "doc_id long, band_id int, band_key string, "
-                    "band_weight long"))
-            pairs = dedup_ops.incremental_lsh_pairs(
-                new_bands, index, max_bucket=1000, weight_col="band_weight")
-            pc = latest(comp_dir, before=batch_id)
-            prior_comp = (s.read.parquet(pc) if pc else
-                          s.createDataFrame([], "id long, component long"))
-            comp = dedup_ops.incremental_components(prior_comp, pairs)
-            ps = latest(split_dir, before=batch_id)
-            prior_split = (s.read.parquet(ps) if ps else s.createDataFrame(
-                [], "doc_id long, group_key long, split string, "
-                    "pin_conflict boolean"))
-            out = dedup_ops.pinned_incremental_split(
-                prior_split, comp, batch_df.select("doc_id"))
-            comp.write.mode("overwrite").parquet(
-                os.path.join(comp_dir, f"v{batch_id}"))
-            out.write.mode("overwrite").parquet(
-                os.path.join(split_dir, f"v{batch_id}"))
-            # per-batch retention: the persisted index stays one row per
-            # DISTINCT bucket (weight carries the true cardinality for the
-            # hot-bucket cap) — versioned like the snapshots, so a replayed
-            # batch rewrites its own version instead of double-appending
-            dedup_ops.compact_band_index(
-                index.unionByName(new_bands.withColumn(
-                    "band_weight", F.lit(1).cast("long")))) \
-                .write.mode("overwrite").parquet(
-                    os.path.join(index_dir, f"v{batch_id}"))
-
-    q = (stream.writeStream.foreachBatch(step)
-         .option("checkpointLocation", os.path.join(work, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(latest(split_dir)).select(
-        "doc_id", "group_key", "split", "pin_conflict")
-
-
-@register("streaming_incremental_rollup", """
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_value
-FROM events GROUP BY user_id, event_type
-""")
-def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming materialized view (streaming.run_available_now_merge):
-    the per-(user, event_type) rollup maintained by MERGING each
-    micro-batch's partial aggregates into a versioned snapshot table — the
-    streaming twin of `incremental_rollup`, with NO streaming state store
-    (state IS the table; the checkpoint tracks only source progress, and
-    the applied-batch marker commits transactionally with the data for
-    exactly-once under foreachBatch replay). The events table is staged as
-    THREE landing files and drained one file per trigger, so the oracle
-    equality proves a genuinely multi-batch merge chain, not a single-shot
-    aggregation. Decimal sums keep every merge order bit-exact."""
-    import os
-    import tempfile
-
-    from .core import io as io_ops
-    from .streaming import ingest_stream as st
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_")
-    landing = os.path.join(work, "landing")
-    st.stage_events_landing(
-        _t(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props"),
-        landing, n_files=3)
-
-    stream = st.stream_events_dir(spark, landing, max_files_per_trigger=1)
-    table = io_ops.VersionedParquetTable(os.path.join(work, "rollup"))
-    partial = lambda b: b.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("value"))).alias("sum_value"))
-    with st.stream_state_partitions(spark, 4):
-        st.run_available_now_merge(
-            stream, table, ["user_id", "event_type"], partial,
-            {"n": "count", "sum_value": "sum"},
-            os.path.join(work, "ckpt"))
-    return table.read(spark).select(
-        "user_id", "event_type", F.col("n").cast("long").alias("n"),
-        F.round(F.col("sum_value").cast("double"), 2).alias("sum_value"))
-
-
 _MARKUP_INJECT_SQL = (
     "CASE WHEN doc_id % 3 = 0 THEN '<div class=\"post\"><p>' || text || "
     "' &amp; more &lt;tail&gt;</p><br/></div>' ELSE text END")
@@ -8705,74 +7861,6 @@ def _duck_normalize_sql(inner: str) -> str:
 #: both engines (chr() on the DuckDB side, explicit escapes
 #: here — the characters are invisible, a literal is unreviewable).
 _UNICODE_INJECT_TAIL = "\u00a0cafe\u0301\u3000end"
-
-
-#: deterministic messy-URL injection for the canonicalization oracle
-#: pair: mixed-case scheme/host, default port, tracking params, unsorted
-#: query, trailing slash, fragment — same construction in both engines.
-_URL_INJECT_SQL = (
-    "'HTTP://WWW.Host' || CAST(doc_id % 7 AS VARCHAR) || '.COM:80/p' || "
-    "CAST(doc_id % 3 AS VARCHAR) || '/?utm_source=s' || "
-    "CAST(doc_id AS VARCHAR) || '&b=2&a=' || CAST(doc_id % 5 AS VARCHAR) "
-    "|| '#frag'")
-
-
-def _url_inject_col() -> F.Column:
-    return F.concat(
-        F.lit("HTTP://WWW.Host"), (F.col("doc_id") % 7).cast("string"),
-        F.lit(".COM:80/p"), (F.col("doc_id") % 3).cast("string"),
-        F.lit("/?utm_source=s"), F.col("doc_id").cast("string"),
-        F.lit("&b=2&a="), (F.col("doc_id") % 5).cast("string"),
-        F.lit("#frag"))
-
-
-@register("url_canonicalize", f"""
-WITH inj AS (SELECT doc_id, {_URL_INJECT_SQL} AS u FROM documents),
-canon AS (SELECT doc_id, {WEB.duck_canonicalize_url_sql("u")} AS canon_url
-          FROM inj)
-SELECT doc_id, canon_url,
-       regexp_extract(canon_url, '://([^/?]*)', 1) AS host
-FROM canon
-""")
-def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization (functions.web.canonicalize_url): the key
-    transform every web-corpus dedup/recrawl pipeline runs before URL-
-    level dedup or host aggregation — lowercase scheme/host, default-port
-    and www strip, fragment drop, tracking-param removal, sorted query,
-    path normalization. Built from portable regex/array primitives (no
-    engine URL parser), so the DuckDB oracle replays the identical chain
-    generated from the same regexes. The corpus has no URL column, so a
-    deterministic messy URL is injected per document identically in both
-    engines. Pure per-row map, scan-bound at any scale."""
-    docs = _t(spark, sf_dir, "documents")
-    canon = WEB.canonicalize_url(_url_inject_col())
-    return docs.select(
-        "doc_id", canon.alias("canon_url"),
-        F.regexp_extract(canon, "://([^/?]*)", 1).alias("host"))
-
-
-@register("url_dedup_survivors", f"""
-WITH inj AS (SELECT doc_id, {_URL_INJECT_SQL} AS u FROM documents),
-canon AS (SELECT doc_id, {WEB.duck_canonicalize_url_sql("u")} AS canon_url
-          FROM inj)
-SELECT canon_url, CAST(min(doc_id) AS BIGINT) AS survivor_id,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM canon GROUP BY canon_url
-""")
-def url_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup on the canonical key: documents whose messy URLs
-    collapse to one canonical form keep the smallest doc_id (the
-    crawl-order winner) — the fetch-once decision of a recrawl pipeline.
-    The injected URL classes are bounded (7 hosts × 3 paths × 5 query
-    values = 105 canon keys once tracking params drop), so the answer is
-    FIXED-size while groups grow with the corpus: one narrow-key groupBy,
-    map-side partials absorb the heat."""
-    docs = _t(spark, sf_dir, "documents")
-    canon = WEB.canonicalize_url(_url_inject_col())
-    return (docs.select(canon.alias("canon_url"), "doc_id")
-            .groupBy("canon_url")
-            .agg(F.min("doc_id").cast("long").alias("survivor_id"),
-                 F.count(F.lit(1)).cast("long").alias("n_docs")))
 
 
 def _duck_sentences_sql(inner: str) -> str:
@@ -8863,59 +7951,6 @@ def sentence_dedup_within_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.size("__s.u"), F.lit(0)).cast("long").alias("n_unique"),
         F.when(F.col("__orig").isNotNull(),
                F.concat_ws(" ", F.col("__s.u"))).alias("clean_text"))
-
-
-_LINK_INJECT_SQL = (
-    "CASE WHEN doc_id % 4 = 0 THEN text || "
-    "' <a class=\"x\" href=\"HTTP://WWW.Site' || CAST(doc_id % 5 AS VARCHAR)"
-    " || '.COM:80/p?utm_campaign=c&q=' || CAST(doc_id % 3 AS VARCHAR) || "
-    "'\">t</a> and <a href=\"https://cdn' || CAST(doc_id % 2 AS VARCHAR) ||"
-    " '.example.net/a/\">u</a>' ELSE text END")
-
-
-@register("link_host_counts", f"""
-WITH inj AS (SELECT doc_id, {_LINK_INJECT_SQL} AS t FROM documents),
-links AS (SELECT doc_id, unnest(regexp_extract_all(t,
-            '{WEB.HREF_RE}', 1)) AS href FROM inj),
-canon AS (SELECT doc_id, {WEB.duck_canonicalize_url_sql("href")} AS cu
-          FROM links)
-SELECT regexp_extract(cu, '://([^/?]*)', 1) AS host,
-       CAST(count(*) AS BIGINT) AS n_links,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM canon WHERE cu IS NOT NULL GROUP BY 1
-""")
-def link_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outbound-link host statistics — extract_links (raw markup) →
-    canonicalize_url → host rollup: the link-graph / domain-reputation
-    aggregation a web pipeline feeds its crawl frontier and quality
-    priors. Anchors are injected into every 4th document identically in
-    both engines (messy case/port/tracking forms, so canonicalization is
-    load-bearing). Bounded host classes keep the answer fixed-size while
-    groups grow with the corpus — one narrow groupBy after a per-row
-    extract chain."""
-    docs = _t(spark, sf_dir, "documents")
-    injected = F.when(
-        F.col("doc_id") % 4 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(' <a class="x" href="HTTP://WWW.Site'),
-            (F.col("doc_id") % 5).cast("string"),
-            F.lit(".COM:80/p?utm_campaign=c&q="),
-            (F.col("doc_id") % 3).cast("string"),
-            F.lit('">t</a> and <a href="https://cdn'),
-            (F.col("doc_id") % 2).cast("string"),
-            F.lit('.example.net/a/">u</a>'))
-    ).otherwise(F.col("text"))
-    links = docs.select(
-        "doc_id", F.explode(WEB.extract_links(injected)).alias("href"))
-    canon = links.select(
-        "doc_id", WEB.canonicalize_url(F.col("href")).alias("cu"))
-    return (canon.filter(F.col("cu").isNotNull())
-            .select(F.regexp_extract("cu", "://([^/?]*)", 1).alias("host"),
-                    "doc_id")
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_links"),
-                 F.countDistinct("doc_id").cast("long").alias("n_docs")))
 
 
 def _duck_mojibake_sql(inner: str) -> str:
@@ -9108,1467 +8143,6 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("token_savings_ppm")))
 
 
-def _duck_bpe_parts(k: int) -> list[str]:
-    """The shared unrolled k-round BPE CTE chain (tokens → weighted
-    vocabulary → k fit/rewrite rounds), each part ending in a comma, the
-    last being ``v{k}`` — the merged vocabulary every BPE oracle builds
-    on."""
-    m = "chr(31)"
-    parts = [
-        f"WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),",
-        "wc AS (SELECT w, count(*) AS cnt FROM "
-        "(SELECT unnest(t) AS w FROM toks) GROUP BY w),",
-        f"v0 AS (SELECT w, list_aggregate(list_transform("
-        f"string_split(replace(w, {m}, ''), ''), c -> {m}||c), "
-        f"'string_agg', ' ') AS syms, cnt "
-        f"FROM wc WHERE length(replace(w, {m}, '')) > 0),",
-    ]
-    for r in range(1, k + 1):
-        prev = f"v{r - 1}"
-        parts.append(
-            f"pc{r} AS (SELECT pair, sum(cnt) AS n FROM ("
-            f"SELECT unnest(list_transform(range(1, len(t)), "
-            f"i -> t[i] || ' ' || t[i+1])) AS pair, cnt "
-            f"FROM (SELECT string_split(syms, ' ') AS t, cnt FROM {prev})) "
-            f"GROUP BY pair),")
-        parts.append(
-            f"top{r} AS (SELECT pair, n FROM pc{r} "
-            f"ORDER BY n DESC, pair LIMIT 1),")
-        # trailing-space sentinel mirrors bpe.py: the pattern ends in ' '
-        # so a pair never matches a longer second symbol starting with b
-        parts.append(
-            f"v{r} AS (SELECT w, rtrim(replace(syms || ' ', "
-            f"(SELECT pair || ' ' FROM top{r}), "
-            f"(SELECT replace(pair, ' '||{m}, '') || ' ' FROM top{r}))) "
-            f"AS syms, cnt FROM {prev}),")
-    return parts
-
-
-def _duck_bpe_sql(k: int, apply: bool = False) -> str:
-    """Unrolled k-round BPE oracle (same technique as the pagerank
-    unrolled-CTE oracle): each round counts marker-encoded adjacent
-    symbol pairs weighted by word frequency, takes the deterministic
-    argmax, and rewrites the vocabulary by plain string replace. With
-    ``apply`` the final select instead joins documents' words to the
-    merged vocabulary and sums per-document subword counts."""
-    m = "chr(31)"
-    parts = _duck_bpe_parts(k)
-    parts[-1] = parts[-1].rstrip(",")
-    if apply:
-        tail = (
-            f"\nSELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, "
-            f"CAST(sum(len(string_split(syms, ' '))) AS BIGINT) "
-            f"AS n_subwords "
-            f"FROM (SELECT doc_id, unnest(t) AS w FROM toks) "
-            f"JOIN v{k} USING (w) GROUP BY doc_id")
-        return "\n".join(parts) + tail
-    selects = [
-        f"SELECT {r} AS merge_rank, replace(pair, {m}, '') AS pair, "
-        f"replace(replace(pair, ' '||{m}, ''), {m}, '') AS new_symbol, "
-        f"CAST(n AS BIGINT) AS pair_count FROM top{r}"
-        for r in range(1, k + 1)]
-    return "\n".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
-
-
-def _duck_bpe_denc_parts(k: int, extra_ctes: str = "",
-                         sel: str | None = None) -> list[str]:
-    """CTE chain for BPE token-ID encoding, ending at ``denc``
-    (doc_id, ids — each document's word-ordered token ids with the
-    trailing boundary 0 appended): the shared k-round fit chain, the
-    min-rank id map (``bpe.token_id_map``), and the per-doc flatten.
-    The packing oracles build their own sharding tails on top.
-
-    ``extra_ctes``/``sel``: optional additional CTEs (comma-terminated)
-    inserted after the fit chain, and the name of a (doc_id) CTE
-    restricting which documents get ENCODED — the merge fit always runs
-    on the full corpus (the tokenizer is trained once on everything,
-    then applied to the drawn mix)."""
-    m = "chr(31)"
-    parts = _duck_bpe_parts(k)
-    if extra_ctes:
-        parts.append(extra_ctes.rstrip().rstrip(",") + ",")
-    doc_filter = (f" WHERE doc_id IN (SELECT doc_id FROM {sel})"
-                  if sel else "")
-    ranks = " UNION ALL ".join(
-        f"SELECT {r} AS merge_rank, "
-        f"replace(replace(pair, ' '||{m}, ''), {m}, '') AS new_symbol "
-        f"FROM top{r}" for r in range(1, k + 1))
-    parts += [
-        f"mrk AS (SELECT new_symbol, min(merge_rank) AS mn "
-        f"FROM ({ranks}) GROUP BY new_symbol),",
-        # per-word symbol list with positions (markers stripped)
-        f"wsym AS (SELECT w, CAST(u.i AS INT) AS si, "
-        f"replace(ss[CAST(u.i AS INT)], {m}, '') AS sym "
-        f"FROM (SELECT w, string_split(syms, ' ') AS ss FROM v{k}), "
-        f"UNNEST(range(1, len(ss) + 1)) AS u(i)),",
-        # merged symbols are >= 2 chars, base symbols exactly 1 — the two
-        # id ranges partition with no ambiguity (token_id_map contract)
-        f"wid AS (SELECT ws.w, ws.si, "
-        f"CAST(CASE WHEN length(ws.sym) > 1 THEN mrk.mn "
-        f"ELSE {k} + unicode(ws.sym) END AS BIGINT) AS tid "
-        f"FROM wsym ws LEFT JOIN mrk ON ws.sym = mrk.new_symbol),",
-        "wl AS (SELECT w, list(tid ORDER BY si) AS ids "
-        "FROM wid GROUP BY w),",
-        "dtok AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
-        "t[CAST(u.i AS INT)] AS w "
-        f"FROM toks, UNNEST(range(1, len(t) + 1)) AS u(i){doc_filter}),",
-        "denc AS (SELECT d.doc_id, "
-        "flatten(list(wl.ids ORDER BY d.pos)) || [CAST(0 AS BIGINT)] "
-        "AS ids FROM dtok d JOIN wl USING (w) GROUP BY d.doc_id),",
-    ]
-    return parts
-
-
-def _duck_pack_tail(seq_len: int) -> str:
-    """Final per-(shard, seq_id) stats SELECT over a ``ts`` (shard,
-    gpos, tid) token-stream CTE: token count, boundary count, and the
-    Σ(pos_in_seq·id) checksum that pins every id at every position."""
-    return (
-        f"\nSELECT shard, CAST(gpos // {seq_len} AS BIGINT) AS seq_id, "
-        f"CAST(count(*) AS BIGINT) AS n_tokens, "
-        f"CAST(sum(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT) "
-        f"AS n_boundary, "
-        f"CAST(sum((gpos % {seq_len} + 1) * tid) AS BIGINT) AS checksum "
-        f"FROM ts GROUP BY shard, seq_id")
-
-
-def _duck_bpe_ids_sql(k: int, seq_len: int, n_shards: int,
-                      extra_ctes: str = "", sel: str | None = None) -> str:
-    """Oracle for BPE token-ID encoding + sequence packing: on top of the
-    shared k-round CTE chain it (1) assigns ids per
-    ``bpe.token_id_map`` — merged symbol → min merge rank, single char →
-    ``k + unicode(char)`` — from the final vocabulary ``v{k}``, (2)
-    flattens each document's word-ordered id arrays with a trailing
-    boundary 0, (3) replays the md5 sharding + exclusive-prefix offsets
-    of ``packing.pack_sequences``, and (4) reports per (shard, seq_id)
-    the token count, boundary count, and a position-weighted checksum
-    Σ(pos_in_seq·id) that pins EVERY id at EVERY position of every
-    packed sequence. See :func:`_duck_bpe_denc_parts` for
-    ``extra_ctes``/``sel``."""
-    parts = _duck_bpe_denc_parts(k, extra_ctes, sel)
-    parts += [
-        f"sh AS (SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n, "
-        f"CAST(CAST('0x' || substr(md5('shard:' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {n_shards} AS INT) "
-        f"AS shard FROM denc),",
-        "off AS (SELECT doc_id, shard, ids, n, coalesce(sum(n) OVER ("
-        "PARTITION BY shard ORDER BY doc_id "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS strt "
-        "FROM sh),",
-        "ts AS (SELECT doc_id, shard, strt + CAST(u.i AS BIGINT) - 1 "
-        "AS gpos, ids[CAST(u.i AS INT)] AS tid "
-        "FROM off, UNNEST(range(1, n + 1)) AS u(i))",
-    ]
-    return "\n".join(parts) + _duck_pack_tail(seq_len)
-
-
-def _duck_span_stats_sql(k: int, seq_len: int, n_shards: int) -> str:
-    """Span-provenance tail over the same fit/encode/pack chain: each
-    document's tokens inside one sequence are CONTIGUOUS (stream layout),
-    so the per-(shard, seq, doc) group of the token stream IS the doc
-    span — (min position-in-seq, count) — and a Σ md5-hash over
-    (doc, off, len) pins every span triple exactly."""
-    base = _duck_bpe_ids_sql(k, seq_len, n_shards)
-    body = base.rsplit("\nSELECT shard,", 1)[0]
-    return body + f""",
-span AS (SELECT shard, CAST(gpos // {seq_len} AS BIGINT) AS seq_id,
-                doc_id, CAST(min(gpos % {seq_len}) AS BIGINT) AS off,
-                CAST(count(*) AS BIGINT) AS len
-         FROM ts GROUP BY shard, gpos // {seq_len}, doc_id)
-SELECT shard, seq_id,
-  CAST(count(*) AS BIGINT) AS n_spans,
-  CAST(sum(len) AS BIGINT) AS span_tokens,
-  CAST(sum(CAST('0x' || substr(md5('sp:' || CAST(doc_id AS VARCHAR)
-      || ':' || CAST(off AS VARCHAR) || ':' || CAST(len AS VARCHAR)),
-      1, 10) AS BIGINT)) AS BIGINT) AS span_checksum
-FROM span GROUP BY shard, seq_id"""
-
-
-@register("bpe_fit_merges", _duck_bpe_sql(5))
-def bpe_fit_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary induction (operators.bpe.bpe_fit, Sennrich et al.
-    2016): the first 5 merges learned from the corpus — the on-cluster
-    tokenizer-training stage of a training-data pipeline. One corpus pass
-    builds the weighted vocabulary; every merge round then aggregates the
-    vocabulary only (orders of magnitude smaller, shrinking each round),
-    so cost is independent of corpus size after the first scan. Marker
-    encoding makes the merge a plain left-to-right string replace —
-    textbook greedy semantics with no lookaround regex, identical in any
-    engine. The oracle unrolls the 5 rounds as chained CTEs with
-    scalar-subquery argmaxes; ties are pair-string-ordered, so the merge
-    sequence is fully deterministic."""
-    from .operators import bpe as bpe_ops
-
-    return bpe_ops.bpe_fit(_t(spark, sf_dir, "documents"), k=5)
-
-
-@register("bpe_encode_lengths", _duck_bpe_sql(5, apply=True))
-def bpe_encode_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ENCODE side of BPE (operators.bpe.bpe_apply_counts): per-doc
-    whitespace-word and subword counts under the 5 merges learned by
-    `bpe_fit_merges` — the real token-budget number packing/mixing stages
-    need once a subword vocab exists. The merge chain rewrites only the
-    distinct-word table; the corpus pays one explode + one word→length
-    join + one per-doc agg. Oracle: the same unrolled 5-round CTE chain,
-    ending in the document join instead of the merge list."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    return bpe_ops.bpe_apply_counts(docs, merges)
-
-
-def _duck_bpe_fertility_sql(k: int) -> str:
-    """Per-source tokenizer-quality oracle: the shared fit chain, then
-    per-doc word/subword/char sums joined to the documents' source and
-    aggregated — fertility (subwords per word) and compression (chars
-    per subword) in exact integer micro units."""
-    m = "chr(31)"
-    parts = _duck_bpe_parts(k)
-    parts[-1] = parts[-1].rstrip(",")
-    tail = f"""
-, dw AS (SELECT doc_id, unnest(t) AS w FROM toks),
-dc AS (SELECT dw.doc_id,
-              count(*) AS n_words,
-              sum(len(string_split(v{k}.syms, ' '))) AS n_subwords,
-              sum(length(replace(dw.w, {m}, ''))) AS n_chars
-       FROM dw JOIN v{k} USING (w) GROUP BY dw.doc_id)
-SELECT d.source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(dc.n_words) AS BIGINT) AS n_words,
-       CAST(sum(dc.n_subwords) AS BIGINT) AS n_subwords,
-       CAST(sum(dc.n_chars) AS BIGINT) AS n_chars,
-       CAST(sum(dc.n_subwords) * 1000000 // sum(dc.n_words) AS BIGINT)
-         AS fertility_micro,
-       CAST(sum(dc.n_chars) * 1000000 // sum(dc.n_subwords) AS BIGINT)
-         AS chars_per_subword_micro
-FROM dc JOIN documents d USING (doc_id)
-GROUP BY d.source"""
-    return "\n".join(parts) + tail
-
-
-@register("tokenizer_fertility_report", _duck_bpe_fertility_sql(5))
-def tokenizer_fertility_report(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """Per-source TOKENIZER-QUALITY report: fertility (subwords per
-    whitespace word, micro units) and compression (chars per subword)
-    under the learned merges — the diagnostic a tokenizer owner tracks
-    per corpus slice (a source whose fertility is an outlier is being
-    tokenized badly: wrong domain for the merges, or junk text), and
-    the per-source token-budget correction factor a mixture designer
-    applies when targets were set in whitespace words. All exact
-    integers. Plan: encode rides `bpe_apply_counts`' auto→local path
-    (one distinct-word pass, driver replay, broadcast join); char sums
-    are a pure map over the same tokens; ONE per-source aggregate."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    counts = bpe_ops.bpe_apply_counts(docs, merges)
-    clean = lambda t: F.regexp_replace(t, "\x1f", "")
-    chars = F.aggregate(
-        F.filter(T.tokens(F.col("text")),
-                 lambda t: F.length(clean(t)) > 0),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + F.length(clean(t)))
-    meta = docs.select("doc_id", "source", chars.alias("n_chars"))
-    j = counts.join(meta, "doc_id")
-    return (j.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n_words").cast("long").alias("n_words"),
-                 F.sum("n_subwords").cast("long").alias("n_subwords"),
-                 F.sum("n_chars").cast("long").alias("n_chars"))
-            .withColumn("fertility_micro",
-                        F.expr("n_subwords * 1000000 div n_words"))
-            .withColumn("chars_per_subword_micro",
-                        F.expr("n_chars * 1000000 div n_subwords")))
-
-
-def _duck_subword_draw_sql(k: int) -> str:
-    """Subword-unit mixture-draw oracle: the shared k-round fit chain →
-    per-doc SUBWORD counts (the fertility report's dc CTE) → the exact
-    allocation + prefix-draw + per-source audit chain of
-    ``mixture_draw_stats``, with the subword count as the token
-    weight."""
-    parts = _duck_bpe_parts(k)
-    w_total = sum(_MIX_WEIGHTS.values())
-    parts += [
-        "dw AS (SELECT doc_id, unnest(t) AS w FROM toks),",
-        f"dc AS (SELECT dw.doc_id, "
-        f"CAST(sum(len(string_split(v{k}.syms, ' '))) AS BIGINT) AS w "
-        f"FROM dw JOIN v{k} USING (w) GROUP BY dw.doc_id),",
-        "msrc AS (SELECT d.source, c.doc_id, c.w "
-        "FROM dc c JOIN documents d USING (doc_id)),",
-        "avail AS (SELECT source, CAST(sum(w) AS BIGINT) "
-        "AS available_tokens FROM msrc GROUP BY source),",
-        f"wt AS (SELECT source, available_tokens, "
-        f"CAST({_duck_mix_weight_case()} AS BIGINT) AS wgt FROM avail),",
-        f"q AS (SELECT source, available_tokens, "
-        f"CAST({_MIX_BUDGET} * wgt // {w_total} AS BIGINT) AS quota, "
-        f"({_MIX_BUDGET} * wgt) % {w_total} AS rm FROM wt),",
-        f"r AS (SELECT source, available_tokens, quota, "
-        f"row_number() OVER (ORDER BY rm DESC, source) AS rk, "
-        f"{_MIX_BUDGET} - sum(quota) OVER () AS leftover FROM q),",
-        "t AS (SELECT source, available_tokens, "
-        "CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END "
-        "AS BIGINT) AS target_tokens FROM r),",
-        "mbase AS (SELECT source, doc_id, w, "
-        "CAST('0x' || substr(md5('mixdraw:' || CAST(doc_id AS VARCHAR)), "
-        "1, 8) AS BIGINT) AS key FROM msrc),",
-        "mcum AS (SELECT source, doc_id, w, "
-        "sum(w) OVER (PARTITION BY source ORDER BY key % 8, key, doc_id "
-        "ROWS UNBOUNDED PRECEDING) AS ci FROM mbase),",
-        "j AS (SELECT c.source, c.w, c.ci - c.w AS ce, "
-        "t.available_tokens, t.target_tokens, "
-        "CASE WHEN t.available_tokens > 0 "
-        "THEN t.target_tokens // t.available_tokens ELSE 0 END "
-        "AS full_epochs, "
-        "CASE WHEN t.available_tokens > 0 "
-        "THEN t.target_tokens % t.available_tokens ELSE 0 END AS rem "
-        "FROM mcum c JOIN t USING (source)),",
-        "s AS (SELECT source, "
-        "CAST(max(available_tokens) AS BIGINT) AS available_tokens, "
-        "CAST(max(target_tokens) AS BIGINT) AS target_tokens, "
-        "CAST(max(full_epochs) AS BIGINT) AS full_epochs, "
-        "CAST(max(rem) AS BIGINT) AS frac_target, "
-        "CAST(coalesce(sum(CASE WHEN ce < rem THEN w END), 0) AS BIGINT) "
-        "AS drawn_frac_tokens, "
-        "CAST(count(CASE WHEN ce < rem THEN 1 END) AS BIGINT) "
-        "AS drawn_frac_docs, "
-        "CAST(max(CASE WHEN ce < rem THEN w END) AS BIGINT) "
-        "AS max_drawn_doc_tokens FROM j GROUP BY source)",
-    ]
-    tail = """
-SELECT source, available_tokens, target_tokens, full_epochs, frac_target,
-       drawn_frac_tokens, drawn_frac_docs, max_drawn_doc_tokens,
-       CAST(full_epochs * available_tokens + drawn_frac_tokens AS BIGINT)
-         AS drawn_total_tokens,
-       CAST(full_epochs * available_tokens + drawn_frac_tokens
-            - target_tokens AS BIGINT) AS overshoot,
-       (full_epochs * available_tokens + drawn_frac_tokens
-          = target_tokens)
-       OR (full_epochs * available_tokens + drawn_frac_tokens
-             - target_tokens < max_drawn_doc_tokens) AS within_one_doc
-FROM s"""
-    return "\n".join(parts) + tail
-
-
-@register("mixture_subword_draw_stats", _duck_subword_draw_sql(5))
-def mixture_subword_draw_stats(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """FERTILITY-WEIGHTED mixture draw: allocation and physical draw in
-    SUBWORD units. Training budgets are subword tokens, but
-    `mixture_draw_stats` budgets whitespace words — a source with
-    outlier fertility (subwords per word, the number
-    `tokenizer_fertility_report` measures) silently gets more or less
-    than its share of the ACTUAL training budget. Here the per-doc
-    token weight is `bpe_apply_counts`' n_subwords under the learned
-    merges, so Hamilton targets, epochs, and the prefix cut all operate
-    in the units the trainer consumes, and the within-one-doc overshoot
-    bound is re-pinned on the subword number line. Same report shape as
-    `mixture_draw_stats` — diffing the two IS the fertility correction.
-    Plan: the subword counts ride `bpe_apply_counts`' auto→local encode
-    (one distinct-word pass, broadcast word→len join); allocation
-    aggregates once; the draw is the two-level sharded prefix sum.
-    Oracle: the shared fit chain + the fertility dc CTE feeding the
-    exact allocation/draw/audit SQL of the whitespace variant."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    sub = bpe_ops.bpe_apply_counts(docs, merges).select(
-        "doc_id", F.col("n_subwords").alias("n_tokens"))
-    meta = docs.select("source", "doc_id").join(sub, "doc_id")
-    alloc = materialize(samp_ops.mixture_allocation(
-        meta, _MIX_WEIGHTS, _MIX_BUDGET).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(meta, alloc)
-    return _mixture_draw_report(draw, alloc)
-
-
-def _duck_bpe_vocab_sql(k: int) -> str:
-    """Vocabulary-export oracle: the merge ranks (min per distinct
-    new_symbol), the corpus's distinct base characters at k+codepoint,
-    and the reserved boundary id 0."""
-    m = "chr(31)"
-    parts = _duck_bpe_parts(k)
-    ranks = " UNION ALL ".join(
-        f"SELECT {r} AS merge_rank, "
-        f"replace(replace(pair, ' '||{m}, ''), {m}, '') AS new_symbol "
-        f"FROM top{r}" for r in range(1, k + 1))
-    parts += [
-        f"mrk AS (SELECT new_symbol, min(merge_rank) AS mn "
-        f"FROM ({ranks}) GROUP BY new_symbol),",
-        f"chars AS (SELECT DISTINCT unnest(string_split("
-        f"replace(w, {m}, ''), '')) AS c FROM wc "
-        f"WHERE length(replace(w, {m}, '')) > 0)",
-    ]
-    tail = (
-        f"\nSELECT CAST(0 AS BIGINT) AS token_id, "
-        f"CAST(NULL AS VARCHAR) AS symbol, 'boundary' AS kind"
-        f"\nUNION ALL SELECT CAST(mn AS BIGINT), new_symbol, 'merge' "
-        f"FROM mrk"
-        f"\nUNION ALL SELECT CAST({k} + unicode(c) AS BIGINT), c, 'base' "
-        f"FROM chars")
-    return "\n".join(parts) + tail
-
-
-@register("bpe_vocab_export", _duck_bpe_vocab_sql(5))
-def bpe_vocab_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer ARTIFACT as data (bpe.bpe_vocab_table): one row per
-    assignable token id — boundary 0, each distinct merged symbol at its
-    min rank, each corpus base character at k+codepoint — the table a
-    trainer's detokenizer or an embedding-matrix initializer loads. With
-    `bpe_fit_merges` (the merges) and `packed_sequence_stats` (the
-    packed ids) this closes the tokenizer loop: fit → export → encode →
-    pack, every stage oracle-paired. Plan: one corpus pass for the
-    distinct-character alphabet; merge rows are merge-table-sized."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    return bpe_ops.bpe_vocab_table(docs, merges)
-
-
-@register("packed_sequence_stats", _duck_bpe_ids_sql(5, seq_len=64,
-                                                     n_shards=8))
-def packed_sequence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized TRAINING EXAMPLES end-to-end: fit 5 BPE merges, encode
-    every document to its token-ID sequence (`bpe.bpe_encode_ids` — ids
-    per `bpe.token_id_map`: merge rank for merged symbols, k+codepoint
-    for base chars, 0 reserved for the document boundary), then pack the
-    id streams into fixed 64-token sequences per md5 shard with a
-    boundary marker after each document (`packing.pack_sequences` —
-    documents may straddle cuts; the last sequence per shard is
-    unpadded). Reported per sequence: token count, boundary count, and
-    the position-weighted checksum Σ(pos·id) — a single BIGINT that pins
-    every id at every position, so the oracle verifies the actual packed
-    id content, not just shapes. The encode is driver-side over the
-    distinct-word vocabulary broadcast back (the corpus shuffles once);
-    packing moves only fragment slices (see pack_sequences' plan
-    notes)."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs, merges)
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    ids = F.col("input_ids")
-    pos = F.sequence(F.lit(1).cast("long"), F.size(ids).cast("long"))
-    checksum = F.when(
-        F.size(ids) > 0,
-        F.aggregate(F.zip_with(ids, pos, lambda x, i: x * i),
-                    F.lit(0).cast("long"), lambda a, x: a + x)
-    ).otherwise(F.lit(0))
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("n_tokens"),
-        F.size(F.filter(ids, lambda x: x == 0)).cast("long")
-        .alias("n_boundary"),
-        checksum.cast("long").alias("checksum"))
-
-
-@register("packed_span_stats", _duck_span_stats_sql(5, seq_len=64,
-                                                    n_shards=8))
-def packed_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DOCUMENT-SPAN provenance of the packed sequences
-    (`packing.pack_sequences(with_spans=True)`): which document owns
-    which slice of each training sequence — the mask a trainer needs to
-    block cross-document attention or compute per-doc loss. Per
-    sequence: span count, span-length sum (== n_tokens — coverage is
-    exact and gap-free by construction), and a Σ md5-hash over every
-    (doc_id, off, len) triple, so the oracle pins each span's identity,
-    position, and extent. Spans ride the SAME fragment rows the ids
-    already travel on — zero extra shuffles over `packed_sequence_stats`.
-    Oracle: documents' tokens within a sequence are contiguous, so the
-    per-(shard, seq, doc) group of the replayed token stream IS the
-    span."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs, merges)
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID,
-                                     with_spans=True)
-    spans = F.col("doc_spans")
-    span_tokens = F.aggregate(spans, F.lit(0).cast("long"),
-                              lambda a, s: a + s["len"])
-    h = F.transform(spans, lambda s: T.md5_prefix_hash(
-        F.concat(s["doc_id"].cast("string"), F.lit(":"),
-                 s["off"].cast("string"), F.lit(":"),
-                 s["len"].cast("string")), seed="sp:", hex_chars=10))
-    checksum = F.aggregate(h, F.lit(0).cast("long"), lambda a, x: a + x)
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.size(spans).cast("long").alias("n_spans"),
-        span_tokens.alias("span_tokens"),
-        checksum.alias("span_checksum"))
-
-
-_DUCK_MIX_SEL_CTES = f"""
-msrc AS (SELECT source, doc_id, CAST(len({_DUCK_TOKS}) AS BIGINT) AS w
-         FROM documents),
-mavail AS (SELECT source, CAST(sum(w) AS BIGINT) AS available_tokens
-           FROM msrc GROUP BY source),
-mwt AS (SELECT source, available_tokens,
-               CAST({_duck_mix_weight_case()} AS BIGINT) AS wgt
-        FROM mavail),
-mq AS (SELECT source, available_tokens,
-              CAST({_MIX_BUDGET} * wgt // {sum(_MIX_WEIGHTS.values())}
-                   AS BIGINT) AS quota,
-              ({_MIX_BUDGET} * wgt) % {sum(_MIX_WEIGHTS.values())} AS rm
-       FROM mwt),
-mr AS (SELECT source, available_tokens, quota,
-              row_number() OVER (ORDER BY rm DESC, source) AS rk,
-              {_MIX_BUDGET} - sum(quota) OVER () AS leftover
-       FROM mq),
-mtgt AS (SELECT source, available_tokens,
-                CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
-                     AS BIGINT) AS target_tokens
-         FROM mr),
-mbase AS (SELECT source, doc_id, w,
-  CAST('0x' || substr(md5('mixdraw:' || CAST(doc_id AS VARCHAR)), 1, 8)
-       AS BIGINT) AS key
-  FROM msrc),
-mcum AS (SELECT source, doc_id, w,
-         sum(w) OVER (PARTITION BY source ORDER BY key % 8, key, doc_id
-                      ROWS UNBOUNDED PRECEDING) AS ci
-         FROM mbase),
-msel AS (SELECT c.doc_id FROM mcum c JOIN mtgt g USING (source)
-         WHERE c.ci - c.w < CASE WHEN g.available_tokens > 0
-               THEN g.target_tokens % g.available_tokens ELSE 0 END)"""
-
-
-@register("mixture_pack_pipeline",
-          _duck_bpe_ids_sql(5, seq_len=64, n_shards=8,
-                            extra_ctes=_DUCK_MIX_SEL_CTES, sel="msel"))
-def mixture_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training-data pipeline END-TO-END: Hamilton mixture targets
-    (`mixture_allocation`) → physical per-source token-prefix draw
-    (`token_budget_prefix_draw`, the fraction arm — full-epoch repeats
-    are a loader-side multiplicity, never materialized twice) → BPE
-    token-ID encoding of the DRAWN docs under merges fit on the FULL
-    corpus (the tokenizer is trained once on everything, then applied to
-    the mix) → fixed-length sequence packing — reported as the same
-    per-sequence (n_tokens, n_boundary, Σ pos·id checksum) stats as
-    `packed_sequence_stats`, so the oracle pins every id at every
-    position OF THE MIXED DRAW. This is the composition the three
-    operators individually promised; one query makes it executable.
-    Plan: allocation aggregates once; the draw is the two-level sharded
-    prefix sum; encode is the broadcast word→ids join over drawn docs
-    only; packing moves fragment slices. Oracle: the shared unrolled
-    fit chain + the mixture/draw CTEs + the ids/packing chain filtered
-    to the drawn doc set."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    meta = docs.select("source", "doc_id",
-                       T.token_count(F.col("text")).cast("long")
-                       .alias("n_tokens"))
-    alloc = materialize(samp_ops.mixture_allocation(
-        meta, _MIX_WEIGHTS, _MIX_BUDGET).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(meta, alloc)
-    sel = draw.filter(F.col("in_fraction")).select("doc_id")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs.join(sel, "doc_id"), merges)
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    ids = F.col("input_ids")
-    pos = F.sequence(F.lit(1).cast("long"), F.size(ids).cast("long"))
-    checksum = F.when(
-        F.size(ids) > 0,
-        F.aggregate(F.zip_with(ids, pos, lambda x, i: x * i),
-                    F.lit(0).cast("long"), lambda a, x: a + x)
-    ).otherwise(F.lit(0))
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("n_tokens"),
-        F.size(F.filter(ids, lambda x: x == 0)).cast("long")
-        .alias("n_boundary"),
-        checksum.cast("long").alias("checksum"))
-
-
-def _duck_packed_shuffle_sql(k: int, seq_len: int, n_shards: int,
-                             n_out: int) -> str:
-    """Training-order-shuffle oracle: the shared fit/encode/pack chain
-    up to the token stream, re-aggregated to one row per sequence, then
-    the md5-order global rank + round-robin assignment of
-    ``ranking.shuffle_shards`` over the sequence keys, fingerprinted per
-    output shard with md5 over the ','-joined pos-ordered key string —
-    one VARCHAR that pins every sequence's shard AND its exact position
-    (no integer-checksum overflow at any probe scale)."""
-    base = _duck_bpe_ids_sql(k, seq_len, n_shards)
-    body = base.rsplit("\nSELECT shard,", 1)[0]
-    return body + f""",
-seqs AS (SELECT shard, CAST(gpos // {seq_len} AS BIGINT) AS seq_id,
-                CAST(count(*) AS BIGINT) AS n_tokens
-         FROM ts GROUP BY shard, gpos // {seq_len}),
-sk AS (SELECT CAST(shard AS VARCHAR) || ':' || CAST(seq_id AS VARCHAR)
-         AS seq_key, n_tokens FROM seqs),
-hk AS (SELECT seq_key, n_tokens,
-              CAST('0x' || substr(md5('shufseq:' || seq_key), 1, 8)
-                   AS BIGINT) AS h
-       FROM sk),
-rk AS (SELECT seq_key, n_tokens,
-              row_number() OVER (ORDER BY h, seq_key) AS g
-       FROM hk),
-asn AS (SELECT seq_key, n_tokens, (g - 1) % {n_out} AS out_shard,
-               (g - 1) // {n_out} AS pos
-        FROM rk)
-SELECT CAST(out_shard AS BIGINT) AS out_shard,
-       CAST(count(*) AS BIGINT) AS n_seqs,
-       CAST(sum(n_tokens) AS BIGINT) AS tokens,
-       md5(string_agg(seq_key, ',' ORDER BY pos)) AS order_fp
-FROM asn GROUP BY out_shard"""
-
-
-@register("packed_shuffle_stats",
-          _duck_packed_shuffle_sql(5, seq_len=64, n_shards=8, n_out=4))
-def packed_shuffle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAST step of the data-loading story: a deterministic
-    TRAINING-ORDER shuffle over the packed sequences. `pack_sequences`
-    emits sequences in doc-id-order streams per pack shard — a trainer
-    reading shard-by-shard sees source/time-correlated data.
-    `ranking.shuffle_shards` over the sequence keys (md5 order — a pure
-    function of the keys, identical across runs and engines) deals the
-    sequences round-robin into output shards, so every output shard is
-    an evenly-sized hash-stratified sample of the WHOLE packed corpus
-    and within-shard order is itself hash-random. Reported per output
-    shard: sequence count, token mass, and an md5 fingerprint of the
-    ','-joined pos-ordered key string — the oracle pins every
-    sequence's shard assignment and exact within-shard position. This
-    completes allocate → draw → encode → pack → SHUFFLE. Plan: the
-    shuffle ranks with the two-pass range-partition global row number
-    (no global window funnel); everything downstream of packing moves
-    one answer-sized row per SEQUENCE, never ids."""
-    from .operators import bpe as bpe_ops
-    from .operators import ranking as rank_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs, merges)
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    keyed = packed.select(
-        F.concat_ws(":", F.col("shard").cast("string"),
-                    F.col("seq_id").cast("string")).alias("seq_key"),
-        "n_tokens")
-    shuf = rank_ops.shuffle_shards(keyed, id_col="seq_key", n_shards=4,
-                                   seed="shufseq:")
-    order_fp = F.md5(F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"),
-                                                 F.col("seq_key")))),
-            lambda s: s["seq_key"]),
-        ","))
-    return (shuf.groupBy(F.col("shard").cast("long").alias("out_shard"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_seqs"),
-                 F.sum("n_tokens").cast("long").alias("tokens"),
-                 order_fp.alias("order_fp")))
-
-
-def _duck_epoch_shuffle_sql(k: int, seq_len: int, n_shards: int,
-                            n_out: int, seeds: tuple[str, ...]) -> str:
-    """Oracle for per-epoch training orders: the shared
-    fit/encode/pack/sequence-key chain ONCE, then one md5-rank +
-    round-robin assignment chain PER epoch seed, unioned with an epoch
-    column — same fingerprint contract as the single-shuffle oracle."""
-    base = _duck_bpe_ids_sql(k, seq_len, n_shards)
-    body = base.rsplit("\nSELECT shard,", 1)[0]
-    parts = [body + f""",
-seqs AS (SELECT shard, CAST(gpos // {seq_len} AS BIGINT) AS seq_id,
-                CAST(count(*) AS BIGINT) AS n_tokens
-         FROM ts GROUP BY shard, gpos // {seq_len}),
-sk AS (SELECT CAST(shard AS VARCHAR) || ':' || CAST(seq_id AS VARCHAR)
-         AS seq_key, n_tokens FROM seqs)"""]
-    arms = []
-    for i, seed in enumerate(seeds, start=1):
-        parts.append(f""",
-hk{i} AS (SELECT seq_key, n_tokens,
-              CAST('0x' || substr(md5('{seed}' || seq_key), 1, 8)
-                   AS BIGINT) AS h
-       FROM sk),
-rk{i} AS (SELECT seq_key, n_tokens,
-              row_number() OVER (ORDER BY h, seq_key) AS g
-       FROM hk{i}),
-asn{i} AS (SELECT seq_key, n_tokens, (g - 1) % {n_out} AS out_shard,
-               (g - 1) // {n_out} AS pos
-        FROM rk{i})""")
-        arms.append(f"""SELECT CAST({i} AS BIGINT) AS epoch,
-       CAST(out_shard AS BIGINT) AS out_shard,
-       CAST(count(*) AS BIGINT) AS n_seqs,
-       CAST(sum(n_tokens) AS BIGINT) AS tokens,
-       md5(string_agg(seq_key, ',' ORDER BY pos)) AS order_fp
-FROM asn{i} GROUP BY out_shard""")
-    return "".join(parts) + "\n" + "\nUNION ALL\n".join(arms)
-
-
-@register("epoch_shuffle_orders",
-          _duck_epoch_shuffle_sql(5, seq_len=64, n_shards=8, n_out=4,
-                                  seeds=("ep1:", "ep2:")))
-def epoch_shuffle_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-EPOCH training orders — multi-epoch training must not replay
-    epoch 1's order (gradient noise correlates across epochs and
-    order-dependent curricula fossilize): each epoch shuffles the SAME
-    packed-sequence set under a DIFFERENT seed in the hash
-    (`ranking.shuffle_shards(seed='ep{{k}}:')` — still a pure function
-    of keys, so any worker can recompute epoch k's order with no RNG
-    state to distribute). Output: per (epoch, out_shard) sequence
-    count, token sum, and the pos-ordered key fingerprint. The counts
-    pin that both epochs carry the identical sequence multiset (shard
-    sizes match); the fingerprints pin each epoch's EXACT order — and
-    differ between epochs, which the oracle verifies value-by-value
-    rather than asserting.
-
-    Plan: the pack chain runs ONCE (materialized sequence keys —
-    answer-sized); each epoch adds one md5-rank two-pass global row
-    number + a groupBy over sequence KEYS only. Epochs are embarrassingly
-    independent — a trainer schedules epoch k's shuffle the day it
-    needs it."""
-    from .operators import bpe as bpe_ops
-    from .operators import ranking as rank_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs, merges)
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    keyed = materialize(packed.select(
-        F.concat_ws(":", F.col("shard").cast("string"),
-                    F.col("seq_id").cast("string")).alias("seq_key"),
-        "n_tokens"))
-    order_fp = F.md5(F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"),
-                                                 F.col("seq_key")))),
-            lambda s: s["seq_key"]),
-        ","))
-    rows = []
-    for epoch in (1, 2):
-        shuf = rank_ops.shuffle_shards(keyed, id_col="seq_key",
-                                       n_shards=4, seed=f"ep{epoch}:")
-        rows.append(
-            shuf.groupBy(F.col("shard").cast("long").alias("out_shard"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_seqs"),
-                 F.sum("n_tokens").cast("long").alias("tokens"),
-                 order_fp.alias("order_fp"))
-            .select(F.lit(epoch).cast("long").alias("epoch"),
-                    "out_shard", "n_seqs", "tokens", "order_fp"))
-    return rows[0].unionByName(rows[1])
-
-
-# 5-gram twin of _DUCK_SHINGLES (word_shingles(col, 5)): decontamination
-# uses WIDER shingles than the 3-gram dedup signature — at 3 grams the
-# synthetic corpus's shared phrases contaminate ~86% of documents (measured
-# sf0.001: 407/473), which is a false-positive rate no production pass
-# would ship; 5-grams measure 5/473
-_SH5 = ("list_distinct(list_transform(range(1, greatest(len(t)-4,1)+1), "
-        "i -> array_to_string(t[i:i+4], ' ')))")
-
-
-def _duck_corpus_to_shards_sql(k: int, seq_len: int, n_shards: int,
-                               n_out: int) -> str:
-    """Oracle for the FULL corpus→training-shards capstone: the
-    production stage chain — eval split, Gopher quality gate,
-    MinHash-LSH near-dedup with quality-argmax survivors, n-gram
-    decontamination, mixture allocate/draw, BPE fit (on the CLEAN
-    corpus) + encode, packing, training-order shuffle — composed as ONE
-    WITH RECURSIVE chain from the per-stage CTE factories the
-    individual oracles already pin (minhash/survivor CTEs re-sourced to
-    the gated candidate set via word-boundary renames; the mixture and
-    fit chains re-sourced to the clean corpus). Final select: per
-    output shard the sequence count, token mass, and pos-ordered key
-    fingerprint, plus the stage-size scalar columns that pin how many
-    documents each stage passed."""
-    import re
-
-    def resrc(sql: str, src: str, renames: dict[str, str]) -> str:
-        out = re.sub(r"\bFROM documents\b", f"FROM {src}", sql)
-        for old, new in renames.items():
-            out = re.sub(rf"\b{old}\b", new, out)
-        return out
-
-    mh = resrc(_DUCK_MINHASH_CTES, "dq",
-               {"toks": "mtoks", "sh": "msh", "sig": "msig",
-                "bands": "mbands"})
-    prefix = f"""cand AS (SELECT doc_id, source, text FROM documents
-  WHERE doc_id % 19 <> 0),
-gt AS (SELECT doc_id, text, {_DUCK_TOKS} AS t FROM cand),
-gf AS (SELECT doc_id,
-  CAST(len(t) AS BIGINT) AS n_words,
-  CAST(coalesce(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT)
-    AS char_sum,
-  CAST(len(list_filter(t, x -> regexp_matches(x, '[a-z]'))) AS BIGINT)
-    AS n_alpha,
-  CAST(len(list_filter(t,
-        x -> list_contains([{_GOPHER_STOP_LIST}], x))) AS BIGINT)
-    AS n_stop_hits,
-  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
-    + CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
-    AS symbols
- FROM gt),
-gs AS (SELECT doc_id, n_words,
-  CASE WHEN n_words > 0 THEN char_sum * 1000000 // n_words
-       WHEN n_words IS NOT NULL THEN 0 END AS mean_word_len_u,
-  CASE WHEN n_words > 0 THEN symbols * 1000000 // n_words
-       WHEN n_words IS NOT NULL THEN 0 END AS symbol_word_ppm,
-  CASE WHEN n_words > 0 THEN n_alpha * 1000000 // n_words
-       WHEN n_words IS NOT NULL THEN 0 END AS alpha_word_ppm,
-  n_stop_hits
- FROM gf),
-gp AS (SELECT doc_id FROM gs
- WHERE n_words BETWEEN {T.GOPHER_MIN_WORDS} AND {T.GOPHER_MAX_WORDS}
-   AND mean_word_len_u BETWEEN {T.GOPHER_MIN_MEAN_WORD_LEN_U}
-                           AND {T.GOPHER_MAX_MEAN_WORD_LEN_U}
-   AND symbol_word_ppm <= {T.GOPHER_MAX_SYMBOL_WORD_PPM}
-   AND alpha_word_ppm >= {T.GOPHER_MIN_ALPHA_WORD_PPM}
-   AND n_stop_hits >= {T.GOPHER_MIN_STOP_HITS}),
-dq AS (SELECT c.doc_id, c.text FROM cand c JOIN gp USING (doc_id)),
-{mh},
-edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
-          UNION SELECT id_b, id_a FROM mh_pairs),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach(src, dst) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-comp AS (SELECT src AS id, min(dst) AS component FROM reach GROUP BY src),
-kb AS (
-  SELECT doc_id,
-         length(text) AS n,
-         length(text) - length(regexp_replace(text,
-             '[\\.,;:!\\?"''\\(\\)\\[\\]\\{{\\}}]', '', 'g')) AS n_punct,
-         list_filter(string_split_regex(lower(trim(text)), '[\\s\\v]+'),
-                     x -> x <> '') AS t
-  FROM dq),
-kq AS (
-  SELECT doc_id,
-         CAST(floor((0.4 * least(n / 500.0, 1.0)
-           + 0.3 * (1.0 - least((CASE WHEN n > 0
-               THEN CAST(n_punct AS DOUBLE) / n ELSE 0.0 END) * 5.0, 1.0))
-           + 0.3 * least((CASE WHEN len(t) > 0 THEN
-               CAST(len(list_filter(t, x -> x IN
-                   ('the','and','of','to','a','in','is')))
-                    AS DOUBLE) / len(t) ELSE 0.0 END) * 5.0, 1.0))
-           * 1000000) AS BIGINT) AS quality_micro
-  FROM kb),
-kg AS (SELECT d.doc_id,
-              CAST(coalesce(c.component, d.doc_id) AS BIGINT) AS gkey,
-              kq.quality_micro
-       FROM dq d
-       LEFT JOIN comp c ON d.doc_id = c.id
-       JOIN kq ON d.doc_id = kq.doc_id),
-kw AS (SELECT doc_id, gkey,
-              row_number() OVER (PARTITION BY gkey
-                                 ORDER BY quality_micro DESC, doc_id)
-                AS rk
-       FROM kg),
-surv AS (SELECT doc_id FROM kw WHERE rk = 1),
-etoks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents
-          WHERE doc_id % 19 = 0),
-esh AS (SELECT DISTINCT u.ng AS ng FROM
-        (SELECT {_SH5} AS s FROM etoks), UNNEST(s) AS u(ng)),
-ssh AS (SELECT doc_id, {_SH5} AS s FROM mtoks
-        WHERE doc_id IN (SELECT doc_id FROM surv)),
-contam AS (SELECT DISTINCT doc_id
-           FROM ssh, UNNEST(s) AS u(ng)
-           WHERE u.ng IN (SELECT ng FROM esh)),
-cleanids AS MATERIALIZED (SELECT doc_id FROM surv
-             WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-dclean AS MATERIALIZED (SELECT c.doc_id, c.source, c.text FROM cand c
-           JOIN cleanids USING (doc_id))"""
-    mix = re.sub(r"\bFROM documents\b", "FROM dclean", _DUCK_MIX_SEL_CTES)
-    # the pipeline's filters can eliminate whole sources; the capstone
-    # re-normalizes the mixture over SURVIVING sources (the Spark side
-    # restricts the weight dict the same way), so the apportionment
-    # denominator becomes Σ wgt over present sources instead of the
-    # full-config constant
-    tot = str(sum(_MIX_WEIGHTS.values()))
-    mix = (mix.replace(f"// {tot}", "// (SELECT sum(wgt) FROM mwt)")
-           .replace(f"% {tot}", "% (SELECT sum(wgt) FROM mwt)"))
-    parts = _duck_bpe_denc_parts(k, extra_ctes=mix, sel="msel")
-    parts[0] = parts[0].replace("FROM documents", "FROM dclean")
-    parts[0] = parts[0].replace("WITH toks AS",
-                                f"WITH RECURSIVE\n{prefix},\ntoks AS")
-    parts += [
-        f"psh AS (SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n, "
-        f"CAST(CAST('0x' || substr(md5('shard:' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {n_shards} AS INT) "
-        f"AS shard FROM denc),",
-        "off AS (SELECT doc_id, shard, ids, n, coalesce(sum(n) OVER ("
-        "PARTITION BY shard ORDER BY doc_id "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS strt "
-        "FROM psh),",
-        "ts AS (SELECT doc_id, shard, strt + CAST(u.i AS BIGINT) - 1 "
-        "AS gpos, ids[CAST(u.i AS INT)] AS tid "
-        "FROM off, UNNEST(range(1, n + 1)) AS u(i)),",
-        f"seqs AS (SELECT shard, CAST(gpos // {seq_len} AS BIGINT) "
-        f"AS seq_id, CAST(count(*) AS BIGINT) AS n_tokens "
-        f"FROM ts GROUP BY shard, gpos // {seq_len}),",
-        "sk AS (SELECT CAST(shard AS VARCHAR) || ':' || "
-        "CAST(seq_id AS VARCHAR) AS seq_key, n_tokens FROM seqs),",
-        "hk AS (SELECT seq_key, n_tokens, "
-        "CAST('0x' || substr(md5('shufseq:' || seq_key), 1, 8) AS BIGINT) "
-        "AS h FROM sk),",
-        "rk AS (SELECT seq_key, n_tokens, "
-        "row_number() OVER (ORDER BY h, seq_key) AS g FROM hk),",
-        f"asn AS (SELECT seq_key, n_tokens, (g - 1) % {n_out} AS "
-        f"out_shard, (g - 1) // {n_out} AS pos FROM rk)",
-    ]
-    return "\n".join(parts) + f"""
-SELECT CAST(out_shard AS BIGINT) AS out_shard,
-       CAST(count(*) AS BIGINT) AS n_seqs,
-       CAST(sum(n_tokens) AS BIGINT) AS tokens,
-       md5(string_agg(seq_key, ',' ORDER BY pos)) AS order_fp,
-       (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates,
-       (SELECT CAST(count(*) AS BIGINT) FROM gp) AS n_quality,
-       (SELECT CAST(count(*) AS BIGINT) FROM surv) AS n_survivors,
-       (SELECT CAST(count(*) AS BIGINT) FROM cleanids) AS n_clean,
-       (SELECT CAST(count(*) AS BIGINT) FROM msel) AS n_drawn
-FROM asn GROUP BY out_shard"""
-
-
-@register("corpus_to_shards_pipeline",
-          _duck_corpus_to_shards_sql(5, seq_len=64, n_shards=8, n_out=4))
-def corpus_to_shards_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CAPSTONE: raw corpus → training shards in one lazily-composed
-    plan, chaining every production leg the per-stage queries prove
-    individually — (1) held-out eval split (the `doc_id % 19` slice the
-    decontamination queries use), (2) Gopher quality gate on raw text
-    (`gopher_quality_flags` rule set, no synthetic injection), (3)
-    MinHash-LSH near-dedup keeping the best-QUALITY doc per duplicate
-    cluster (`quality_dedup_survivors` policy), (4) n-gram
-    decontamination of the survivors against the eval slice
-    (`decontaminate_ngram_overlap` shape, doc-level drop), (5) Hamilton
-    mixture allocation + token-budget prefix draw over the CLEAN corpus
-    (`mixture_pack_pipeline` legs), (6) BPE fit on the clean corpus +
-    token-ID encode of the drawn docs, (7) fixed-length packing, (8)
-    deterministic training-order shuffle (`packed_shuffle_stats` leg).
-    Output: per output shard (n_seqs, tokens, exact order fingerprint)
-    plus stage-size columns pinning each stage's survivor count — one
-    oracle row-set certifies the whole composition.
-
-    The integration question this answers: the stages COMPOSE lazily —
-    barriers exist only where the per-stage operators already place
-    them (LSH component convergence, mixture allocation's bounded
-    table, the answer-sized sequence keys), so no stage forces a
-    corpus-wide materialization cliff between legs. Stage chain cost ≈
-    Σ stage costs; the 10× row lives in SCALE.md §10.
-
-    Plan notes: the gate and quality score are pure maps; dedup
-    pairs/components/survivor joins are answer-sized broadcasts; the
-    decontamination semi-join broadcasts |eval| shingles; the tokenizer
-    trains on the CLEAN corpus (the production choice — quality/dedup
-    hygiene should shape the vocabulary, unlike the single-stage
-    queries whose contract is corpus-wide); encode touches drawn docs
-    only; the shuffle ranks answer-sized sequence keys."""
-    from .operators import bpe as bpe_ops
-    from .operators import ranking as rank_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    cand = docs.filter(F.col("doc_id") % 19 != 0)
-    ev = docs.filter(F.col("doc_id") % 19 == 0)
-
-    # (2) Gopher gate on raw text
-    g = cand.select("doc_id", "source", "text",
-                    F.explode(F.array(T.gopher_struct(F.col("text"))))
-                    .alias("g"))
-    gated = (g.filter(T.gopher_passes(F.col("g")))
-             .select("doc_id", "source", "text"))
-
-    # (3) near-dedup, best-quality survivor per cluster
-    pairs = dedup_ops.minhash_lsh_pairs(
-        gated, num_hashes=8, band_size=2, shingle_n=3)
-    comp = materialize(dedup_ops.connected_components_star(pairs))
-
-    def micro(col):
-        return F.floor(col * 1000000).cast("long")
-
-    pr, sr = T.punct_ratio(F.col("text")), T.stopword_ratio(F.col("text"))
-    packed_q = F.struct(pr.alias("pr"), sr.alias("sr"),
-                        F.least(F.length("text").cast("double") / 500.0,
-                                F.lit(1.0)).alias("lt"))
-    quality = (0.4 * F.col("s.lt")
-               + 0.3 * (1.0 - F.least(F.col("s.pr") * 5.0, F.lit(1.0)))
-               + 0.3 * F.least(F.col("s.sr") * 5.0, F.lit(1.0)))
-    scored = (gated.select("doc_id",
-                           F.explode(F.array(packed_q)).alias("s"))
-              .select("doc_id", micro(quality).alias("quality_micro")))
-    members = scored.join(
-        F.broadcast(comp.withColumnRenamed("id", "doc_id")), "doc_id")
-    win = Window.partitionBy("component").orderBy(
-        F.col("quality_micro").desc(), F.col("doc_id"))
-    winners = (members.withColumn("__rk", F.row_number().over(win))
-               .filter(F.col("__rk") == 1)
-               .select("doc_id", F.lit(True).alias("__win")))
-    surv = (scored
-            .join(F.broadcast(comp.withColumnRenamed("id", "doc_id")),
-                  "doc_id", "left")
-            .join(F.broadcast(winners), "doc_id", "left")
-            .filter(F.col("component").isNull()
-                    | F.coalesce(F.col("__win"), F.lit(False)))
-            .select("doc_id"))
-    surv_docs = gated.join(surv, "doc_id", "left_semi")
-
-    # (4) decontaminate: drop survivors sharing any 5-gram with eval
-    # (wider than the 3-gram dedup shingles — see _SH5's rationale)
-    eval_ng = (ev.select(F.explode(T.word_shingles(F.col("text"), 5))
-                         .alias("ng")).distinct())
-    contam = (surv_docs.select(
-        "doc_id", F.explode(T.word_shingles(F.col("text"), 5)).alias("ng"))
-        .join(F.broadcast(eval_ng), "ng", "left_semi")
-        .select("doc_id").distinct())
-    clean = materialize(surv_docs.join(contam, "doc_id", "left_anti"))
-
-    # (5) mixture allocate + token-budget prefix draw over clean corpus
-    meta = clean.select("source", "doc_id",
-                        T.token_count(F.col("text")).cast("long")
-                        .alias("n_tokens"))
-    # re-normalize the mixture over sources that SURVIVED the hygiene
-    # stages (mixture_allocation rightly rejects weights naming absent
-    # sources; here absence is the pipeline's own doing, not a config
-    # typo) — answer-sized distinct-source collect
-    present = {r["source"]
-               for r in meta.select("source").distinct().collect()}
-    weights = {s: w for s, w in _MIX_WEIGHTS.items() if s in present}
-    alloc = materialize(samp_ops.mixture_allocation(
-        meta, weights, _MIX_BUDGET).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(meta, alloc)
-    sel = draw.filter(F.col("in_fraction")).select("doc_id")
-
-    # (6) fit on clean corpus, encode the drawn docs
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(clean, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(clean.join(sel, "doc_id", "left_semi"),
-                                 merges)
-
-    # (7) pack, (8) shuffle to output shards
-    packed = pack_ops.pack_sequences(enc, ids_col="token_ids",
-                                     id_col="doc_id", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    keyed = packed.select(
-        F.concat_ws(":", F.col("shard").cast("string"),
-                    F.col("seq_id").cast("string")).alias("seq_key"),
-        "n_tokens")
-    shuf = rank_ops.shuffle_shards(keyed, id_col="seq_key", n_shards=4,
-                                   seed="shufseq:")
-    order_fp = F.md5(F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"),
-                                                 F.col("seq_key")))),
-            lambda s: s["seq_key"]),
-        ","))
-    counts = (cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-              .crossJoin(gated.agg(F.count(F.lit(1)).alias("n_quality")))
-              .crossJoin(surv.agg(F.count(F.lit(1)).alias("n_survivors")))
-              .crossJoin(clean.agg(F.count(F.lit(1)).alias("n_clean")))
-              .crossJoin(sel.agg(F.count(F.lit(1)).alias("n_drawn"))))
-    return (shuf.groupBy(F.col("shard").cast("long").alias("out_shard"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_seqs"),
-                 F.sum("n_tokens").cast("long").alias("tokens"),
-                 order_fp.alias("order_fp"))
-            .crossJoin(F.broadcast(counts)))
-
-
-@register("incremental_pack_stats", _duck_bpe_ids_sql(5, seq_len=64,
-                                                      n_shards=8))
-def incremental_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O(INCREMENT) encode+pack — the daily-batch shape of the packing
-    stage (packing.pack_sequences_incremental): the corpus arrives as
-    two append-only batches split at the median doc id; each batch
-    encodes and packs ONLY its own documents, continuing every shard's
-    id stream from the persisted (stream_len, open-tail) state, and
-    emits only the sequences it completed. The final output (both
-    batches' completed sequences + the closing open tails) is reported
-    with the same per-sequence stats as `packed_sequence_stats`, and
-    the oracle is the FULL-corpus pack oracle VERBATIM — the strongest
-    available evidence that the incremental path adds no semantics
-    (same proof shape as streaming_pinned_split vs its batch twin).
-    Plan: per batch, one window + one fragment groupBy over the
-    INCREMENT only; the carried state is n_shards rows of ≤ seq_len
-    ids, broadcast — a daily append at 100 TB pays for its own bytes,
-    never a re-pack of history."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    cutoff = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    state = pack_ops.empty_pack_state(spark)
-    parts = []
-    for batch in (docs.filter(F.col("doc_id") <= cutoff),
-                  docs.filter(F.col("doc_id") > cutoff)):
-        enc = bpe_ops.bpe_encode_ids(batch, merges)
-        comp, state = pack_ops.pack_sequences_incremental(
-            enc, state, ids_col="token_ids", id_col="doc_id",
-            seq_len=64, n_shards=8, boundary_id=bpe_ops.BOUNDARY_ID)
-        # the barrier IS the batch boundary: state must be concrete
-        # before the next batch reads it (foreachBatch semantics)
-        comp, state = materialize(comp), materialize(state)
-        parts.append(comp)
-    packed = (parts[0].unionByName(parts[1])
-              .unionByName(pack_ops.pack_state_tails(state, seq_len=64)))
-    ids = F.col("input_ids")
-    pos = F.sequence(F.lit(1).cast("long"), F.size(ids).cast("long"))
-    checksum = F.when(
-        F.size(ids) > 0,
-        F.aggregate(F.zip_with(ids, pos, lambda x, i: x * i),
-                    F.lit(0).cast("long"), lambda a, x: a + x)
-    ).otherwise(F.lit(0))
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("n_tokens"),
-        F.size(F.filter(ids, lambda x: x == 0)).cast("long")
-        .alias("n_boundary"),
-        checksum.cast("long").alias("checksum"))
-
-
-@register("streaming_incremental_pack", _duck_bpe_ids_sql(5, seq_len=64,
-                                                          n_shards=8))
-def streaming_incremental_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENCODE+PACK as a CONTINUOUS stream — the production loader-feed
-    shape: documents land in micro-batches (staged as three files split
-    at the doc-id tertiles and drained in id order, honoring
-    pack_sequences_incremental's append-only monotone-id contract); the
-    tokenizer is a FIXED up-front artifact (merges fit once, as a real
-    pipeline pins its tokenizer before any data flows); each batch
-    encodes ONLY its own documents and packs them as a continuation of
-    the persisted per-shard (stream_len, open-tail) state, emitting only
-    the sequences it completed. The final answer (all batches' completed
-    sequences + the closing open tails) is reported with the same
-    per-sequence stats as `packed_sequence_stats`, against the
-    FULL-corpus pack oracle VERBATIM — three independent proof layers
-    now share one SQL twin (batch `packed_sequence_stats`, two-batch
-    `incremental_pack_stats`, and this foreachBatch drain), so the
-    streaming path demonstrably adds no semantics.
-
-    Replay idempotency (the streaming_pinned_split discipline): state
-    and completed output are versioned per batch (write v{n}, read the
-    state version STRICTLY BELOW n), so a replayed batch re-derives its
-    completed set and state from v{n-1} and OVERWRITES its own v{n} —
-    a failed attempt's output is never read and never double-emitted.
-
-    Scale shape: per batch the increment pays one per-shard window +
-    one fragment groupBy over ITS OWN documents only; the carried state
-    is n_shards rows of < seq_len ids riding in as a broadcast — a
-    daily append at 100 TB pays for its own bytes, never a re-pack of
-    history, and completed sequences stream out as they fill."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from .operators import bpe as bpe_ops
-    from .streaming import ingest_stream as st
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    t1, t2 = (docs.agg(
-        F.percentile_approx("doc_id", 1.0 / 3, 10_000).alias("a"),
-        F.percentile_approx("doc_id", 2.0 / 3, 10_000).alias("b"))
-        .collect()[0])
-
-    work = tempfile.mkdtemp(prefix="peskas_stream_pack_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(work, name + "_tmp")
-        df.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(landing, name)
-        shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp)
-
-    import time as _time
-    t0 = _time.time() - 10_000
-    # monotone append order: every doc id in batch k sorts after every
-    # id in batch k-1 (the incremental packer's contract); mtimes force
-    # the FileStreamSource to drain them in that order
-    stage(docs.filter(F.col("doc_id") <= t1), "0_a.parquet", t0)
-    stage(docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
-          "1_b.parquet", t0 + 4_000)
-    stage(docs.filter(F.col("doc_id") > t2), "2_c.parquet", t0 + 8_000)
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, "
-                      "source string, n_chars long")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(landing))
-
-    state_dir = os.path.join(work, "state")
-    comp_dir = os.path.join(work, "completed")
-    vocab_dir = os.path.join(work, "wordmap")
-
-    def latest(base: str, before: int | None = None):
-        if not os.path.exists(base):
-            return None
-        vs = sorted(int(d[1:]) for d in os.listdir(base)
-                    if d.startswith("v")
-                    and (before is None or int(d[1:]) < before))
-        return os.path.join(base, f"v{vs[-1]}") if vs else None
-
-    def step(batch_df, batch_id: int) -> None:
-        # SIZE-ADAPTIVE shuffle parallelism: this drain has ZERO
-        # streaming state (every stateful artifact is the versioned
-        # parquet the foreachBatch maintains itself), so each batch may
-        # size its own shuffles. Profiled at 100× the old 4-partition
-        # pin was the dominant wall (~103 s vs ~95 s unpinned); at sf0.1
-        # full 32-way parallelism costs ~3 s of task overhead (9.5 vs
-        # 12.4 s). Deriving the count from the batch's input bytes gets
-        # BOTH: lo=4 at sf0.1, batch-CPU parallelism at 100×.
-        with st.sized_batch_shuffle(batch_df) as n:
-            s = batch_df.sparkSession
-            # map-side spread before the tokenize/encode legs (see
-            # ingest_stream.spread_batch): both BPE passes below start
-            # with a per-row tokenization that otherwise runs at scan
-            # parallelism (1 task per landing file)
-            batch_df = st.spread_batch(batch_df, n)
-            ps = latest(state_dir, before=batch_id)
-            state = (s.read.parquet(ps) if ps
-                     else pack_ops.empty_pack_state(s))
-            # incremental word→ids map (versioned beside the pack state,
-            # same strictly-below replay discipline): a batch pays the merge
-            # walk for its NEW words only — the profiled 100× cost was every
-            # batch re-encoding the whole accumulated vocabulary
-            pv = latest(vocab_dir, before=batch_id)
-            prior_map = s.read.parquet(pv) if pv else None
-            # the versioned write IS the batch's materialization barrier;
-            # the encode then reads the committed artifact back (one pass,
-            # not materialize + write)
-            bpe_ops.bpe_word_id_map(batch_df, merges, known=prior_map) \
-                .write.mode("overwrite").parquet(
-                    os.path.join(vocab_dir, f"v{batch_id}"))
-            word_map = s.read.parquet(os.path.join(vocab_dir, f"v{batch_id}"))
-            enc = bpe_ops.bpe_encode_ids(batch_df, merges, word_map=word_map)
-            comp, new_state = pack_ops.pack_sequences_incremental(
-                enc, state, ids_col="token_ids", id_col="doc_id",
-                seq_len=64, n_shards=8, boundary_id=bpe_ops.BOUNDARY_ID)
-            comp.write.mode("overwrite").parquet(
-                os.path.join(comp_dir, f"v{batch_id}"))
-            new_state.write.mode("overwrite").parquet(
-                os.path.join(state_dir, f"v{batch_id}"))
-
-    q = (stream.writeStream.foreachBatch(step)
-         .option("checkpointLocation", os.path.join(work, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    completed = spark.read.parquet(
-        *(os.path.join(comp_dir, d) for d in sorted(os.listdir(comp_dir))))
-    tails = pack_ops.pack_state_tails(
-        spark.read.parquet(latest(state_dir)), seq_len=64)
-    packed = completed.unionByName(tails)
-    ids = F.col("input_ids")
-    pos = F.sequence(F.lit(1).cast("long"), F.size(ids).cast("long"))
-    checksum = F.when(
-        F.size(ids) > 0,
-        F.aggregate(F.zip_with(ids, pos, lambda x, i: x * i),
-                    F.lit(0).cast("long"), lambda a, x: a + x)
-    ).otherwise(F.lit(0))
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("n_tokens"),
-        F.size(F.filter(ids, lambda x: x == 0)).cast("long")
-        .alias("n_boundary"),
-        checksum.cast("long").alias("checksum"))
-
-
-#: mixture design for the EPOCH-pack pipeline: a heavily over-weighted
-#: src0 against three peers, with the budget set DATA-DEPENDENTLY to
-#: 2× the weighted sources' availability (same rule in the oracle), so
-#: src0's target is ≈5× its supply — oversample_ppm ≈ 5·10⁶, i.e. 4–5
-#: FULL epochs plus a fraction — at EVERY scale factor. This is the
-#: case `expand_epochs` exists for: a source that must physically
-#: repeat.
-_EPOCH_MIX_WEIGHTS = {"src0": 5, "src1": 1, "src2": 1, "src3": 1}
-
-
-def _duck_epoch_pack_sql(k: int, seq_len: int, n_shards: int) -> str:
-    """Oracle for the epoch-expanded mixture pack: the Hamilton
-    allocation (budget = 2× the weighted sources' availability, as a
-    scalar subquery) → full_epochs + remainder per source → per-doc
-    multiplicity ``reps`` (prefix-cut fraction + full epochs) → one
-    (doc, epoch) row per rep with the compound ``pkey = doc_id ':'
-    epoch_idx`` → the shared encode chain (each doc encoded ONCE) joined
-    back to every epoch copy → sharding/offsets on the COMPOUND key —
-    exactly ``pack_sequences(id_col="pack_key")`` over
-    ``expand_epochs`` output."""
-    w_total = sum(_EPOCH_MIX_WEIGHTS.values())
-    srcs = ", ".join(f"'{s}'" for s in sorted(_EPOCH_MIX_WEIGHTS))
-    epoch_ctes = f"""
-msrc AS (SELECT source, doc_id, CAST(len({_DUCK_TOKS}) AS BIGINT) AS w
-         FROM documents),
-mavail AS (SELECT source, CAST(sum(w) AS BIGINT) AS available_tokens
-           FROM msrc GROUP BY source),
-mbud AS (SELECT CAST(2 * sum(available_tokens) AS BIGINT) AS b
-         FROM mavail WHERE source IN ({srcs})),
-mwt AS (SELECT source, available_tokens,
-               CAST({_duck_weight_case(_EPOCH_MIX_WEIGHTS)} AS BIGINT)
-                 AS wgt
-        FROM mavail),
-mq AS (SELECT source, available_tokens,
-              CAST((SELECT b FROM mbud) * wgt // {w_total}
-                   AS BIGINT) AS quota,
-              ((SELECT b FROM mbud) * wgt) % {w_total} AS rm
-       FROM mwt),
-mr AS (SELECT source, available_tokens, quota,
-              row_number() OVER (ORDER BY rm DESC, source) AS rk,
-              (SELECT b FROM mbud) - sum(quota) OVER () AS leftover
-       FROM mq),
-mtgt AS (SELECT source, available_tokens,
-                CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
-                     AS BIGINT) AS target_tokens
-         FROM mr),
-mful AS (SELECT source, available_tokens, target_tokens,
-                CASE WHEN available_tokens > 0
-                     THEN target_tokens // available_tokens
-                     ELSE 0 END AS full_epochs,
-                CASE WHEN available_tokens > 0
-                     THEN target_tokens % available_tokens
-                     ELSE 0 END AS rem
-         FROM mtgt),
-mbase AS (SELECT source, doc_id, w,
-  CAST('0x' || substr(md5('mixdraw:' || CAST(doc_id AS VARCHAR)), 1, 8)
-       AS BIGINT) AS key
-  FROM msrc),
-mcum AS (SELECT source, doc_id, w,
-         sum(w) OVER (PARTITION BY source ORDER BY key % 8, key, doc_id
-                      ROWS UNBOUNDED PRECEDING) AS ci
-         FROM mbase),
-mrep AS (SELECT c.doc_id,
-                g.full_epochs
-                + CASE WHEN c.ci - c.w < g.rem THEN 1 ELSE 0 END AS reps
-         FROM mcum c JOIN mful g USING (source)),
-mexp AS (SELECT doc_id,
-                CAST(doc_id AS VARCHAR) || ':' || CAST(u.e AS VARCHAR)
-                  AS pkey
-         FROM mrep, UNNEST(range(1, reps + 1)) AS u(e)
-         WHERE reps > 0),
-msel AS (SELECT DISTINCT doc_id FROM mexp)"""
-    parts = _duck_bpe_denc_parts(k, extra_ctes=epoch_ctes, sel="msel")
-    parts += [
-        f"sh AS (SELECT x.pkey, d.ids, CAST(len(d.ids) AS BIGINT) AS n, "
-        f"CAST(CAST('0x' || substr(md5('shard:' || x.pkey), 1, 8) "
-        f"AS BIGINT) % {n_shards} AS INT) AS shard "
-        f"FROM denc d JOIN mexp x USING (doc_id)),",
-        "off AS (SELECT pkey, shard, ids, n, coalesce(sum(n) OVER ("
-        "PARTITION BY shard ORDER BY pkey "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS strt "
-        "FROM sh),",
-        "ts AS (SELECT shard, strt + CAST(u.i AS BIGINT) - 1 "
-        "AS gpos, ids[CAST(u.i AS INT)] AS tid "
-        "FROM off, UNNEST(range(1, n + 1)) AS u(i))",
-    ]
-    return "\n".join(parts) + _duck_pack_tail(seq_len)
-
-
-@register("mixture_epoch_pack_pipeline",
-          _duck_epoch_pack_sql(5, seq_len=64, n_shards=8))
-def mixture_epoch_pack_pipeline(spark: SparkSession, sf_dir: str
-                                ) -> DataFrame:
-    """OVERSAMPLING made physically executable: the end-to-end mixture
-    pipeline over the EXPANDED (doc, epoch) stream. `_EPOCH_MIX_WEIGHTS`
-    over-weights src0 5:1 with a budget of 2× the weighted sources'
-    availability, so src0's Hamilton target is ≈5× its supply
-    (oversample_ppm ≈ 5·10⁶ — the case `mixture_pack_pipeline` leaves
-    to "loader-side multiplicity"). Here the multiplicity is
-    MATERIALIZED: allocation → prefix draw → `expand_epochs` (one row
-    per (doc, epoch)) → BPE ids (each doc encoded ONCE — the broadcast
-    word→ids join never repeats work for repeats) → joined to every
-    epoch copy under the compound key ``doc_id ':' epoch_idx`` (two
-    epochs of one doc never collide in the packer) →
-    `pack_sequences(id_col="pack_key")`. Reported as the per-sequence
-    (n_tokens, n_boundary, Σ pos·id checksum) stats, so the oracle pins
-    every id at every position of the epoch-expanded mix — including
-    that each copy carries its own trailing boundary. Plan: allocation
-    aggregates once (budget from an answer-sized collect); the draw is
-    the two-level sharded prefix sum; the epoch join moves only (doc,
-    epoch)-sized rows against the encoded frame; packing moves the
-    output's own bytes. The expanded stream is ~2.3× the weighted
-    slice of the corpus — the mixture size, the floor for any
-    materialization."""
-    from .operators import bpe as bpe_ops
-
-    docs = _t(spark, sf_dir, "documents")
-    meta = docs.select("source", "doc_id",
-                       T.token_count(F.col("text")).cast("long")
-                       .alias("n_tokens"))
-    avail = materialize(
-        meta.groupBy(F.col("source").alias("source"))
-        .agg(F.sum("n_tokens").cast("long").alias("available_tokens")))
-    wsum = (avail.filter(F.col("source").isin(*_EPOCH_MIX_WEIGHTS))
-            .agg(F.sum("available_tokens")).collect()[0][0])
-    budget = 2 * int(wsum)
-    alloc = materialize(samp_ops.mixture_allocation_from_totals(
-        avail, _EPOCH_MIX_WEIGHTS, budget).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(meta, alloc)
-    expanded = materialize(
-        samp_ops.expand_epochs(draw).select("doc_id", "epoch_idx"))
-    sel = expanded.select("doc_id").distinct()
-    merges = [(r.pair, r.new_symbol)
-              for r in bpe_ops.bpe_fit(docs, k=5)
-              .orderBy("merge_rank").collect()]
-    enc = bpe_ops.bpe_encode_ids(docs.join(sel, "doc_id"), merges)
-    stream = (enc.join(expanded, "doc_id")
-              .select(F.concat_ws(":", F.col("doc_id").cast("string"),
-                                  F.col("epoch_idx").cast("string"))
-                      .alias("pack_key"),
-                      "token_ids"))
-    packed = pack_ops.pack_sequences(stream, ids_col="token_ids",
-                                     id_col="pack_key", seq_len=64,
-                                     n_shards=8,
-                                     boundary_id=bpe_ops.BOUNDARY_ID)
-    ids = F.col("input_ids")
-    pos = F.sequence(F.lit(1).cast("long"), F.size(ids).cast("long"))
-    checksum = F.when(
-        F.size(ids) > 0,
-        F.aggregate(F.zip_with(ids, pos, lambda x, i: x * i),
-                    F.lit(0).cast("long"), lambda a, x: a + x)
-    ).otherwise(F.lit(0))
-    return packed.select(
-        "shard", F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("n_tokens"),
-        F.size(F.filter(ids, lambda x: x == 0)).cast("long")
-        .alias("n_boundary"),
-        checksum.cast("long").alias("checksum"))
-
-
 @register("grouping_sets_mixed", """
 SELECT coalesce(o_orderpriority, 'ALL') AS prio,
        coalesce(o_orderstatus, 'ALL') AS status,
@@ -10656,9 +8230,3 @@ def drift_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("week_start", "l1_drift_ppm",
                     F.coalesce(F.col("l1_drift_ppm") > 2 * F.col("__m"),
                                F.lit(False)).alias("drift_alert")))
-
-
-# Completes the TPC-H shape coverage (Q6-Q21) + profiling/audit utilities;
-# imported for its registration side effects (must stay the last statement:
-# it imports back from this module).
-from . import queries_tpch  # noqa: E402,F401  (registration side effects)

@@ -150,79 +150,6 @@ def test_mixture_allocation_largest_remainder(spark):
         S.mixture_allocation(df, {"a": 0}, 100)
 
 
-def _seq_docs(spark, id_arrays):
-    return spark.createDataFrame(
-        [(i, ids) for i, ids in enumerate(id_arrays)],
-        "doc_id long, token_ids array<long>")
-
-
-def test_pack_sequences_reconstructs_stream(spark):
-    """pack_sequences: concatenating each shard's sequences in seq_id
-    order reproduces exactly the shard's document id arrays laid
-    back-to-back (doc_id order) with a boundary 0 after each doc; all
-    sequences are full except possibly the shard's last; seq_ids are
-    contiguous from 0."""
-    import hashlib
-
-    from peskas_malawi_data_pipeline_spark.operators import packing as P
-
-    arrays = [[i * 10 + j + 1 for j in range(i % 7 + 1)] for i in range(25)]
-    df = _seq_docs(spark, arrays)
-    L = 8
-    out = P.pack_sequences(df, ids_col="token_ids", id_col="doc_id",
-                           seq_len=L, n_shards=3).collect()
-
-    def shard(i):
-        return int(hashlib.md5(f"shard:{i}".encode()).hexdigest()[:8],
-                   16) % 3
-
-    streams = {}
-    for i, ids in enumerate(arrays):          # doc_id order == range order
-        streams.setdefault(shard(i), []).extend(list(ids) + [0])
-
-    by_shard = {}
-    for r in sorted(out, key=lambda r: (r.shard, r.seq_id)):
-        by_shard.setdefault(r.shard, []).append(r)
-    assert set(by_shard) == set(streams)
-    for s, rows in by_shard.items():
-        assert [r.seq_id for r in rows] == list(range(len(rows)))
-        for r in rows[:-1]:
-            assert r.n_tokens == L == len(r.input_ids)
-        assert 1 <= rows[-1].n_tokens <= L
-        flat = [x for r in rows for x in r.input_ids]
-        assert flat == streams[s]
-
-
-def test_pack_sequences_boundaries_and_layout_independence(spark):
-    """Boundary-count conservation (Σ boundary ids per shard == docs in
-    the shard), straddling docs split across consecutive sequences, and
-    the output is independent of input partition layout."""
-    from peskas_malawi_data_pipeline_spark.operators import packing as P
-
-    arrays = [[7] * 13, [8] * 3, [9] * 21, [1], [2, 3]]
-    df = _seq_docs(spark, arrays)
-    a = {(r.shard, r.seq_id): list(r.input_ids)
-         for r in P.pack_sequences(df, seq_len=5, n_shards=2).collect()}
-    b = {(r.shard, r.seq_id): list(r.input_ids)
-         for r in P.pack_sequences(df.repartition(7), seq_len=5,
-                                   n_shards=2).collect()}
-    assert a == b
-    n_boundaries = sum(v.count(0) for v in a.values())
-    assert n_boundaries == len(arrays)
-    # a 21-id doc with seq_len=5 must straddle >= 4 sequences
-    assert len(a) >= 5
-
-
-def test_pack_sequences_seq_len_guard(spark):
-    import pytest
-
-    from peskas_malawi_data_pipeline_spark.operators import packing as P
-
-    df = _seq_docs(spark, [[1, 2]])
-    with pytest.raises(ValueError, match="seq_len"):
-        P.pack_sequences(df, seq_len=0)
-
-
 def test_token_budget_prefix_draw_within_one_doc(spark):
     """token_budget_prefix_draw: per source, full_epochs + fraction
     prefix land the drawn token total in [target, target + last drawn
@@ -272,40 +199,6 @@ def test_token_budget_prefix_draw_within_one_doc(spark):
     assert again == {(r.source, r.doc_id, r.in_fraction) for r in rowsets}
 
 
-def test_pack_sequences_spans_cover_exactly(spark):
-    """with_spans=True: spans are off-ordered, gap-free, cover each
-    sequence exactly (Σ len == n_tokens, offsets chain), every span's
-    slice of input_ids belongs to its doc (boundary included), and a
-    straddling doc appears as spans in consecutive sequences."""
-    from peskas_malawi_data_pipeline_spark.operators import packing as P
-
-    arrays = [[i * 100 + j + 1 for j in range(n)]
-              for i, n in enumerate([3, 12, 1, 7, 9])]
-    df = _seq_docs(spark, arrays)
-    out = P.pack_sequences(df, seq_len=5, n_shards=2,
-                           with_spans=True).collect()
-    by_doc_seqs = {}
-    for r in out:
-        pos = 0
-        for s in r.doc_spans:
-            assert s.off == pos            # gap-free chaining
-            pos += s.len
-            by_doc_seqs.setdefault(s.doc_id, []).append(
-                (r.shard, r.seq_id, s.off, s.len))
-            # the span's ids are the doc's own ids (or its boundary 0)
-            piece = list(r.input_ids[s.off:s.off + s.len])
-            ok = [x for x in piece if x != 0]
-            assert all(x in arrays[s.doc_id] for x in ok), (s, piece)
-        assert pos == r.n_tokens == len(r.input_ids)
-    # every doc's spans total its ids + one boundary
-    for d, spans in by_doc_seqs.items():
-        assert sum(l for *_ , l in spans) == len(arrays[d]) + 1
-        seqs = sorted(sid for _sh, sid, _o, _l in spans)
-        assert seqs == list(range(seqs[0], seqs[0] + len(seqs)))
-    # the 12-id doc with seq_len=5 must straddle >= 2 sequences
-    assert len(by_doc_seqs[1]) >= 2
-
-
 def test_expand_epochs_null_tokens_keep_full_epochs(spark):
     """expand_epochs: a doc whose token count is NULL has in_fraction =
     NULL from the draw (it never enters the prefix cut), but the
@@ -331,39 +224,3 @@ def test_expand_epochs_null_tokens_keep_full_epochs(spark):
     assert sorted(reps.get(3, [])) == [1, 2]   # the ADVICE regression
     assert sorted(reps.get(4, [])) == [1]
     assert 5 not in reps
-
-
-def test_pack_sequences_incremental_equals_full_replay(spark):
-    """pack_sequences_incremental: under the append-only (monotone-id)
-    contract, the union of every batch's completed sequences plus the
-    final state's open tails is EXACTLY the full-corpus pack_sequences
-    output — and every completed sequence is exactly seq_len tokens.
-    Batch boundaries are uneven (one batch leaves some shards with no
-    new docs — their open tails must carry through unchanged)."""
-    arrays = [[i * 100 + j + 1 for j in range(n)]
-              for i, n in enumerate([3, 12, 1, 7, 9, 4, 2, 11, 6, 5])]
-    df = _seq_docs(spark, arrays)
-    full = {(r.shard, r.seq_id): (list(r.input_ids), r.n_tokens)
-            for r in P.pack_sequences(df, seq_len=5,
-                                      n_shards=3).collect()}
-
-    from peskas_malawi_data_pipeline_spark.core.barrier import materialize
-
-    state = P.empty_pack_state(spark)
-    got = {}
-    for lo, hi in ((0, 4), (4, 5), (5, 10)):   # batch 2 is a single doc
-        batch = df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        comp, state = P.pack_sequences_incremental(
-            batch, state, seq_len=5, n_shards=3)
-        comp, state = materialize(comp), materialize(state)
-        for r in comp.collect():
-            assert r.n_tokens == 5          # completed == full windows only
-            key = (r.shard, r.seq_id)
-            assert key not in got           # never re-emitted
-            got[key] = (list(r.input_ids), r.n_tokens)
-    for r in P.pack_state_tails(state, seq_len=5).collect():
-        got[(r.shard, r.seq_id)] = (list(r.input_ids), r.n_tokens)
-    assert got == full
-    # state invariant: tail length == stream_len % seq_len
-    for r in state.collect():
-        assert len(r.tail_ids) == r.stream_len % 5

@@ -285,62 +285,6 @@ def test_repetition_ratio_no_exchange(spark):
     assert p.count("Exchange") <= 1  # only the small-file spread repartition
 
 
-def test_q6_all_predicates_pushed(spark):
-    """forecast_revenue_delta: every range predicate reaches the parquet
-    scan (row-group min/max pruning at scale) and only the 4 referenced
-    columns are read."""
-    p = plan(spark, "forecast_revenue_delta")
-    pushed = next(l for l in p.splitlines() if "PushedFilters" in l)
-    for frag in ("l_shipdate", "l_discount", "l_quantity"):
-        assert frag in pushed
-    read = next(l for l in p.splitlines() if l.startswith("ReadSchema"))
-    assert "l_orderkey" not in read and "l_returnflag" not in read
-
-
-def test_q16_exclusion_is_broadcast_anti_join(spark):
-    """supplier_part_variety: the NOT IN subquery plans as a broadcast
-    LEFT ANTI hash join — the fact side never shuffles for the exclusion."""
-    p = plan(spark, "supplier_part_variety")
-    assert "BroadcastHashJoin" in p and "LeftAnti" in p
-    assert "SortMergeJoin" not in p
-
-
-def test_q17_decorrelates_to_single_lineitem_pass(spark):
-    """small_quantity_revenue: the correlated AVG subquery must NOT become
-    a second aggregate+self-join of lineitem — one window over partkey,
-    one scan of lineitem."""
-    p = plan(spark, "small_quantity_revenue", mode="simple")
-    assert p.count("lineitem.parquet") == 1
-    assert "Window" in p
-
-
-def test_q18_having_join_back_reuses_partitioning(spark):
-    """large_volume_orders: the aggregate on l_orderkey and the join back
-    to orders share the key — lineitem shuffles exactly once."""
-    p = plan(spark, "large_volume_orders", mode="simple")
-    # one exchange for the groupBy(l_orderkey); orders/customer side joins
-    # must not introduce a second lineitem shuffle
-    assert "CartesianProduct" not in p
-    assert "TakeOrderedAndProject" in p
-
-
-def test_q21_one_agg_one_window_no_self_join(spark):
-    """sole_return_suppliers: the EXISTS/NOT-EXISTS pair decorrelates into
-    one aggregation + one window — lineitem is scanned ONCE, never
-    self-joined."""
-    p = plan(spark, "sole_return_suppliers", mode="simple")
-    assert p.count("lineitem.parquet") == 1
-    assert "Window" in p
-
-
-def test_q11_scalar_threshold_is_broadcast_not_collect(spark):
-    """revenue_concentration: the global-total threshold joins back as a
-    broadcast nested loop of a ONE-ROW aggregate — no shuffled cartesian."""
-    p = plan(spark, "revenue_concentration", mode="simple")
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-
-
 def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
     """Dynamic partition pruning: when the fact is partitioned on the join
     key and the dim side carries a selective filter, the fact scan is
@@ -525,61 +469,6 @@ def test_compact_swap_strategy_is_pluggable(spark, tmp_path):
     assert spark.read.parquet(path).count() == 100
 
 
-def test_compact_delta_table_binding(spark, tmp_path):
-    """core.io.compact_delta_table: the Delta Lake binding of the commit
-    slot — transactional self-overwrite compaction, no side directory, no
-    swap window. ENVIRONMENT-GATED like the protobuf streaming twin: this
-    sandbox prohibits installs and ships without delta-spark, so the
-    binding is recorded as an environment refusal (the gate itself is
-    asserted un-gated below)."""
-    import importlib.util
-
-    import pytest
-
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-
-    if importlib.util.find_spec("delta") is None:
-        # the refusal path must be a clear, actionable error either way
-        with pytest.raises(ModuleNotFoundError, match="delta-spark"):
-            io_ops.compact_delta_table(spark, str(tmp_path / "t"), 2)
-        pytest.skip("delta-spark not installed and installs are prohibited "
-                    "in this environment (recorded refusal)")
-
-    path = str(tmp_path / "t")
-    (spark.range(1000).repartition(16)
-     .write.format("delta").save(path))
-    n_after = io_ops.compact_delta_table(spark, path, target_files=2)
-    assert n_after <= 2
-    assert spark.read.format("delta").load(path).count() == 1000
-
-
-def test_storage_adapters_contract(spark, tmp_path):
-    """core.io adapter seam (S4/K1 parity): parquet adapter honors
-    truncate-and-load (second write fully replaces), and the MongoDB
-    adapter builds the connector's option set without needing the jar."""
-    import pytest
-    from pyspark.sql import Row
-
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-
-    pq = io_ops.get_adapter("parquet")
-    loc = str(tmp_path / "collection")
-    pq.write(spark.createDataFrame([Row(a=1), Row(a=2)]), loc)
-    pq.write(spark.createDataFrame([Row(a=9)]), loc)  # truncate-and-load
-    assert [r.a for r in pq.read(spark, loc).collect()] == [9]
-    assert pq.read(spark, loc, columns=["a"]).columns == ["a"]
-
-    mongo = io_ops.get_adapter(
-        "mongodb", connection_uri="mongodb://h:27017", database="pipeline")
-    assert mongo.options("raw") == {
-        "connection.uri": "mongodb://h:27017",
-        "database": "pipeline",
-        "collection": "raw",
-    }
-    with pytest.raises(ValueError, match="unknown storage backend"):
-        io_ops.get_adapter("csvkit")
-
-
 def test_global_ranking_matches_window_forms(spark):
     """operators.ranking: the two-pass range-partition rank/ntile equals
     the single-window forms exactly, and the plan range-partitions the fact
@@ -625,7 +514,7 @@ def test_global_ranking_matches_window_forms(spark):
 
 
 def test_registry_wide_plan_hygiene(spark):
-    """Every batch registry query planable at sf0.001 must be free of the
+    """Every registry query planable at sf0.001 must be free of the
     three 100 TB red flags: CartesianProduct joins, row-at-a-time Python
     evaluation (BatchEvalPython — Arrow paths show as ArrowEvalPython /
     MapInPandas), and unpartitioned windows over unbounded inputs. New
@@ -641,17 +530,6 @@ def test_registry_wide_plan_hygiene(spark):
         "ann_recall_at_k",   # same 8-row centroid numbering via ivf_topk
         "ntile_deciles",     # |buckets|-row offset frame (ranking.global_ntile)
         "corpus_shuffle",    # |buckets|-row offset frame (ranking.shuffle_shards)
-        "packed_shuffle_stats",  # same |buckets|-row offset frame — the
-                                 # shuffle ranks SEQUENCES (answer-sized)
-                                 # via shuffle_shards/global_row_number
-        "epoch_shuffle_orders",  # the same sequence-key shuffle, once per
-                                 # epoch seed (two |buckets|-row frames)
-        "corpus_to_shards_pipeline",  # same |buckets|-row offset frame —
-                                      # the capstone's final leg IS
-                                      # packed_shuffle_stats' shuffle over
-                                      # answer-sized sequence keys
-        "token_rank_fluency",  # |buckets|-row offset frame over the ≤100-row
-                               # heavy-hitter vocabulary (global_row_number)
         "zone_map_skipping",   # |buckets|-row offset frame ×2 layouts
                                # (layout.zone_map_stats via global_row_number)
         "mixture_allocation",  # n_sources-row apportionment frame: the
@@ -661,8 +539,6 @@ def test_registry_wide_plan_hygiene(spark):
     utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
     offenders = {}
     for name, (fn, _sql) in REGISTRY.items():
-        if name.startswith("streaming_"):
-            continue  # drains execute eagerly; covered by their own tests
         df = fn(spark, "/root/testdata/sf0.001")
         p = utils.explainString(df._jdf.queryExecution(), "extended")
         flags = []

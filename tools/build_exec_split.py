@@ -2,9 +2,9 @@
 
 BUILD = `fn(spark, sf_dir)` — everything the query does before returning
 its DataFrame: driver-side collects, materialize() barriers, artifact
-round-trips, streaming drains. EXEC = the noop-sink write of the
-returned frame (the final job). bench.py times BUILD+EXEC as one
-number; this probe attributes it, because a query whose cost is
+round-trips. EXEC = the noop-sink write of the returned frame (the
+final job). A whole-query timing sees BUILD+EXEC as one number; this
+probe attributes it, because a query whose cost is
 BUILD-dominated is optimized by removing jobs/barriers/driver actions,
 not by reshaping the final plan. Also counts Spark jobs per query via a
 per-query job group.

@@ -3,12 +3,8 @@
 Usage:
     python tools/dump_plans.py OUTDIR SUFFIX [query ...]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (all batch
-queries when none are named). Streaming queries cannot be explained
-without running their drains, so for `streaming_*` names the plan of the
-RETURNED batch DataFrame is dumped (the post-drain read-back + report),
-which is what the bench times after the drain completes; the drain-side
-plan shape is pinned by tests/test_streaming.py instead.
+Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (all registry
+queries when none are named).
 
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.001 — plan SHAPE is
 sf-independent; Exchange/join/pushdown structure is what these files

@@ -8,7 +8,7 @@ query is a worked, oracle-paired example of one or more operators. This
 tool derives an index (query name -> operators invoked -> gist) straight
 from the source, so it can never drift from the code: operators are found
 by walking each query function's AST for calls into the package's operator/
-function/streaming modules, and the gist is the docstring's first sentence.
+function modules, and the gist is the docstring's first sentence.
 
 Usage: python tools/gen_registry.py   (rewrites REGISTRY.md)
 """
@@ -57,8 +57,8 @@ def _called_ops(fn_src: str, aliases: dict[str, str]) -> list[str]:
                 and isinstance(node.value, ast.Name)
                 and node.value.id in aliases):
             target = aliases[node.value.id]
-            if target.startswith(("operators.", "functions.", "streaming.",
-                                  "core.")) or "." not in target:
+            if (target.startswith(("operators.", "functions.", "core."))
+                    or "." not in target):
                 ref = f"{target.split('.')[-1]}.{node.attr}"
                 if ref not in ops and not node.attr.startswith("_"):
                     ops.append(ref)
@@ -78,33 +78,25 @@ def _gist(doc: str | None, limit: int = 200) -> str:
 
 
 def main() -> None:
-    from peskas_malawi_data_pipeline_spark import queries, queries_tpch
+    from peskas_malawi_data_pipeline_spark import queries
     from peskas_malawi_data_pipeline_spark.queries import REGISTRY
 
-    alias_cache = {
-        queries.__name__: _alias_map(inspect.getsource(queries)),
-        queries_tpch.__name__: _alias_map(inspect.getsource(queries_tpch)),
-    }
+    module_aliases = _alias_map(inspect.getsource(queries))
 
     rows = []
     for name, (fn, sql) in REGISTRY.items():
-        mod = fn.__module__
         fn_src = inspect.getsource(fn)
-        local_aliases = dict(alias_cache.get(mod, {}))
+        local_aliases = dict(module_aliases)
         local_aliases.update(_alias_map(fn_src) if "import" in fn_src else {})
         ops = _called_ops(fn_src, local_aliases)
         rows.append({
             "name": name,
-            "module": mod.rsplit(".", 1)[-1],
             "ops": ", ".join(f"`{o}`" for o in ops) or "built-in DataFrame ops",
             "gist": _gist(fn.__doc__),
             "oracle": "exact SQL" if sql else "rows-only",
         })
 
-    core = sorted((r for r in rows if r["module"] == "queries"),
-                  key=lambda r: r["name"])
-    tpch = sorted((r for r in rows if r["module"] == "queries_tpch"),
-                  key=lambda r: r["name"])
+    rows.sort(key=lambda r: r["name"])
 
     lines = [
         "# REGISTRY — the operator cookbook index",
@@ -118,26 +110,13 @@ def main() -> None:
         f"(`{PKG}.queries`) as the calling recipe. All",
         "queries run via `__spark_entry__.queries()[name](spark, sf_dir)`;",
         "'exact SQL' oracle means a DuckDB twin hash-matches bit-for-bit,",
-        "'rows-only' marks semantics SQL cannot express (streaming state,",
-        "iterative fixpoints).",
-        "",
-        f"## Core registry ({len(core)} queries)",
+        "'rows-only' marks semantics SQL cannot express (iterative",
+        "fixpoints).",
         "",
         "| query | operators | oracle | what it computes |",
         "|---|---|---|---|",
     ]
-    for r in core:
-        lines.append(f"| `{r['name']}` | {r['ops']} | {r['oracle']} "
-                     f"| {r['gist']} |")
-    lines += [
-        "",
-        f"## TPC-H-shaped analytics ({len(tpch)} queries, "
-        "public query shapes on the harness schema)",
-        "",
-        "| query | operators | oracle | what it computes |",
-        "|---|---|---|---|",
-    ]
-    for r in tpch:
+    for r in rows:
         lines.append(f"| `{r['name']}` | {r['ops']} | {r['oracle']} "
                      f"| {r['gist']} |")
     lines.append("")
@@ -145,7 +124,7 @@ def main() -> None:
     out = os.path.join(REPO, "REGISTRY.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines))
-    print(f"wrote {out}: {len(core)} core + {len(tpch)} tpch rows")
+    print(f"wrote {out}: {len(rows)} rows")
 
     # Single source of truth for totals: rewrite the count-bearing phrases
     # in the hand-written docs from the live registry, so they cannot
