@@ -11,7 +11,7 @@ provenance, so later rounds can compute per-query regression ratios
 against a complete, current base.
 
 With --sf1 (a bench run at the 10x fact-replicated `.scale/sf1` dir built
-by `tools/scale_probe.py --build-only`), the table gains sf1 and
+by the since-deleted `tools/scale_probe.py --build-only`), the table gains sf1 and
 sf1/sf0.1-ratio columns: sub-second sf0.1 timings sit inside a ±50% noise
 band, so the 10x run is what makes per-query scaling exponents and
 round-over-round ratio judgments meaningful.
