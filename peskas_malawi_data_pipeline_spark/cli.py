@@ -14,10 +14,12 @@ data-pipeline.yaml:39-133). Here each stage is independently runnable —
     landing/points.*       GPS points, landed (S3 bulk path)
     landing/devices.csv    registry (S5)
     raw/ preprocessed/ validated/ merged_trips/ export_landings/
-    matched_tracks/        stage outputs (overwrite semantics, K1)
+    matched_tracks/        stage outputs (truncate-and-load, K1)
 
 so an external scheduler (Actions/Airflow/cron) can express the same
-``needs:`` DAG with any subset of stages.
+``needs:`` DAG with any subset of stages. Each output is published by a
+pointer commit (``core.io.write_table``): a stage that fails mid-write
+leaves its previous output readable, and the CLI exits 1 naming the stage.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ from __future__ import annotations
 import argparse
 import glob
 import os
+import sys
+import traceback
 
 from pyspark.sql import SparkSession
 
@@ -126,8 +130,13 @@ def main(argv: list[str] | None = None) -> int:
     forms = dict(f.split("=", 1) for f in args.form) or conf.get("forms")
 
     spark = get_spark(f"peskas-{args.stage}")
-    n = run_stage(spark, args.stage, root, forms=forms,
-                  strict_parity=args.strict_parity)
+    try:
+        n = run_stage(spark, args.stage, root, forms=forms,
+                      strict_parity=args.strict_parity)
+    except Exception as e:
+        traceback.print_exc()
+        print(f"{args.stage}: failed: {e}", file=sys.stderr)
+        return 1
     print(f"{args.stage}: {n} rows")
     return 0
 

@@ -15,7 +15,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import io
 from .core.barrier import materialize
 from .functions import expressions as E
 from .functions import text as T
@@ -5848,122 +5847,6 @@ def _ann_memo(key: tuple, build):
     return _ANN_ARTIFACTS[key]
 
 
-def _encode_ann_artifact(v) -> dict:
-    """JSON-encode a trained ANN driver artifact. The whole family is
-    exact-integer by construction (micro-int Lloyd means, 0-based dim
-    permutations), so a JSON int round-trip is bit-identical — the
-    persisted artifact IS the trained artifact, not an approximation."""
-    if isinstance(v, dict):
-        return {"t": "dict",
-                "items": [[list(k) if isinstance(k, tuple) else int(k),
-                           [int(x) for x in val]]
-                          for k, val in sorted(v.items())]}
-    if isinstance(v, list):
-        return {"t": "list", "items": [int(x) for x in v]}
-    raise TypeError(f"unsupported ANN artifact type {type(v)!r}")
-
-
-def _decode_ann_artifact(obj: dict):
-    if obj["t"] == "list":
-        return [int(x) for x in obj["items"]]
-    return {(tuple(int(p) for p in k) if isinstance(k, list) else int(k)):
-            [int(x) for x in val]
-            for k, val in obj["items"]}
-
-
-def _ann_trained(c: DataFrame, sf_dir: str, key: tuple, build):
-    """Cross-session persisted TRAINED ANN artifact (Lloyd codebooks,
-    coarse/full centroids, dim permutations) — the generalization of
-    ``_exact_l2_baseline``'s persistence to the other retrained-every-
-    session driver artifacts. Each artifact is a small exact-integer
-    dict/list (k·dim values), but TRAINING it costs multiple corpus-wide
-    Spark jobs per Lloyd iteration; a bench/driver session was re-paying
-    that for every family member. Persistence: one JSON file per
-    (sf_dir, kind, params) under ``_ann_baseline_cache_root()``, stamped
-    with the corpus content fingerprint (``_corpus_fingerprint`` — same
-    staleness guard as the baseline artifact: any corpus rewrite, even
-    same-size, changes the hash and forces retraining; pinned by
-    tests/test_plans.py::test_ann_trained_artifact_staleness). The
-    fingerprint scan is memoized per session and shared with the
-    baseline, so the guard adds no extra corpus pass. Cache miss or IO
-    error degrades to in-session training — persistence is an
-    optimization, never a correctness dependency."""
-    ent = _ANN_ARTIFACTS.get(key)
-    if ent is not None:
-        return ent
-    v = _ann_trained_try_load(c, sf_dir, key)
-    if v is None:
-        v = build()
-        _ann_trained_store(c, sf_dir, key, v)
-    _ANN_ARTIFACTS[key] = v
-    return v
-
-
-#: Trainer-ALGORITHM version, folded into every persisted-artifact path:
-#: the cache key carries (sf_dir, kind, params) + the corpus fingerprint,
-#: which guards against DATA changes but not CODE changes — a future edit
-#: to e.g. kmeans_lloyd or dim_energy_permutation would silently serve
-#: stale pre-change artifacts from the per-machine cache on unchanged
-#: corpora. Bump this whenever any trainer's semantics change (the same
-#: role a format-version field plays for the baseline artifact).
-_ANN_TRAINER_VERSION = 1
-
-
-def _ann_trained_path(sf_dir: str, key: tuple) -> str | None:
-    import hashlib
-    import os
-
-    root = _ann_baseline_cache_root()
-    if root is None:
-        return None
-    slug = hashlib.sha256(
-        os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    name = hashlib.sha256(
-        repr((_ANN_TRAINER_VERSION,) + key[1:]).encode()).hexdigest()[:20]
-    return os.path.join(root, f"ann_trained_{slug}", f"{name}.json")
-
-
-def _ann_trained_try_load(c: DataFrame, sf_dir: str, key: tuple):
-    """Disk half of ``_ann_trained``: decoded artifact if a persisted
-    file exists AND its committed corpus fingerprint matches the live
-    corpus; None (degrade to training) otherwise."""
-    import json
-    import os
-
-    path = _ann_trained_path(sf_dir, key)
-    if path is None or not os.path.exists(path):
-        return None
-    try:
-        with open(path, encoding="utf-8") as fh:
-            obj = json.load(fh)
-        if obj.get("corpus_fp") == _corpus_fingerprint(
-                c.sparkSession, c, sf_dir):
-            return _decode_ann_artifact(obj["value"])
-    except (OSError, ValueError, KeyError, TypeError):
-        pass  # unreadable/stale artifact → retrain
-    return None
-
-
-def _ann_trained_store(c: DataFrame, sf_dir: str, key: tuple, v) -> None:
-    import json
-    import os
-
-    path = _ann_trained_path(sf_dir, key)
-    if path is None:
-        return
-    try:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"key": repr(key[1:]),
-                       "corpus_fp": _corpus_fingerprint(
-                           c.sparkSession, c, sf_dir),
-                       "value": _encode_ann_artifact(v)}, fh)
-        os.replace(tmp, path)
-    except OSError:
-        pass  # read-only cache location → stay session-scoped
-
-
 #: fused multi-codebook PQ scoring beats per-arm passes while the plan
 #: is stage-overhead-bound; past this |corpus|·|queries| CANDIDATE
 #: volume the scoring pass dominates and the fused explode (2 arms per
@@ -5996,90 +5879,19 @@ def _ann_n_queries(emb: DataFrame, sf_dir: str) -> int:
                          20, _ann_corpus_count(emb, sf_dir) // 10))))
 
 
-def _ann_baseline_cache_root() -> str | None:
-    """Root directory for the CROSS-SESSION exact-baseline artifact
-    cache. Default: a stable per-machine tmp path; override with
-    ``PESKAS_ANN_BASELINE_CACHE`` (tests point it at a tmp dir; set it
-    empty to disable persistence entirely)."""
-    import os
-    import tempfile
-
-    root = os.environ.get(
-        "PESKAS_ANN_BASELINE_CACHE",
-        os.path.join(tempfile.gettempdir(), "peskas_ann_baseline"))
-    return root or None
-
-
-def _corpus_fingerprint(spark: SparkSession, c: DataFrame,
-                        sf_dir: str) -> dict:
-    """Content fingerprint of the embeddings corpus (count + order-
-    insensitive xxhash64 XOR/sum — io.VersionedParquetTable's audit
-    fingerprint), memoized per (session, sf_dir): the staleness guard
-    for the persisted exact baseline. One pure map+agg corpus scan —
-    O(n) against the O(n·|queries|) all-pairs scan it guards."""
-    key = (sf_dir, "corpus_fp")
-    ent = _ANN_ARTIFACTS.get(key)
-    if ent is not None and ent[0] is spark:
-        return ent[1]
-    fp = io.VersionedParquetTable._fingerprint(
-        c.select("corpus_id", F.col("embedding").cast("array<double>")))
-    _ANN_ARTIFACTS[key] = (spark, fp)
-    return fp
-
-
 def _exact_l2_baseline(spark: SparkSession, q: DataFrame, c: DataFrame,
                        sf_dir: str) -> DataFrame:
     """The exact integer-L2 top-3 baseline (materialized, __hit-tagged)
-    shared by every PQ/IVF recall harness — memoized per (sf_dir,
-    session) AND persisted as a VERSIONED ARTIFACT across sessions
-    (io.VersionedParquetTable under ``_ann_baseline_cache_root()``):
-    the all-pairs |queries|·|corpus| scan is the honest harness price
-    of every recall number, but each bench/driver session was re-paying
-    it from scratch. The artifact commits with the corpus fingerprint
-    in its meta; a later session REUSES it only when the recomputed
-    fingerprint matches (a corpus rewrite — even same-size — changes
-    the content hash and forces a rebuild; pinned by
-    tests/test_plans.py::test_ann_baseline_artifact_staleness). Cache
-    misses/IO errors degrade to the in-session compute — persistence
-    is an optimization, never a correctness dependency."""
-    import os
-
+    shared by every PQ/IVF recall harness, memoized per (sf_dir,
+    session): the all-pairs |queries|·|corpus| scan is the honest
+    harness price of every recall number, paid once per session."""
     key = (sf_dir, "exact_l2_hit", 3)
     ent = _ANN_ARTIFACTS.get(key)
     if ent is not None and ent[0] is spark:
         return ent[1]
-    root = _ann_baseline_cache_root()
-    table = meta = None
-    if root is not None:
-        import hashlib
-
-        slug = hashlib.sha256(
-            os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-        table = io.VersionedParquetTable(
-            os.path.join(root, f"exact_l2_k3_{slug}"))
-        try:
-            meta = table.read_meta()
-        except OSError:
-            table = None
-    if table is not None and meta is not None:
-        fp = _corpus_fingerprint(spark, c, sf_dir)
-        if meta.get("corpus_fp") == fp and meta.get("k") == 3:
-            try:
-                df = materialize(table.read(spark))
-                _ANN_ARTIFACTS[key] = (spark, df)
-                return df
-            except Exception:
-                pass  # unreadable artifact → recompute below
     df = materialize(
         sim_ops.brute_force_l2_topk(q, c, k=3)
         .select("query_id", "corpus_id").withColumn("__hit", F.lit(1)))
-    if table is not None:
-        try:
-            table.write(df, meta={
-                "corpus_fp": _corpus_fingerprint(spark, c, sf_dir),
-                "k": 3})
-        except OSError:
-            pass  # read-only cache location → stay session-scoped
     _ANN_ARTIFACTS[key] = (spark, df)
     return df
 
@@ -6087,10 +5899,8 @@ def _exact_l2_baseline(spark: SparkSession, q: DataFrame, c: DataFrame,
 def _trained_full_centroids(emb: DataFrame, sf_dir: str) -> dict:
     """Full-vector k-means centroids (k=8, iterations=2) over the
     embeddings table — the shared trained artifact behind the
-    `*_trained` arms (memoized per sf_dir, persisted across sessions
-    under the corpus fingerprint via ``_ann_trained``)."""
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    return _ann_trained(c, sf_dir, (sf_dir, "cents_full", 8, 2), lambda: (
+    `*_trained` arms (memoized per sf_dir)."""
+    return _ann_memo((sf_dir, "cents_full", 8, 2), lambda: (
         sim_ops.kmeans_centroids(
             emb,
             sim_ops.kmeans_lloyd(emb, id_col="vec_id", k=8, iterations=2),
@@ -6780,10 +6590,10 @@ def ann_ivf_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                              c, n_centroids=8))
     cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
                      lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_res = _ann_trained(c, sf_dir, (sf_dir, "cb_res", 4, 8, 2),
-                          lambda: sim_ops.pq_codebook_residual_trained(
-                              c, coarse_l, m=4, k_centroids=8,
-                              iterations=2))
+    cb_res = _ann_memo((sf_dir, "cb_res", 4, 8, 2),
+                       lambda: sim_ops.pq_codebook_residual_trained(
+                           c, coarse_l, m=4, k_centroids=8,
+                           iterations=2))
     rows = []
     for method, approx in (
             ("ivf_adc", sim_ops.ivf_pq_topk(q, c, cb_l, coarse_l, k=3,
@@ -6825,9 +6635,9 @@ def ann_pq_subspace_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
     cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
                      lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_s = _ann_trained(c, sf_dir, (sf_dir, "cb_sub", 4, 8, 2),
-                        lambda: sim_ops.pq_codebook_subspace_trained(
-                            c, m=4, k_centroids=8, iterations=2))
+    cb_s = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
+                     lambda: sim_ops.pq_codebook_subspace_trained(
+                         c, m=4, k_centroids=8, iterations=2))
     rows = []
     for method, approx in (
             ("pq_adc", sim_ops.pq_adc_topk(q, c, cb_l, k=3)),
@@ -7109,19 +6919,16 @@ def ann_dim_permute_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
     exact = _exact_l2_baseline(spark, q, c, sf_dir)
     exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    perm = _ann_trained(c, sf_dir, (sf_dir, "dim_perm", 4),
-                        lambda: sim_ops.dim_energy_permutation(c, m=4))
+    perm = _ann_memo((sf_dir, "dim_perm", 4),
+                     lambda: sim_ops.dim_energy_permutation(c, m=4))
     cp = sim_ops.apply_dim_permutation(c, perm)
     qp = sim_ops.apply_dim_permutation(q, perm)
-    cb_n = _ann_trained(c, sf_dir, (sf_dir, "cb_sub", 4, 8, 2),
-                        lambda: sim_ops.pq_codebook_subspace_trained(
-                            c, m=4, k_centroids=8, iterations=2))
-    # trained on the PERMUTED frame, but guarded by the CANONICAL
-    # corpus fingerprint: cp is a pure function of c and a permutation
-    # itself derived from c, so c's content hash covers both.
-    cb_p = _ann_trained(c, sf_dir, (sf_dir, "cb_sub_perm", 4, 8, 2),
-                        lambda: sim_ops.pq_codebook_subspace_trained(
-                            cp, m=4, k_centroids=8, iterations=2))
+    cb_n = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
+                     lambda: sim_ops.pq_codebook_subspace_trained(
+                         c, m=4, k_centroids=8, iterations=2))
+    cb_p = _ann_memo((sf_dir, "cb_sub_perm", 4, 8, 2),
+                     lambda: sim_ops.pq_codebook_subspace_trained(
+                         cp, m=4, k_centroids=8, iterations=2))
     rows = []
     for method, qf, cf, cb in (
             ("subtrained_natural", q, c, cb_n),
@@ -7250,28 +7057,20 @@ def ann_codebook_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vec = c.count()
     # fused multi-capacity Lloyd (one job per iteration for ALL arms,
     # bit-identical per arm to pq_codebook_subspace_trained) for the
-    # capacities not already in the session memo OR the cross-session
-    # artifact store; results land under the SAME memo keys the per-arm
-    # trainer uses, so the k=8 artifact stays shared with
-    # ann_dim_permute_recall / pq_distortion_report
+    # capacities not already in the session memo; results land under the
+    # SAME memo keys the per-arm trainer uses, so the k=8 artifact stays
+    # shared with ann_dim_permute_recall / pq_distortion_report
     missing = []
     for cap in _CB_SWEEP_CAPS:
         key = (sf_dir, "cb_sub", 4, cap, 2)
-        if key in _ANN_ARTIFACTS:
-            continue
-        loaded = _ann_trained_try_load(c, sf_dir, key)
-        if loaded is not None:
-            _ANN_ARTIFACTS[key] = loaded
-        else:
+        if key not in _ANN_ARTIFACTS:
             missing.append(cap)
     if missing:
         trained = sim_ops.pq_codebooks_subspace_trained_multi(
             c, corpus_id="corpus_id", m=4, caps=tuple(missing),
             iterations=2)
         for cap, cbk in trained.items():
-            key = (sf_dir, "cb_sub", 4, cap, 2)
-            _ann_trained_store(c, sf_dir, key, cbk)
-            _ANN_ARTIFACTS[key] = cbk
+            _ANN_ARTIFACTS[(sf_dir, "cb_sub", 4, cap, 2)] = cbk
     cbs = {cap: _ANN_ARTIFACTS[(sf_dir, "cb_sub", 4, cap, 2)]
            for cap in _CB_SWEEP_CAPS}
     coded = materialize(sim_ops.pq_encode_multi(c, cbs, id_col="corpus_id"))
@@ -7360,9 +7159,9 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
     cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
                      lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_s = _ann_trained(c, sf_dir, (sf_dir, "cb_sub", 4, 8, 2),
-                        lambda: sim_ops.pq_codebook_subspace_trained(
-                            c, m=4, k_centroids=8, iterations=2))
+    cb_s = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
+                     lambda: sim_ops.pq_codebook_subspace_trained(
+                         c, m=4, k_centroids=8, iterations=2))
     rows = []
     for name, cb in (("lowest_id", cb_l), ("subspace_trained", cb_s)):
         d = sim_ops.pq_distortion(c, cb, id_col="corpus_id")

@@ -104,3 +104,50 @@ def test_cli_ingest_unknown_pinned_form_fails_fast(spark, tmp_path):
         with pytest.raises(KeyError, match="mystery"):
             run_stage(spark, "ingest", str(root),
                       forms={"mystery": dialect})
+
+
+def test_cli_failed_stage_keeps_previous_output(spark, tmp_path, monkeypatch,
+                                                capsys):
+    """A stage whose plan raises mid-write exits non-zero naming the stage,
+    leaves the previous committed output readable and intact, and a re-run
+    recovers (ROADMAP: a failed stage never destroys what later stages
+    read)."""
+    from pyspark.sql import functions as F
+
+    from peskas_malawi_data_pipeline_spark import cli
+    from peskas_malawi_data_pipeline_spark.core.io import read_table
+
+    _land(tmp_path)
+    root = str(tmp_path)
+    forms = {"FieldDataApp-2024": "dialect_a", "Malawi SSF": "dialect_b"}
+    for stage in cli.STAGES:
+        run_stage(spark, stage, root, forms=forms)
+
+    def validated():
+        return sorted(read_table(spark, f"{root}/validated").collect(), key=str)
+
+    before = validated()
+    # the fault fires on row N (by sorted submission id) inside the write job
+    bad = sorted(r.submission_id for r in before)[2]
+
+    orig = cli.validate.validate_landings
+
+    def failing(df, **kw):
+        out = orig(df, **kw)
+        return out.withColumn("submission_id", F.when(
+            F.col("submission_id") == bad,
+            F.raise_error(F.lit(f"injected fault on row {bad}")))
+            .otherwise(F.col("submission_id")))
+
+    monkeypatch.setattr(cli, "get_spark", lambda name: spark)
+    monkeypatch.setattr(cli.validate, "validate_landings", failing)
+    assert cli.main(["validate", "--root", root]) != 0
+    err = capsys.readouterr().err
+    assert "validate: failed:" in err and "injected fault" in err
+    assert validated() == before
+
+    monkeypatch.setattr(cli.validate, "validate_landings", orig)
+    assert cli.main(["validate", "--root", root]) == 0
+    assert capsys.readouterr().out.strip() == f"validate: {len(before)} rows"
+    assert validated() == before
+    assert run_stage(spark, "merge", root) == 1

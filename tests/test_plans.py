@@ -314,40 +314,6 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
         F.col("event_type").isin("purchase", "signup")).count()
 
 
-def test_upsert_partitions_touches_only_present_partitions(spark, tmp_path):
-    """core.io.upsert_partitions: dynamic partition overwrite replaces ONLY
-    the partitions present in the incremental frame — the O(new data)
-    alternative to the reference's truncate-and-load (R/storage.R:89)."""
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-    from peskas_malawi_data_pipeline_spark.queries import _t
-
-    ev = (_t(spark, SF_DIR, "events")
-          .select("event_id", "event_type", "value"))
-    path = str(tmp_path / "events_upsert")
-    io_ops.write_table(ev, path, partition_by=["event_type"])
-    before_click = spark.read.parquet(path).filter(
-        F.col("event_type") == "click").count()
-
-    # incremental run: only 'view' rows, values rewritten
-    incr = (ev.filter(F.col("event_type") == "view")
-            .withColumn("value", F.lit(0.0)))
-    n_view = incr.count()
-    io_ops.upsert_partitions(incr, path, ["event_type"])
-
-    after = spark.read.parquet(path)
-    # untouched partition intact
-    assert after.filter(F.col("event_type") == "click").count() == before_click
-    # upserted partition fully replaced (same rows, new values)
-    view = after.filter(F.col("event_type") == "view")
-    assert view.count() == n_view
-    assert view.agg(F.sum("value")).collect()[0][0] == 0.0
-    # static overwrite mode restored on the session
-    assert spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode") != "dynamic"
-
-
 def test_runtime_bloom_filter_prunes_fact_rows(spark):
     """Runtime bloom-filter join pruning (the shuffle-join analogue of DPP):
     with a selective dim filter and a non-broadcast join, Spark injects a
@@ -418,55 +384,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-
-
-def test_compact_table_reduces_files_keeps_rows(spark, tmp_path):
-    """core.io.compact_table: a many-small-files table rewrites to the
-    target file count with identical contents (row count + value sum)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-    from peskas_malawi_data_pipeline_spark.queries import _t
-
-    ev = _t(spark, SF_DIR, "events").select("event_id", "value")
-    path = str(tmp_path / "small_files")
-    ev.repartition(64).write.parquet(path)
-    n_before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert n_before >= 32
-    total = ev.count()
-    vsum = ev.agg(F.sum("event_id")).collect()[0][0]
-
-    n_after = io_ops.compact_table(spark, path, target_files=4)
-    assert n_after <= 6
-    back = spark.read.parquet(path)
-    assert back.count() == total
-    assert back.agg(F.sum("event_id")).collect()[0][0] == vsum
-
-
-def test_compact_swap_strategy_is_pluggable(spark, tmp_path):
-    """core.io.compact_table swap seam: the default rename swap refuses
-    object-store URIs (non-atomic there — a table-format metadata commit is
-    the right strategy), and an injected swap callable is honored."""
-    import pytest
-
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-
-    with pytest.raises(ValueError, match="not atomic"):
-        io_ops._local_rename_swap("s3://bucket/table", "s3://bucket/tmp")
-
-    path = str(tmp_path / "t")
-    spark.range(100).repartition(8).write.parquet(path)
-    calls = []
-
-    def metadata_commit_swap(p, tmp):
-        calls.append((p, tmp))
-        io_ops._local_rename_swap(p, tmp)  # stand-in for a catalog commit
-
-    io_ops.compact_table(spark, path, target_files=2, swap=metadata_commit_swap)
-    assert calls == [(path, path + ".__compact_tmp")]
-    assert spark.read.parquet(path).count() == 100
 
 
 def test_global_ranking_matches_window_forms(spark):
@@ -621,99 +538,53 @@ def test_zorder_write_empty_and_allnull_input(spark, tmp_path):
     assert spark.read.parquet(p2).count() == 5
 
 
-def test_rename_swap_marker_lifecycle(spark, tmp_path):
-    """The rename swap writes a recovery marker around its non-atomic
-    window: gone after a successful swap; left behind (with recovery
-    instructions) if the second rename never happens."""
-    from peskas_malawi_data_pipeline_spark.core import io as io_ops
-
-    path = str(tmp_path / "t")
-    spark.range(10).write.parquet(path)
-    tmp = path + ".__compact_tmp"
-    spark.range(10).repartition(1).write.parquet(tmp)
-    io_ops._local_rename_swap(path, tmp)
-    assert not os.path.exists(tmp + ".__swap_inprogress")
-    assert spark.read.parquet(path).count() == 10
-
-    # simulated crash inside the window: marker survives and names both dirs
-    spark.range(3).write.parquet(tmp)
-    import shutil
-    orig_move = shutil.move
-    calls = {"n": 0}
-
-    def failing_move(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("crash between renames")
-        return orig_move(src, dst)
-
-    shutil.move = failing_move
-    try:
-        import pytest
-        with pytest.raises(OSError):
-            io_ops._local_rename_swap(path, tmp)
-    finally:
-        shutil.move = orig_move
-    marker = tmp + ".__swap_inprogress"
-    assert os.path.exists(marker)
-    text = open(marker).read()
-    assert tmp in text and tmp + ".__old" in text
-
-
 def test_versioned_table_commit_protocol(spark, tmp_path):
-    """core.io.VersionedParquetTable: truncate-and-load and compaction as
-    O(1) pointer commits — a reader's resolved plan survives a concurrent
-    commit (it scans the immutable old version), a crash BEFORE the pointer
-    commit leaves the previous version live, and vacuum never deletes the
-    live version."""
-    import os
-
+    """core.io.write_table publishes truncate-and-load as a pointer commit:
+    successive commits replace the table, a reader planned before a commit
+    still scans the old version, a complete but uncommitted version stays
+    invisible (and the next write overwrites it), and only the live version
+    and the one before it stay on disk."""
     from pyspark.sql import functions as F
 
     from peskas_malawi_data_pipeline_spark.core import io as io_ops
 
-    t = io_ops.VersionedParquetTable(str(tmp_path / "vt"))
-    assert t.current_version() is None
+    path = str(tmp_path / "vt")
 
-    assert t.write(spark.range(100).withColumn("x", F.col("id") * 2)) == 1
-    old_reader = t.read(spark)            # resolves v1 at plan time
+    def versions():
+        return sorted(d for d in os.listdir(path) if d.startswith("v"))
 
-    # a second truncate-and-load commits v2; the table dir never vanishes
-    assert t.write(spark.range(50).withColumn("x", F.lit(0))) == 2
-    assert t.read(spark).count() == 50
-    assert old_reader.count() == 100      # old plan still scans immutable v1
+    io_ops.write_table(spark.range(100).withColumn("x", F.col("id") * 2), path)
+    assert io_ops.read_table(spark, path).count() == 100
+    old_reader = io_ops.read_table(spark, path)      # resolves v1 at plan time
 
-    # crash before commit: a complete-but-uncommitted v3 must stay invisible
-    spark.range(7).withColumn("x", F.lit(1)).write.parquet(t.data_dir(3))
-    assert t.current_version() == 2
-    assert t.read(spark).count() == 50
+    io_ops.write_table(spark.range(50).withColumn("x", F.lit(0)), path)
+    assert io_ops.read_table(spark, path).count() == 50
+    assert old_reader.count() == 100     # old plan still scans immutable v1
 
-    # compaction = rewrite + pointer commit (v4 supersedes the orphan too)
-    spark.range(2000).withColumn("x", F.col("id")).repartition(32) \
-        .write.mode("overwrite").parquet(t.data_dir(4))
-    t._commit(4)
-    n_files = t.compact(spark, target_files=2)
-    assert n_files <= 3
-    assert t.current_version() == 5
-    assert t.read(spark).count() == 2000
+    # crash before commit: a complete but uncommitted v3 stays invisible
+    orphan = os.path.join(path, "v3")
+    spark.range(7).withColumn("x", F.lit(1)).write.parquet(orphan)
+    assert io_ops.read_table(spark, path).count() == 50
+    assert versions() == ["v1", "v2", "v3"]
 
-    # crash a write again: v6 staged but never committed (orphan)
-    spark.range(3).withColumn("x", F.lit(9)).write.parquet(t.data_dir(6))
-    removed = t.vacuum(keep=1)
-    assert t.data_dir(5) not in removed and os.path.exists(t.data_dir(5))
-    assert not os.path.exists(t.data_dir(1))
-    # the orphan is GC'd, never mistaken for a committed recent version
-    assert not os.path.exists(t.data_dir(6))
-    assert t.read(spark).count() == 2000
+    # the next write stages over the orphan and commits it as v3
+    io_ops.write_table(spark.range(9).withColumn("x", F.lit(2)), path)
+    back = io_ops.read_table(spark, path)
+    assert back.count() == 9
+    assert back.filter(F.col("x") != 2).count() == 0
+    # three writes: the live version and the one before it remain
+    assert versions() == ["v2", "v3"]
+    assert open(os.path.join(path, "_CURRENT")).read() == "3"
+    assert io_ops.read_table(spark, path, ["x"]).columns == ["x"]
 
-    # keep=2 must keep the two most recent COMMITTED versions; a fresh
-    # orphan must not displace one of them from the keep window
-    v_new = t.write(spark.range(9).withColumn("x", F.lit(0)))  # next commit
-    spark.range(2).withColumn("x", F.lit(1)).write.parquet(t.data_dir(v_new + 2))
-    t.vacuum(keep=2)
-    assert os.path.exists(t.data_dir(5)) and os.path.exists(t.data_dir(v_new))
-    assert not os.path.exists(t.data_dir(v_new + 2))
-    assert t.read(spark).count() == 9
+    # a table without a pointer (a file or directory another tool wrote)
+    # reads as plain parquet
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    single = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3]}), single)
+    assert io_ops.read_table(spark, single).count() == 3
 
 
 def test_shuffle_shards_balanced_deterministic_partition_free(spark):
@@ -828,217 +699,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
     assert filtered == join().count()
 
 
-def test_versioned_table_audit_detects_corruption(spark, tmp_path):
-    """write_audited commits an order-insensitive content fingerprint
-    with the data; verify_audit passes on the intact table, fails after a
-    data file disappears, and refuses tables written without an audit."""
-    import glob
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.core.io import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "t"))
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).cast("string").alias("s"))
-    v = t.write_audited(df.repartition(4), meta={"job": "unit"})
-    audit = t.verify_audit(spark)
-    assert audit["rows"] == 100 and t.read_meta()["job"] == "unit"
-
-    # column order must not matter to the fingerprint
-    assert t._fingerprint(df.select("s", "id")) == audit
-
-    # drop one data file -> mismatch
-    part = sorted(glob.glob(os.path.join(t.data_dir(v), "part-*")))[0]
-    os.remove(part)
-    with pytest.raises(ValueError, match="audit mismatch"):
-        t.verify_audit(spark)
-
-    # plain write has no audit to verify
-    t2 = VersionedParquetTable(str(tmp_path / "t2"))
-    t2.write(df)
-    with pytest.raises(ValueError, match="no recorded audit"):
-        t2.verify_audit(spark)
-
-
-def test_ann_baseline_artifact_staleness(spark, tmp_path, monkeypatch):
-    """The persisted exact-L2 baseline must be reused across "sessions"
-    (memo resets) while the corpus is unchanged, and REBUILT — not
-    silently served stale — when the corpus content changes (even at
-    identical row count / file size): the artifact's committed meta
-    carries the corpus content fingerprint and a mismatch forces the
-    all-pairs recompute."""
-    from pyspark.sql import Row, functions as F
-
-    import peskas_malawi_data_pipeline_spark.queries as Q
-
-    monkeypatch.setenv("PESKAS_ANN_BASELINE_CACHE",
-                       str(tmp_path / "cache"))
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir)
-
-    def write_corpus(shift):
-        rows = [Row(vec_id=i,
-                    embedding=[float((i * 7 + d + shift) % 13) / 10.0
-                               for d in range(8)])
-                for i in range(30)]
-        (spark.createDataFrame(rows).repartition(1)
-         .write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet"))
-
-    def baseline():
-        Q.reset_ann_artifact_memo()
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-        return sorted((r.query_id, r.corpus_id) for r in
-                      Q._exact_l2_baseline(spark, q, c, sf_dir).collect())
-
-    write_corpus(0)
-    first = baseline()
-    art_root = tmp_path / "cache"
-    slugs = list(art_root.iterdir())
-    assert len(slugs) == 1
-    v_after_first = (slugs[0] / "_CURRENT").read_text().strip()
-    # unchanged corpus, fresh memo → artifact reused, no new version
-    assert baseline() == first
-    assert (slugs[0] / "_CURRENT").read_text().strip() == v_after_first
-
-    # rewrite the corpus with DIFFERENT content (same shape/row count)
-    write_corpus(3)
-    second = baseline()
-    assert second != first, "stale artifact served for a changed corpus"
-    assert (slugs[0] / "_CURRENT").read_text().strip() != v_after_first
-
-
-def test_ann_trained_artifact_staleness(spark, tmp_path, monkeypatch):
-    """The persisted TRAINED artifacts (Lloyd codebooks / centroids /
-    dim permutations, queries._ann_trained) must round-trip
-    bit-identically across "sessions" (memo resets) while the corpus is
-    unchanged — WITHOUT re-running training — and must be rebuilt when
-    the corpus content changes at identical shape, exactly like the
-    exact-L2 baseline artifact."""
-    import json
-
-    from pyspark.sql import Row, functions as F
-
-    import peskas_malawi_data_pipeline_spark.queries as Q
-
-    monkeypatch.setenv("PESKAS_ANN_BASELINE_CACHE",
-                       str(tmp_path / "cache"))
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir)
-
-    def write_corpus(shift):
-        rows = [Row(vec_id=i,
-                    embedding=[float((i * 7 + d + shift) % 13) / 10.0
-                               for d in range(8)])
-                for i in range(40)]
-        (spark.createDataFrame(rows).repartition(1)
-         .write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet"))
-
-    calls = {"n": 0}
-
-    def trained():
-        Q.reset_ann_artifact_memo()
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-        def build():
-            calls["n"] += 1
-            from peskas_malawi_data_pipeline_spark.operators import (
-                similarity as sim_ops)
-            return sim_ops.kmeans_centroids(
-                emb,
-                sim_ops.kmeans_lloyd(emb, id_col="vec_id", k=4,
-                                     iterations=2),
-                id_col="vec_id")
-
-        c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-        return Q._ann_trained(c, sf_dir, (sf_dir, "cents_test", 4, 2),
-                              build)
-
-    write_corpus(0)
-    first = trained()
-    assert calls["n"] == 1
-    # fresh "session" (memo reset), unchanged corpus → disk hit,
-    # NO retraining, exact dict round-trip (int keys and values)
-    assert trained() == first
-    assert calls["n"] == 1
-    art_files = list((tmp_path / "cache").rglob("*.json"))
-    assert len(art_files) == 1
-    obj = json.loads(art_files[0].read_text())
-    assert obj["corpus_fp"]["rows"] == 40
-
-    # corpus rewrite at identical shape → fingerprint mismatch → retrain
-    write_corpus(5)
-    second = trained()
-    assert calls["n"] == 2
-    assert second != first, "stale trained artifact served"
-
-    # a tuple-keyed artifact (PQ codebook) round-trips too
-    Q.reset_ann_artifact_memo()
-    cb = {(s, c_): [s, c_, s * c_] for s in (1, 2) for c_ in (1, 2, 3)}
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    Q._ann_trained_store(c, sf_dir, (sf_dir, "cb_test", 2, 3), cb)
-    assert Q._ann_trained_try_load(
-        c, sf_dir, (sf_dir, "cb_test", 2, 3)) == cb
-
-    # a trainer-ALGORITHM version bump must invalidate persisted
-    # artifacts even on an unchanged corpus: the fingerprint guards data
-    # changes, the version constant guards code changes
-    monkeypatch.setattr(Q, "_ANN_TRAINER_VERSION",
-                        Q._ANN_TRAINER_VERSION + 1)
-    assert Q._ann_trained_try_load(
-        c, sf_dir, (sf_dir, "cb_test", 2, 3)) is None
-
-
-def test_ann_trained_artifact_corrupt_degrades(spark, tmp_path,
-                                               monkeypatch):
-    """A corrupt/truncated persisted trained-artifact file must degrade
-    to retraining (never crash, never serve garbage), and the retrain
-    must REPLACE the corrupt file so the next session hits disk again."""
-    import json
-
-    from pyspark.sql import Row, functions as F
-
-    import peskas_malawi_data_pipeline_spark.queries as Q
-
-    monkeypatch.setenv("PESKAS_ANN_BASELINE_CACHE",
-                       str(tmp_path / "cache"))
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir)
-    rows = [Row(vec_id=i, embedding=[float((i * 3 + d) % 7)
-                                     for d in range(4)])
-            for i in range(20)]
-    (spark.createDataFrame(rows).repartition(1)
-     .write.parquet(f"{sf_dir}/embeddings.parquet"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return {1: [1, 2], 2: [3, 4]}
-
-    def trained():
-        Q.reset_ann_artifact_memo()
-        return Q._ann_trained(c, sf_dir, (sf_dir, "corrupt_t", 1), build)
-
-    first = trained()
-    assert calls["n"] == 1
-    art = next((tmp_path / "cache").rglob("*.json"))
-    art.write_text("{ not json")          # truncated/corrupt artifact
-    assert trained() == first             # degraded to retraining
-    assert calls["n"] == 2
-    json.loads(art.read_text())           # retrain REPLACED the file
-    assert trained() == first             # and the next session disk-hits
-    assert calls["n"] == 2
-
-
 def test_pq_recall_fuse_gate_branches_identical(spark, tmp_path,
                                                 monkeypatch):
     """ann_pq_recall's candidate-volume plan gate (fused multi-codebook
@@ -1049,8 +709,6 @@ def test_pq_recall_fuse_gate_branches_identical(spark, tmp_path,
 
     import peskas_malawi_data_pipeline_spark.queries as Q
 
-    monkeypatch.setenv("PESKAS_ANN_BASELINE_CACHE",
-                       str(tmp_path / "cache"))
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     rows = [Row(vec_id=i,
