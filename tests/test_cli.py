@@ -109,9 +109,8 @@ def test_cli_ingest_unknown_pinned_form_fails_fast(spark, tmp_path):
 def test_cli_failed_stage_keeps_previous_output(spark, tmp_path, monkeypatch,
                                                 capsys):
     """A stage whose plan raises mid-write exits non-zero naming the stage,
-    leaves the previous committed output readable and intact, and a re-run
-    recovers (ROADMAP: a failed stage never destroys what later stages
-    read)."""
+    leaves the previous committed output readable and intact (a failed
+    stage never destroys what later stages read), and a re-run recovers."""
     from pyspark.sql import functions as F
 
     from peskas_malawi_data_pipeline_spark import cli
