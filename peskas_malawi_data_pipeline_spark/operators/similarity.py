@@ -29,16 +29,6 @@ def l2_norm(a: Column) -> Column:
                               F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """cos(a,b); NULL when either vector has zero norm. Operands are cast to
-    double element-wise first so float32 storage doesn't leak rounding
-    differences into comparisons."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    denom = l2_norm(ad) * l2_norm(bd)
-    return F.when(denom > 0, dot(ad, bd) / denom)
-
-
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
                      query_id: str = "query_id", corpus_id: str = "corpus_id",
                      vec_col: str = "embedding",
@@ -686,6 +676,31 @@ def _np_sub_d2(Xs, C) -> "object":
     xx = (Xs * Xs).sum(axis=1)
     cc = (C * C).sum(axis=1)
     return xx[:, None] - 2 * (Xs @ C.T) + cc[None, :]
+
+
+def _np_probes_luts(qvecs, codebook: dict, coarse: dict[int, list[int]],
+                    nprobe: int) -> tuple:
+    """Query-side state of an IVFADC search, in driver numpy: the
+    ``nprobe`` nearest coarse-centroid ids per query (int32, n×nprobe)
+    and one ADC lookup table per subspace (int64, n×k_s: d²(q_sub, cid)
+    in :func:`_sub_cids` order, so a code IS its position in the row —
+    ragged codebooks included). Probe order is a STABLE argsort of the
+    exact int64 d² over cid-ascending columns, so ties go to the lowest
+    cid — the (d², cid) order of :func:`_coarse_assign`."""
+    import numpy as np
+
+    m, _kc, d_sub = _pq_shape(codebook)
+    X = _np_micro(qvecs)
+    cids = sorted(coarse)
+    Cc = np.asarray([coarse[c] for c in cids], dtype=np.int64)
+    order = np.argsort(_np_sub_d2(X, Cc), axis=1, kind="stable")
+    lists = np.asarray(cids, dtype=np.int32)[order[:, :nprobe]]
+    luts = [_np_sub_d2(X[:, (s - 1) * d_sub:s * d_sub],
+                       np.asarray([codebook[(s, c)]
+                                   for c in _sub_cids(codebook, s)],
+                                  dtype=np.int64))
+            for s in range(1, m + 1)]
+    return lists, luts
 
 
 def pq_encode_multi(df: DataFrame, codebooks: dict[object, dict],
@@ -1633,38 +1648,44 @@ def ivf_pq_search_coded(queries: DataFrame, coded: DataFrame,
     build/serve split: ``coded`` is :func:`ivf_pq_encode_corpus` output
     read back from storage, and the corpus embeddings are NOWHERE in
     this plan — per query it reads |corpus|·nprobe/n_centroids rows of
-    m-byte codes, the IO shape that makes 100 TB ANN serveable. Queries
-    compute their probe lists and per-(sub, cid) distance rows map-side
-    (codebook/centroids inline as literals after the bounded artifact
-    load); the only join is the list-id equi-join with the probe side
-    broadcast; ADC is m element_at lookups per candidate. Results are
-    bit-identical to :func:`ivf_pq_topk` over the same artifacts (the
-    ``ann_index_persisted`` registry query shares the in-session twin's
-    oracle verbatim)."""
-    from ..core.barrier import materialize
+    m-byte codes, the IO shape that makes 100 TB ANN serveable.
 
-    m, _kc, d_sub = _pq_shape(codebook)
-    qv = _micro(F.col(vec_col))
-    q_cols = [F.col(query_id),
-              _coarse_assign(qv, coarse, nprobe).alias("__probe_lists")]
-    for s in range(1, m + 1):
-        sub = F.slice(qv, (s - 1) * d_sub + 1, d_sub)
-        cb_arr = long_matrix_lit(
-            [codebook[(s, c)] for c in _sub_cids(codebook, s)])
-        lut = F.transform(
-            cb_arr,
-            lambda cv_: F.aggregate(
-                F.zip_with(sub, cv_, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x))
-        q_cols.append(lut.alias(f"__lut_{s}"))
-    # the pq_adc_topk LUT factoring on the serve path: each query's
-    # d²(q_sub, centroid) table rides the broadcast, candidates pay m
-    # element_at lookups — same exact BIGINTs, identical results
-    probes = (materialize(queries.select(*q_cols))
-              .select(query_id,
-                      *[F.col(f"__lut_{s}") for s in range(1, m + 1)],
-                      F.posexplode("__probe_lists")
-                      .alias("__pr", "list_id")))
+    The query side is COLLECTED to the driver (one bounded collect: it
+    is the small side of the broadcast join below, so it is already
+    answer-sized) and its probe lists and per-subspace ADC lookup tables
+    are built there by :func:`_np_probes_luts` — the same exact int64
+    kernels as :func:`ivf_pq_encode_corpus`. They reach the plan as one
+    local (query, probe) table — ``query_id``, ``list_id``,
+    ``__lut_1..__lut_m`` — so no per-request expression plan over the
+    codebook is built or run. Queries with a null embedding probe no
+    list and return nothing. The corpus side stays lazy and
+    distributed: the list-id equi-join with the probe table broadcast,
+    m ``element_at`` lookups per candidate, one window top-k. Results
+    are bit-identical to :func:`ivf_pq_topk` over the same artifacts
+    (the ``ann_index_persisted`` registry query shares the in-session
+    twin's oracle verbatim)."""
+    import pandas as pd
+
+    if nprobe < 1:
+        raise ValueError(f"ivf_pq_search_coded: nprobe={nprobe} < 1")
+    m = _pq_shape(codebook)[0]
+    rows = [r for r in queries.select(query_id, vec_col).collect()
+            if r[1] is not None]
+    lut_cols = [f"__lut_{s}" for s in range(1, m + 1)]
+    probe = {query_id: [], "list_id": [], **{c: [] for c in lut_cols}}
+    if rows:
+        lists, luts = _np_probes_luts([r[1] for r in rows], codebook,
+                                      coarse, nprobe)
+        n_probe = lists.shape[1]
+        probe[query_id] = [r[0] for r in rows for _ in range(n_probe)]
+        probe["list_id"] = lists.ravel()
+        for c, lut in zip(lut_cols, luts):
+            probe[c] = list(lut.repeat(n_probe, axis=0))
+    id_type = queries.schema[query_id].dataType.simpleString()
+    schema = ", ".join([f"{query_id} {id_type}", "list_id int"]
+                       + [f"{c} array<bigint>" for c in lut_cols])
+    probes = queries.sparkSession.createDataFrame(pd.DataFrame(probe),
+                                                  schema)
     cand = coded.join(F.broadcast(probes), "list_id") \
         .filter(F.col(query_id) != F.col(corpus_id))
     total = F.lit(0).cast("long")

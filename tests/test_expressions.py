@@ -517,127 +517,6 @@ def test_sentences_and_dedup_sentences(spark):
     assert got[4][1] == ["Dup.", "Other."]
 
 
-def test_extract_links(spark):
-    """extract_links: all double-quoted hrefs in document order; other
-    attributes tolerated; link-free text yields []; NULL propagates."""
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.functions import web as W
-
-    cases = [
-        ('<a href="http://a.com/x">t</a> mid <a class="c" '
-         'href="https://b.org/">u</a>', ["http://a.com/x", "https://b.org/"]),
-        ("no links at all", []),
-        ('<a href="">empty skipped by +</a>', []),
-        (None, None),
-    ]
-    df = spark.createDataFrame([(i, c[0]) for i, c in enumerate(cases)],
-                               "i int, t string")
-    got = {r.i: r.l for r in df.select(
-        "i", W.extract_links(F.col("t")).alias("l")).collect()}
-    for i, (src, want) in enumerate(cases):
-        assert got[i] == want, (src, got[i], want)
-
-
-def test_canonicalize_url_pinned_cases_and_duckdb_twin(spark):
-    """canonicalize_url: every contract step pinned (case, ports, www,
-    userinfo, fragment, tracking params, query sort, path normalization,
-    non-URL → NULL), and the generated DuckDB twin produces IDENTICAL
-    output for every case — the property that makes the registry pair
-    exact rather than approximately similar."""
-    import duckdb
-
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.functions import web as W
-
-    cases = [
-        ("HTTP://WWW.Example.com:80/a/b/?b=2&a=1&utm_source=x#top",
-         "http://example.com/a/b?a=1&b=2"),
-        ("https://Example.COM:443/a?a=1&b=2", "https://example.com/a?a=1&b=2"),
-        ("https://user:pw@Sub.www.site.org:8443/p//",
-         "https://sub.www.site.org:8443/p"),    # ^www. only at host START
-        ("http://example.com", "http://example.com/"),
-        ("http://example.com/?", "http://example.com/"),
-        ("http://example.com/path/", "http://example.com/path"),
-        ("http://example.com:8080/x?gclid=1&ref=z&zz=9&aa=2",
-         "http://example.com:8080/x?aa=2&ref=z&zz=9"),  # ref is content
-        ("ftp://Files.example.net/pub/", "ftp://files.example.net/pub"),
-        ("http://example.com/a?x=1&x=0", "http://example.com/a?x=0&x=1"),
-        ("http://example.com/?utm_source=only", "http://example.com/"),
-        ("not a url", None),
-        ("//scheme-relative.com/x", None),      # absolute URLs only
-        ("http:///nohost", None),
-        ("", None),
-        (None, None),
-    ]
-    df = spark.createDataFrame([(i, c[0]) for i, c in enumerate(cases)],
-                               "i int, u string")
-    got = {r.i: r.c for r in df.select(
-        "i", W.canonicalize_url(F.col("u")).alias("c")).collect()}
-    con = duckdb.connect()
-    expr = W.duck_canonicalize_url_sql("u")
-    for i, (url, want) in enumerate(cases):
-        assert got[i] == want, (url, got[i], want)
-        duck = con.sql(f"SELECT {expr} FROM (SELECT ? AS u)",
-                       params=[url]).fetchone()[0]
-        assert duck == want, (url, duck, want)
-
-
-def test_canonicalize_url_fuzz_vs_duckdb_twin(spark):
-    """Cross-engine fuzz: Spark canonicalize_url and the generated DuckDB
-    twin agree on URLs assembled from adversarial component soup —
-    mixed-case schemes/hosts, userinfo, weird ports, repeated slashes,
-    tracking and empty params, fragments, and strings that are not URLs
-    at all. ONE Spark job for all examples; the pinned-case test defines
-    the semantics, this pins the two engines to each other across the
-    input space."""
-    import duckdb
-    from hypothesis import given, settings, strategies as st
-
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.functions import web as W
-
-    host = st.text(alphabet="aBc9.-", min_size=0, max_size=8)
-    piece = st.text(alphabet="aB1/._~%-", max_size=6)
-    param = st.sampled_from(["a=1", "b=2", "utm_source=x", "gclid=9",
-                             "ref=z", "x=0", "", "a=1"])
-    cases = []
-
-    @settings(max_examples=120, deadline=None)
-    @given(
-        scheme=st.sampled_from(["http", "HTTP", "https", "ftp", "x+s.1"]),
-        user=st.sampled_from(["", "u@", "u:p@", "@"]),
-        h=host,
-        port=st.sampled_from(["", ":80", ":443", ":8080", ":0443"]),
-        www=st.booleans(),
-        path=piece,
-        params=st.lists(param, max_size=4),
-        frag=st.sampled_from(["", "#f", "#", "#a#b"]),
-        junk=st.booleans())
-    def collect(scheme, user, h, port, www, path, params, frag, junk):
-        if junk:
-            cases.append(h + path)          # non-URL soup
-        else:
-            q = "&".join(params)
-            cases.append(f"{scheme}://{user}{'www.' if www else ''}{h}"
-                         f"{port}/{path}{'?' + q if q else ''}{frag}")
-
-    collect()
-    assert len(cases) > 80
-
-    df = spark.createDataFrame(list(enumerate(cases)), "i int, u string")
-    got = {r.i: r.c for r in df.select(
-        "i", W.canonicalize_url(F.col("u")).alias("c")).collect()}
-    con = duckdb.connect()
-    con.sql("CREATE TABLE t (i INT, u VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(cases)))
-    expr = W.duck_canonicalize_url_sql("u")
-    for i, duck in con.sql(f"SELECT i, {expr} FROM t ORDER BY i").fetchall():
-        assert duck == got[i], (cases[i], got[i], duck)
-
-
 def test_sentences_fuzz_vs_duckdb_twin(spark):
     """Cross-engine fuzz: T.sentences equals the DuckDB oracle form over
     random punctuation soup (terminal runs, missing trailing spaces,
