@@ -1081,8 +1081,142 @@ def test_semantic_dedup_keeps_cross_cluster_near_dups(spark):
 # KMV distinct sketch
 
 
+def _kmv_ref(values, k=64):
+    """Reference KMV: same md5-hash / kth-min / integer-division formula."""
+    import hashlib
+
+    hs = sorted({int(hashlib.md5(f"kmv:{v}".encode()).hexdigest()[:13], 16)
+                 for v in values})
+    m = min(len(hs), k)
+    if m < k:
+        return m, m
+    return m, (k - 1) * (1 << 52) // hs[k - 1]
+
+
+def test_kmv_exact_below_k_and_estimate_above(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    rows = ([Row(g="small", v=f"u{i % 7}") for i in range(100)]
+            + [Row(g="big", v=f"u{i}") for i in range(5000)])
+    df = spark.createDataFrame(rows)
+    got = {r.g: (r.sketch_size, r.est_distinct)
+           for r in K.kmv_distinct(df, "g", "v", k=64).collect()}
+    # below k: the sketch IS the distinct set -> exact
+    assert got["small"] == (7, 7)
+    m, est = _kmv_ref([f"u{i}" for i in range(5000)])
+    assert got["big"] == (m, est)
+    # k=64 KMV has ~1/sqrt(62) ≈ 13% std error; this hash draw lands close
+    assert abs(est - 5000) / 5000 < 0.3
+
+
+def test_kmv_invariant_to_partitioning_and_duplicates(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    rows = [Row(g="g", v=f"user-{i % 300}") for i in range(3000)]
+    base = spark.createDataFrame(rows)
+    outs = []
+    for df in (base.coalesce(1), base.repartition(32), base.repartition(3, "v")):
+        outs.append(tuple(K.kmv_distinct(df, "g", "v", k=64).first()))
+    assert outs[0] == outs[1] == outs[2]
+    m, est = _kmv_ref([f"user-{i}" for i in range(300)])
+    assert outs[0] == ("g", m, est)
+
+
+def test_kmv_excludes_nulls_and_validates_k(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    df = spark.createDataFrame([Row(g="g", v="a"), Row(g="g", v=None),
+                                Row(g="g", v="b")])
+    assert tuple(K.kmv_distinct(df, "g", "v", k=8).first()) == ("g", 2, 2)
+    with pytest.raises(ValueError, match="k must be"):
+        K.kmv_distinct(df, "g", "v", k=1)
+    with pytest.raises(ValueError, match="k must be"):
+        K.kmv_distinct(df, "g", "v", k=5000)
+
+
 # ---------------------------------------------------------------------------
 # Misra-Gries heavy hitters
+
+
+def test_heavy_hitters_equals_naive_groupby_under_any_partitioning(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    # skewed distribution: a few giants, a long tail
+    rows = ([Row(v="alpha")] * 400 + [Row(v="beta")] * 150
+            + [Row(v="gamma")] * 30
+            + [Row(v=f"tail{i}") for i in range(420)])
+    base = spark.createDataFrame(rows)
+    want = {("alpha", 400), ("beta", 150), ("gamma", 30)}
+    for df in (base.coalesce(1), base.repartition(32), base.repartition(7, "v")):
+        got = {(r.v, r.cnt)
+               for r in K.heavy_hitters(df, "v", support_ppm=20_000).collect()}
+        # threshold: cnt * 1e6 > 1000 * 20000 -> cnt > 20
+        assert got == want
+
+
+def test_heavy_hitters_adversarial_spread_across_partitions(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    # the heavy value is a *local minority* in every partition (each
+    # partition dominated by its own distinct noise) — the pigeonhole
+    # guarantee must still surface it from at least one MG summary
+    rows = []
+    for p in range(8):
+        rows += [Row(pk=p, v="needle")] * 30
+        rows += [Row(pk=p, v=f"noise-{p}-{i}") for i in range(170)]
+    df = spark.createDataFrame(rows).repartition(8, "pk").drop("pk")
+    got = {(r.v, r.cnt)
+           for r in K.heavy_hitters(df, "v", support_ppm=100_000).collect()}
+    # n=1600, threshold cnt > 160; needle = 240, every noise value = 1
+    assert got == {("needle", 240)}
+
+
+def test_heavy_hitters_nulls_empty_and_validation(spark):
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    df = spark.createDataFrame([Row(v="a"), Row(v=None), Row(v="a"),
+                                Row(v="b")])
+    got = {(r.v, r.cnt)
+           for r in K.heavy_hitters(df, "v", support_ppm=500_000).collect()}
+    # n=3 non-null; threshold cnt > 1.5 -> only "a"
+    assert got == {("a", 2)}
+    assert K.heavy_hitters(df.filter("v = 'zzz'"), "v").count() == 0
+    with pytest.raises(ValueError, match="support_ppm"):
+        K.heavy_hitters(df, "v", support_ppm=0)
+
+
+def test_sketches_property_random_multisets(spark):
+    """Property: heavy_hitters equals the naive exact groupBy-filter and
+    kmv_distinct equals the reference KMV formula on randomized skewed
+    multisets, across partition layouts, support levels, and sketch
+    sizes."""
+    import random
+    from collections import Counter
+
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    rng = random.Random(7)
+    for trial in range(4):
+        vals = []
+        for v in range(rng.randint(3, 30)):
+            vals += [f"v{v}"] * rng.randint(1, 120)
+        rng.shuffle(vals)
+        n = len(vals)
+        support_ppm = rng.choice([50_000, 120_000, 300_000])
+        c = Counter(vals)
+        want = {(v, cnt) for v, cnt in c.items()
+                if cnt * 1_000_000 > n * support_ppm}
+        df = (spark.createDataFrame([(v,) for v in vals], ["v"])
+              .repartition(rng.choice([1, 5, 32])))
+        got = {(r.v, r.cnt)
+               for r in K.heavy_hitters(df, "v", support_ppm).collect()}
+        assert got == want, (trial, support_ppm)
+
+        k = rng.choice([8, 32, 64])
+        want_kmv = _kmv_ref(set(vals), k)
+        row = (K.kmv_distinct(df.withColumn("g", F.lit("g")), "g", "v", k=k)
+               .first())
+        assert (row.sketch_size, row.est_distinct) == want_kmv, (trial, k)
 
 
 def test_brute_force_topk_anti_match_mines_hard_negatives(spark):
@@ -1165,6 +1299,17 @@ def test_containment_property_vs_python_reference(spark):
                for r in D.containment_pairs(df, "block",
                                             threshold=thr).collect()}
         assert got == want, (trial, thr)
+
+
+def test_heavy_hitters_preserves_value_type(spark):
+    """A numeric value column comes back with its own type, so the
+    heavy-hitter list joins against the source without implicit casts."""
+    from peskas_malawi_data_pipeline_spark.operators import sketches as K
+
+    df = spark.createDataFrame([Row(v=7)] * 9 + [Row(v=k) for k in range(3)])
+    out = K.heavy_hitters(df, "v", support_ppm=500_000)
+    assert dict(out.dtypes)["v"] == "bigint"
+    assert [(r.v, r.cnt) for r in out.collect()] == [(7, 9)]
 
 
 # ---------------------------------------------------------------------------
@@ -1680,6 +1825,289 @@ def test_prefix_join_budget_warns_toward_minhash(spark, caplog):
     assert not any("minhash_lsh_pairs" in r.message for r in caplog.records)
 
 
+def test_bpe_fit_matches_textbook_reference(spark):
+    """operators.bpe.bpe_fit equals the textbook Sennrich reference
+    (adjacent-pair stats over the weighted vocab, greedy left-to-right
+    merge) on corpora with repeats ('aaa'), unicode, marker-char
+    injection, and single-char words — including the deterministic
+    (count desc, pair asc) tie-break."""
+    import collections
+
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    texts = ["low low low lower lowest",
+             "aaa aa a aaa \x1faaa",
+             "名前 名 前 the the the",
+             "x " * 5]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "doc_id int, text string")
+
+    def reference(k):
+        words = collections.Counter(
+            w.replace("\x1f", "")
+            for t in texts for w in t.lower().split() if w.replace("\x1f", ""))
+        vocab = {tuple(w): c for w, c in words.items()}
+        merges = []
+        for rank in range(1, k + 1):
+            stats = collections.Counter()
+            for syms, c in vocab.items():
+                for i in range(len(syms) - 1):
+                    stats[(syms[i], syms[i + 1])] += c
+            if not stats:
+                break
+            # count desc, pair asc — compare as the space-joined strings
+            # the engine orders by
+            pair = min(stats, key=lambda p: (-stats[p], p[0] + " " + p[1]))
+            merges.append((rank, pair[0] + " " + pair[1],
+                           pair[0] + pair[1], stats[pair]))
+            new_vocab = {}
+            for syms, c in vocab.items():
+                out, i = [], 0
+                while i < len(syms):
+                    if (i + 1 < len(syms) and syms[i] == pair[0]
+                            and syms[i + 1] == pair[1]):
+                        out.append(pair[0] + pair[1]); i += 2
+                    else:
+                        out.append(syms[i]); i += 1
+                new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + c
+            vocab = new_vocab
+        return merges
+
+    got = [(r.merge_rank, r.pair, r.new_symbol, r.pair_count)
+           for r in bpe.bpe_fit(df, k=6).orderBy("merge_rank").collect()]
+    assert got == reference(6)
+
+
+def test_bpe_merge_is_right_boundary_safe(spark):
+    """Regression: a learned pair (a, x) must NOT merge where the second
+    symbol merely STARTS with x. Corpus ['xy'*5, 'ax'*4, 'axy'] learns
+    merges [(x y), (a x)]; in 'axy' round 1 yields symbols (a, xy), and
+    round 2's (a, x) must not match (a, xy) — textbook encodes 'axy' as
+    2 subwords ('a', 'xy'), a substring replace without the trailing
+    sentinel collapses it to 1."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    texts = ["xy " * 5, "ax " * 4, "axy"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "doc_id int, text string")
+    fitted = [(r.merge_rank, r.pair, r.new_symbol, r.pair_count)
+              for r in bpe.bpe_fit(df, k=2).orderBy("merge_rank").collect()]
+    assert fitted == [(1, "x y", "xy", 6), (2, "a x", "ax", 4)]
+    merges = [(p, s) for _, p, s, _ in fitted]
+    got = {r.doc_id: r.n_subwords
+           for r in bpe.bpe_apply_counts(df, merges).collect()}
+    assert got == {0: 5, 1: 4, 2: 2}
+
+
+def _bpe_fit_rows(bpe, df, k, strategy):
+    return [(r.merge_rank, r.pair, r.new_symbol, r.pair_count)
+            for r in bpe.bpe_fit(df, k=k, strategy=strategy)
+            .orderBy("merge_rank").collect()]
+
+
+def test_bpe_fit_strategies_identical(spark):
+    """The three fit strategies (sequential rounds / driver-local heap /
+    safe-batched rounds) and `auto` learn BIT-IDENTICAL merge sequences —
+    on the textbook corpus, the right-boundary corpus, and seeded random
+    corpora (short alphabet → dense symbol collisions, the worst case for
+    batching safety). The differential anchor is `rounds`, the k=5
+    oracle shape."""
+    import random
+
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    corpora = [
+        ["low low low lower lower newest newest newest widest widest"],
+        ["xy " * 5, "ax " * 4, "axy"],
+    ]
+    rng = random.Random(17)
+    for _ in range(3):
+        corpora.append(
+            [" ".join("".join(rng.choice("abcd")
+                              for _ in range(rng.randint(1, 6)))
+                      for _ in range(rng.randint(1, 12)))
+             for _ in range(25)])
+    for texts in corpora:
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                                   "doc_id int, text string")
+        ref = _bpe_fit_rows(bpe, df, 10, "rounds")
+        for strategy in ("local", "batched", "auto"):
+            assert _bpe_fit_rows(bpe, df, 10, strategy) == ref, strategy
+
+
+def test_bpe_fit_auto_local_is_bounded_jobs(spark):
+    """The auto→local path runs a CONSTANT number of Spark jobs however
+    large k is (vocab collect + fit on the driver) — the property that
+    makes k=32,000 tokenizer training feasible (the `rounds` path is
+    2 jobs PER merge)."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame(
+        [(i, "ab abc abcd abcde " * (i + 1)) for i in range(6)],
+        "doc_id int, text string")
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [0])
+    got = _bpe_fit_rows(bpe, df, 64, "auto")
+    after = max(tracker.getJobIdsForGroup() or [0])
+    assert got == _bpe_fit_rows(bpe, df, 64, "rounds")
+    # vocab materialize + count + collect + createDataFrame collect ≈ 4;
+    # allow slack but pin "constant, not O(k)=128"
+    assert after - before <= 10
+
+
+def test_safe_merge_batch_selection():
+    """_safe_merge_batch unit behavior: (1) symbol-disjoint prefix is
+    taken; (2) selection stops at the first symbol collision; (3) a
+    non-picked pair overlapping a pick and TYING a later pick's count
+    evicts that later pick (created-pair tie-break is unknowable without
+    the rewrite); (4) a truncated candidate list bounds unseen counts by
+    the last row."""
+    from peskas_malawi_data_pipeline_spark.operators.bpe import (
+        MARKER, _safe_merge_batch)
+
+    def p(a, b):
+        return f"{MARKER}{a} {MARKER}{b}"
+
+    # disjoint descending counts: all picked
+    rows = [(p("a", "b"), 10), (p("c", "d"), 8), (p("e", "f"), 6)]
+    assert _safe_merge_batch(rows, 10, truncated=False) == rows
+
+    # collision stops the prefix: (a,c) shares a with pick 1
+    rows = [(p("a", "b"), 10), (p("a", "c"), 8), (p("e", "f"), 6)]
+    assert _safe_merge_batch(rows, 10, truncated=False) == rows[:1]
+
+    # overlap-tie eviction: (b,x) overlaps pick 1 and ties pick 2's
+    # count → pick 2 unsafe (a created pair could reach 8 and win the
+    # string tie-break), pick 1 always safe
+    rows = [(p("a", "b"), 10), (p("c", "d"), 8), (p("b", "x"), 8)]
+    assert _safe_merge_batch(rows, 10, truncated=False) == rows[:1]
+
+    # same shape but overlap count strictly below pick 2: both survive
+    rows = [(p("a", "b"), 10), (p("c", "d"), 8), (p("b", "x"), 7)]
+    assert _safe_merge_batch(rows, 10, truncated=False) == rows[:2]
+
+    # truncated list: unseen pairs may count rows[-1][1]=8 → pick 2 at 8
+    # is unsafe, but untruncated the same rows keep both picks
+    rows = [(p("a", "b"), 10), (p("c", "d"), 8)]
+    assert _safe_merge_batch(rows, 10, truncated=True) == rows[:1]
+    assert _safe_merge_batch(rows, 10, truncated=False) == rows
+    # `want` caps the batch
+    assert _safe_merge_batch(rows, 1, truncated=False) == rows[:1]
+
+
+def test_bpe_apply_counts_matches_manual_encode(spark):
+    """bpe_apply_counts: subword counts equal a manual greedy re-encode
+    of each word under the given merges (merged symbols shrink counts;
+    unmerged words keep their char counts)."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame(
+        [(0, "low lower low"), (1, "abc a"), (2, "lowlow")],
+        "doc_id int, text string")
+    merges = [("l o", "lo"), ("lo w", "low")]
+
+    def encode_len(word):
+        syms = list(word)
+        for pair, new in merges:
+            a, b = pair.split(" ")
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(new); i += 2
+                else:
+                    out.append(syms[i]); i += 1
+            syms = out
+        return len(syms)
+
+    got = {r.doc_id: (r.n_words, r.n_subwords)
+           for r in bpe.bpe_apply_counts(df, merges).collect()}
+    want = {0: (3, encode_len("low") * 2 + encode_len("lower")),
+            1: (2, encode_len("abc") + encode_len("a")),
+            2: (1, encode_len("lowlow"))}
+    assert got == want
+
+
+def _bpe_apply_rows(bpe, df, merges, strategy):
+    return sorted(
+        (r.doc_id, r.n_words, r.n_subwords)
+        for r in bpe.bpe_apply_counts(df, merges, strategy=strategy)
+        .collect())
+
+
+def test_bpe_apply_counts_strategies_identical(spark):
+    """The encode strategies (driver-local occurrence-index applier /
+    distributed chained replace / auto) produce BIT-IDENTICAL per-doc
+    subword counts — on the textbook corpus, the right-boundary corpus
+    (where a substring replace without the sentinel over-merges), and
+    seeded random corpora whose fit merges include composite-symbol
+    pairs (the case where encode-order shortcuts diverge). Merges come
+    from bpe_fit itself so the test exercises real learned sequences."""
+    import random
+
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    corpora = [
+        ["low low low lower lower newest newest newest widest widest"],
+        ["xy " * 5, "ax " * 4, "axy"],
+    ]
+    rng = random.Random(23)
+    for _ in range(3):
+        corpora.append(
+            [" ".join("".join(rng.choice("abc")
+                              for _ in range(rng.randint(1, 7)))
+                      for _ in range(rng.randint(1, 12)))
+             for _ in range(25)])
+    for texts in corpora:
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                                   "doc_id int, text string")
+        merges = [(r.pair, r.new_symbol)
+                  for r in bpe.bpe_fit(df, k=12).orderBy("merge_rank")
+                  .collect()]
+        ref = _bpe_apply_rows(bpe, df, merges, "chained")
+        assert _bpe_apply_rows(bpe, df, merges, "local") == ref
+        assert _bpe_apply_rows(bpe, df, merges, "auto") == ref
+
+
+def test_bpe_apply_counts_sequential_not_minrank(spark):
+    """The local applier must replay merges SEQUENTIALLY, not by
+    min-rank iteration: with merges [(ab c), (a b)] over word 'abc',
+    sequential leaves 2 subwords ('ab','c' — rank 1's pass is over
+    before rank 2 creates 'ab'), while a min-rank loop would revisit
+    rank 1 and collapse to 1. Both strategies must agree on 2."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame([(0, "abc")], "doc_id int, text string")
+    merges = [("ab c", "abc"), ("a b", "ab")]
+    for strategy in ("chained", "local"):
+        got = {r.doc_id: r.n_subwords
+               for r in bpe.bpe_apply_counts(df, merges,
+                                             strategy=strategy).collect()}
+        assert got == {0: 2}, strategy
+
+
+def test_bpe_apply_counts_auto_local_is_bounded_jobs(spark):
+    """The encode auto→local path runs a CONSTANT number of Spark jobs
+    and builds an O(1)-size plan however many merges are applied — the
+    property that makes applying a production 32k-merge tokenizer
+    feasible (the chained path's expression tree is k deep)."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame(
+        [(i, "ab abc abcd abcde " * (i + 1)) for i in range(6)],
+        "doc_id int, text string")
+    merges = [(r.pair, r.new_symbol)
+              for r in bpe.bpe_fit(df, k=64).orderBy("merge_rank")
+              .collect()]
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [0])
+    got = _bpe_apply_rows(bpe, df, merges, "auto")
+    after = max(tracker.getJobIdsForGroup() or [0])
+    assert got == _bpe_apply_rows(bpe, df, merges, "chained")
+    # words materialize + count + collect + result collect ≈ 4; pin
+    # "constant, not O(k)"
+    assert after - before <= 10
+
+
 def test_pinned_incremental_split_stability_and_conflicts(spark):
     """pinned_incremental_split properties: (1) previously-assigned docs
     NEVER change split — across a merge that moves their component key,
@@ -1799,6 +2227,100 @@ def test_prefix_jaccard_pairs_survives_int32_ppm_overflow(spark):
     out = dedup.prefix_jaccard_pairs(df, threshold=0.8).collect()
     assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
     assert out[0].n_union > 2148               # the overflow regime
+
+
+def _reference_encode_ids(text, merges):
+    """Pure-Python reference: whitespace tokens (lower+trim), sequential
+    greedy merge application per word, ids per bpe.token_id_map —
+    merged symbol -> min rank, base char -> k + codepoint."""
+    k = len(merges)
+    rank_of = {}
+    for rank, (_pair, new) in enumerate(merges, start=1):
+        rank_of.setdefault(new, rank)
+    ids = []
+    for word in text.lower().strip().split():
+        syms = [c for c in word if c != "\x1f"]
+        if not syms:
+            continue
+        for pair, new in merges:
+            a, b = pair.split(" ", 1)
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(new); i += 2
+                else:
+                    out.append(syms[i]); i += 1
+            syms = out
+        ids.extend(rank_of[s] if len(s) > 1 else k + ord(s) for s in syms)
+    return ids
+
+
+def test_bpe_encode_ids_matches_reference(spark):
+    """bpe_encode_ids: per-doc token-ID sequences equal a pure-Python
+    sequential reference encoder, on the textbook corpus AND on seeded
+    random corpora whose learned merges include composite-symbol pairs
+    (ids from real merge sequences, not hand-picked ones); doc order
+    inside the array matches word order; empty-after-sanitize words drop
+    out; ids are exactly {merge ranks} ∪ {k+codepoint} with 0 reserved."""
+    import random
+
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    corpora = [
+        ["low low low lower lower newest newest newest widest widest",
+         "low lowest", "xy ax axy"],
+    ]
+    rng = random.Random(97)
+    for _ in range(2):
+        corpora.append(
+            [" ".join("".join(rng.choice("abcd")
+                              for _ in range(rng.randint(1, 7)))
+                      for _ in range(rng.randint(1, 12)))
+             for _ in range(20)])
+    for texts in corpora:
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                                   "doc_id int, text string")
+        merges = [(r.pair, r.new_symbol)
+                  for r in bpe.bpe_fit(df, k=10).orderBy("merge_rank")
+                  .collect()]
+        got = {r.doc_id: (list(r.token_ids), r.n_tokens)
+               for r in bpe.bpe_encode_ids(df, merges).collect()}
+        want = {i: _reference_encode_ids(t, merges)
+                for i, t in enumerate(texts)}
+        want = {i: (ids, len(ids)) for i, ids in want.items() if ids}
+        assert got == want
+        k = len(merges)
+        for ids, _n in got.values():
+            assert all(x != 0 for x in ids)          # 0 reserved
+            for x in ids:
+                assert (1 <= x <= k) or x > k        # rank or base range
+
+
+def test_bpe_encode_ids_consistent_with_counts(spark):
+    """The id path and the counts path are the same encode: per doc,
+    len(token_ids) == n_subwords from bpe_apply_counts (both strategies),
+    so budget numbers and materialized examples can never drift."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame(
+        [(0, "low lower low"), (1, "abc a"), (2, "lowlow"),
+         (3, "\x1f\x1f"), (4, "  ")],
+        "doc_id int, text string")
+    merges = [("l o", "lo"), ("lo w", "low")]
+    ids = {r.doc_id: r.n_tokens
+           for r in bpe.bpe_encode_ids(df, merges).collect()}
+    counts = {r.doc_id: r.n_subwords
+              for r in bpe.bpe_apply_counts(df, merges).collect()}
+    assert ids == counts                      # doc 3/4 absent from both
+
+
+def test_bpe_encode_ids_vocab_limit_raises(spark):
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    df = spark.createDataFrame([(0, "a b c d e")], "doc_id int, text string")
+    import pytest
+    with pytest.raises(ValueError, match="local_vocab_limit"):
+        bpe.bpe_encode_ids(df, [("a b", "ab")], local_vocab_limit=2)
 
 
 def test_compact_band_index_replay_equivalence(spark):
@@ -1943,6 +2465,38 @@ def test_exact_rerank_matches_bruteforce_on_shortlist(spark):
         by_q.setdefault(r.query_id, []).append(r.rank)
     for ranks in by_q.values():
         assert sorted(ranks) == [1, 2, 3]
+
+
+def test_bpe_vocab_table_astral_base_ids(spark):
+    """bpe_vocab_table: astral-plane characters (outside the BMP, two
+    UTF-16 units in the JVM) must come out as ONE base row at id
+    k + codepoint — never split into lone surrogates by the JVM-side
+    zero-width split. Pins the exported base ids against token_id_map /
+    bpe_encode_ids' driver-side ord() rule."""
+    from peskas_malawi_data_pipeline_spark.operators import bpe
+
+    astral = "\U0001D54A"          # MATHEMATICAL DOUBLE-STRUCK CAPITAL S
+    emoji = "\U0001F600"           # GRINNING FACE
+    df = spark.createDataFrame(
+        [(1, f"ab ab a{astral}b {emoji}{emoji} cd")],
+        "doc_id long, text string")
+    merges = [(r.pair, r.new_symbol)
+              for r in bpe.bpe_fit(df, k=2).orderBy("merge_rank")
+              .collect()]
+    k = len(merges)
+    vocab = bpe.bpe_vocab_table(df, merges).collect()
+    base = {r.symbol: r.token_id for r in vocab if r.kind == "base"}
+    # every base symbol is exactly one CODEPOINT (no lone surrogates)
+    assert all(len(s) == 1 for s in base), sorted(base)
+    assert base[astral] == k + ord(astral)
+    assert base[emoji] == k + ord(emoji)
+    # the exported ids agree with the encode path's id rule
+    rank_of = bpe.token_id_map(merges)
+    for r in vocab:
+        if r.kind == "merge":
+            assert rank_of[r.symbol] == r.token_id
+        elif r.kind == "boundary":
+            assert r.token_id == bpe.BOUNDARY_ID and r.symbol is None
 
 
 def test_ivf_pq_index_persist_roundtrip(spark, tmp_path):
@@ -2226,6 +2780,79 @@ def test_pq_adc_topk_coded_multi_matches_single_codebook_scorer(spark):
                for r in multi.filter(F.col("variant") == str(name))
                .collect()}
         assert got == want, name
+
+
+def test_bpe_auto_gate_switches_to_distributed_above_limit(spark, monkeypatch):
+    """The `auto` strategy's local_vocab_limit gate (bpe_fit /
+    bpe_encode_ids) must actually FLIP to the distributed path when the
+    distinct-word vocabulary exceeds the limit — the one place a
+    driver-side collect could silently unbound if the gate regressed.
+    The strategies' output equivalence is covered elsewhere; this pins
+    WHICH path the gate picks."""
+    from pyspark.sql import Row
+
+    import peskas_malawi_data_pipeline_spark.operators.bpe as B
+
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(
+            ["low lower lowest", "new newer newest", "wide wider lowest"])])
+
+    calls = []
+    real_local, real_dist = B._fit_local, B._fit_distributed
+    monkeypatch.setattr(B, "_fit_local",
+                        lambda *a, **k: (calls.append("local"),
+                                         real_local(*a, **k))[1])
+    monkeypatch.setattr(B, "_fit_distributed",
+                        lambda *a, **k: (calls.append("distributed"),
+                                         real_dist(*a, **k))[1])
+    B.bpe_fit(df, k=2, local_vocab_limit=1_000_000).collect()
+    assert calls == ["local"]
+    calls.clear()
+    B.bpe_fit(df, k=2, local_vocab_limit=1).collect()
+    assert calls == ["distributed"]
+
+    # encode side: local path broadcasts a driver map (createDataFrame of
+    # _encode_lengths_local rows); chained path never calls it
+    enc_calls = []
+    real_enc = B._encode_lengths_local
+    monkeypatch.setattr(B, "_encode_lengths_local",
+                        lambda *a, **k: (enc_calls.append("local"),
+                                         real_enc(*a, **k))[1])
+    merges = [(r["pair"], r["new_symbol"]) for r in
+              B.bpe_fit(df, k=2).collect()]
+    B.bpe_apply_counts(df, merges, local_vocab_limit=1_000_000).collect()
+    assert enc_calls == ["local"]
+    enc_calls.clear()
+    B.bpe_apply_counts(df, merges, local_vocab_limit=1).collect()
+    assert enc_calls == []
+
+
+def test_bpe_word_id_map_incremental_equals_full(spark):
+    """bpe_word_id_map grown batch-by-batch (known=prior) must equal the
+    one-shot map over the union, and encoding through the maintained map
+    must equal the self-computed encode — the equivalence that lets the
+    streaming pack pay O(new words) per batch."""
+    import peskas_malawi_data_pipeline_spark.operators.bpe as B
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    cutoff = docs.agg(F.max("doc_id")).collect()[0][0] // 2
+    b1 = docs.filter(F.col("doc_id") <= cutoff)
+    b2 = docs.filter(F.col("doc_id") > cutoff)
+    merges = [(r.pair, r.new_symbol)
+              for r in B.bpe_fit(docs, k=5).orderBy("merge_rank").collect()]
+
+    m1 = B.bpe_word_id_map(b1, merges)
+    m2 = B.bpe_word_id_map(b2, merges, known=m1)
+    full = B.bpe_word_id_map(docs, merges)
+    inc = {r.w: list(r.ids) for r in m2.collect()}
+    ref = {r.w: list(r.ids) for r in full.collect()}
+    assert inc == ref
+
+    got = {r.doc_id: list(r.token_ids)
+           for r in B.bpe_encode_ids(b2, merges, word_map=m2).collect()}
+    want = {r.doc_id: list(r.token_ids)
+            for r in B.bpe_encode_ids(b2, merges).collect()}
+    assert got == want
 
 
 def test_decontaminate_flags_overlapping_docs(spark):
