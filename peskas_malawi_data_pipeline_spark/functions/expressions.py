@@ -6,7 +6,7 @@ Python UDFs. Each helper cites the reference behavior it reproduces.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Sequence
+from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,27 +122,9 @@ def split_gps(col: Column) -> dict[str, Column]:
     }
 
 
-def split_composite_key(col: Column, names: Sequence[str], sep: str = ".") -> list[Column]:
-    """E7 — split one delimited column into N named columns
-    (`separate_wider_delim(gear_catch, ".")`, `R/validation-functions.R:192`).
-    The engine groups on real multi-part keys instead (SURVEY §7.3), but the
-    operator exists for parity.
-    """
-    parts = F.split(col, "\\" + sep if sep in ".$^*+?()[]{}|" else sep)
-    return [F.get(parts, i).alias(n) for i, n in enumerate(names)]
-
-
 def clean_text(col: Column) -> Column:
     """E8 — ``tolower`` + ``trimws`` normalization (`R/preprocessing.R:388-397`)."""
     return F.lower(F.trim(col))
-
-
-def ends_with_digits(haystack: Column, needle: Column) -> Column:
-    """E9 — suffix match used by IMEI validation: registry value ends with the
-    reported digits (`str_detect(valid_imeis, paste0(imei, "$"))`,
-    `R/validation-functions.R:365-366`).
-    """
-    return haystack.endswith(needle)
 
 
 def normalize_imei(col: Column) -> Column:
@@ -186,32 +168,15 @@ def floor_time(ts: Column, minutes: int = 10) -> Column:
         (F.floor(F.unix_timestamp(ts) / secs) * secs).cast("long"))
 
 
-def tag_literal(df: DataFrame, name: str, value) -> DataFrame:
-    """E15 — constant provenance column (``form_name`` tag,
-    `R/ingestion.R:72,309-312`)."""
-    return df.withColumn(name, F.lit(value))
-
-
-def fill_na(df: DataFrame, mapping: Mapping[str, object]) -> DataFrame:
-    """E16 — ``replace_na`` (`inst/reports/malawi-report.qmd:125`)."""
-    return df.na.fill(dict(mapping))
-
-
-def usd(col: Column, rate: float = 0.0006) -> Column:
-    """E10 — MWK→USD conversion used in the report
-    (`inst/reports/malawi-report.qmd:150-152`)."""
-    return col * rate
-
-
 def long_array_lit(values) -> Column:
     """``array<long>`` literal as ONE parsed SQL expression.
 
     ``F.array(*[F.lit(x) for x in values])`` costs one BLOCKING Py4J
     round trip per element (~0.25 ms each on the bench box); the ANN
     LUT factoring builds |queries|-independent codebook literals with
-    thousands of elements, and the measured build cost of
-    ann_codebook_sweep was ~7 s of socket round trips (39k calls,
-    cProfile r14). One ``expr()`` string is one round trip and one
+    thousands of elements, and a four-capacity codebook sweep once
+    spent ~7 s of its build in socket round trips (39k calls, cProfile
+    r14). One ``expr()`` string is one round trip and one
     Catalyst parse. ``L`` suffixes pin LongType — identical to the
     micro-int arrays every call site feeds (``_micro`` casts to long),
     so arithmetic and results are unchanged."""

@@ -108,10 +108,6 @@ def md5_prefix_hash(col: Column, seed: str = "", hex_chars: int = 8) -> Column:
                               1, hex_chars), 16, 10).cast("long")
 
 
-#: Backwards-compatible alias from when the helper was fixed at 32 bits.
-hash32_md5 = md5_prefix_hash
-
-
 def punct_ratio(col: Column) -> Column:
     """Punctuation chars / total chars (0 for empty text)."""
     total = F.length(col)

@@ -22,13 +22,6 @@ def group_count_flag(df: DataFrame, keys: Sequence[str],
     return df.withColumn(flag_name, F.count(F.lit(1)).over(w) == 1)
 
 
-def grouped_agg(df: DataFrame, keys: Sequence[str], exprs: Sequence[Column]) -> DataFrame:
-    """A2/A5/A6 — plain grouped aggregation (10-minute track means
-    `R/export.R:166-173`; report counts/sums). Partial aggregation is free.
-    """
-    return df.groupBy(*keys).agg(*exprs)
-
-
 def grouped_mean_as_column(df: DataFrame, keys: Sequence[str], value: str,
                            out: str) -> DataFrame:
     """A7 — group mean attached to every row

@@ -7,19 +7,11 @@ reach the Parquet scan.
 
 from __future__ import annotations
 
-import re
 from functools import reduce
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def rename_regex(df: DataFrame, pattern: str, replacement: str) -> DataFrame:
-    """P1 — regex bulk rename (`rename_with(str_replace(...))`,
-    `R/ingestion.R:81-89`). Driver-side over the schema; zero execution cost.
-    """
-    return df.toDF(*[re.sub(pattern, replacement, c) for c in df.columns])
 
 
 def strip_prefixes(df: DataFrame, prefixes: Sequence[str]) -> DataFrame:
@@ -78,12 +70,6 @@ def filter_not_in(df: DataFrame, column: str, values: Iterable) -> DataFrame:
     return df.filter(~F.col(column).isin(list(values)))
 
 
-def filter_all_not_null(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P9 — conjunction of not-null predicates (`R/merge_trips.R:109`)."""
-    cond = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in columns])
-    return df.filter(cond)
-
-
 def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     """P11 — full-row (or keyed) distinct (`R/preprocessing.R:310`).
     One shuffle on the dedup key; at scale prefer a keyed subset over
@@ -114,11 +100,3 @@ def union_by_name(dfs: Sequence[DataFrame], id_col: str | None = None,
         tags = tags if tags is not None else [str(i + 1) for i in range(len(frames))]
         frames = [df.select(F.lit(t).alias(id_col), "*") for df, t in zip(frames, tags)]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-
-
-def split_by_predicate(df: DataFrame, cond: Column) -> tuple[DataFrame, DataFrame]:
-    """U3 — split into (matching, non-matching) (`split(.$unique_trip_per_day)`,
-    `R/merge_trips.R:89,98`). Two lazy filters over one parent plan; Spark
-    evaluates each only if used (the reference only uses the TRUE side).
-    """
-    return df.filter(cond), df.filter(~cond)

@@ -5829,7 +5829,7 @@ FROM m
 
 # Session-scoped memo for TRAINED ANN artifacts (codebooks, coarse
 # centroids — small driver-side dicts, pure deterministic functions of
-# (sf_dir, params)). The recall/distortion harness queries each retrain
+# (sf_dir, params)). The recall harness queries each retrain
 # identical Lloyd artifacts per execution; at bench time that priced
 # repeated TRAINING, not search. Keyed on (sf_dir, kind, params); reset
 # with `reset_ann_artifact_memo()` (tests that mutate inputs, or anyone
@@ -5847,36 +5847,13 @@ def _ann_memo(key: tuple, build):
     return _ANN_ARTIFACTS[key]
 
 
-#: fused multi-codebook PQ scoring beats per-arm passes while the plan
-#: is stage-overhead-bound; past this |corpus|·|queries| CANDIDATE
-#: volume the scoring pass dominates and the fused explode (2 arms per
-#: candidate through one window) loses. The gate input is the product —
-#: not corpus rows — because candidates are what flow through the
-#: window: a 20k corpus probed by 2k queries costs what a 200k corpus
-#: probed by 200 does. Measured (one process
-#: per (size, branch), untimed warmup then min-of-2; n_queries clamps
-#: at 200 across the sweep so candidates = 200·corpus): fused wins at
-#: 4M (2.63 vs 3.09 s, r12), 8M (5.91 vs 6.07) and 12M (5.69 vs 6.47);
-#: per-arm wins at 16M (6.52 vs 7.15), 24M (8.66 vs 10.25) and 40M
-#: (7.72 vs 9.40, r12) — crossover bracketed 12M↔16M (1.33×, was the
-#: 10×-wide 4M↔40M; round-12 verdict #3).
-_PQ_FUSE_MAX_CANDIDATES = 14_000_000
-
-
-def _ann_corpus_count(emb: DataFrame, sf_dir: str) -> int:
-    """Embedding-corpus row count, memoized per (sf_dir, session): one
-    count job shared by the query-count rule and the fused-vs-per-arm
-    plan gates."""
-    return _ann_memo((sf_dir, "n_vec"), lambda: int(emb.count()))
-
-
 def _ann_n_queries(emb: DataFrame, sf_dir: str) -> int:
     """Data-scaled recall-harness query count — the Python twin of
     ``_DUCK_ANN_NQ`` (~n/10 clamped to [20, 200]), memoized per sf_dir
     so the count job runs once per session."""
     return _ann_memo((sf_dir, "n_queries", 10, 20, 200),
                      lambda: int(min(200, max(
-                         20, _ann_corpus_count(emb, sf_dir) // 10))))
+                         20, emb.count() // 10))))
 
 
 def _exact_l2_baseline(spark: SparkSession, q: DataFrame, c: DataFrame,
@@ -5944,62 +5921,10 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when a cluster loses all members
     coarse_t = {i: cents_t[cid]
                 for i, cid in enumerate(sorted(cents_t), start=1)}
-    # the two PQ-ADC arms fuse through the sweep machinery (one multi-
-    # codebook corpus encode + one LUT scoring pass with a single
-    # (variant, query) window, per-arm rows bit-identical to
-    # pq_adc_topk) — but ONLY while the scoring is stage-overhead-bound:
-    # the fused pass explodes 2 arms per candidate through one window,
-    # so once the |corpus|x|queries| candidate volume is the cost, two
-    # independent 1x passes beat one 2x pass. Measured (min-of-2 warm):
-    # sf0.1 fused 1.6x faster, 10x fused 2.63 vs 3.09 s, 100x PER-ARM
-    # 7.72 vs 9.40 s — gate on the candidate PRODUCT (the thing the
-    # window actually streams), crossover bracketed 12M<->16M candidates.
-    # Both paths produce identical rows
-    # (equivalence-tested machinery + the shared oracle, one-row-per-arm
-    # shape pinned on both branches). The IVF arms stay per-arm: their
-    # coarse quantizers differ, so the list pruning cannot share a pass.
-    cbs = {"pq_adc": cb_l, "pq_adc_trained": cb_t}
-    n_candidates = (_ann_corpus_count(emb, sf_dir)
-                    * _ann_n_queries(emb, sf_dir))
-    # Output-shape parity between the branches (r12 ADVICE flagged the
-    # fused groupBy as dropping an arm with zero candidate rows): that
-    # state is UNREACHABLE. Both PQ arms ride the same coded frame (one
-    # row per corpus vector carrying codes for every codebook), so an
-    # arm emits zero rows only when there are zero candidates at all —
-    # and a zero-candidate run raises before either branch builds:
-    # pq_codebook (cb_l above) raises ValueError("empty corpus") on a
-    # rowless corpus, identically on both paths (exception parity
-    # pinned by test_pq_recall_fuse_gate_branches_identical). An
-    # arm-completion join was tried and reverted: broadcasting the
-    # grouped aggregate into a 2-row shape join measured +25%
-    # whole-query wall at sf1 (5.05 → 6.32 s isolated) purely from the
-    # extra exchange barrier on the hot path — a real cost for an
-    # impossible case.
-    if n_candidates <= _PQ_FUSE_MAX_CANDIDATES:
-        coded = sim_ops.pq_encode_multi(c, cbs, id_col="corpus_id")
-        pq_hits = (sim_ops.pq_adc_topk_coded_multi(q, coded, cbs, k=3)
-                   .select(F.col("variant").alias("method"),
-                           "query_id", "corpus_id")
-                   .join(F.broadcast(exact), ["query_id", "corpus_id"],
-                         "left")
-                   .groupBy("method")
-                   .agg(F.coalesce(F.sum("__hit"), F.lit(0)).alias("hits"),
-                        F.count(F.lit(1)).alias("approx_n"))
-                   .crossJoin(F.broadcast(exact_n)))
-        rows = [pq_hits.select(
-            "method",
-            F.col("hits").cast("long").alias("hits"),
-            F.col("approx_n").cast("long").alias("approx_n"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-            .alias("recall_ppm"))]
-        pq_arms = ()
-    else:
-        rows = []
-        pq_arms = (("pq_adc", sim_ops.pq_adc_topk(q, c, cb_l, k=3)),
-                   ("pq_adc_trained", sim_ops.pq_adc_topk(q, c, cb_t,
-                                                          k=3)))
-    for method, approx in pq_arms + (
+    rows = []
+    for method, approx in (
+            ("pq_adc", sim_ops.pq_adc_topk(q, c, cb_l, k=3)),
+            ("pq_adc_trained", sim_ops.pq_adc_topk(q, c, cb_t, k=3)),
             ("ivf_adc", sim_ops.ivf_pq_topk(q, c, cb_l, coarse_l, k=3,
                                             nprobe=2)),
             ("ivf_adc_trained", sim_ops.ivf_pq_topk(q, c, cb_t, coarse_t,
@@ -6374,289 +6299,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), rows)
 
 
-def _duck_sub_lloyd(s: int, k: int = 8, p: str = "s",
-                    src: str = "e") -> str:
-    """One subspace's Lloyd chain (``k`` lowest-id seeds → assign →
-    truncating means → trained centroids, iterations=2 ⇒ one mean
-    update) over the 16-dim slice starting at offset (s−1)·16 — the SQL
-    twin of similarity.kmeans_fit_centroids on the sliced frame. ``p``
-    prefixes the CTE names so several capacities can coexist in one
-    oracle (the codebook-capacity sweep); ``src`` names the (vec_id, v)
-    frame to train on (the dim-permutation sweep trains one chain on
-    the natural frame and one on the permuted frame)."""
-    off = (s - 1) * 16
-    d2 = (f"list_sum(list_transform(range(1, 17), "
-          f"i -> (v[{off} + i] - cq[i]) * (v[{off} + i] - cq[i])))")
-    return f"""{p}{s}c0 AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid,
-       list_transform(range(1, 17), i -> v[{off} + i]) AS cq
-  FROM (SELECT * FROM {src} ORDER BY vec_id LIMIT {k})),
-{p}{s}a1 AS (SELECT vec_id, cid FROM (
-    SELECT {src}.vec_id, c.cid,
-           row_number() OVER (PARTITION BY {src}.vec_id
-                              ORDER BY {d2}, c.cid) AS rn
-    FROM {src}, {p}{s}c0 c) WHERE rn = 1),
-{p}{s}m1 AS (SELECT a.cid, t.i AS dim,
-              CAST(sum(v[{off} + t.i + 1]) // count(*) AS BIGINT) AS m
-       FROM {p}{s}a1 a JOIN {src} USING (vec_id), UNNEST(range(0, 16)) AS t(i)
-       GROUP BY a.cid, t.i),
-{p}{s}c1 AS (SELECT cid, list(m ORDER BY dim) AS cq FROM {p}{s}m1
-           GROUP BY cid),
-{p}{s}cents AS (SELECT {s} AS sub,
-                     row_number() OVER (ORDER BY cid) AS cid, cq AS cv
-              FROM {p}{s}c1)"""
-
-
-_DUCK_ANN_PQ_SUB_SQL = f"""
-WITH e AS (SELECT vec_id,
-  list_transform(embedding::DOUBLE[],
-                 x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
- FROM embeddings),
-qm AS (SELECT vec_id AS query_id, v AS qv FROM e
-       WHERE vec_id < {_DUCK_ANN_NQ}),
-xs AS (SELECT query_id, e.vec_id AS corpus_id,
-              list_sum(list_transform(range(1, 65),
-                i -> (qv[i] - v[i]) * (qv[i] - v[i]))) AS d2
-       FROM qm, e WHERE query_id <> e.vec_id),
-exact AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY d2, corpus_id) AS rn
-    FROM xs) WHERE rn <= 3),
-subs AS (SELECT unnest(range(1, 5)) AS sub),
-cents_l AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid, v AS cv
-            FROM (SELECT * FROM e ORDER BY vec_id LIMIT 8)),
-{_duck_adc_blocks("l", "cents_l")},
-{",".join(_duck_sub_lloyd(s) for s in range(1, 5))},
-cents_sub AS ({" UNION ALL ".join(f"SELECT * FROM s{s}cents"
-                                  for s in range(1, 5))}),
-cd_s AS (SELECT e.vec_id AS corpus_id, cs.sub, cs.cid,
-                list_sum(list_transform(range(1, 17),
-                  i -> (v[(cs.sub - 1) * 16 + i] - cv[i])
-                     * (v[(cs.sub - 1) * 16 + i] - cv[i]))) AS d2
-         FROM e, cents_sub cs),
-codes_s AS (SELECT corpus_id, sub, cid FROM (
-    SELECT corpus_id, sub, cid,
-           row_number() OVER (PARTITION BY corpus_id, sub
-                              ORDER BY d2, cid) AS rn
-    FROM cd_s) WHERE rn = 1),
-adc_s AS (
-  SELECT query_id, corpus_id, sum(sd2) AS adc FROM (
-    SELECT qm.query_id, co.corpus_id,
-           list_sum(list_transform(range(1, 17),
-             i -> (qv[(co.sub - 1) * 16 + i] - ce.cv[i])
-                * (qv[(co.sub - 1) * 16 + i] - ce.cv[i]))) AS sd2
-    FROM qm, codes_s co
-    JOIN cents_sub ce ON co.sub = ce.sub AND co.cid = ce.cid
-    WHERE qm.query_id <> co.corpus_id)
-  GROUP BY query_id, corpus_id),
-pq_s AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc, corpus_id) AS rn
-    FROM adc_s) WHERE rn <= 3),
-m AS ({_duck_pq_recall_row("pq_adc", "pq_l")}
-  UNION ALL {_duck_pq_recall_row("pq_adc_subtrained", "pq_s")})
-SELECT method, CAST(hits AS BIGINT) AS hits,
-       CAST(approx_n AS BIGINT) AS approx_n,
-       CAST(exact_n AS BIGINT) AS exact_n,
-       CAST(hits * 1000000 // exact_n AS BIGINT) AS recall_ppm
-FROM m
-"""
-
-
-def _duck_res_lloyd(s: int) -> str:
-    """One subspace's Lloyd chain over the RESIDUAL frame ``rese``
-    (corpus_id, rv) — the SQL twin of kmeans_fit_centroids with
-    pre_quantized=True AND distinct_seeds=True on the sliced residuals
-    (seeds = min corpus_id per DISTINCT residual slice: the coarse
-    members' residuals are all the zero vector and must count as ONE
-    seed, not eight)."""
-    off = (s - 1) * 16
-    d2 = (f"list_sum(list_transform(range(1, 17), "
-          f"i -> (rv[{off} + i] - cq[i]) * (rv[{off} + i] - cq[i])))")
-    return f"""r{s}c0 AS (SELECT row_number() OVER (ORDER BY mid) AS cid, cq
-  FROM (SELECT list_transform(range(1, 17), i -> rv[{off} + i]) AS cq,
-               min(corpus_id) AS mid
-        FROM rese GROUP BY 1
-        ORDER BY mid LIMIT 8)),
-r{s}a1 AS (SELECT corpus_id, cid FROM (
-    SELECT rese.corpus_id, c.cid,
-           row_number() OVER (PARTITION BY rese.corpus_id
-                              ORDER BY {d2}, c.cid) AS rn
-    FROM rese, r{s}c0 c) WHERE rn = 1),
-r{s}m1 AS (SELECT a.cid, t.i AS dim,
-              CAST(sum(rv[{off} + t.i + 1]) // count(*) AS BIGINT) AS m
-       FROM r{s}a1 a JOIN rese USING (corpus_id),
-            UNNEST(range(0, 16)) AS t(i)
-       GROUP BY a.cid, t.i),
-r{s}c1 AS (SELECT cid, list(m ORDER BY dim) AS cq FROM r{s}m1
-           GROUP BY cid),
-r{s}cents AS (SELECT {s} AS sub,
-                     row_number() OVER (ORDER BY cid) AS cid, cq AS cv
-              FROM r{s}c1)"""
-
-
-_DUCK_ANN_IVF_RES_SQL = f"""
-WITH e AS (SELECT vec_id,
-  list_transform(embedding::DOUBLE[],
-                 x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
- FROM embeddings),
-qm AS (SELECT vec_id AS query_id, v AS qv FROM e
-       WHERE vec_id < {_DUCK_ANN_NQ}),
-xs AS (SELECT query_id, e.vec_id AS corpus_id,
-              list_sum(list_transform(range(1, 65),
-                i -> (qv[i] - v[i]) * (qv[i] - v[i]))) AS d2
-       FROM qm, e WHERE query_id <> e.vec_id),
-exact AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY d2, corpus_id) AS rn
-    FROM xs) WHERE rn <= 3),
-subs AS (SELECT unnest(range(1, 5)) AS sub),
-cents_l AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid, v AS cv
-            FROM (SELECT * FROM e ORDER BY vec_id LIMIT 8)),
-{_duck_adc_blocks("l", "cents_l")},
-rese AS (SELECT e.vec_id AS corpus_id, c.list_id,
-                list_transform(range(1, 65), i -> v[i] - ce.cv[i]) AS rv
-         FROM e JOIN cl_l c ON e.vec_id = c.corpus_id
-                JOIN cents_l ce ON c.list_id = ce.cid),
-{",".join(_duck_res_lloyd(s) for s in range(1, 5))},
-cents_res AS ({" UNION ALL ".join(f"SELECT * FROM r{s}cents"
-                                  for s in range(1, 5))}),
-rcd AS (SELECT rese.corpus_id, cs.sub, cs.cid,
-               list_sum(list_transform(range(1, 17),
-                 i -> (rv[(cs.sub - 1) * 16 + i] - cv[i])
-                    * (rv[(cs.sub - 1) * 16 + i] - cv[i]))) AS d2
-        FROM rese, cents_res cs),
-codes_r AS (SELECT corpus_id, sub, cid FROM (
-    SELECT corpus_id, sub, cid,
-           row_number() OVER (PARTITION BY corpus_id, sub
-                              ORDER BY d2, cid) AS rn
-    FROM rcd) WHERE rn = 1),
-qres AS (SELECT q.query_id, p.list_id,
-                list_transform(range(1, 65),
-                               i -> qv[i] - ce.cv[i]) AS qrv
-         FROM qm q JOIN qp_l p USING (query_id)
-              JOIN cents_l ce ON p.list_id = ce.cid),
-adc_r AS (
-  SELECT query_id, corpus_id, sum(sd2) AS adc FROM (
-    SELECT qr.query_id, co.corpus_id,
-           list_sum(list_transform(range(1, 17),
-             i -> (qrv[(co.sub - 1) * 16 + i] - ce.cv[i])
-                * (qrv[(co.sub - 1) * 16 + i] - ce.cv[i]))) AS sd2
-    FROM qres qr
-    JOIN cl_l c ON c.list_id = qr.list_id
-    JOIN codes_r co ON co.corpus_id = c.corpus_id
-    JOIN cents_res ce ON co.sub = ce.sub AND co.cid = ce.cid
-    WHERE qr.query_id <> co.corpus_id)
-  GROUP BY query_id, corpus_id),
-ivf_r AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc, corpus_id) AS rn
-    FROM adc_r) WHERE rn <= 3),
-m AS ({_duck_pq_recall_row("ivf_adc", "ivf_l")}
-  UNION ALL {_duck_pq_recall_row("ivf_adc_residual", "ivf_r")})
-SELECT method, CAST(hits AS BIGINT) AS hits,
-       CAST(approx_n AS BIGINT) AS approx_n,
-       CAST(exact_n AS BIGINT) AS exact_n,
-       CAST(hits * 1000000 // exact_n AS BIGINT) AS recall_ppm
-FROM m
-"""
-
-
-@register("ann_ivf_residual_recall", _DUCK_ANN_IVF_RES_SQL)
-def ann_ivf_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RESIDUAL IVFADC (similarity.ivf_pq_residual_topk +
-    pq_codebook_residual_trained) vs plain IVF-ADC, recall@3 against the
-    exact integer-L2 baseline — the COMPLETE Jégou shape: corpus rows
-    code ``coarse[list] + PQ(residual)`` with a per-subspace codebook
-    TRAINED ON RESIDUALS, and queries compare through their per-probed-
-    list residual. Residuals concentrate near zero regardless of cell
-    position, which is why the same code budget buys more precision —
-    measured here in oracle-pinned ppm. Oracle: list assignment +
-    residual transform + four per-slice Lloyd chains + residual ADC,
-    all exact BIGINTs. Plan: ONE pure-map pass assigns, subtracts, and
-    codes each corpus row (coarse + codebook inline as literals);
-    probes broadcast; candidates bounded by nprobe lists."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _ann_n_queries(emb, sf_dir)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    exact = _exact_l2_baseline(spark, q, c, sf_dir)
-    exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    coarse_l = _ann_memo((sf_dir, "coarse_l", 8),
-                         lambda: sim_ops.ivf_coarse_centroids(
-                             c, n_centroids=8))
-    cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
-                     lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_res = _ann_memo((sf_dir, "cb_res", 4, 8, 2),
-                       lambda: sim_ops.pq_codebook_residual_trained(
-                           c, coarse_l, m=4, k_centroids=8,
-                           iterations=2))
-    rows = []
-    for method, approx in (
-            ("ivf_adc", sim_ops.ivf_pq_topk(q, c, cb_l, coarse_l, k=3,
-                                            nprobe=2)),
-            ("ivf_adc_residual", sim_ops.ivf_pq_residual_topk(
-                q, c, cb_res, coarse_l, k=3, nprobe=2))):
-        agg = (approx.select("query_id", "corpus_id")
-               .join(F.broadcast(exact), ["query_id", "corpus_id"], "left")
-               .agg(F.coalesce(F.sum("__hit"), F.lit(0)).alias("hits"),
-                    F.count(F.lit(1)).alias("approx_n"))
-               .crossJoin(F.broadcast(exact_n)))
-        rows.append(agg.select(
-            F.lit(method).alias("method"),
-            F.col("hits").cast("long").alias("hits"),
-            F.col("approx_n").cast("long").alias("approx_n"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-            .alias("recall_ppm")))
-    return rows[0].unionByName(rows[1])
-
-
-@register("ann_pq_subspace_recall", _DUCK_ANN_PQ_SUB_SQL)
-def ann_pq_subspace_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-SUBSPACE PQ training (similarity.pq_codebook_subspace_trained
-    — the canonical Jégou method: one independent k-means per subvector
-    slice, so each subspace's codes adapt to its own marginal) measured
-    against the lowest-id seed codebook on the exact integer-L2
-    baseline — the third point on the codebook-quality curve after
-    `ann_pq_recall`'s full-vector-trained variant. Oracle: four
-    unrolled per-slice Lloyd chains + the shared ADC/top-k SQL, all
-    exact BIGINTs. Plan: m bounded Lloyd runs (corpus scanned, never
-    shuffled) feed a pure-map encode; scoring and metrics as in
-    ann_pq_recall."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _ann_n_queries(emb, sf_dir)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    exact = _exact_l2_baseline(spark, q, c, sf_dir)
-    exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
-                     lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_s = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
-                     lambda: sim_ops.pq_codebook_subspace_trained(
-                         c, m=4, k_centroids=8, iterations=2))
-    rows = []
-    for method, approx in (
-            ("pq_adc", sim_ops.pq_adc_topk(q, c, cb_l, k=3)),
-            ("pq_adc_subtrained", sim_ops.pq_adc_topk(q, c, cb_s, k=3))):
-        agg = (approx.select("query_id", "corpus_id")
-               .join(F.broadcast(exact), ["query_id", "corpus_id"], "left")
-               .agg(F.coalesce(F.sum("__hit"), F.lit(0)).alias("hits"),
-                    F.count(F.lit(1)).alias("approx_n"))
-               .crossJoin(F.broadcast(exact_n)))
-        rows.append(agg.select(
-            F.lit(method).alias("method"),
-            F.col("hits").cast("long").alias("hits"),
-            F.col("approx_n").cast("long").alias("approx_n"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-            .alias("recall_ppm")))
-    return rows[0].unionByName(rows[1])
-
-
 @register("ann_retrieval_metrics", f"""
 WITH {_DUCK_PQ_CTES},
 q AS (SELECT vec_id AS query_id,
@@ -6794,383 +6436,6 @@ def ann_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum(F.expr("1000000 DIV __fr")), F.lit(0))
             .cast("long").alias("mrr_sum_micro"),
             F.lit(nq).cast("long").alias("n_queries")))
-    return rows[0].unionByName(rows[1])
-
-
-def _duck_permute_arm(p: str, src: str, qsrc: str) -> str:
-    """Encode + ADC + top-3 + distortion CTEs for one dim-permutation
-    arm: trained subspace centroids ``cents_{p}`` (from the per-slice
-    Lloyd chains) code the ``src`` frame; queries come from ``qsrc``;
-    ``dist_{p}`` is the summed reconstruction distortion of the chosen
-    codes (the encoder argmin's own objective)."""
-    return f"""cents_{p} AS ({" UNION ALL ".join(f"SELECT * FROM {p}{s}cents"
-                                                 for s in range(1, 5))}),
-cd_{p} AS (SELECT {src}.vec_id AS corpus_id, cs.sub, cs.cid,
-                list_sum(list_transform(range(1, 17),
-                  i -> (v[(cs.sub - 1) * 16 + i] - cv[i])
-                     * (v[(cs.sub - 1) * 16 + i] - cv[i]))) AS d2
-         FROM {src}, cents_{p} cs),
-codes_{p} AS (SELECT corpus_id, sub, cid FROM (
-    SELECT corpus_id, sub, cid,
-           row_number() OVER (PARTITION BY corpus_id, sub
-                              ORDER BY d2, cid) AS rn
-    FROM cd_{p}) WHERE rn = 1),
-adc_{p} AS (
-  SELECT query_id, corpus_id, sum(sd2) AS adc FROM (
-    SELECT {qsrc}.query_id, co.corpus_id,
-           list_sum(list_transform(range(1, 17),
-             i -> (qv[(co.sub - 1) * 16 + i] - ce.cv[i])
-                * (qv[(co.sub - 1) * 16 + i] - ce.cv[i]))) AS sd2
-    FROM {qsrc}, codes_{p} co
-    JOIN cents_{p} ce ON co.sub = ce.sub AND co.cid = ce.cid
-    WHERE {qsrc}.query_id <> co.corpus_id)
-  GROUP BY query_id, corpus_id),
-top_{p} AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc, corpus_id) AS rn
-    FROM adc_{p}) WHERE rn <= 3),
-dist_{p} AS (SELECT CAST(sum(cd.d2) AS BIGINT) AS dist
-             FROM cd_{p} cd JOIN codes_{p} USING (corpus_id, sub, cid))"""
-
-
-_DUCK_ANN_PERMUTE_SQL = f"""
-WITH e AS (SELECT vec_id,
-  list_transform(embedding::DOUBLE[],
-                 x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
- FROM embeddings),
-qm AS (SELECT vec_id AS query_id, v AS qv FROM e
-       WHERE vec_id < {_DUCK_ANN_NQ}),
-xs AS (SELECT query_id, e.vec_id AS corpus_id,
-              list_sum(list_transform(range(1, 65),
-                i -> (qv[i] - v[i]) * (qv[i] - v[i]))) AS d2
-       FROM qm, e WHERE query_id <> e.vec_id),
-exact AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY d2, corpus_id) AS rn
-    FROM xs) WHERE rn <= 3),
-en AS (SELECT t.i + 1 AS dim,
-              CAST(sum(v[t.i + 1] * v[t.i + 1]) AS BIGINT) AS energy
-       FROM e, UNNEST(range(0, 64)) AS t(i) GROUP BY t.i),
-rkd AS (SELECT dim,
-               row_number() OVER (ORDER BY energy DESC, dim) AS r
-        FROM en),
-sg AS (SELECT dim,
-              CASE WHEN ((r - 1) // 4) % 2 = 0 THEN ((r - 1) % 4) + 1
-                   ELSE 4 - ((r - 1) % 4) END AS sub
-       FROM rkd),
-pl AS (SELECT list(dim ORDER BY sub, dim) AS perm FROM sg),
-ep AS (SELECT vec_id, list_transform(perm, i -> v[i]) AS v FROM e, pl),
-qp AS (SELECT query_id, list_transform(perm, i -> qv[i]) AS qv
-       FROM qm, pl),
-{",".join(_duck_sub_lloyd(s, p="n") for s in range(1, 5))},
-{",".join(_duck_sub_lloyd(s, p="pm", src="ep") for s in range(1, 5))},
-{_duck_permute_arm("n", "e", "qm")},
-{_duck_permute_arm("pm", "ep", "qp")}
-SELECT method, CAST(hits AS BIGINT) AS hits,
-       CAST(approx_n AS BIGINT) AS approx_n,
-       CAST(exact_n AS BIGINT) AS exact_n,
-       CAST(hits * 1000000 // exact_n AS BIGINT) AS recall_ppm,
-       distortion_sum
-FROM (
-  SELECT 'subtrained_natural' AS method,
-    (SELECT count(*) FROM top_n JOIN exact
-     USING (query_id, corpus_id)) AS hits,
-    (SELECT count(*) FROM top_n) AS approx_n,
-    (SELECT count(*) FROM exact) AS exact_n,
-    (SELECT dist FROM dist_n) AS distortion_sum
-  UNION ALL
-  SELECT 'subtrained_permuted',
-    (SELECT count(*) FROM top_pm JOIN exact
-     USING (query_id, corpus_id)),
-    (SELECT count(*) FROM top_pm),
-    (SELECT count(*) FROM exact),
-    (SELECT dist FROM dist_pm))
-"""
-
-
-@register("ann_dim_permute_recall", _DUCK_ANN_PERMUTE_SQL)
-def ann_dim_permute_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FOURTH PQ tuning axis — SUBSPACE LAYOUT (OPQ-lite): an
-    energy-balanced dimension permutation
-    (`similarity.dim_energy_permutation`: per-dim Σx² ranked, snake-dealt
-    across the m subspaces, deterministic — the cheap stand-in for OPQ's
-    learned rotation) vs natural slicing, BOTH with per-subspace-trained
-    codebooks, measured on recall@3 AND summed reconstruction distortion
-    against the shared exact integer-L2 baseline (which a permutation
-    cannot move — only ADC quality shifts). After banding
-    (`lsh_quality_sweep`), probe width (`ann_nprobe_sweep`), and
-    codebook capacity (`ann_codebook_sweep`), this closes the classic
-    PQ tuning set: when natural slicing concentrates the corpus's
-    energy in one subspace, its k centroids carry most of the spread
-    alone and distortion shows it; balancing spreads that load.
-
-    Plan: the permutation is ONE dim-bounded partial agg + a driver
-    sort; applying it is a pure map (element_at per slot); everything
-    downstream reuses the trained-PQ machinery (m bounded Lloyd runs
-    per arm, pure-map encode, broadcast query join). Oracle: the
-    permutation derived relationally (rank + snake CASE + ordered
-    list()), then two full Lloyd/encode/ADC chains — natural frame and
-    permuted frame — all exact BIGINTs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _ann_n_queries(emb, sf_dir)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    exact = _exact_l2_baseline(spark, q, c, sf_dir)
-    exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    perm = _ann_memo((sf_dir, "dim_perm", 4),
-                     lambda: sim_ops.dim_energy_permutation(c, m=4))
-    cp = sim_ops.apply_dim_permutation(c, perm)
-    qp = sim_ops.apply_dim_permutation(q, perm)
-    cb_n = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
-                     lambda: sim_ops.pq_codebook_subspace_trained(
-                         c, m=4, k_centroids=8, iterations=2))
-    cb_p = _ann_memo((sf_dir, "cb_sub_perm", 4, 8, 2),
-                     lambda: sim_ops.pq_codebook_subspace_trained(
-                         cp, m=4, k_centroids=8, iterations=2))
-    rows = []
-    for method, qf, cf, cb in (
-            ("subtrained_natural", q, c, cb_n),
-            ("subtrained_permuted", qp, cp, cb_p)):
-        approx = sim_ops.pq_adc_topk(qf, cf, cb, k=3)
-        dist = (sim_ops.pq_distortion(cf, cb, id_col="corpus_id")
-                .agg(F.sum("pq_d2").cast("long").alias("distortion_sum")))
-        agg = (approx.select("query_id", "corpus_id")
-               .join(F.broadcast(exact), ["query_id", "corpus_id"], "left")
-               .agg(F.coalesce(F.sum("__hit"), F.lit(0)).alias("hits"),
-                    F.count(F.lit(1)).alias("approx_n"))
-               .crossJoin(F.broadcast(exact_n))
-               .crossJoin(F.broadcast(dist)))
-        rows.append(agg.select(
-            F.lit(method).alias("method"),
-            F.col("hits").cast("long").alias("hits"),
-            F.col("approx_n").cast("long").alias("approx_n"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-            .alias("recall_ppm"),
-            "distortion_sum"))
-    return rows[0].unionByName(rows[1])
-
-
-def _duck_cbsweep_sql(caps: tuple[int, ...]) -> str:
-    """Codebook-CAPACITY sweep oracle: one per-subspace-trained Lloyd
-    chain per capacity (``_duck_sub_lloyd`` with ``k`` seeds, CTE names
-    prefixed per capacity so all coexist in one WITH), then per capacity
-    the shared encode/ADC/top-3 blocks, the recall row against the
-    exact baseline, and the mean reconstruction distortion — the same
-    Σ-of-subspace-minima the encoder's argmin produces, so distortion
-    falls out of the code-assignment CTE for free."""
-    parts = [_DUCK_ANN_PROLOGUE]
-    rows = []
-    for cap in caps:
-        p = f"k{cap}x"
-        for s in range(1, 5):
-            parts.append(_duck_sub_lloyd(s, k=cap, p=p))
-        parts.append(
-            f"cents_{p} AS ({' UNION ALL '.join(f'SELECT * FROM {p}{s}cents' for s in range(1, 5))})")
-        parts.append(f"""cd_{p} AS (SELECT e.vec_id AS corpus_id, cs.sub, cs.cid,
-                list_sum(list_transform(range(1, 17),
-                  i -> (v[(cs.sub - 1) * 16 + i] - cv[i])
-                     * (v[(cs.sub - 1) * 16 + i] - cv[i]))) AS d2
-         FROM e, cents_{p} cs)""")
-        parts.append(f"""codes_{p} AS (SELECT corpus_id, sub, cid FROM (
-    SELECT corpus_id, sub, cid,
-           row_number() OVER (PARTITION BY corpus_id, sub
-                              ORDER BY d2, cid) AS rn
-    FROM cd_{p}) WHERE rn = 1)""")
-        parts.append(f"""adc_{p} AS (
-  SELECT query_id, corpus_id, sum(sd2) AS adc FROM (
-    SELECT qm.query_id, co.corpus_id,
-           list_sum(list_transform(range(1, 17),
-             i -> (qv[(co.sub - 1) * 16 + i] - ce.cv[i])
-                * (qv[(co.sub - 1) * 16 + i] - ce.cv[i]))) AS sd2
-    FROM qm, codes_{p} co
-    JOIN cents_{p} ce ON co.sub = ce.sub AND co.cid = ce.cid
-    WHERE qm.query_id <> co.corpus_id)
-  GROUP BY query_id, corpus_id)""")
-        parts.append(f"""pq_{p} AS (SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc, corpus_id) AS rn
-    FROM adc_{p}) WHERE rn <= 3)""")
-        parts.append(f"""dist_{p} AS (
-  SELECT CAST(sum(d2) // (SELECT count(*) FROM e) AS BIGINT) AS mean_d2
-  FROM (SELECT corpus_id, sub, min(d2) AS d2 FROM cd_{p}
-        GROUP BY corpus_id, sub))""")
-        rows.append(f"""SELECT {cap} AS k_centroids,
-  (SELECT count(*) FROM pq_{p}
-   JOIN exact USING (query_id, corpus_id)) AS hits,
-  (SELECT count(*) FROM pq_{p}) AS approx_n,
-  (SELECT count(*) FROM exact) AS exact_n,
-  (SELECT mean_d2 FROM dist_{p}) AS mean_d2""")
-    body = ",\n".join(parts)
-    union = "\n  UNION ALL ".join(rows)
-    return f"""{body},
-m AS ({union})
-SELECT CAST(k_centroids AS BIGINT) AS k_centroids,
-       CAST(hits AS BIGINT) AS hits,
-       CAST(approx_n AS BIGINT) AS approx_n,
-       CAST(exact_n AS BIGINT) AS exact_n,
-       CAST(hits * 1000000 // exact_n AS BIGINT) AS recall_ppm,
-       mean_d2
-FROM m"""
-
-
-_CB_SWEEP_CAPS = (8, 16, 32, 64)
-
-
-@register("ann_codebook_sweep", _duck_cbsweep_sql(_CB_SWEEP_CAPS))
-def ann_codebook_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CODEBOOK CAPACITY vs quality — the THIRD tuning axis after
-    banding (`lsh_quality_sweep`) and probe width (`ann_nprobe_sweep`):
-    recall@3 and mean reconstruction distortion for per-subspace-trained
-    PQ codebooks at k_centroids ∈ {8,16,32,64} and fixed m=4. The
-    nprobe sweep proved ADC error DOMINATES at toy capacity (recall
-    falls as probes widen); the textbook response is capacity — each
-    doubling of k_centroids squares nothing and costs only k·d_sub per
-    subspace in the table, while distortion (the quantity Lloyd
-    directly minimizes) must fall monotonically in k on the train set.
-    Whether RECALL follows, and where it saturates, is what a
-    deployment reads off this curve before spending on m or nprobe.
-    Plan — FUSED across capacities (round-11 rework; the arms previously
-    ran four independent encode+distortion+score passes): one bounded
-    Lloyd run per (capacity, subspace) with artifacts memoized per
-    sf_dir (shared with `pq_distortion_report` at k=8); then ONE corpus
-    projection encodes all four codebooks at once
-    (similarity.pq_encode_multi — each argmin's winning d² doubles as
-    the distortion term, so distortion costs nothing extra), the coded
-    rows are materialized (m-byte codes, the persisted-index stance),
-    distortion is one 4-column aggregate unpivoted to (k_centroids,
-    mean_d2), and scoring pays the |queries|·|corpus| candidate join
-    ONCE with per-capacity ADC totals exploded into a single
-    (capacity, query) window (similarity.pq_adc_topk_coded_multi —
-    per-arm results bit-identical to pq_adc_topk). Oracle: four
-    unrolled per-capacity Lloyd chains + the shared ADC blocks, all
-    exact BIGINTs — unchanged by the fusion."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _ann_n_queries(emb, sf_dir)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    exact = _exact_l2_baseline(spark, q, c, sf_dir)
-    exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    n_vec = c.count()
-    # fused multi-capacity Lloyd (one job per iteration for ALL arms,
-    # bit-identical per arm to pq_codebook_subspace_trained) for the
-    # capacities not already in the session memo; results land under the
-    # SAME memo keys the per-arm trainer uses, so the k=8 artifact stays
-    # shared with ann_dim_permute_recall / pq_distortion_report
-    missing = []
-    for cap in _CB_SWEEP_CAPS:
-        key = (sf_dir, "cb_sub", 4, cap, 2)
-        if key not in _ANN_ARTIFACTS:
-            missing.append(cap)
-    if missing:
-        trained = sim_ops.pq_codebooks_subspace_trained_multi(
-            c, corpus_id="corpus_id", m=4, caps=tuple(missing),
-            iterations=2)
-        for cap, cbk in trained.items():
-            _ANN_ARTIFACTS[(sf_dir, "cb_sub", 4, cap, 2)] = cbk
-    cbs = {cap: _ANN_ARTIFACTS[(sf_dir, "cb_sub", 4, cap, 2)]
-           for cap in _CB_SWEEP_CAPS}
-    coded = materialize(sim_ops.pq_encode_multi(c, cbs, id_col="corpus_id"))
-    dist_rows = (coded.agg(*[F.expr(f"sum(pq_d2_{cap}) div {n_vec}")
-                             .alias(f"__md_{cap}")
-                             for cap in _CB_SWEEP_CAPS])
-                 .select(F.explode(F.array(*[
-                     F.struct(F.lit(cap).cast("long").alias("k_centroids"),
-                              F.col(f"__md_{cap}").cast("long")
-                              .alias("mean_d2"))
-                     for cap in _CB_SWEEP_CAPS])).alias("__d"))
-                 .select("__d.k_centroids", "__d.mean_d2"))
-    approx = sim_ops.pq_adc_topk_coded_multi(q, coded, cbs, k=3)
-    return (approx.select(F.col("variant").cast("long").alias("k_centroids"),
-                          "query_id", "corpus_id")
-            .join(F.broadcast(exact), ["query_id", "corpus_id"], "left")
-            .groupBy("k_centroids")
-            .agg(F.coalesce(F.sum("__hit"), F.lit(0)).cast("long")
-                 .alias("hits"),
-                 F.count(F.lit(1)).cast("long").alias("approx_n"))
-            .crossJoin(F.broadcast(exact_n))
-            .join(F.broadcast(dist_rows), "k_centroids")
-            .select("k_centroids", "hits", "approx_n",
-                    F.col("exact_n").cast("long").alias("exact_n"),
-                    F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-                    .alias("recall_ppm"),
-                    "mean_d2"))
-
-
-@register("pq_distortion_report", f"""
-WITH e AS (SELECT vec_id,
-  list_transform(embedding::DOUBLE[],
-                 x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
- FROM embeddings),
-subs AS (SELECT unnest(range(1, 5)) AS sub),
-cents_l AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid, v AS cv
-            FROM (SELECT * FROM e ORDER BY vec_id LIMIT 8)),
-cd_l AS (
-  SELECT corpus_id, sub,
-         min(list_sum(list_transform(range(1, 17),
-           i -> (vs[i] - cs[i]) * (vs[i] - cs[i])))) AS d2
-  FROM (SELECT e.vec_id AS corpus_id, subs.sub, ce.cid,
-               list_slice(e.v, (sub - 1) * 16 + 1, sub * 16) AS vs,
-               list_slice(ce.cv, (sub - 1) * 16 + 1, sub * 16) AS cs
-        FROM e, subs, cents_l ce)
-  GROUP BY corpus_id, sub),
-pv_l AS (SELECT corpus_id, sum(d2) AS pq_d2 FROM cd_l GROUP BY corpus_id),
-{",".join(_duck_sub_lloyd(s) for s in range(1, 5))},
-cents_sub AS ({" UNION ALL ".join(f"SELECT * FROM s{s}cents"
-                                  for s in range(1, 5))}),
-cd_s AS (
-  SELECT corpus_id, sub,
-         min(list_sum(list_transform(range(1, 17),
-           i -> (vs[i] - cv[i]) * (vs[i] - cv[i])))) AS d2
-  FROM (SELECT e.vec_id AS corpus_id, cs.sub, cs.cv,
-               list_slice(e.v, (cs.sub - 1) * 16 + 1, cs.sub * 16) AS vs
-        FROM e, cents_sub cs)
-  GROUP BY corpus_id, sub),
-pv_s AS (SELECT corpus_id, sum(d2) AS pq_d2 FROM cd_s GROUP BY corpus_id),
-m AS (
-  SELECT 'lowest_id' AS codebook, count(*) AS n_vectors,
-         CAST(sum(pq_d2) // count(*) AS BIGINT) AS mean_d2,
-         CAST(max(pq_d2) AS BIGINT) AS max_d2
-  FROM pv_l
-  UNION ALL
-  SELECT 'subspace_trained', count(*),
-         CAST(sum(pq_d2) // count(*) AS BIGINT),
-         CAST(max(pq_d2) AS BIGINT)
-  FROM pv_s)
-SELECT codebook, CAST(n_vectors AS BIGINT) AS n_vectors, mean_d2, max_d2
-FROM m
-""")
-def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ RECONSTRUCTION DISTORTION per codebook (similarity.
-    pq_distortion): mean and max exact-integer d² between each corpus
-    vector and its codebook reconstruction, for the lowest-id seed
-    codebook vs the per-subspace k-means codebook — the quantity the
-    training directly minimizes, next to `ann_pq_subspace_recall`'s
-    search-quality axis. A deployment tracks distortion over time: a
-    rising mean is the signal the codebook has rotted as the corpus
-    drifted and needs retraining. Plan: the distortion is the encoder's
-    own per-subspace argmin objective, so it is ONE pure-map pass per
-    codebook + a one-row aggregate; the trained codebook adds the m
-    bounded Lloyd runs. All-BIGINT exact."""
-    emb = _t(spark, sf_dir, "embeddings")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    cb_l = _ann_memo((sf_dir, "cb_l", 4, 8),
-                     lambda: sim_ops.pq_codebook(c, m=4, k_centroids=8))
-    cb_s = _ann_memo((sf_dir, "cb_sub", 4, 8, 2),
-                     lambda: sim_ops.pq_codebook_subspace_trained(
-                         c, m=4, k_centroids=8, iterations=2))
-    rows = []
-    for name, cb in (("lowest_id", cb_l), ("subspace_trained", cb_s)):
-        d = sim_ops.pq_distortion(c, cb, id_col="corpus_id")
-        rows.append(d.agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.expr("sum(pq_d2) div count(1)").alias("mean_d2"),
-            F.max("pq_d2").cast("long").alias("max_d2"))
-            .select(F.lit(name).alias("codebook"), "n_vectors",
-                    "mean_d2", "max_d2"))
     return rows[0].unionByName(rows[1])
 
 

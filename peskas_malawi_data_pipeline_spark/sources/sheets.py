@@ -9,7 +9,6 @@ API fetch is driver-side; offline/test paths read a CSV with the same shape.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 DEVICES_SCHEMA = ("IMEI string, device_id string, boat_name string, "
                   "community string, status string")
@@ -23,8 +22,3 @@ def read_devices_csv(spark: SparkSession, path: str) -> DataFrame:
 def devices_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Registry from fetched rows (Sheets API or fixtures)."""
     return spark.createDataFrame(rows, schema=DEVICES_SCHEMA)
-
-
-def broadcast_registry(devices: DataFrame) -> DataFrame:
-    """The registry's only correct physical shape at any scale."""
-    return F.broadcast(devices)

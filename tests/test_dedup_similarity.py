@@ -400,7 +400,8 @@ def test_kmeans_lloyd_matches_numpy_reference(spark):
     deterministic rules — lowest-id seeding, exact integer d² argmin
     with lowest-cid ties, truncating micro means — across 1, 2 and 3
     iterations, including an input that empties a cluster after round 1
-    (the vanished centroid stays vanished in both)."""
+    (the vanished centroid stays vanished in both). An empty frame
+    raises up front, like pq_codebook."""
     import numpy as np
 
     from peskas_malawi_data_pipeline_spark.operators import similarity as S
@@ -457,6 +458,11 @@ def test_kmeans_lloyd_matches_numpy_reference(spark):
     blob_b = {final[i] for i, p in enumerate(order) if 12 <= p < 24}
     assert blob_a and blob_b and not (blob_a & blob_b)
 
+    empty = spark.createDataFrame([], "vec_id int, embedding array<double>")
+    for iters in (1, 3):
+        with pytest.raises(ValueError, match="empty corpus"):
+            S.kmeans_fit_centroids(empty, k=4, iterations=iters)
+
 
 def test_kmeans_centroids_and_trained_codebook(spark):
     """kmeans_centroids equals the numpy grouped truncating-mean over the
@@ -510,80 +516,6 @@ def test_kmeans_centroids_and_trained_codebook(spark):
         for rank, (d, ci) in enumerate(scored[:3], start=1):
             want_l2[(qi, ci)] = (d, rank)
     assert got_l2 == want_l2
-
-
-def test_residual_codebook_distinct_seeding(spark):
-    """pq_codebook_residual_trained must not collapse when the coarse
-    members' residuals are all zero (they are, by construction): the
-    residual k-means seeds on DISTINCT residual slices (min id per
-    value), so the codebook keeps multiple codes per subspace, and
-    ivf_pq_residual_topk's ADC equals a numpy recomputation of the same
-    spec on a small corpus."""
-    import numpy as np
-
-    from peskas_malawi_data_pipeline_spark.operators import similarity as S
-
-    rng = np.random.default_rng(7)
-    dim, m = 8, 2
-    vecs = rng.uniform(-1, 1, size=(24, dim)).round(3)
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows,
-                               "corpus_id int, embedding array<double>")
-    coarse = S.ivf_coarse_centroids(df, n_centroids=4)
-    cb = S.pq_codebook_residual_trained(df, coarse, m=m, k_centroids=4)
-    # no collapse: >1 distinct code per subspace (zero-seed collapse
-    # would leave exactly one centroid per subspace)
-    for s in range(1, m + 1):
-        assert len(S._sub_cids(cb, s)) > 1, s
-
-    # numpy replay of the full spec: list assign -> residual -> code ->
-    # per-probed-list query residual -> ADC -> top-3
-    micro = np.floor(vecs * 1e6).astype("int64")
-    cents = np.array([coarse[c] for c in sorted(coarse)], dtype="int64")
-    d_sub = dim // m
-
-    def lists_of(v, n):
-        d2 = ((cents - v) ** 2).sum(axis=1)
-        return [int(i) + 1
-                for i in np.lexsort((np.arange(len(cents)), d2))[:n]]
-
-    def codes_of(res):
-        out = []
-        for s in range(1, m + 1):
-            sub = res[(s - 1) * d_sub:s * d_sub]
-            cids = S._sub_cids(cb, s)
-            d2 = [int(((sub - np.array(cb[(s, c)])) ** 2).sum())
-                  for c in cids]
-            out.append(cids[int(np.lexsort((np.arange(len(cids)),
-                                            d2))[0])])
-        return out
-
-    want = {}
-    for qi in range(5):
-        probed = lists_of(micro[qi], 2)
-        scored = []
-        for ci in range(24):
-            if ci == qi:
-                continue
-            cl = lists_of(micro[ci], 1)[0]
-            if cl not in probed:
-                continue
-            res_c = micro[ci] - cents[cl - 1]
-            qres = micro[qi] - cents[cl - 1]
-            codes = codes_of(res_c)
-            adc = sum(int(((qres[(s - 1) * d_sub:s * d_sub]
-                            - np.array(cb[(s, codes[s - 1])])) ** 2)
-                          .sum()) for s in range(1, m + 1))
-            scored.append((adc, ci))
-        for rank, (d, ci) in enumerate(sorted(scored)[:3], start=1):
-            want[(qi, ci)] = (d, rank)
-
-    q = spark.createDataFrame(rows[:5],
-                              "query_id int, embedding array<double>")
-    got = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-           for r in S.ivf_pq_residual_topk(q, df, cb, coarse, k=3,
-                                           nprobe=2).collect()}
-    assert got == want
 
 
 def test_ivf_pq_topk_matches_bruteforce_composition(spark):
@@ -2504,7 +2436,8 @@ def test_ivf_pq_index_persist_roundtrip(spark, tmp_path):
     coarse tables round-trip dict -> table -> parquet -> dict exactly,
     and ivf_pq_search_coded over the written ivf_pq_encode_corpus output
     returns bit-identically what ivf_pq_topk computes in-session from
-    the raw vectors — the serve path never touching an embedding."""
+    the raw vectors — the serve path never touching an embedding, with
+    or without Arrow conversion."""
     import numpy as np
 
     from peskas_malawi_data_pipeline_spark.operators import similarity as S
@@ -2545,6 +2478,19 @@ def test_ivf_pq_index_persist_roundtrip(spark, tmp_path):
     assert "coded" in plan and "pq_codes" in plan
     # the probe side is a driver-built local table, not a checkpoint
     assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
+    # with Arrow conversion off (a bare session's default) the local
+    # probe table still builds and serves the same rows
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plain = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
+                 for r in S.ivf_pq_search_coded(
+                     q, spark.read.parquet(base + "/coded"), cb2, coarse2,
+                     k=3, nprobe=2).collect()}
+    finally:
+        spark.conf.set(key, saved)
+    assert plain == live
 
 
 def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
@@ -2554,7 +2500,7 @@ def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
     nprobe >= n_lists, fewer than k candidates, a query id that is also
     a corpus id, int and bigint ids, a null-embedding query (dropped:
     no rows) and an empty query frame (empty result, same schema);
-    nprobe < 1 is rejected."""
+    nprobe < 1 and a rowless codebook corpus are rejected."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -2617,6 +2563,8 @@ def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
             with pytest.raises(ValueError):
                 S.ivf_pq_search_coded(q, coded, cb, coarse, k=3,
                                       nprobe=bad)
+        with pytest.raises(ValueError, match="empty corpus"):
+            S.pq_codebook(df.limit(0), m=3, k_centroids=3)
 
 
 def test_brute_force_l2_topk_match_cols(spark):
@@ -2649,137 +2597,6 @@ def test_brute_force_l2_topk_match_cols(spark):
                    for ci in elig)[:2]
         expect = {(qi, ci): rk + 1 for rk, (_d, ci) in enumerate(d)}
         assert {k: v for k, v in got.items() if k[0] == qi} == expect
-
-
-def test_dim_energy_permutation_snake_balance(spark):
-    """dim_energy_permutation: output is a true permutation; the snake
-    deal reproduces a numpy replay exactly (rank by Σx² desc, tie → low
-    dim, alternate direction per round, within-subspace ascending); and
-    the permuted layout's per-subspace energy spread is no worse than
-    natural slicing on a deliberately lopsided corpus (all the energy
-    in the first dims)."""
-    import numpy as np
-
-    from peskas_malawi_data_pipeline_spark.operators import similarity as S
-
-    rng = np.random.default_rng(3)
-    # lopsided: dim j's scale decays with j -> natural slicing gives
-    # subspace 1 almost all the energy
-    scales = np.array([1.0 / (1 + j) for j in range(8)])
-    vecs = (rng.uniform(-1, 1, size=(50, 8)) * scales).round(4)
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "corpus_id int, embedding array<double>")
-    m = 4
-    perm = S.dim_energy_permutation(df, m=m)
-    assert sorted(perm) == list(range(8))
-
-    micro = np.floor(vecs * 1e6).astype("int64")
-    energy = (micro * micro).sum(axis=0)
-    ranked = sorted(range(8), key=lambda d: (-int(energy[d]), d))
-    groups = [[] for _ in range(m)]
-    for idx, d in enumerate(ranked):
-        rnd, pos = divmod(idx, m)
-        groups[pos if rnd % 2 == 0 else m - 1 - pos].append(d)
-    assert perm == [d for g in groups for d in sorted(g)]
-
-    def spread(layout):
-        subs = [sum(int(energy[d]) for d in layout[s * 2:(s + 1) * 2])
-                for s in range(m)]
-        return max(subs) - min(subs)
-
-    assert spread(perm) <= spread(list(range(8)))
-
-    got = S.apply_dim_permutation(df, perm).orderBy("corpus_id").collect()
-    for r in got:
-        np.testing.assert_allclose(
-            r.embedding, [float(vecs[r.corpus_id][p]) for p in perm])
-
-
-# ---------------------------------------------------------------------------
-# Fused multi-codebook PQ family (round 11): one-pass encode/distortion,
-# LUT-factored multi-variant ADC, fused multi-capacity Lloyd
-# ---------------------------------------------------------------------------
-
-def _emb_frames(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    q = (emb.filter(F.col("vec_id") < 12)
-         .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return q, c
-
-
-def test_multi_trainer_equals_per_arm_trainer_both_engines(spark):
-    """pq_codebooks_subspace_trained_multi (arrow AND expr engines) must
-    be bit-identical, per capacity, to pq_codebook_subspace_trained —
-    seeds, argmin ties, truncating-div means, vanish handling, dense
-    reindex all replayed in one fused loop."""
-    _q, c = _emb_frames(spark)
-    caps = (4, 8, 16)
-    arrow = S.pq_codebooks_subspace_trained_multi(c, caps=caps)
-    expr = S.pq_codebooks_subspace_trained_multi(c, caps=caps,
-                                                 engine="expr")
-    assert arrow == expr
-    # independent per-arm reference: the historical loop — one
-    # kmeans_fit_centroids per sliced subspace frame, dense reindex
-    # (pq_codebook_subspace_trained now DELEGATES to the fused trainer,
-    # so the reference must be reconstructed, not called)
-    dim = len(c.select("embedding").first()[0])
-    d_sub = dim // 4
-    for cap in caps:
-        single = {}
-        for s in range(1, 5):
-            sliced = c.select(
-                "corpus_id",
-                F.slice(F.col("embedding"), (s - 1) * d_sub + 1, d_sub)
-                .alias("__sub"))
-            cents = S.kmeans_fit_centroids(sliced, id_col="corpus_id",
-                                           vec_col="__sub", k=cap,
-                                           iterations=2)
-            for dense_cid, cid in enumerate(sorted(cents), start=1):
-                single[(s, dense_cid)] = cents[cid]
-        assert arrow[cap] == single, f"cap={cap}"
-
-
-def test_pq_encode_multi_matches_per_codebook_encode_and_distortion(spark):
-    """pq_encode_multi (arrow AND expr engines) must reproduce, per
-    codebook, pq_encode's codes and pq_distortion's d² exactly — the
-    argmin's winning distance IS the distortion term."""
-    _q, c = _emb_frames(spark)
-    cbs = {8: S.pq_codebook(c, m=4, k_centroids=8),
-           16: S.pq_codebook(c, m=4, k_centroids=16)}
-    for engine in ("arrow", "expr"):
-        got = {r.corpus_id: r.asDict()
-               for r in S.pq_encode_multi(c, cbs, id_col="corpus_id",
-                                          engine=engine).collect()}
-        for name, cb in cbs.items():
-            codes = {r.corpus_id: list(r.pq_codes)
-                     for r in S.pq_encode(c, cb,
-                                          id_col="corpus_id").collect()}
-            d2 = {r.corpus_id: r.pq_d2
-                  for r in S.pq_distortion(c, cb,
-                                           id_col="corpus_id").collect()}
-            for cid, row in got.items():
-                assert list(row[f"pq_codes_{name}"]) == codes[cid], engine
-                assert row[f"pq_d2_{name}"] == d2[cid], engine
-
-
-def test_pq_adc_topk_coded_multi_matches_single_codebook_scorer(spark):
-    """The LUT-factored multi-variant ADC scorer must return, per
-    variant, exactly pq_adc_topk's rows (same distances, ranks, tie
-    order) — the LUT factoring moves arithmetic, not semantics."""
-    q, c = _emb_frames(spark)
-    cbs = {8: S.pq_codebook(c, m=4, k_centroids=8),
-           16: S.pq_codebook(c, m=4, k_centroids=16)}
-    coded = S.pq_encode_multi(c, cbs, id_col="corpus_id")
-    multi = S.pq_adc_topk_coded_multi(q, coded, cbs, k=3)
-    for name, cb in cbs.items():
-        want = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-                for r in S.pq_adc_topk(q, c, cb, k=3).collect()}
-        got = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-               for r in multi.filter(F.col("variant") == str(name))
-               .collect()}
-        assert got == want, name
 
 
 def test_bpe_auto_gate_switches_to_distributed_above_limit(spark, monkeypatch):

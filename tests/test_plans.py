@@ -699,50 +699,3 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
     assert filtered == join().count()
 
 
-def test_pq_recall_fuse_gate_branches_identical(spark, tmp_path,
-                                                monkeypatch):
-    """ann_pq_recall's candidate-volume plan gate (fused multi-codebook
-    scoring vs per-arm passes) must produce IDENTICAL rows on both
-    branches — the gate is a physical-plan choice, never a semantic
-    one."""
-    from pyspark.sql import Row
-
-    import peskas_malawi_data_pipeline_spark.queries as Q
-
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir)
-    rows = [Row(vec_id=i,
-                embedding=[float((i * 13 + d * 5) % 17) / 4.0
-                           for d in range(8)])
-            for i in range(60)]
-    (spark.createDataFrame(rows).repartition(1)
-     .write.parquet(f"{sf_dir}/embeddings.parquet"))
-
-    fn = Q.REGISTRY["ann_pq_recall"][0]
-
-    def run():
-        Q.reset_ann_artifact_memo()
-        return sorted(map(tuple, fn(spark, sf_dir).collect()))
-
-    monkeypatch.setattr(Q, "_PQ_FUSE_MAX_CANDIDATES", 10 ** 12)
-    fused = run()
-    monkeypatch.setattr(Q, "_PQ_FUSE_MAX_CANDIDATES", -1)
-    per_arm = run()
-    assert fused == per_arm
-    assert len(fused) == 4
-
-    # degenerate corpus: an arm with zero candidate rows is unreachable
-    # (both arms ride one coded frame), because a rowless corpus raises
-    # in codebook training BEFORE either branch builds — pin that the
-    # exception is branch-independent (shape parity by exception)
-    import pytest
-
-    empty_dir = str(tmp_path / "sf_empty")
-    os.makedirs(empty_dir)
-    (spark.createDataFrame([], "vec_id long, embedding array<double>")
-     .repartition(1).write.parquet(f"{empty_dir}/embeddings.parquet"))
-    for gate in (10 ** 12, -1):
-        monkeypatch.setattr(Q, "_PQ_FUSE_MAX_CANDIDATES", gate)
-        Q.reset_ann_artifact_memo()
-        with pytest.raises(ValueError, match="empty corpus"):
-            fn(spark, empty_dir).collect()
