@@ -30,7 +30,8 @@ import os
 import sys
 import traceback
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .core.config import load_config
 from .core.io import read_table, write_table
@@ -56,7 +57,10 @@ def _points(spark: SparkSession, root: str):
 def run_stage(spark: SparkSession, stage: str, root: str,
               forms: dict[str, str] | None = None,
               strict_parity: bool = False) -> int:
-    """Run one stage against the lakehouse at ``root``; returns rows written."""
+    """Run one stage against the lakehouse at ``root``; returns rows written.
+
+    The row count is an :class:`Observation` on the output, resolved by the
+    write job itself: no Spark job runs after the write."""
     if stage == "ingest":
         if not forms:
             raise ValueError("ingest needs at least one --form name=dialect")
@@ -102,9 +106,10 @@ def run_stage(spark: SparkSession, stage: str, root: str,
             read_table(spark, f"{root}/merged_trips"), _points(spark, root))
     else:
         raise ValueError(f"unknown stage {stage!r}; one of {STAGES}")
-    dest = f"{root}/{_OUTPUT_DIRS[stage]}"
-    write_table(out, dest)
-    return read_table(spark, dest).count()
+    rows = Observation()
+    write_table(out.observe(rows, F.count(F.lit(1)).alias("rows")),
+                f"{root}/{_OUTPUT_DIRS[stage]}")
+    return int(rows.get["rows"])
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -90,6 +90,40 @@ def test_cli_six_stage_dag(spark, tmp_path):
     assert n_tracks == 3            # 30 pings at 60s → 10-minute buckets
 
 
+def test_cli_stages_run_no_job_after_write(spark, tmp_path, monkeypatch):
+    """run_stage counts its rows during the write, so no stage runs a
+    Spark job after its output is written; export-landings, a projection
+    of the stored `validated` table, runs exactly one job: its write."""
+    import uuid
+
+    from peskas_malawi_data_pipeline_spark import cli
+
+    _land(tmp_path)
+    root = str(tmp_path)
+    forms = {"FieldDataApp-2024": "dialect_a", "Malawi SSF": "dialect_b"}
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    write_table = cli.write_table
+
+    def write_then_mark(df, path, **kw):
+        write_table(df, path, **kw)
+        sc.setJobGroup(f"after.{tag}.{stage}", "after the write")
+
+    monkeypatch.setattr(cli, "write_table", write_then_mark)
+    jobs = {}
+    for stage in cli.STAGES:
+        sc.setJobGroup(f"stage.{tag}.{stage}", stage)
+        try:
+            run_stage(spark, stage, root, forms=forms)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs[stage] = len(tracker.getJobIdsForGroup(f"stage.{tag}.{stage}"))
+        assert tracker.getJobIdsForGroup(f"after.{tag}.{stage}") == [], stage
+    assert jobs["export-landings"] == 1
+
+
 def test_cli_ingest_unknown_pinned_form_fails_fast(spark, tmp_path):
     """--form NAME=pinned for a form with no registry entry must raise a
     clear KeyError naming the known forms, not fall through to schema

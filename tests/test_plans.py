@@ -587,6 +587,102 @@ def test_versioned_table_commit_protocol(spark, tmp_path):
     assert io_ops.read_table(spark, single).count() == 3
 
 
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a fresh job
+    group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe.{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_table_uses_stored_schema(spark, tmp_path):
+    """write_table stores the schema with each version, so read_table opens
+    a committed table with no Spark job at plan time, and the schema is the
+    one inference would give. A plain parquet path, and a committed
+    version with no schema file (written before schemas were stored), are
+    still inferred: one schema-inference job each."""
+    from pyspark.sql import functions as F
+
+    from peskas_malawi_data_pipeline_spark.core import io as io_ops
+
+    df = spark.range(20).select(
+        "id", (F.col("id") * 1.5).alias("x"),
+        F.array("id").alias("ids"),
+        F.struct(F.col("id").cast("string").alias("s")).alias("st"),
+        F.lit(None).cast("date").alias("d"))
+    path = str(tmp_path / "t")
+    io_ops.write_table(df, path)
+    assert os.path.exists(os.path.join(path, "v1", "_schema.json"))
+
+    read, jobs = _jobs_in(spark, lambda: io_ops.read_table(spark, path))
+    inferred = spark.read.parquet(os.path.join(path, "v1"))
+    assert jobs == 0
+    assert read.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect())
+
+    os.remove(os.path.join(path, "v1", "_schema.json"))
+    old, jobs = _jobs_in(spark, lambda: io_ops.read_table(spark, path))
+    assert jobs >= 1 and old.schema == inferred.schema
+
+    plain = str(tmp_path / "plain")
+    df.write.parquet(plain)
+    other, jobs = _jobs_in(spark, lambda: io_ops.read_table(spark, plain))
+    assert jobs >= 1 and other.schema == inferred.schema
+
+
+def test_partitioned_table_keeps_written_partition_types(spark, tmp_path):
+    """A partition column reads back with the type it was written with
+    (inference types a bigint key that fits in an int as int), placed
+    last as inference places it, and the rows survive the round trip."""
+    from pyspark.sql import functions as F
+
+    from peskas_malawi_data_pipeline_spark.core import io as io_ops
+
+    df = spark.range(12).select((F.col("id") % 3).alias("k"), "id")
+    path = str(tmp_path / "by_k")
+    io_ops.write_table(df, path, partition_by=["k"])
+    back = io_ops.read_table(spark, path)
+    inferred = spark.read.parquet(os.path.join(path, "v1"))
+    assert back.schema.simpleString() == "struct<id:bigint,k:bigint>"
+    assert inferred.schema.simpleString() == "struct<id:bigint,k:int>"
+    assert sorted(back.collect()) == sorted(
+        df.select("id", "k").collect())
+    assert back.filter(F.col("k") == 2).count() == 4
+
+
+def test_validate_stage_exchange_budget(spark, tmp_path):
+    """validate_landings fits every bounds relation from its input, so its
+    physical plan holds each fit once: the global count bounds (2 passes)
+    and the per-taxon price bounds (2 passes), each pass one shuffle and
+    one broadcast back. Fitting the price bounds from the masked frame
+    re-planned the count fit inside the price subtree (8 + 8)."""
+    import re
+
+    import fixtures as FX
+
+    from peskas_malawi_data_pipeline_spark.core import io as io_ops
+    from peskas_malawi_data_pipeline_spark.plans import preprocess, validate
+
+    path = str(tmp_path / "preprocessed")
+    io_ops.write_table(
+        preprocess.preprocess_landings(FX.raw_landings_df(spark)), path)
+    out = validate.validate_landings(io_ops.read_table(spark, path))
+    utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    p = utils.explainString(out._jdf.queryExecution(), "simple")
+    shuffles = re.findall(r"\bExchange (?:hashpartitioning|SinglePartition"
+                          r"|rangepartitioning|RoundRobinPartitioning)", p)
+    assert len(shuffles) <= 4
+    assert p.count("BroadcastExchange") <= 4
+
+
 def test_shuffle_shards_balanced_deterministic_partition_free(spark):
     """ranking.shuffle_shards: equal shard sizes (±1), (shard, pos) unique
     and dense per shard, and the assignment is a pure function of ids —
