@@ -167,25 +167,3 @@ def floor_time(ts: Column, minutes: int = 10) -> Column:
     return F.timestamp_seconds(
         (F.floor(F.unix_timestamp(ts) / secs) * secs).cast("long"))
 
-
-def long_array_lit(values) -> Column:
-    """``array<long>`` literal as ONE parsed SQL expression.
-
-    ``F.array(*[F.lit(x) for x in values])`` costs one BLOCKING Py4J
-    round trip per element (~0.25 ms each on the bench box); the ANN
-    LUT factoring builds |queries|-independent codebook literals with
-    thousands of elements, and a four-capacity codebook sweep once
-    spent ~7 s of its build in socket round trips (39k calls, cProfile
-    r14). One ``expr()`` string is one round trip and one
-    Catalyst parse. ``L`` suffixes pin LongType — identical to the
-    micro-int arrays every call site feeds (``_micro`` casts to long),
-    so arithmetic and results are unchanged."""
-    return F.expr("array(" + ",".join(f"{int(x)}L" for x in values) + ")")
-
-
-def long_matrix_lit(rows) -> Column:
-    """``array<array<long>>`` literal as ONE parsed SQL expression
-    (see :func:`long_array_lit`)."""
-    return F.expr("array(" + ",".join(
-        "array(" + ",".join(f"{int(x)}L" for x in r) + ")"
-        for r in rows) + ")")

@@ -15,8 +15,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import long_array_lit, long_matrix_lit
-
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate (JVM-evaluated)."""
@@ -306,13 +304,23 @@ def pq_codebook(corpus: DataFrame, corpus_id: str = "corpus_id",
     :func:`pq_codebook_from_centroids` (recall win pinned by the
     ``ann_pq_recall`` registry query). The collect is bounded by
     construction (m·k rows)."""
-    rows = (corpus.orderBy(corpus_id).limit(k_centroids)
+    return pq_codebook_from_centroids(
+        _lowest_id_vectors(corpus, corpus_id, vec_col, k_centroids,
+                           "pq_codebook"), m)
+
+
+def _lowest_id_vectors(df: DataFrame, id_col: str, vec_col: str, n: int,
+                       caller: str) -> dict[int, list[int]]:
+    """The ``n`` lowest-id non-null vectors as {1..n → micro-int vector}
+    — the deterministic seed of every codebook, coarse quantizer and
+    Lloyd run (a null vector is in no cluster, so it seeds none). One
+    bounded collect; an empty (or all-null) frame raises."""
+    rows = (df.where(F.col(vec_col).isNotNull()).orderBy(id_col).limit(n)
             .select(_micro(F.col(vec_col)).alias("__v")).collect())
     if not rows:
-        raise ValueError("pq_codebook: empty corpus")
-    return pq_codebook_from_centroids(
-        {cid: [int(x) for x in r["__v"]]
-         for cid, r in enumerate(rows, start=1)}, m)
+        raise ValueError(f"{caller}: empty corpus")
+    return {cid: [int(x) for x in r["__v"]]
+            for cid, r in enumerate(rows, start=1)}
 
 
 def _pq_shape(codebook: dict) -> tuple[int, int, int]:
@@ -341,7 +349,8 @@ def pq_encode(df: DataFrame, codebook: dict,
     coding kernel :func:`_pq_code_frame`. Pure map: the codebook ships
     with the kernel, the corpus never shuffles. Returns (``id_col``,
     pq_codes array<int>, pq_packed long — codes radix-packed for exact
-    cross-engine comparison and compact storage)."""
+    cross-engine comparison and compact storage); a null vector gets
+    null codes."""
     m, k, _d_sub = _pq_shape(codebook)
     codes = F.col("pq_codes")
     packed = F.element_at(codes, 1).cast("long") - 1
@@ -362,46 +371,17 @@ def pq_adc_topk(queries: DataFrame, corpus: DataFrame, codebook: dict,
     at query time; all arithmetic is exact-integer micros. Top-``k``
     smallest per query, ties → lowest corpus id, self-pairs excluded.
 
-    Plan: encode the corpus (pure map over the code column — in a real
-    deployment the codes are the PERSISTED artifact and this input is a
-    scan of m-byte rows), precompute each query's ADC LOOKUP TABLE
-    (d²(q_sub, centroid) per (subspace, cid) — |q|·Σk entries on the
-    SMALL side, the textbook ADC factoring), broadcast it, and score
-    each candidate with m ``element_at`` lookups; one window top-k.
-    Candidate volume is |corpus|·|queries| like brute force but over m
-    integer lookups instead of dim multiplies — the classic PQ trade;
-    compose with :func:`ivf_topk`'s list pruning for the IVF-ADC shape
-    when candidate volume itself is the bottleneck. All arithmetic is
-    the same exact-BIGINT subspace distances, so results are identical
-    to the pre-LUT formulation. Returns (query_id, corpus_id,
-    adc_dist, rank)."""
-    from ..core.barrier import materialize
-
+    This is :func:`ivf_pq_topk` with ONE inverted list (a single coarse
+    centroid, ``nprobe=1``): every coded corpus row is a candidate of
+    every query — |corpus|·|queries| candidates like brute force, but m
+    integer lookups each instead of dim multiplies, the classic PQ
+    trade. Each query's ADC lookup table is built once in driver numpy
+    (:func:`_np_probes_luts`), so it shares the serve path's plan.
+    Returns (query_id, corpus_id, adc_dist, rank)."""
     m, _kc, d_sub = _pq_shape(codebook)
-    codes = pq_encode(corpus, codebook, id_col=corpus_id, vec_col=vec_col)
-    qv = _micro(F.col(vec_col))
-    q_cols = [F.col(query_id)]
-    for s in range(1, m + 1):
-        sub = F.slice(qv, (s - 1) * d_sub + 1, d_sub)
-        cb_arr = long_matrix_lit(
-            [codebook[(s, c)] for c in _sub_cids(codebook, s)])
-        lut = F.transform(
-            cb_arr,
-            lambda cv: F.aggregate(
-                F.zip_with(sub, cv, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x))
-        q_cols.append(lut.alias(f"__lut_{s}"))
-    q = materialize(queries.select(*q_cols))
-    joined = codes.join(F.broadcast(q),
-                        F.col(query_id) != F.col(corpus_id))
-    total = F.lit(0).cast("long")
-    for s in range(1, m + 1):
-        total = total + F.element_at(
-            F.col(f"__lut_{s}"), F.element_at(F.col("pq_codes"), s))
-    scored = joined.select(query_id, corpus_id, total.alias("adc_dist"))
-    w = Window.partitionBy(query_id).orderBy("adc_dist", corpus_id)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return ivf_pq_topk(queries, corpus, codebook, {1: [0] * (m * d_sub)},
+                       k=k, nprobe=1, query_id=query_id,
+                       corpus_id=corpus_id, vec_col=vec_col)
 
 
 def _np_micro(embs) -> "object":
@@ -432,7 +412,7 @@ def _np_probes_luts(qvecs, codebook: dict, coarse: dict[int, list[int]],
     in :func:`_sub_cids` order, so a code IS its position in the row —
     ragged codebooks included). Probe order is a STABLE argsort of the
     exact int64 d² over cid-ascending columns, so ties go to the lowest
-    cid — the (d², cid) order of :func:`_coarse_assign`."""
+    cid — the (d², cid) order of :func:`_pq_code_frame`'s list ids."""
     import numpy as np
 
     m, _kc, d_sub = _pq_shape(codebook)
@@ -449,38 +429,40 @@ def _np_probes_luts(qvecs, codebook: dict, coarse: dict[int, list[int]],
     return lists, luts
 
 
-def _pq_code_frame(df: DataFrame, codebook: dict, id_col: str,
+def _pq_code_frame(df: DataFrame, codebook: dict | None, id_col: str,
                    vec_col: str, coarse: dict[int, list[int]] | None = None,
                    keep_cols: Sequence[str] = ()) -> DataFrame:
-    """The one coding kernel of the PQ/IVF family — behind
-    :func:`pq_encode`, :func:`ivf_pq_candidates` and
-    :func:`ivf_pq_encode_corpus` alike, so the index build, the
-    in-session search and the encoder agree bit for bit. One numpy
-    ``mapInPandas`` pass returns (``id_col``, [``list_id`` int,]
-    ``pq_codes`` array<int>, *``keep_cols``): per subspace the code is
-    the exact int64 argmin of squared micro distance over the
-    :func:`_sub_cids`-ordered centroids (argmin's first minimum = the
-    lowest cid, and a code IS that position + 1, ragged codebooks
-    included); with ``coarse`` the list id is the same argmin over the
-    cid-sorted coarse centroids (the (d², cid) tie rule of
-    :func:`_coarse_assign`)."""
+    """The one nearest-centroid kernel of the k-means/PQ/IVF family —
+    behind :func:`pq_encode`, :func:`ivf_pq_encode_corpus`,
+    :func:`ivf_pq_candidates` and :func:`kmeans_assign` alike, so the
+    index build, the in-session search, the encoder and the clustering
+    agree bit for bit. One numpy ``mapInPandas`` pass returns
+    (``id_col``, [``list_id`` int,] [``pq_codes`` array<int>,]
+    *``keep_cols``): with ``coarse`` the list id is the exact int64
+    argmin of squared micro distance over the cid-sorted centroids
+    (argmin's first minimum = the lowest cid on a tie); with a
+    ``codebook`` the code of each subspace is the same argmin over the
+    :func:`_sub_cids`-ordered centroids (a code IS that position + 1,
+    ragged codebooks included). A null vector keeps its row with a null
+    list id and null codes."""
     import pandas as pd
 
-    m, _k, d_sub = _pq_shape(codebook)
+    m, _k, d_sub = _pq_shape(codebook) if codebook else (0, 0, 0)
 
     def typed(c: str) -> str:
         return f"{c} {df.schema[c].dataType.simpleString()}"
 
-    with_lists = coarse is not None
-    lists = ["list_id int"] if with_lists else []
-    schema = ", ".join([typed(id_col), *lists, "pq_codes array<int>",
+    lists = ["list_id int"] if coarse else []
+    codes_t = ["pq_codes array<int>"] if codebook else []
+    schema = ", ".join([typed(id_col), *lists, *codes_t,
                         *[typed(c) for c in keep_cols]])
     coarse_cids = sorted(coarse or {})
     coarse_rows = [coarse[c] for c in coarse_cids]
+    dim = len(coarse_rows[0]) if coarse else m * d_sub
     subs = [[codebook[(s, cid)] for cid in _sub_cids(codebook, s)]
             for s in range(1, m + 1)]
-    src = df.select(F.col(id_col), F.col(vec_col),
-                    *[F.col(c) for c in keep_cols])
+    # a kept vector column (keep_cols=[vec_col]) is read once
+    src = df.select(*dict.fromkeys([id_col, vec_col, *keep_cols]))
 
     def code(batches):
         import numpy as np
@@ -488,25 +470,49 @@ def _pq_code_frame(df: DataFrame, codebook: dict, id_col: str,
         cids_arr = np.asarray(coarse_cids, dtype=np.int32)
         Cc = np.asarray(coarse_rows, dtype=np.int64)
         Cs = [np.asarray(sub, dtype=np.int64) for sub in subs]
+
+        def spread(present, vals):
+            # a null vector's row keeps None in every output column
+            col = [None] * len(present)
+            for i, v in zip(np.flatnonzero(present), vals):
+                col[i] = v
+            return col
+
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
-            X = _np_micro(pdf[vec_col])
+            present = pdf[vec_col].notna().to_numpy()
+            X = _np_micro(pdf[vec_col][present]).reshape(-1, dim)
             out = {id_col: pdf[id_col]}
-            if with_lists:
-                out["list_id"] = cids_arr[_np_sub_d2(X, Cc).argmin(axis=1)]
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(1, m + 1):
-                codes[:, s - 1] = _np_sub_d2(
-                    X[:, (s - 1) * d_sub:s * d_sub], Cs[s - 1]
-                ).argmin(axis=1) + 1
-            out["pq_codes"] = list(codes)
+            if coarse:
+                out["list_id"] = spread(present, cids_arr[
+                    _np_sub_d2(X, Cc).argmin(axis=1)].tolist())
+            if codebook:
+                codes = np.empty((len(X), m), dtype=np.int32)
+                for s in range(1, m + 1):
+                    codes[:, s - 1] = _np_sub_d2(
+                        X[:, (s - 1) * d_sub:s * d_sub], Cs[s - 1]
+                    ).argmin(axis=1) + 1
+                out["pq_codes"] = spread(present, codes)
             for c in keep_cols:
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
     return src.mapInPandas(code, schema=schema)
+
+
+def kmeans_assign(df: DataFrame, centroid_vecs: dict[int, list[int]],
+                  id_col: str = "vec_id", vec_col: str = "embedding",
+                  keep_cols: Sequence[str] = ()) -> DataFrame:
+    """Nearest-centroid assignment against driver-artifact micro-int
+    centroids: (``id_col``, centroid_id int, *``keep_cols``) by exact
+    integer d² argmin, ties → lowest centroid id — the same rule and
+    the same kernel (:func:`_pq_code_frame`) as every coarse list id in
+    the k-means/IVF family. A pure map: no join, no shuffle. A null
+    vector gets a null centroid id."""
+    return (_pq_code_frame(df, None, id_col, vec_col, coarse=centroid_vecs,
+                           keep_cols=keep_cols)
+            .withColumnRenamed("list_id", "centroid_id"))
 
 
 def ivf_coarse_centroids(corpus: DataFrame, corpus_id: str = "corpus_id",
@@ -516,31 +522,8 @@ def ivf_coarse_centroids(corpus: DataFrame, corpus_id: str = "corpus_id",
     :func:`pq_codebook`): {centroid_id 1..n → micro-int vector}, the
     ``n_centroids`` lowest-id corpus vectors. Bounded collect; swap in
     offline k-means for better recall at equal cost."""
-    rows = (corpus.orderBy(corpus_id).limit(n_centroids)
-            .select(_micro(F.col(vec_col)).alias("__v")).collect())
-    if not rows:
-        raise ValueError("ivf_coarse_centroids: empty corpus")
-    return {cid: [int(x) for x in r["__v"]]
-            for cid, r in enumerate(rows, start=1)}
-
-
-def _coarse_assign(vec_micro: Column, coarse: dict[int, list[int]],
-                   n: int) -> Column:
-    """The ``n`` nearest coarse-centroid ids of a micro-int vector, as an
-    array ordered by (exact integer d², centroid id) — a PURE-MAP top-n
-    (array_sort over (d², cid) structs with the centroids inlined as
-    literals), no window, no shuffle: the coarse assignment of a 100 TB
-    corpus is embarrassingly parallel."""
-    cands = []
-    for cid in sorted(coarse):
-        lit = long_array_lit(coarse[cid])
-        d2 = F.aggregate(
-            F.zip_with(vec_micro, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"), lambda acc, x: acc + x)
-        cands.append(F.struct(d2.alias("d"),
-                              F.lit(cid).cast("int").alias("c")))
-    ranked = F.slice(F.array_sort(F.array(*cands)), 1, n)
-    return F.transform(ranked, lambda s: s["c"])
+    return _lowest_id_vectors(corpus, corpus_id, vec_col, n_centroids,
+                              "ivf_coarse_centroids")
 
 
 def ivf_pq_topk(queries: DataFrame, corpus: DataFrame, codebook: dict,
@@ -555,19 +538,16 @@ def ivf_pq_topk(queries: DataFrame, corpus: DataFrame, codebook: dict,
     Everything is exact-integer micros: coarse assignment, codes, and
     ADC scores — rankings are engine-portable with no float caveats.
 
-    Plan: ONE pure-map pass gives each corpus row its list id and codes
-    (centroids and codebook inline as literals — in production these are
-    the persisted index artifacts); queries expand to their ``nprobe``
-    lists map-side; the only joins are the list-id equi-join with the
-    (small) probe side broadcast — the corpus partitioning is never
-    touched — and the final per-query window top-k over candidate rows.
-    Returns (query_id, corpus_id, adc_dist, rank)."""
-    scored = ivf_pq_candidates(queries, corpus, codebook, coarse, nprobe,
-                               query_id, corpus_id, vec_col)
-    w = Window.partitionBy(query_id).orderBy("adc_dist", corpus_id)
-    return (scored.drop("probe_rank")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    This is the serve path (:func:`ivf_pq_search_coded`) over an index
+    built in memory (:func:`ivf_pq_encode_corpus`): one pure-map pass
+    gives each corpus row its list id and codes, and the query side is
+    the serve path's driver-built probe table. Returns (query_id,
+    corpus_id, adc_dist, rank)."""
+    return ivf_pq_search_coded(
+        queries, ivf_pq_encode_corpus(corpus, codebook, coarse, corpus_id,
+                                      vec_col),
+        codebook, coarse, k=k, nprobe=nprobe, query_id=query_id,
+        corpus_id=corpus_id, vec_col=vec_col)
 
 
 def ivf_pq_candidates(queries: DataFrame, corpus: DataFrame,
@@ -584,49 +564,16 @@ def ivf_pq_candidates(queries: DataFrame, corpus: DataFrame,
     nearest-list order — a corpus row belongs to exactly one list, so
     ``filter(probe_rank <= p)`` IS the nprobe=p candidate set, with no
     duplicates and no recomputation. Plan: one corpus code/assign map
-    pass (:func:`_pq_code_frame`), each query's ADC lookup table
-    precomputed on the (small) probe side (the :func:`pq_adc_topk` LUT
-    factoring — LUT rows don't depend on the list, only on the query),
-    broadcast probe join, m ``element_at`` lookups per candidate.
+    pass (:func:`_pq_code_frame`) joined to the serve path's
+    driver-built probe table (:func:`_ivf_pq_probe_join`).
     ``keep_cols`` rides extra corpus columns through the coded
     projection onto the candidate rows (production puts filterable
     attributes IN the index — the filtered-search shape) at zero extra
     shuffles."""
-    from ..core.barrier import materialize
-
-    m, _kc, d_sub = _pq_shape(codebook)
     coded = _pq_code_frame(corpus, codebook, corpus_id, vec_col,
                            coarse=coarse, keep_cols=keep_cols)
-    qv = _micro(F.col(vec_col))
-    q_cols = [F.col(query_id),
-              _coarse_assign(qv, coarse, nprobe).alias("__probe_lists")]
-    for s in range(1, m + 1):
-        sub = F.slice(qv, (s - 1) * d_sub + 1, d_sub)
-        cb_arr = long_matrix_lit(
-            [codebook[(s, c)] for c in _sub_cids(codebook, s)])
-        lut = F.transform(
-            cb_arr,
-            lambda cv_: F.aggregate(
-                F.zip_with(sub, cv_, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x))
-        q_cols.append(lut.alias(f"__lut_{s}"))
-    # LUTs evaluated ONCE per query (materialize before the probe
-    # explode — a generator in the same projection would re-evaluate
-    # its sibling expressions per emitted row)
-    probes = (materialize(queries.select(*q_cols))
-              .select(query_id,
-                      *[F.col(f"__lut_{s}") for s in range(1, m + 1)],
-                      F.posexplode("__probe_lists")
-                      .alias("__pr", "list_id")))
-    cand = coded.join(F.broadcast(probes), "list_id") \
-        .filter(F.col(query_id) != F.col(corpus_id))
-    total = F.lit(0).cast("long")
-    for s in range(1, m + 1):
-        total = total + F.element_at(
-            F.col(f"__lut_{s}"), F.element_at(F.col("pq_codes"), s))
-    return cand.select(query_id, corpus_id, total.alias("adc_dist"),
-                       (F.col("__pr") + 1).cast("int").alias("probe_rank"),
-                       *[F.col(k) for k in keep_cols])
+    return _ivf_pq_probe_join(queries, coded, codebook, coarse, nprobe,
+                              query_id, corpus_id, vec_col, keep_cols)
 
 
 def kmeans_lloyd(df: DataFrame, id_col: str = "vec_id",
@@ -645,39 +592,17 @@ def kmeans_lloyd(df: DataFrame, id_col: str = "vec_id",
 
     Plan per update round (:func:`kmeans_fit_centroids`): one numpy
     assign + partial-sum map pass and ONE k-row shuffle; the final
-    assignment is a PURE MAP (centroids inline as literals — a k×dim
-    driver artifact, collected once per round like a learned merge
-    table). Returns the FINAL assignment (``id_col``, centroid_id) after
-    ``iterations`` rounds; feed the final centroids to
-    :func:`assign_nearest_centroid`/:func:`ivf_pq_topk` machinery by
+    assignment is the same numpy kernel as a pure map
+    (:func:`kmeans_assign` against the k×dim centroid artifact). Returns
+    the FINAL assignment (``id_col``, centroid_id) after ``iterations``
+    rounds — a null vector is in no cluster and gets a null centroid
+    id; feed the final centroids to :func:`ivf_pq_topk` machinery by
     re-deriving them from the assignment when needed.
     """
-    return df.select(
-        F.col(id_col),
-        kmeans_assign_expr(
-            kmeans_fit_centroids(df, id_col=id_col, vec_col=vec_col, k=k,
+    return kmeans_assign(
+        df, kmeans_fit_centroids(df, id_col=id_col, vec_col=vec_col, k=k,
                                  iterations=iterations),
-            F.col(vec_col)).alias("centroid_id"))
-
-
-def kmeans_assign_expr(centroid_vecs: dict[int, list[int]],
-                       vec_col: Column) -> Column:
-    """PURE-MAP nearest-centroid assignment expression for a raw vector
-    column against driver-artifact micro-int centroids (inlined as
-    literals): exact integer d² argmin, ties → lowest centroid id — the
-    same rule everywhere in the k-means/IVF family. No join, no
-    shuffle: blocking a 100 TB corpus on a trained clustering is one
-    projection."""
-    micro = _micro(vec_col)
-    cands = []
-    for cid in sorted(centroid_vecs):
-        lit = long_array_lit(centroid_vecs[cid])
-        d2 = F.aggregate(
-            F.zip_with(micro, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"), lambda acc, x: acc + x)
-        cands.append(F.struct(d2.alias("d"),
-                              F.lit(cid).cast("int").alias("c")))
-    return F.array_min(F.array(*cands))["c"].cast("int")
+        id_col=id_col, vec_col=vec_col)
 
 
 def kmeans_fit_centroids(df: DataFrame, id_col: str = "vec_id",
@@ -687,8 +612,9 @@ def kmeans_fit_centroids(df: DataFrame, id_col: str = "vec_id",
     (what :func:`kmeans_lloyd`'s assignment is computed against — i.e.
     the centroids after ``iterations - 1`` mean updates): {cid →
     micro-int vector}, a bounded k×dim driver artifact like a learned
-    merge table. Seeds are the ``k`` lowest-id vectors; an empty frame
-    raises ``ValueError`` like :func:`pq_codebook`. Per update round a
+    merge table. Seeds are the ``k`` lowest-id vectors; null vectors
+    join no cluster, and an empty frame raises ``ValueError`` like
+    :func:`pq_codebook`. Per update round a
     numpy int64 ``mapInPandas`` kernel assigns each row (exact d²
     argmin, ties → lowest cid) and emits per-cid partial element sums
     and counts; the bounded combine and the truncating ``div`` mean stay
@@ -701,15 +627,11 @@ def kmeans_fit_centroids(df: DataFrame, id_col: str = "vec_id",
 
     if k < 1 or iterations < 1:
         raise ValueError("k and iterations must be >= 1")
-    vexpr = _micro(F.col(vec_col))
-    seeds = df.orderBy(id_col).limit(k).select(vexpr.alias("__v")).collect()
-    if not seeds:
-        raise ValueError("kmeans_fit_centroids: empty corpus")
-    cents: dict[int, list[int]] = {
-        cid: [int(x) for x in r["__v"]]
-        for cid, r in enumerate(seeds, start=1)}
+    cents = _lowest_id_vectors(df, id_col, vec_col, k,
+                               "kmeans_fit_centroids")
     dim = len(cents[1])
-    base = df.select(vexpr.alias("__v"))
+    base = df.where(F.col(vec_col).isNotNull()).select(
+        _micro(F.col(vec_col)).alias("__v"))
     schema = ("cid int, cnt bigint, " +
               ", ".join(f"s{d} bigint" for d in range(dim)))
     for _it in range(iterations - 1):
@@ -924,7 +846,8 @@ def ivf_pq_encode_corpus(corpus: DataFrame, codebook: dict,
     and every later search touches only these m-byte rows — the raw
     vectors are never re-read. It runs the same coding kernel as
     :func:`ivf_pq_candidates` (:func:`_pq_code_frame`), so a persisted
-    index and an in-session search agree bit-for-bit."""
+    index and an in-session search agree bit-for-bit. A null vector
+    keeps its row with a null list id and null codes."""
     return _pq_code_frame(corpus, codebook, corpus_id, vec_col,
                           coarse=coarse)
 
@@ -971,41 +894,65 @@ def ivf_pq_search_coded(queries: DataFrame, coded: DataFrame,
     build/serve split: ``coded`` is :func:`ivf_pq_encode_corpus` output
     read back from storage, and the corpus embeddings are NOWHERE in
     this plan — per query it reads |corpus|·nprobe/n_centroids rows of
-    m-byte codes, the IO shape that makes 100 TB ANN serveable.
+    m-byte codes, the IO shape that makes 100 TB ANN serveable. The
+    candidates are :func:`_ivf_pq_probe_join`'s; one window keeps the
+    top ``k`` per query by (adc_dist, corpus id). Every PQ/IVF search
+    (:func:`ivf_pq_topk`, :func:`pq_adc_topk`) is this plan. Returns
+    (query_id, corpus_id, adc_dist, rank)."""
+    scored = _ivf_pq_probe_join(queries, coded, codebook, coarse, nprobe,
+                                query_id, corpus_id, vec_col)
+    w = Window.partitionBy(query_id).orderBy("adc_dist", corpus_id)
+    return (scored.drop("probe_rank")
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _ivf_pq_probe_join(queries: DataFrame, coded: DataFrame,
+                       codebook: dict, coarse: dict[int, list[int]],
+                       nprobe: int, query_id: str, corpus_id: str,
+                       vec_col: str,
+                       keep_cols: Sequence[str] = ()) -> DataFrame:
+    """The one candidate builder of every PQ/IVF search: (query_id,
+    corpus_id, adc_dist, probe_rank, *``keep_cols``) over any coded
+    frame carrying ``list_id`` and ``pq_codes``.
 
     The query side is COLLECTED to the driver (one bounded collect: it
     is the small side of the broadcast join below, so it is already
     answer-sized) and its probe lists and per-subspace ADC lookup tables
     are built there by :func:`_np_probes_luts` — the same exact int64
-    kernels as :func:`ivf_pq_encode_corpus`. They reach the plan as one
-    local (query, probe) table — ``query_id``, ``list_id``,
+    arithmetic as the coding kernel. They reach the plan as one local
+    (query, probe) table — ``query_id``, ``list_id``, ``probe_rank``,
     ``__lut_1..__lut_m`` — so no per-request expression plan over the
-    codebook is built or run. Queries with a null embedding probe no
-    list and return nothing. The corpus side stays lazy and
+    codebook is built or run. A query with a null embedding probes no
+    list and returns nothing; a corpus row with a null embedding has a
+    null list id and joins no probe. The corpus side stays lazy and
     distributed: the list-id equi-join with the probe table broadcast,
-    m ``element_at`` lookups per candidate, one window top-k. Results
-    are bit-identical to :func:`ivf_pq_topk` over the same artifacts
-    (the ``ann_index_persisted`` registry query shares the in-session
-    twin's oracle verbatim)."""
+    self-pairs dropped, m ``element_at`` lookups per candidate.
+    ``nprobe`` < 1 raises."""
+    import numpy as np
     import pandas as pd
 
     if nprobe < 1:
-        raise ValueError(f"ivf_pq_search_coded: nprobe={nprobe} < 1")
+        raise ValueError(f"IVF-PQ search: nprobe={nprobe} < 1")
     m = _pq_shape(codebook)[0]
     rows = [r for r in queries.select(query_id, vec_col).collect()
             if r[1] is not None]
     lut_cols = [f"__lut_{s}" for s in range(1, m + 1)]
-    probe = {query_id: [], "list_id": [], **{c: [] for c in lut_cols}}
+    probe = {query_id: [], "list_id": [], "probe_rank": [],
+             **{c: [] for c in lut_cols}}
     if rows:
         lists, luts = _np_probes_luts([r[1] for r in rows], codebook,
                                       coarse, nprobe)
         n_probe = lists.shape[1]
         probe[query_id] = [r[0] for r in rows for _ in range(n_probe)]
         probe["list_id"] = lists.ravel()
+        probe["probe_rank"] = np.tile(
+            np.arange(1, n_probe + 1, dtype=np.int32), len(rows))
         for c, lut in zip(lut_cols, luts):
             probe[c] = lut.repeat(n_probe, axis=0).tolist()
     id_type = queries.schema[query_id].dataType.simpleString()
-    schema = ", ".join([f"{query_id} {id_type}", "list_id int"]
+    schema = ", ".join([f"{query_id} {id_type}", "list_id int",
+                        "probe_rank int"]
                        + [f"{c} array<bigint>" for c in lut_cols])
     probes = queries.sparkSession.createDataFrame(pd.DataFrame(probe),
                                                   schema)
@@ -1015,7 +962,5 @@ def ivf_pq_search_coded(queries: DataFrame, coded: DataFrame,
     for s in range(1, m + 1):
         total = total + F.element_at(
             F.col(f"__lut_{s}"), F.element_at(F.col("pq_codes"), s))
-    scored = cand.select(query_id, corpus_id, total.alias("adc_dist"))
-    w = Window.partitionBy(query_id).orderBy("adc_dist", corpus_id)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return cand.select(query_id, corpus_id, total.alias("adc_dist"),
+                       "probe_rank", *keep_cols)

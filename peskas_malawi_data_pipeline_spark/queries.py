@@ -2865,8 +2865,8 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     of lowest-id seeds — no RNG anywhere (lowest-id seeding, exact
     integer d² assignment with lowest-cid ties, truncating micro means),
     so every engine lands the identical clustering. Per round the
-    assignment is a pure map (centroids inline as a k×dim driver
-    artifact) and the update one k·dim-row partial-sum shuffle; the
+    assignment is a pure numpy map against a k×dim driver artifact
+    and the update one k·dim-row partial-sum shuffle; the
     oracle unrolls both rounds relationally (windowed argmin +
     ordinality means), the same pattern as the other iterative twins."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -4696,16 +4696,13 @@ def semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same pattern as kmeans_clusters) + the identical pair/survivor
     SQL as semantic_dedup. Scale shape: the trained centroids are a
     bounded driver artifact, so blocking the corpus is ONE pure-map
-    projection (kmeans_assign_expr — no join, no shuffle); the pair
+    numpy pass (similarity.kmeans_assign — no join, no shuffle); the pair
     stage is the blocked quadratic verify with the banded/IVF variants
     as the scale path."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = sim_ops.kmeans_fit_centroids(emb, id_col="vec_id", k=32,
                                          iterations=2)
-    clustered = emb.select(
-        "vec_id", "embedding",
-        sim_ops.kmeans_assign_expr(cents, F.col("embedding"))
-        .alias("centroid_id"))
+    clustered = sim_ops.kmeans_assign(emb, cents, keep_cols=["embedding"])
     pairs = dedup_ops.embedding_near_dup_pairs(
         clustered, id_col="vec_id", vec_col="embedding",
         block_col="centroid_id", threshold=0.3)
@@ -5899,7 +5896,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the exact frame is answer-sized (materialized once, broadcast
     into each hit-join); each method runs its own production plan —
-    codes from one pure-map pass (codebooks inlined as literals), ADC
+    codes from one pure-map numpy pass, ADC
     scoring over codes only, IVF list pruning with the probe side
     broadcast; the trained codebook adds the bounded k-means artifacts
     (k×dim collects). Four one-row aggregates, unioned."""
@@ -6493,9 +6490,9 @@ def ivf_list_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     list scans its whole population, so the 99th-percentile query cost
     tracks max_list, not the mean — and a trained quantizer that
     TIGHTENS cells (better recall per candidate) can also concentrate
-    mass (worse tail cost). Plan: each assignment is a pure map
-    (centroids inline), one narrow groupBy per variant, answer-sized
-    output."""
+    mass (worse tail cost). Plan: each assignment is one pure-map numpy
+    pass (similarity.kmeans_assign), one narrow groupBy per variant,
+    answer-sized output."""
     emb = _t(spark, sf_dir, "embeddings")
     coarse_l = sim_ops.ivf_coarse_centroids(
         emb.select(F.col("vec_id").alias("corpus_id"), "embedding"),
@@ -6507,10 +6504,8 @@ def ivf_list_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for name, coarse in (("lowest_id", coarse_l),
                          ("kmeans_trained", coarse_t)):
-        assigned = emb.select(
-            sim_ops.kmeans_assign_expr(coarse, F.col("embedding"))
-            .alias("cid"))
-        lists = assigned.groupBy("cid").agg(
+        lists = sim_ops.kmeans_assign(emb, coarse).groupBy(
+            F.col("centroid_id").alias("cid")).agg(
             F.count(F.lit(1)).alias("c"))
         rows.append(lists.agg(
             F.count(F.lit(1)).cast("long").alias("n_lists"),

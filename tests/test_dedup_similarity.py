@@ -1009,148 +1009,6 @@ def test_semantic_dedup_keeps_cross_cluster_near_dups(spark):
     assert sorted(r.vec_id for r in out.collect()) == [0, 1]
 
 
-# ---------------------------------------------------------------------------
-# KMV distinct sketch
-
-
-def _kmv_ref(values, k=64):
-    """Reference KMV: same md5-hash / kth-min / integer-division formula."""
-    import hashlib
-
-    hs = sorted({int(hashlib.md5(f"kmv:{v}".encode()).hexdigest()[:13], 16)
-                 for v in values})
-    m = min(len(hs), k)
-    if m < k:
-        return m, m
-    return m, (k - 1) * (1 << 52) // hs[k - 1]
-
-
-def test_kmv_exact_below_k_and_estimate_above(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    rows = ([Row(g="small", v=f"u{i % 7}") for i in range(100)]
-            + [Row(g="big", v=f"u{i}") for i in range(5000)])
-    df = spark.createDataFrame(rows)
-    got = {r.g: (r.sketch_size, r.est_distinct)
-           for r in K.kmv_distinct(df, "g", "v", k=64).collect()}
-    # below k: the sketch IS the distinct set -> exact
-    assert got["small"] == (7, 7)
-    m, est = _kmv_ref([f"u{i}" for i in range(5000)])
-    assert got["big"] == (m, est)
-    # k=64 KMV has ~1/sqrt(62) ≈ 13% std error; this hash draw lands close
-    assert abs(est - 5000) / 5000 < 0.3
-
-
-def test_kmv_invariant_to_partitioning_and_duplicates(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    rows = [Row(g="g", v=f"user-{i % 300}") for i in range(3000)]
-    base = spark.createDataFrame(rows)
-    outs = []
-    for df in (base.coalesce(1), base.repartition(32), base.repartition(3, "v")):
-        outs.append(tuple(K.kmv_distinct(df, "g", "v", k=64).first()))
-    assert outs[0] == outs[1] == outs[2]
-    m, est = _kmv_ref([f"user-{i}" for i in range(300)])
-    assert outs[0] == ("g", m, est)
-
-
-def test_kmv_excludes_nulls_and_validates_k(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    df = spark.createDataFrame([Row(g="g", v="a"), Row(g="g", v=None),
-                                Row(g="g", v="b")])
-    assert tuple(K.kmv_distinct(df, "g", "v", k=8).first()) == ("g", 2, 2)
-    with pytest.raises(ValueError, match="k must be"):
-        K.kmv_distinct(df, "g", "v", k=1)
-    with pytest.raises(ValueError, match="k must be"):
-        K.kmv_distinct(df, "g", "v", k=5000)
-
-
-# ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters
-
-
-def test_heavy_hitters_equals_naive_groupby_under_any_partitioning(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    # skewed distribution: a few giants, a long tail
-    rows = ([Row(v="alpha")] * 400 + [Row(v="beta")] * 150
-            + [Row(v="gamma")] * 30
-            + [Row(v=f"tail{i}") for i in range(420)])
-    base = spark.createDataFrame(rows)
-    want = {("alpha", 400), ("beta", 150), ("gamma", 30)}
-    for df in (base.coalesce(1), base.repartition(32), base.repartition(7, "v")):
-        got = {(r.v, r.cnt)
-               for r in K.heavy_hitters(df, "v", support_ppm=20_000).collect()}
-        # threshold: cnt * 1e6 > 1000 * 20000 -> cnt > 20
-        assert got == want
-
-
-def test_heavy_hitters_adversarial_spread_across_partitions(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    # the heavy value is a *local minority* in every partition (each
-    # partition dominated by its own distinct noise) — the pigeonhole
-    # guarantee must still surface it from at least one MG summary
-    rows = []
-    for p in range(8):
-        rows += [Row(pk=p, v="needle")] * 30
-        rows += [Row(pk=p, v=f"noise-{p}-{i}") for i in range(170)]
-    df = spark.createDataFrame(rows).repartition(8, "pk").drop("pk")
-    got = {(r.v, r.cnt)
-           for r in K.heavy_hitters(df, "v", support_ppm=100_000).collect()}
-    # n=1600, threshold cnt > 160; needle = 240, every noise value = 1
-    assert got == {("needle", 240)}
-
-
-def test_heavy_hitters_nulls_empty_and_validation(spark):
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    df = spark.createDataFrame([Row(v="a"), Row(v=None), Row(v="a"),
-                                Row(v="b")])
-    got = {(r.v, r.cnt)
-           for r in K.heavy_hitters(df, "v", support_ppm=500_000).collect()}
-    # n=3 non-null; threshold cnt > 1.5 -> only "a"
-    assert got == {("a", 2)}
-    assert K.heavy_hitters(df.filter("v = 'zzz'"), "v").count() == 0
-    with pytest.raises(ValueError, match="support_ppm"):
-        K.heavy_hitters(df, "v", support_ppm=0)
-
-
-def test_sketches_property_random_multisets(spark):
-    """Property: heavy_hitters equals the naive exact groupBy-filter and
-    kmv_distinct equals the reference KMV formula on randomized skewed
-    multisets, across partition layouts, support levels, and sketch
-    sizes."""
-    import random
-    from collections import Counter
-
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    rng = random.Random(7)
-    for trial in range(4):
-        vals = []
-        for v in range(rng.randint(3, 30)):
-            vals += [f"v{v}"] * rng.randint(1, 120)
-        rng.shuffle(vals)
-        n = len(vals)
-        support_ppm = rng.choice([50_000, 120_000, 300_000])
-        c = Counter(vals)
-        want = {(v, cnt) for v, cnt in c.items()
-                if cnt * 1_000_000 > n * support_ppm}
-        df = (spark.createDataFrame([(v,) for v in vals], ["v"])
-              .repartition(rng.choice([1, 5, 32])))
-        got = {(r.v, r.cnt)
-               for r in K.heavy_hitters(df, "v", support_ppm).collect()}
-        assert got == want, (trial, support_ppm)
-
-        k = rng.choice([8, 32, 64])
-        want_kmv = _kmv_ref(set(vals), k)
-        row = (K.kmv_distinct(df.withColumn("g", F.lit("g")), "g", "v", k=k)
-               .first())
-        assert (row.sketch_size, row.est_distinct) == want_kmv, (trial, k)
-
-
 def test_brute_force_topk_anti_match_mines_hard_negatives(spark):
     rows = [
         Row(vec_id=0, embedding=[1.0, 0.0], label=0),   # anchor
@@ -1231,17 +1089,6 @@ def test_containment_property_vs_python_reference(spark):
                for r in D.containment_pairs(df, "block",
                                             threshold=thr).collect()}
         assert got == want, (trial, thr)
-
-
-def test_heavy_hitters_preserves_value_type(spark):
-    """A numeric value column comes back with its own type, so the
-    heavy-hitter list joins against the source without implicit casts."""
-    from peskas_malawi_data_pipeline_spark.operators import sketches as K
-
-    df = spark.createDataFrame([Row(v=7)] * 9 + [Row(v=k) for k in range(3)])
-    out = K.heavy_hitters(df, "v", support_ppm=500_000)
-    assert dict(out.dtypes)["v"] == "bigint"
-    assert [(r.v, r.cnt) for r in out.collect()] == [(7, 9)]
 
 
 # ---------------------------------------------------------------------------
@@ -2431,28 +2278,88 @@ def test_bpe_vocab_table_astral_base_ids(spark):
             assert r.token_id == bpe.BOUNDARY_ID and r.symbol is None
 
 
+def _ivfadc_reference(qrows, crows, cb, coarse, k, nprobe):
+    """Brute-force IVFADC in numpy, independent of the engine: integer
+    micros, coarse lists and codes by a lexsort over (d², cid), the
+    nprobe nearest lists per query, exact ADC over every non-null corpus
+    row in a probed list (self-pairs excluded), top k by (distance, id).
+    A null vector is never coded and a null query ranks nothing.
+    Returns {(query_id, corpus_id): (adc_dist, rank)}."""
+    import numpy as np
+
+    def micro(v):
+        return np.floor(np.asarray(v, dtype="float64") * 1e6).astype("int64")
+
+    def nearest(v, cids, vecs, n):
+        d2 = [int(((v - np.asarray(c, dtype="int64")) ** 2).sum())
+              for c in vecs]
+        return [cids[i] for i in np.lexsort((cids, d2))[:n]]
+
+    m = max(s_ for s_, _ in cb)
+    d_sub = len(cb[(1, 1)])
+    ccids = sorted(coarse)
+    subs = {s_: sorted(c for ss, c in cb if ss == s_)
+            for s_ in range(1, m + 1)}
+
+    def part(v, s_):
+        return v[(s_ - 1) * d_sub:s_ * d_sub]
+
+    coded = {}
+    for ci, v in crows:
+        if v is None:
+            continue
+        x = micro(v)
+        codes = [nearest(part(x, s_), subs[s_],
+                         [cb[(s_, c)] for c in subs[s_]], 1)[0]
+                 for s_ in range(1, m + 1)]
+        coded[ci] = (nearest(x, ccids, [coarse[c] for c in ccids], 1)[0],
+                     codes)
+    want = {}
+    for qi, v in qrows:
+        if v is None:
+            continue
+        x = micro(v)
+        probed = set(nearest(x, ccids, [coarse[c] for c in ccids], nprobe))
+        scored = sorted(
+            (sum(int(((part(x, s_) - np.asarray(cb[(s_, codes[s_ - 1])]))
+                      ** 2).sum()) for s_ in range(1, m + 1)), ci)
+            for ci, (lst, codes) in coded.items()
+            if ci != qi and lst in probed)
+        for rank, (d, ci) in enumerate(scored[:k], start=1):
+            want[(qi, ci)] = (d, rank)
+    return want
+
+
+def _ranked(df):
+    return {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
+            for r in df.collect()}
+
+
 def test_ivf_pq_index_persist_roundtrip(spark, tmp_path):
     """The persisted ANN index is lossless and sufficient: codebook and
     coarse tables round-trip dict -> table -> parquet -> dict exactly,
     and ivf_pq_search_coded over the written ivf_pq_encode_corpus output
-    returns bit-identically what ivf_pq_topk computes in-session from
-    the raw vectors — the serve path never touching an embedding, with
-    or without Arrow conversion."""
+    equals a numpy brute-force IVFADC over the raw vectors — the serve
+    path never touching an embedding, with or without Arrow conversion.
+    Every PQ/IVF search (pq_adc_topk, ivf_pq_candidates, ivf_pq_topk and
+    the serve path) plans its query side as a driver-built local table,
+    never a checkpoint."""
     import numpy as np
-
-    from peskas_malawi_data_pipeline_spark.operators import similarity as S
 
     rng = np.random.default_rng(11)
     dim = 8
     vecs = rng.uniform(-1, 1, size=(40, dim)).round(3)
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "corpus_id int, embedding array<double>")
+    base = str(tmp_path)
+    spark.createDataFrame(
+        rows, "corpus_id int, embedding array<double>"
+    ).write.parquet(base + "/raw")
+    df = spark.read.parquet(base + "/raw")
     q = spark.createDataFrame(rows[:6],
                               "query_id int, embedding array<double>")
     cb = S.pq_codebook(df, m=4, k_centroids=3)
     coarse = S.ivf_coarse_centroids(df, n_centroids=4)
 
-    base = str(tmp_path)
     S.ivf_pq_encode_corpus(df, cb, coarse).write.parquet(base + "/coded")
     S.codebook_to_table(spark, cb).write.parquet(base + "/cb")
     S.coarse_to_table(spark, coarse).write.parquet(base + "/coarse")
@@ -2462,45 +2369,48 @@ def test_ivf_pq_index_persist_roundtrip(spark, tmp_path):
     assert cb2 == cb
     assert coarse2 == coarse
 
-    live = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-            for r in S.ivf_pq_topk(q, df, cb, coarse,
-                                   k=3, nprobe=2).collect()}
-    served = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-              for r in S.ivf_pq_search_coded(
-                  q, spark.read.parquet(base + "/coded"), cb2, coarse2,
-                  k=3, nprobe=2).collect()}
-    assert served == live
+    want = _ivfadc_reference(rows[:6], rows, cb, coarse, k=3, nprobe=2)
+    assert len(want) == 18
+    served = S.ivf_pq_search_coded(
+        q, spark.read.parquet(base + "/coded"), cb2, coarse2,
+        k=3, nprobe=2)
+    assert _ranked(served) == want
     # the serve plan's corpus side is the coded parquet — the raw-vector
     # frame (and its embedding column) appears only via the query side
-    plan = S.ivf_pq_search_coded(
-        q, spark.read.parquet(base + "/coded"), cb2, coarse2,
-        k=3, nprobe=2)._jdf.queryExecution().executedPlan().toString()
+    plan = served._jdf.queryExecution().executedPlan().toString()
     assert "coded" in plan and "pq_codes" in plan
-    # the probe side is a driver-built local table, not a checkpoint
-    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
+    # the probe side is a driver-built local table, not a checkpoint —
+    # in the serve path and in every in-session search alike
+    for res in (served, S.ivf_pq_topk(q, df, cb, coarse, k=3, nprobe=2),
+                S.pq_adc_topk(q, df, cb, k=3),
+                S.ivf_pq_candidates(q, df, cb, coarse, nprobe=2)):
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
     # with Arrow conversion off (a bare session's default) the local
     # probe table still builds and serves the same rows
     key = "spark.sql.execution.arrow.pyspark.enabled"
     saved = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        plain = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-                 for r in S.ivf_pq_search_coded(
-                     q, spark.read.parquet(base + "/coded"), cb2, coarse2,
-                     k=3, nprobe=2).collect()}
+        plain = _ranked(S.ivf_pq_search_coded(
+            q, spark.read.parquet(base + "/coded"), cb2, coarse2,
+            k=3, nprobe=2))
     finally:
         spark.conf.set(key, saved)
-    assert plain == live
+    assert plain == want
 
 
 def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
     """The serve path's driver-side probe lists and lookup tables agree
-    exactly with the in-session twin ivf_pq_topk at the edges: a ragged
+    exactly with a numpy brute-force IVFADC at the edges: a ragged
     codebook, tied coarse centroids (probe order breaks the tie by cid),
     nprobe >= n_lists, fewer than k candidates, a query id that is also
-    a corpus id, int and bigint ids, a null-embedding query (dropped:
-    no rows) and an empty query frame (empty result, same schema);
-    nprobe < 1 and a rowless codebook corpus are rejected."""
+    a corpus id, int and bigint ids and an empty query frame (empty
+    result, same schema); nprobe < 1 and a rowless codebook corpus are
+    rejected. One null-vector rule holds everywhere: a null corpus
+    vector keeps its row with a null list id, null codes and a null
+    k-means centroid id and is never a candidate, and a null query
+    returns no rows — in the serve path, ivf_pq_topk and pq_adc_topk."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -2518,26 +2428,18 @@ def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
     def types(res):
         return [(f.name, f.dataType.simpleString()) for f in res.schema]
 
-    def both(q, df, k, nprobe, coded):
-        # the twin scores a null-embedding query as null-distance rows
-        # over the lowest-cid lists; the serve path drops that query
-        live = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-                for r in S.ivf_pq_topk(q, df, cb, coarse, k=k,
-                                       nprobe=nprobe).collect()
-                if r.adc_dist is not None}
-        res = S.ivf_pq_search_coded(q, coded, cb, coarse, k=k,
-                                    nprobe=nprobe)
-        served = {(r.query_id, r.corpus_id): (r.adc_dist, r.rank)
-                  for r in res.collect()}
-        return live, served, res
-
     for id_type in ("int", "bigint"):
         rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
+        crows = rows + [(200, None)]     # a null corpus vector
         df = spark.createDataFrame(
-            rows, f"corpus_id {id_type}, embedding array<double>")
+            crows, f"corpus_id {id_type}, embedding array<double>")
         path = str(tmp_path / f"coded_{id_type}")
         S.ivf_pq_encode_corpus(df, cb, coarse).write.parquet(path)
         coded = spark.read.parquet(path)
+        # the null vector's row is kept, with a null list id and codes
+        assert coded.count() == 31
+        assert [(r.list_id, r.pq_codes) for r in
+                coded.filter("corpus_id = 200").collect()] == [(None, None)]
         qrows = rows[:4] + [(100, [float(x) for x in -vecs[7]]),
                             (101, None)]
         q = spark.createDataFrame(
@@ -2545,26 +2447,49 @@ def test_ivf_pq_search_coded_edge_cases(spark, tmp_path):
         out_types = [("query_id", id_type), ("corpus_id", id_type),
                      ("adc_dist", "bigint"), ("rank", "int")]
         for k, nprobe in ((3, 1), (3, 2), (40, 1), (5, 4), (5, 9)):
-            live, served, res = both(q, df, k, nprobe, coded)
-            assert served == live, (id_type, k, nprobe)
+            want = _ivfadc_reference(qrows, crows, cb, coarse, k, nprobe)
+            res = S.ivf_pq_search_coded(q, coded, cb, coarse, k=k,
+                                        nprobe=nprobe)
+            served = _ranked(res)
+            assert served == want, (id_type, k, nprobe)
             assert types(res) == out_types
             assert {qi for qi, _ in served} == {0, 1, 2, 3, 100}
             assert all(qi != ci for qi, ci in served)
+            assert _ranked(S.ivf_pq_topk(q, df, cb, coarse, k=k,
+                                         nprobe=nprobe)) == want
         # nprobe=9 > 4 lists and k=40 > 30 rows: every query gets every
-        # corpus row but itself, short of k
-        _, served, _ = both(q, df, 40, 9, coded)
+        # non-null corpus row but itself, short of k
+        served = _ranked(S.ivf_pq_search_coded(q, coded, cb, coarse, k=40,
+                                               nprobe=9))
         assert len(served) == 5 * 30 - 4
+        # pq_adc_topk is the one-list search: a full ADC scan
+        one = {1: [0] * dim}
+        adc = S.pq_adc_topk(q, df, cb, k=4)
+        assert _ranked(adc) == _ivfadc_reference(qrows, crows, cb, one,
+                                                 k=4, nprobe=1)
+        assert types(adc) == out_types
         empty = spark.createDataFrame(
             [], f"query_id {id_type}, embedding array<double>")
-        live, served, res = both(empty, df, 3, 2, coded)
-        assert served == live == {}
-        assert types(res) == out_types
+        for res in (S.ivf_pq_search_coded(empty, coded, cb, coarse, k=3,
+                                          nprobe=2),
+                    S.ivf_pq_topk(empty, df, cb, coarse, k=3, nprobe=2),
+                    S.pq_adc_topk(empty, df, cb, k=3)):
+            assert _ranked(res) == {}
+            assert types(res) == out_types
         for bad in (0, -1):
             with pytest.raises(ValueError):
                 S.ivf_pq_search_coded(q, coded, cb, coarse, k=3,
                                       nprobe=bad)
         with pytest.raises(ValueError, match="empty corpus"):
             S.pq_codebook(df.limit(0), m=3, k_centroids=3)
+        # k-means: the null vector gets a null centroid id and changes
+        # no other row's assignment
+        vdf = df.withColumnRenamed("corpus_id", "vec_id")
+        got = {r.vec_id: r.centroid_id
+               for r in S.kmeans_lloyd(vdf, k=3, iterations=2).collect()}
+        assert got.pop(200) is None
+        assert got == {r.vec_id: r.centroid_id for r in S.kmeans_lloyd(
+            vdf.filter("vec_id != 200"), k=3, iterations=2).collect()}
 
 
 def test_brute_force_l2_topk_match_cols(spark):
