@@ -10,7 +10,16 @@ defaults are chosen for correctness-at-scale first:
   cluster you'd raise it (or let AQE coalesce from a high initial value);
 - session timezone pinned to UTC so event-time arithmetic is deterministic;
   civil-time ops take an explicit zone (see functions.expressions.local_date);
-- Arrow enabled for the few pandas-interop paths (vectorized, not per-row).
+- Arrow enabled for the few pandas-interop paths (vectorized, not per-row);
+- the driver JVM's tier-4 (C2) JIT thresholds raised 10x. Each CLI stage is
+  its own short-lived process, and about half of a warm DAG's CPU went to C2
+  compiling methods that are hot only during planning and codegen. Those now
+  stay in C1 code, while task inner loops at scale still cross the raised
+  thresholds and reach C2. C1-only (``TieredStopAtLevel=1``) saves more CPU
+  but makes the warm DAG and the first ANN result slower in wall time. The
+  flags go in ``defaultJavaOptions``, which Spark puts before a caller's
+  ``extraJavaOptions``, and act only when ``get_spark`` launches the JVM (the
+  CLI, the tests, perfbench); under spark-submit pass them with ``--conf``.
 """
 
 from __future__ import annotations
@@ -31,14 +40,21 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # Whole-stage-codegen compiled-class cache. The default (100 entries)
     # thrashes once a session runs more than a handful of distinct query
-    # shapes: a 5-round iterative query alone compiles ~20 stages, so in a
-    # many-query session every run re-Janino-compiles every stage it needs.
-    # Measured A/B on this engine's 122-query session: PageRank 6.2-7.1 s
-    # with the default cache vs 4.3-4.9 s at 10000 (its isolated-session
-    # cost) — recompilation, not data, was the overhead. Cost: Metaspace
-    # for ~thousands of small generated classes, negligible against
-    # executor heap.
+    # shapes, and every evicted stage is re-Janino-compiled on its next run.
+    # A warm six-stage landings DAG plans ~24 jobs of distinct stages per
+    # pass, and the registry session (tier-1, the oracle sweep) plans all
+    # 161 queries in one JVM. Removing the setting raised a warm landings
+    # DAG from 13.5 to 15.0 CPU s and 4.0 to 4.4 s wall (perfbench
+    # landings_batch, seed 5, 4 cores). Cost: Metaspace for ~thousands of
+    # small generated classes, negligible against executor heap.
     "spark.sql.codegen.cache.maxEntries": "10000",
+    # HotSpot tier-4 (C2) thresholds, each 10x the JDK 17 default
+    # (5000 / 600 / 15000 / 40000); see the module docstring.
+    "spark.driver.defaultJavaOptions":
+        "-XX:Tier4InvocationThreshold=50000"
+        " -XX:Tier4MinInvocationThreshold=6000"
+        " -XX:Tier4CompileThreshold=150000"
+        " -XX:Tier4BackEdgeThreshold=400000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     "spark.ui.enabled": "false",
 }

@@ -184,3 +184,17 @@ def test_cli_failed_stage_keeps_previous_output(spark, tmp_path, monkeypatch,
     assert capsys.readouterr().out.strip() == f"validate: {len(before)} rows"
     assert validated() == before
     assert run_stage(spark, "merge", root) == 1
+
+
+def test_driver_jvm_runs_with_raised_tier4_jit_thresholds(spark):
+    """Every process that `get_spark` launches (each CLI stage, the tests,
+    perfbench) starts its driver JVM with the session's C2 thresholds,
+    even when the caller sets its own `extraJavaOptions`."""
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments())
+    for flag in ("-XX:Tier4InvocationThreshold=50000",
+                 "-XX:Tier4MinInvocationThreshold=6000",
+                 "-XX:Tier4CompileThreshold=150000",
+                 "-XX:Tier4BackEdgeThreshold=400000"):
+        assert flag in args, args

@@ -2,11 +2,13 @@
 bless matching frames — a vacuous comparator would green-light everything.
 Driven against tools/oracle_check's comparator with synthetic frames."""
 
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from oracle_check import normalize, values_match  # noqa: E402
 
 
