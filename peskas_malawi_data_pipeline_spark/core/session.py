@@ -41,12 +41,13 @@ _DEFAULTS = {
     # Whole-stage-codegen compiled-class cache. The default (100 entries)
     # thrashes once a session runs more than a handful of distinct query
     # shapes, and every evicted stage is re-Janino-compiled on its next run.
-    # A warm six-stage landings DAG plans ~24 jobs of distinct stages per
-    # pass, and the registry session (tier-1, the oracle sweep) plans all
-    # 161 queries in one JVM. Removing the setting raised a warm landings
-    # DAG from 13.5 to 15.0 CPU s and 4.0 to 4.4 s wall (perfbench
-    # landings_batch, seed 5, 4 cores). Cost: Metaspace for ~thousands of
-    # small generated classes, negligible against executor heap.
+    # A warm six-stage landings DAG runs 24 Spark jobs of distinct stage
+    # shapes per pass, and the registry session (tier-1, the oracle sweep)
+    # plans all 161 queries in one JVM. Removing the setting raised a warm
+    # landings DAG from 19.7-20.4 to 23.9-24.9 CPU s and from 8.4-9.0 to
+    # 10.4-11.3 s wall (perfbench landings_batch op_cpu_s, seeds 5 and 6,
+    # 4 cores). Cost: Metaspace for ~thousands of small generated classes,
+    # negligible against executor heap.
     "spark.sql.codegen.cache.maxEntries": "10000",
     # HotSpot tier-4 (C2) thresholds, each 10x the JDK 17 default
     # (5000 / 600 / 15000 / 40000); see the module docstring.

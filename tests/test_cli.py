@@ -188,8 +188,7 @@ def test_cli_failed_stage_keeps_previous_output(spark, tmp_path, monkeypatch,
 
 def test_driver_jvm_runs_with_raised_tier4_jit_thresholds(spark):
     """Every process that `get_spark` launches (each CLI stage, the tests,
-    perfbench) starts its driver JVM with the session's C2 thresholds,
-    even when the caller sets its own `extraJavaOptions`."""
+    perfbench) starts its driver JVM with the session's C2 thresholds."""
     jvm = spark.sparkContext._jvm
     args = list(jvm.java.lang.management.ManagementFactory
                 .getRuntimeMXBean().getInputArguments())
