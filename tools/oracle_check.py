@@ -73,8 +73,7 @@ def main() -> int:
         args = args[:i] + args[i + 2:]
     only = set(args)
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
+    sys.path.insert(0, _REPO)
     import __spark_entry__ as entrymod
     from peskas_malawi_data_pipeline_spark.core import get_spark
 
