@@ -1026,85 +1026,9 @@ def decontaminate_stats(df: DataFrame, eval_df: DataFrame,
                     .alias("n_spans")))
 
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 25,
-                         check_interval: int = 2) -> DataFrame:
-    """Duplicate GROUPS from candidate pairs: connected components by
-    iterative min-label propagation — each node repeatedly adopts the
-    minimum label among its neighborhood until fixpoint, which is the
-    minimum id in its component (the canonical keeper).
-
-    This is the step that turns pairwise near-dup evidence (MinHash/SimHash/
-    Jaccard) into dedup decisions. Formulated over the symmetrized edge set
-    PLUS a self-loop per node, one propagation step is exactly
-    ``edges ⋈ labels → groupBy(src).min(comp)`` — the self-loop folds the
-    node's own label into the neighborhood min, so ``labels`` is referenced
-    ONCE per step and consecutive steps fuse lazily into a single job
-    (the two-reference least/left-join formulation forces a
-    materialization per step or double-computes). Convergence is an
-    order-insensitive checksum (count + hash sum, as in
-    ``connected_components_star``) every ``check_interval`` steps; up to
-    ``check_interval − 1`` propagation steps run redundantly after the
-    true fixpoint — measured strictly cheaper than materializing every
-    step (noop-drain: 1.2 s → 0.9 s at sf0.1; 6.3 s → 3.7 s on the 10×
-    probe, where the candidate graph's diameter reaches ~21 hops — the
-    win grows with scale because each skipped materialization costs
-    O(|nodes|)). Iterations needed =
-    graph diameter in min-label hops (dup clusters are shallow —
-    boilerplate stars converge in 2-3; long transitive chains are the
-    ``connected_components_star`` regime). Returns (id, component) for
-    every node in ``pairs``.
-    """
-    # edges joins into EVERY iteration — without the checkpoint each round
-    # would re-run the whole upstream candidate pipeline (minhash/bands/
-    # verify), turning k iterations into k full corpus passes. ONE
-    # barrier builds the symmetrized+self-looped edge set (r14: this was
-    # two chained materializations — sym, then edges = sym ∪ self-loops —
-    # caching the edge bytes twice and paying two full action cascades;
-    # the distinct's exchange is shared by both union branches, so one
-    # barrier runs the candidate pipeline once). Self-loops may duplicate
-    # an (x,x) row a caller's pairs already contained (incremental stars
-    # carry them): harmless — every consumer is a min-aggregation, and
-    # `nodes` derives from the self-loop rows themselves.
-    sym = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-           .union(pairs.select(F.col(id_b).alias("src"),
-                               F.col(id_a).alias("dst")))
-           .distinct())
-    edges = materialize(
-        sym.union(sym.select(F.col("src"), F.col("src").alias("dst"))
-                  .distinct()))
-    labels = (edges.where(F.col("src") == F.col("dst"))
-              .select(F.col("src").alias("id"))
-              .withColumn("comp", F.col("id")))
-    from pyspark.sql import Observation
-    prev_chk = None
-    for i in range(max_iter):
-        labels = (edges.join(labels, edges.dst == labels.id)
-                  .groupBy("src").agg(F.min("comp").alias("comp"))
-                  .withColumnRenamed("src", "id"))
-        if (i + 1) % check_interval == 0 or i + 1 == max_iter:
-            # convergence checksum rides the materialize action as an
-            # Observation (CollectMetrics) — the separate count+hash
-            # job (and its driver-turnaround gap) per check is gone
-            obs = Observation()
-            labels = materialize(labels.observe(
-                obs, F.count(F.lit(1)).alias("cnt"),
-                # decimal accumulator: a long sum of 64-bit hashes
-                # overflows
-                F.sum(F.xxhash64("id", "comp").cast("decimal(27,0)"))
-                .alias("hsh")))
-            m = obs.get
-            chk = (m["cnt"], m["hsh"])
-            if chk == prev_chk:
-                break
-            prev_chk = chk
-    return labels.select(F.col("id"), F.col("comp").alias("component"))
-
-
 def incremental_components(prior: DataFrame, new_pairs: DataFrame,
-                           id_a: str = "id_a", id_b: str = "id_b",
-                           max_iter: int = 25,
-                           check_interval: int = 2) -> DataFrame:
+                           id_a: str = "id_a",
+                           id_b: str = "id_b") -> DataFrame:
     """Update persisted duplicate-group assignments with a new batch's
     candidate pairs — the daily-run companion to
     :func:`incremental_lsh_pairs`, closing the incremental dedup loop
@@ -1115,25 +1039,23 @@ def incremental_components(prior: DataFrame, new_pairs: DataFrame,
     ``new_pairs`` are candidate pairs involving the increment (every pair
     ``incremental_lsh_pairs`` emits touches ≥1 new doc). Each prior
     assignment IS a star edge (member → component minimum), so the union
-    of prior stars + new pairs is a graph whose min-label propagation
-    converges in O(diameter of the NEW linkage) rounds — prior components
-    are depth-1 already, and a new pair bridging two old components
-    propagates the smaller minimum across both stars in 2 hops. Cost per
-    run: O(|prior| + |new pairs|) rows through ~2-3 fused propagation
-    steps, independent of how many historical batches built ``prior``.
+    of prior stars + new pairs goes through
+    :func:`connected_components_star` with every prior component already
+    contracted to depth 1. Cost per run: O(|prior| + |new pairs|) rows
+    through a few star rounds, independent of how many historical
+    batches built ``prior``.
 
     Returns (id, component) covering every prior id and every id in
     ``new_pairs`` — singleton prior components keep their row (their star
     edge is a self-loop), so the output is a full replacement snapshot.
-    Proven equal to a from-scratch ``connected_components`` over the full
-    pair history by test.
+    Proven equal to a from-scratch ``connected_components_star`` over the
+    full pair history by test.
     """
     stars = prior.select(F.col("id").alias(id_a),
                          F.col("component").alias(id_b))
-    return connected_components(
+    return connected_components_star(
         stars.unionByName(new_pairs.select(F.col(id_a), F.col(id_b))),
-        id_a=id_a, id_b=id_b, max_iter=max_iter,
-        check_interval=check_interval)
+        id_a=id_a, id_b=id_b)
 
 
 def pinned_incremental_split(prior_split: DataFrame, components: DataFrame,
@@ -1321,21 +1243,23 @@ def fused_near_dup(corpus: DataFrame, edges: dict[str, DataFrame],
 def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                               id_b: str = "id_b",
                               max_rounds: int = 12) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    rewrites (Kiveris et al., *Connected Components in MapReduce and
-    Beyond*, SoCC'14) — converges in O(log² n) rounds regardless of graph
-    diameter, vs. diameter-many rounds for plain min-label propagation
-    (``connected_components``). The 100 TB choice when dup chains can be
-    long (shingled boilerplate, transitive near-dup chains), where
-    diameter-bound propagation would run tens of iterations.
+    """Duplicate GROUPS from candidate pairs: connected components by
+    alternating large-star / small-star edge rewrites (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC'14). This is the
+    step that turns pairwise near-dup evidence (MinHash/SimHash/Jaccard)
+    into dedup decisions; it converges in O(log² n) rounds regardless of
+    graph diameter, so long transitive near-dup chains cost no more
+    rounds than shallow boilerplate stars.
 
     Each round is two edge rewrites; each rewrite is ONE window-aggregate
     shuffle on the node id plus a distinct. Edges only ever move toward the
     component minimum, so the edge set shrinks toward a star per component;
     fixpoint is detected with an order-independent checksum (count +
     xxhash64 sum) instead of a compare-join. Returns (id, component) for
-    every node appearing in ``pairs`` — identical output contract to
-    ``connected_components``.
+    every node appearing in ``pairs``, the component being its minimum id
+    (the canonical keeper). Raises ``RuntimeError`` when ``max_rounds``
+    rounds pass without the checksum repeating: unconverged labels would
+    split components silently.
     """
     def canon(df: DataFrame) -> DataFrame:
         """Both orientations, self-loops dropped, deduped."""
@@ -1348,7 +1272,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     # re-evaluate the upstream candidate pipeline. The node set comes from
     # the BASE frame (before canon drops self-loops): a node whose only
     # pair is (x, x) — e.g. a singleton star edge from a prior snapshot —
-    # must still get its output row, matching connected_components.
+    # must still get its output row.
     base = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"),
@@ -1396,6 +1320,10 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
         if chk == prev_chk:
             break
         prev_chk = chk
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after {max_rounds} "
+            f"rounds; raise max_rounds")
 
     comp = edges.groupBy("src").agg(F.min("dst").alias("__mn"))
     return (nodes.join(comp, nodes.id == comp.src, "left")

@@ -5,7 +5,7 @@ per iteration ONE join (scores → edges) + ONE aggregation (sum of
 neighbor contributions), both hash-partitioned on node id, with the static
 relations (edges, out-degrees) checkpointed once up front so k iterations
 touch only materialized inputs — never k re-evaluations of the upstream
-plan (same lesson as dedup.connected_components).
+plan (same lesson as dedup.connected_components_star).
 
 Determinism: classic PageRank sums doubles, whose value depends on
 partition-order association — unusable against a cross-engine oracle. The

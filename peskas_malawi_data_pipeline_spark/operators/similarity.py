@@ -2,10 +2,9 @@
 
 Brute-force cosine top-k as the exact baseline, and an LSH-bucketed variant
 as the 100 TB scale path. Dot products use higher-order functions
-(``zip_with`` + ``aggregate``) — evaluated in the JVM, no Python UDF; at very
-high dimensionality a vectorized Pandas UDF over Arrow batches is the
-alternative (numpy matmul per batch), kept in ``cosine_topk_pandas`` for
-comparison and as the documented fast path when dims ≫ 10³.
+(``zip_with`` + ``aggregate``) — evaluated in the JVM, no Python UDF.
+Nearest-centroid work (k-means, PQ codes, IVF lists) runs through one numpy
+``mapInPandas`` kernel, :func:`_pq_code_frame`.
 """
 
 from __future__ import annotations
@@ -182,88 +181,10 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
             .filter(F.col("rank") <= k))
 
 
-def cosine_topk_pandas(queries: DataFrame, corpus: DataFrame, k: int,
-                       query_id: str = "query_id", corpus_id: str = "corpus_id",
-                       vec_col: str = "embedding",
-                       max_queries: int = 10_000) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: queries collected to a numpy
-    matrix (they must be the small side), corpus streamed through
-    ``mapInPandas`` in Arrow batches, numpy matmul per batch, per-batch
-    partial top-k, final exact top-k by window. The fast path when dims are
-    large enough that per-element HOF evaluation dominates.
-
-    ``max_queries`` guards the driver materialization: collecting an
-    unbounded query frame OOMs the driver, so more than ``max_queries``
-    rows raises instead of silently collecting. Raise the cap explicitly
-    for a bigger (still driver-sized) query set, or use :func:`cosine_topk`
-    / the LSH/IVF variants when the query side is itself corpus-scale.
-
-    Zero-norm vectors have no defined cosine; such pairs are OMITTED here
-    (the HOF baseline carries them as NULL-cosine fillers when a query has
-    fewer than k valid neighbors — the only case the two paths differ).
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    id_type = queries.schema[query_id].dataType.simpleString()
-    cid_type = corpus.schema[corpus_id].dataType.simpleString()
-    schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cosine double"
-
-    qrows = queries.select(query_id, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_pandas collects the query side to the driver, but it "
-            f"has more than max_queries={max_queries} rows; raise max_queries "
-            f"explicitly or use cosine_topk/ann_lsh/ann_ivf for large query sets")
-    if not qrows:
-        return spark.createDataFrame(
-            [], schema + ", rank int")
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype="float64")
-    qnorm = np.linalg.norm(qmat, axis=1)
-    q_ok = qnorm > 0
-    qnorm[~q_ok] = np.inf
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[corpus_id].to_numpy()
-            cmat = np.array(pdf[vec_col].tolist(), dtype="float64")
-            cnorm = np.linalg.norm(cmat, axis=1)
-            c_ok = cnorm > 0
-            cnorm[~c_ok] = np.inf
-            # round BEFORE the per-batch cut so batch boundaries can never
-            # flip which of two round-equal neighbors survives; ties then
-            # break on corpus id (stable lexsort), matching the final
-            # window's (cosine desc, id asc) order exactly
-            sims = np.round((cmat @ qmat.T) / cnorm[:, None] / qnorm[None, :], 6)
-            for qi, qid in enumerate(qids):
-                if not q_ok[qi]:
-                    continue                     # undefined cosine: omit
-                col = sims[:, qi]
-                # exclude self-matches and zero-norm corpus rows BEFORE the
-                # top-k cut — a self row (cosine 1.0) would otherwise eat a
-                # slot and silently drop the true k-th neighbor
-                keep = c_ok & (ids != qid)
-                kidx = np.flatnonzero(keep)
-                order = np.lexsort((ids[kidx], -col[kidx]))[:k]
-                top = kidx[order]
-                yield pd.DataFrame({
-                    query_id: qid, corpus_id: ids[top],
-                    "cosine": col[top],
-                })
-
-    scored = corpus.select(corpus_id, vec_col).mapInPandas(score, schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(corpus_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
 def _micro(col: Column) -> Column:
-    """Component-wise integer-micro quantization (same stance as
-    :func:`assign_nearest_centroid`): squared distances over micros are
-    exact BIGINTs, so argmins and rankings are engine-portable with no
-    float-order caveats at all."""
+    """Component-wise integer-micro quantization: squared distances over
+    micros are exact BIGINTs, so argmins and rankings are engine-portable
+    with no float-order caveats at all."""
     return F.transform(col, lambda v: F.floor(v.cast("double") * 1e6)
                        .cast("long"))
 
@@ -768,40 +689,6 @@ def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
             .filter(F.col("rank") <= k))
 
 
-def assign_nearest_centroid(df: DataFrame, centroids: DataFrame,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            cid_col: str = "centroid_id") -> DataFrame:
-    """Nearest-centroid assignment with an engine-portable deterministic
-    argmin: components quantize to integer micros, so squared distances are
-    exact bigints and ties break on centroid id identically everywhere.
-
-    ``centroids`` is (cid_col, vec_col) and is broadcast — the corpus never
-    shuffles; k·|corpus| distance rows reduce through a per-vector window
-    argmin. One Lloyd iteration = this + a grouped mean (see
-    ``embedding_centroids``); SemDeDup-style semantic dedup uses the
-    assignment as its blocking key (`semantic_dedup_survivors`).
-    """
-    quant = F.transform(F.col(vec_col),
-                        lambda v: F.floor(v.cast("double") * 1e6).cast("long"))
-    q = df.select(F.col(id_col), quant.alias("__q"))
-    cents = centroids.select(F.col(cid_col).alias("__cid"),
-                             quant.alias("__cq"))
-    d2 = F.aggregate(
-        F.zip_with("__q", "__cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    dists = q.crossJoin(F.broadcast(cents)).select(
-        id_col, "__cid", d2.alias("__d2"))
-    # nulls LAST: a dimension-mismatched vector/centroid pair yields a NULL
-    # distance (zip_with pads with NULL), and Spark's default NULLS FIRST
-    # would silently crown it the argmin — also aligns with the SQL
-    # oracle's NULLS LAST ordering
-    w = Window.partitionBy(id_col).orderBy(F.asc_nulls_last("__d2"), "__cid")
-    return (dists.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(id_col, F.col("__cid").alias(cid_col)))
-
-
 def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding",
@@ -811,8 +698,11 @@ def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
     prune every vector that duplicates a lower-id survivor-candidate —
     returns (id_col, centroid_id) for the surviving vectors.
 
-    Scale shape: centroid assignment broadcasts the centroid set (corpus
-    never shuffles); the pair stage is the blocked cosine self-join of
+    ``centroids`` is (``centroid_id``, ``vec_col``), int ids, bounded: it is
+    collected to driver micro-int vectors and assigned through
+    :func:`kmeans_assign`, one pure map (no join; the corpus never
+    shuffles). A null vector gets a null centroid id and survives. The
+    pair stage is the blocked cosine self-join of
     ``dedup.embedding_near_dup_pairs`` — Σ|cluster|² pairs, so the caller
     sizes the centroid count to bound cluster populations (SemDeDup uses
     k ≈ √N clusters; tiny k here only suits tiny corpora). Pruning is the
@@ -822,9 +712,11 @@ def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
     """
     from .dedup import embedding_near_dup_pairs
 
-    assigned = assign_nearest_centroid(df, centroids, id_col=id_col,
-                                       vec_col=vec_col)
-    clustered = df.select(id_col, vec_col).join(assigned, id_col)
+    rows = centroids.select("centroid_id", vec_col).collect()
+    cents = dict(zip((r[0] for r in rows),
+                     _np_micro(r[1] for r in rows).tolist()))
+    clustered = kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col,
+                              keep_cols=[vec_col])
     pairs = embedding_near_dup_pairs(clustered, id_col=id_col,
                                      vec_col=vec_col,
                                      block_col="centroid_id",

@@ -1716,7 +1716,7 @@ def dedup_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         new, num_hashes=8, band_size=2, shingle_n=3)
     inc_pairs = materialize(dedup_ops.incremental_lsh_pairs(
         new_bands, compacted, max_bucket=1000, weight_col="band_weight"))
-    prior = dedup_ops.connected_components(
+    prior = dedup_ops.connected_components_star(
         dedup_ops.lsh_pairs_from_bands(old_bands, max_bucket=1000))
     comp = dedup_ops.incremental_components(prior, inc_pairs)
     rb = old_bands.agg(
@@ -1755,17 +1755,6 @@ reach(src, dst) AS (
 SELECT src AS id, CAST(min(dst) AS BIGINT) AS component
 FROM reach GROUP BY src
 """
-
-
-@register("dedup_components", _DUCK_COMPONENTS_SQL)
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs → duplicate GROUPS: connected components over the
-    MinHash candidate graph by iterative min-label propagation (the step
-    that turns pairwise evidence into keep/drop decisions at corpus scale).
-    The oracle computes the same components with a recursive-CTE closure."""
-    pairs = dedup_ops.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2, shingle_n=3)
-    return dedup_ops.connected_components(pairs)
 
 
 @register("near_dedup_survivors", f"""
@@ -2027,7 +2016,7 @@ def pinned_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs.filter(F.col("doc_id") % 7 != 0)
     index_bands = materialize(dedup_ops.minhash_bands(
         old, num_hashes=8, band_size=2, shingle_n=3))
-    prior_comp = materialize(dedup_ops.connected_components(
+    prior_comp = materialize(dedup_ops.connected_components_star(
         dedup_ops.lsh_pairs_from_bands(index_bands)))
     # the stored split snapshot a previous batch run would have written:
     # the batch group-aware rule over the OLD corpus's components
@@ -2154,10 +2143,12 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_components_star", _DUCK_COMPONENTS_SQL)
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate groups via alternating large-star/small-star rewrites
-    (O(log² n) rounds, diameter-independent) — the 100 TB variant for long
-    transitive dup chains. Oracle: identical recursive-CTE closure, since
-    both algorithms label every node with its component minimum."""
+    """Near-dup pairs → duplicate GROUPS: connected components over the
+    MinHash candidate graph by alternating large-star/small-star rewrites
+    (O(log² n) rounds, diameter-independent; the step that turns pairwise
+    evidence into keep/drop decisions at corpus scale). The oracle
+    computes the same components with a recursive-CTE closure: both label
+    every node with its component minimum."""
     pairs = dedup_ops.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2, shingle_n=3)
     return dedup_ops.connected_components_star(pairs)
@@ -2171,7 +2162,7 @@ def incremental_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     The increment is sketched, band-joined against the index
     (dedup.incremental_lsh_pairs), and the new pairs update the stored
     assignments via dedup.incremental_components — prior components enter
-    as depth-1 star edges, so propagation converges in ~2 fused rounds
+    as depth-1 star edges, so star contraction converges in ~2 rounds
     regardless of corpus history. Oracle: the from-scratch recursive-CTE
     closure over the FULL corpus — the incremental path must reproduce the
     full recompute exactly (it does; caps never trigger at oracle scale,
@@ -2185,7 +2176,7 @@ def incremental_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer would re-run the shingle→hash→signature map over old.
     index_bands = materialize(dedup_ops.minhash_bands(
         old, num_hashes=8, band_size=2, shingle_n=3))
-    prior = dedup_ops.connected_components(
+    prior = dedup_ops.connected_components_star(
         dedup_ops.lsh_pairs_from_bands(index_bands))
     new_bands = dedup_ops.minhash_bands(
         new, num_hashes=8, band_size=2, shingle_n=3)
@@ -2809,7 +2800,7 @@ _DUCK_IVF_ASSIGN = ("CASE WHEN sqrt(list_dot_product(v, v)) * en > 0 THEN "
 
 
 # Product-quantization twins: micro-int components → exact BIGINT squared
-# distances (same determinism stance as assign_nearest_centroid), 64 dims
+# distances (same determinism stance as similarity.kmeans_assign), 64 dims
 # split into 4×16 subspaces, codebook = the 8 lowest-id corpus vectors.
 _DUCK_PQ_CTES = """c AS (SELECT vec_id AS corpus_id,
   list_transform(embedding::DOUBLE[],
@@ -2962,6 +2953,19 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("rank").cast("long").alias("rank"))
 
 
+def _index_dir(prefix: str) -> str:
+    """A fresh temp directory for an index written by a registry entry,
+    removed at interpreter exit: the returned lazy frame still reads
+    from it, so it cannot go when the entry returns."""
+    import atexit
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
+
+
 @register("ann_index_persisted", REGISTRY["ann_ivf_pq_topk"][1])
 def ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN index as a PERSISTED ARTIFACT — the build/serve split
@@ -2981,7 +2985,6 @@ def ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     |corpus|·nprobe/n_centroids rows of m-byte codes per query batch —
     the 100 TB corpus is touched once at build, never at query time."""
     import os
-    import tempfile
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
@@ -2990,7 +2993,7 @@ def ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sim_ops.pq_codebook(c, m=4, k_centroids=8)
     coarse = sim_ops.ivf_coarse_centroids(c, n_centroids=8)
 
-    work = tempfile.mkdtemp(prefix="peskas_ann_index_")
+    work = _index_dir("peskas_ann_index_")
     sim_ops.ivf_pq_encode_corpus(c, cb, coarse) \
         .write.mode("overwrite").parquet(os.path.join(work, "coded"))
     sim_ops.codebook_to_table(spark, cb) \
@@ -3029,7 +3032,6 @@ def ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     — increment bytes in, increment code rows out; the only full-corpus
     cost remaining is the (offline, optional) artifact retrain."""
     import os
-    import tempfile
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
@@ -3041,7 +3043,7 @@ def ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sim_ops.pq_codebook(old, m=4, k_centroids=8)
     coarse = sim_ops.ivf_coarse_centroids(old, n_centroids=8)
 
-    work = tempfile.mkdtemp(prefix="peskas_ann_inc_")
+    work = _index_dir("peskas_ann_inc_")
     sim_ops.codebook_to_table(spark, cb) \
         .write.mode("overwrite").parquet(os.path.join(work, "codebook"))
     sim_ops.coarse_to_table(spark, coarse) \
@@ -4042,51 +4044,6 @@ def value_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type",
         F.floor(F.percent_rank().over(w) * 1e6).cast("long").alias("pr_micro"),
         F.floor(F.cume_dist().over(w) * 1e6).cast("long").alias("cd_micro"))
-
-
-@register("kmeans_assign", """
-WITH e AS (SELECT vec_id, label,
-                  list_transform(embedding::DOUBLE[],
-                                 x -> CAST(floor(x * 1000000) AS BIGINT)) AS q
-           FROM embeddings),
-cents AS (SELECT vec_id AS cid, q AS cq FROM e WHERE vec_id < 4),
-dists AS (
-  SELECT e.vec_id, c.cid,
-         list_sum(list_transform(range(1, len(e.q) + 1),
-                  i -> (e.q[i] - c.cq[i]) * (e.q[i] - c.cq[i]))) AS d2
-  FROM e, cents c),
-r AS (SELECT vec_id, cid, d2,
-        row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      FROM dists)
-SELECT vec_id, CAST(cid AS BIGINT) AS centroid_id, CAST(d2 AS BIGINT) AS d2
-FROM r WHERE rn = 1
-""")
-def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-means assignment step: every vector joins the broadcast centroid
-    set, squared distance via zip_with (JVM higher-order, no UDF), argmin
-    by (distance, centroid id) row_number. Components quantize to integer
-    micros first, so distances are exact bigints — deterministic argmin in
-    any engine. Scale shape: k centroids broadcast; the corpus never
-    shuffles; with embedding_centroids as the update step this is one full
-    Lloyd iteration, all in DataFrame ops."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"),
-                    lambda v: F.floor(v.cast("double") * 1e6).cast("long"))
-        .alias("q"))
-    cents = (q.filter(F.col("vec_id") < 4)
-             .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq")))
-    d2 = F.aggregate(
-        F.zip_with("q", "cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    dists = q.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", d2.alias("d2"))
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    return (dists.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", F.col("cid").cast("long").alias("centroid_id"),
-                    F.col("d2").cast("long").alias("d2")))
 
 
 @register("cumulative_distinct_users", """

@@ -84,27 +84,6 @@ def test_lsh_topk_same_bucket_neighbors(spark):
     assert got == [4, 1]
 
 
-def test_cosine_topk_pandas_matches_hof(spark):
-    emb = _vectors(spark)
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    hof = {(r.query_id, r.corpus_id, r.cosine) for r in S.brute_force_topk(q, c, k=3).collect()}
-    arrow = {(r.query_id, r.corpus_id, r.cosine) for r in S.cosine_topk_pandas(q, c, k=3).collect()}
-    assert hof == arrow
-
-
-def test_cosine_topk_pandas_guards_driver_collect(spark):
-    """The driver-side query materialization is capped: an over-cap query
-    frame raises instead of silently collecting (VERDICT r01 #1)."""
-    emb = _vectors(spark)
-    q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    with pytest.raises(ValueError, match="max_queries"):
-        S.cosine_topk_pandas(q, c, k=2, max_queries=2).count()
-    # explicit raise of the cap restores the path
-    assert S.cosine_topk_pandas(q, c, k=2, max_queries=100).count() > 0
-
-
 def test_embedding_near_dup_pairs(spark):
     df = _vectors(spark).withColumn("label", F.lit(1))
     out = {(r.id_a, r.id_b) for r in
@@ -606,9 +585,9 @@ def test_jaccard_stop_shingle_cap_is_lower_bound(spark):
 
 def test_connected_components_star_long_chain(spark):
     """Large-star/small-star must collapse a 60-node path graph (diameter
-    59) within its O(log² n) round budget — plain min-label propagation
-    would need ~59 iterations. Also: identical output contract on a small
-    multi-component graph."""
+    59) within its O(log² n) round budget — diameter-bound label
+    propagation would need ~59 iterations. Also: every node labelled with
+    its component minimum on a small multi-component graph."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], ["id_a", "id_b"])
     out = D.connected_components_star(chain, max_rounds=8)
@@ -621,9 +600,19 @@ def test_connected_components_star_long_chain(spark):
         ["id_a", "id_b"])
     star = {(r.id, r.component)
             for r in D.connected_components_star(pairs).collect()}
-    prop = {(r.id, r.component)
-            for r in D.connected_components(pairs).collect()}
-    assert star == prop
+    assert star == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+                    (20, 20), (21, 20), (22, 20)}
+
+
+def test_connected_components_star_raises_when_rounds_run_out(spark):
+    """Out of rounds before the checksum repeats is an error, not a
+    result: a 60-node path cannot reach its fixpoint in 2 rounds, and
+    unconverged labels would split one component into many."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError,
+                       match="connected_components_star.*2 rounds"):
+        D.connected_components_star(chain, max_rounds=2)
 
 
 def test_multimodal_resize_downscale_and_passthrough(spark):
@@ -689,10 +678,9 @@ def test_incremental_lsh_equals_full_run_restriction(spark):
 
 
 def test_connected_components_property_random_graphs(spark):
-    """Property: both component operators equal a union-find ground truth
+    """Property: star contraction equals a union-find ground truth
     (minimum id per component) on randomized graphs — chains, cliques,
-    isolated edges, duplicate/self pairs — across check intervals. Guards
-    the fused self-loop formulation of min-label propagation."""
+    isolated edges, duplicate/self pairs."""
     import random
 
     rng = random.Random(42)
@@ -721,11 +709,6 @@ def test_connected_components_property_random_graphs(spark):
         want = {x: find(x) for x in nodes}
 
         df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-        for ci in (1, 2, 3):
-            got = {r.id: r.component for r in
-                   D.connected_components(df, max_iter=60,
-                                          check_interval=ci).collect()}
-            assert got == want, (trial, ci)
         got_star = {r.id: r.component
                     for r in D.connected_components_star(df).collect()}
         assert got_star == want, trial
@@ -764,7 +747,7 @@ def test_pagerank_invariant_to_partitioning_and_checkpointing(spark):
 
 def test_incremental_components_equals_full_recompute(spark):
     """incremental_components(prior snapshot, new pairs) must equal
-    connected_components over the full pair history — including pairs that
+    connected_components_star over the full pair history — including pairs that
     BRIDGE two previously-separate components, extend one, or introduce
     brand-new nodes, with singletons surviving as their own component."""
     import random
@@ -778,11 +761,12 @@ def test_incremental_components_equals_full_recompute(spark):
     old_df = spark.createDataFrame(old_pairs, ["id_a", "id_b"])
     new_df = spark.createDataFrame(new_pairs, ["id_a", "id_b"])
 
-    prior = D.connected_components(old_df)
+    prior = D.connected_components_star(old_df)
     got = {(r.id, r.component) for r in
            D.incremental_components(prior, new_df).collect()}
     want = {(r.id, r.component) for r in
-            D.connected_components(old_df.unionByName(new_df)).collect()}
+            D.connected_components_star(
+                old_df.unionByName(new_df)).collect()}
     assert got == want
 
 
@@ -816,7 +800,6 @@ def test_graph_operators_empty_input(spark):
     from peskas_malawi_data_pipeline_spark.operators import graph as G
 
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert D.connected_components(empty_pairs).count() == 0
     assert D.connected_components_star(empty_pairs).count() == 0
     assert D.incremental_components(
         spark.createDataFrame([], "id long, component long"),
@@ -848,7 +831,7 @@ def test_barrier_uses_reliable_checkpoints_when_configured(spark, tmp_path):
         assert out.count() == 5
         pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
         comps = {(r.id, r.component)
-                 for r in D.connected_components(pairs).collect()}
+                 for r in D.connected_components_star(pairs).collect()}
         assert comps == {(1, 1), (2, 1), (3, 1)}
         files = glob.glob(os.path.join(ckpt, "**", "*"), recursive=True)
         assert files, "no reliable checkpoint data written"
@@ -862,8 +845,8 @@ def test_barrier_uses_reliable_checkpoints_when_configured(spark, tmp_path):
 def test_fourth_review_regressions(spark):
     """Pin the fourth review pass's fixes: NULL-text rows all survive exact
     dedup (missing content is not duplicate content); a self-pair singleton
-    keeps its component row in BOTH components variants (the star variant
-    used to drop it — the exact shape incremental_components feeds);
+    keeps its component row (star contraction used to drop it — the exact
+    shape incremental_components feeds);
     simhash_pairs rejects a max_hamming that voids the pigeonhole recall
     guarantee; NULL-keyed groups get LocScaleB bounds and alerts."""
     from peskas_malawi_data_pipeline_spark.operators import validation as V
@@ -875,9 +858,9 @@ def test_fourth_review_regressions(spark):
     assert survivors == {1, 3, 4}
 
     pairs = spark.createDataFrame([(1, 2), (9, 9)], ["id_a", "id_b"])
-    for fn in (D.connected_components, D.connected_components_star):
-        got = {(r.id, r.component) for r in fn(pairs).collect()}
-        assert got == {(1, 1), (2, 1), (9, 9)}, fn.__name__
+    got = {(r.id, r.component)
+           for r in D.connected_components_star(pairs).collect()}
+    assert got == {(1, 1), (2, 1), (9, 9)}
 
     import pytest as _pytest
     with _pytest.raises(ValueError, match="pigeonhole"):
@@ -1028,18 +1011,6 @@ def test_brute_force_topk_anti_match_mines_hard_negatives(spark):
            .orderBy("rank").collect()]
     # nearest different-label first; same-label and NULL-label never appear
     assert got == [(2, 1), (3, 2)]
-
-
-def test_assign_nearest_centroid_null_distance_never_wins(spark):
-    """A dimension-mismatched centroid yields a NULL distance (zip_with
-    pads); NULLS LAST ordering must keep it from beating a real distance."""
-    df = spark.createDataFrame([Row(vec_id=1, embedding=[1.0, 0.0])])
-    cents = spark.createDataFrame([
-        Row(centroid_id=0, embedding=[0.0, 1.0]),        # valid, far
-        Row(centroid_id=1, embedding=[1.0, 0.0, 0.0]),   # 3-dim: NULL d2
-    ])
-    got = S.assign_nearest_centroid(df, cents).first()
-    assert got.centroid_id == 0
 
 
 def test_pagerank_rejects_invalid_broadcast_mode(spark):
