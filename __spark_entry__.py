@@ -31,27 +31,25 @@ from peskas_malawi_data_pipeline_spark.queries import REGISTRY  # noqa: E402
 _DRIVER_CHECKED_R01_R02 = {
     "pricing_summary", "filter_project", "distinct_pairs", "union_by_name",
     "join_broadcast_dim", "join_inner_matched", "semi_join_exists",
-    "asof_join_latest_view", "pivot_event_counts", "unpivot_metrics",
-    "percentile_bands", "min_price_supplier", "funnel_stages",
-    "interval_join_clicks", "anti_join_missing", "reduce_full_join",
-    "suffix_match_join", "window_unique_flag", "topk_per_group",
-    "grouped_mean_as_column", "count_sorted", "grid_complete", "sessionize",
-    "time_bucket_agg", "local_date", "robust_bounds_grouped", "outlier_alert",
-    "coalesce_suffix_groups", "outlier_alert_global", "string_ops",
-    "token_stats", "lang_id", "quality_scores", "hash_split", "quota_sample",
-    "length_histogram", "pack_chunks", "pack_greedy", "pack_utilization",
-    "weighted_sample", "fingerprint_groups", "exact_dedup",
-    "minhash_lsh_pairs", "incremental_dedup_pairs", "dedup_components",
-    "near_dedup_survivors", "dedup_components_star", "simhash",
-    "simhash_pairs", "jaccard_pairs", "embedding_near_dup", "alert_fusion",
+    "asof_join_latest_view", "percentile_bands", "interval_join_clicks",
+    "anti_join_missing", "reduce_full_join", "suffix_match_join",
+    "window_unique_flag", "topk_per_group", "grouped_mean_as_column",
+    "count_sorted", "grid_complete", "time_bucket_agg", "local_date",
+    "robust_bounds_grouped", "outlier_alert", "coalesce_suffix_groups",
+    "outlier_alert_global", "string_ops", "token_stats", "lang_id",
+    "quality_scores", "hash_split", "quota_sample", "length_histogram",
+    "pack_chunks", "pack_greedy", "pack_utilization", "weighted_sample",
+    "fingerprint_groups", "exact_dedup", "minhash_lsh_pairs",
+    "incremental_dedup_pairs", "near_dedup_survivors",
+    "dedup_components_star", "simhash", "simhash_pairs", "jaccard_pairs",
+    "embedding_near_dup", "alert_fusion",
 }
 # Judge-cleared via the independent tools/oracle_check.py sweep recorded in
 # VERDICT.md round 2 — they have exact-oracle evidence, so they yield their
 # window slot to the names that have none.
 _JUDGE_CHECKED_R02 = {
-    "pagerank_bipartite", "scd2_intervals", "interpolate_linear",
-    "decontaminate_ngram_overlap", "multimodal_resize", "triangle_count",
-    "source_mixture_resample", "ntile_deciles",
+    "pagerank_bipartite", "decontaminate_ngram_overlap", "multimodal_resize",
+    "triangle_count", "source_mixture_resample", "ntile_deciles",
 }
 
 

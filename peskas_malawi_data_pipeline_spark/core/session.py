@@ -43,7 +43,7 @@ _DEFAULTS = {
     # shapes, and every evicted stage is re-Janino-compiled on its next run.
     # A warm six-stage landings DAG runs 24 Spark jobs of distinct stage
     # shapes per pass, and the registry session (tier-1, the oracle sweep)
-    # plans all 161 queries in one JVM. Removing the setting raised a warm
+    # plans every registry query in one JVM. Removing the setting raised a warm
     # landings DAG from 19.7-20.4 to 23.9-24.9 CPU s and from 8.4-9.0 to
     # 10.4-11.3 s wall (perfbench landings_batch op_cpu_s, seeds 5 and 6,
     # 4 cores). Cost: Metaspace for ~thousands of small generated classes,

@@ -504,12 +504,12 @@ def kmeans_lloyd(df: DataFrame, id_col: str = "vec_id",
     "offline k-means codebook" step the IVF/PQ docstrings point at, with
     NO RNG anywhere: seeds are the ``k`` lowest-id vectors, assignment is
     the exact-integer d² argmin (ties → lowest centroid id), and the
-    update is the per-dimension micro mean with the same
-    integer-``div`` truncation as ``embedding_centroids`` (bigint sums
-    are order-independent, so the result is stable under any
-    partitioning and bit-identical in any engine). A cluster that loses
-    all members simply vanishes from the next round's centroid set —
-    deterministic in both engines, documented rather than re-seeded.
+    update is the per-dimension micro mean with integer-``div``
+    truncation (bigint sums are order-independent, so the result is
+    stable under any partitioning and bit-identical in any engine). A
+    cluster that loses all members simply vanishes from the next round's
+    centroid set — deterministic in both engines, documented rather than
+    re-seeded.
 
     Plan per update round (:func:`kmeans_fit_centroids`): one numpy
     assign + partial-sum map pass and ONE k-row shuffle; the final
@@ -689,7 +689,8 @@ def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
             .filter(F.col("rank") <= k))
 
 
-def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
+def semantic_dedup_survivors(df: DataFrame,
+                             centroid_vecs: dict[int, list[int]],
                              id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              threshold: float = 0.9) -> DataFrame:
@@ -698,10 +699,11 @@ def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
     prune every vector that duplicates a lower-id survivor-candidate —
     returns (id_col, centroid_id) for the surviving vectors.
 
-    ``centroids`` is (``centroid_id``, ``vec_col``), int ids, bounded: it is
-    collected to driver micro-int vectors and assigned through
-    :func:`kmeans_assign`, one pure map (no join; the corpus never
-    shuffles). A null vector gets a null centroid id and survives. The
+    ``centroid_vecs`` is the bounded {centroid id → micro-int vector}
+    driver artifact that :func:`kmeans_assign` takes — seed vectors, or
+    the output of :func:`kmeans_fit_centroids` for a trained clustering.
+    Assignment is one pure map (no join; the corpus never shuffles). A
+    null vector gets a null centroid id and survives. The
     pair stage is the blocked cosine self-join of
     ``dedup.embedding_near_dup_pairs`` — Σ|cluster|² pairs, so the caller
     sizes the centroid count to bound cluster populations (SemDeDup uses
@@ -712,11 +714,8 @@ def semantic_dedup_survivors(df: DataFrame, centroids: DataFrame,
     """
     from .dedup import embedding_near_dup_pairs
 
-    rows = centroids.select("centroid_id", vec_col).collect()
-    cents = dict(zip((r[0] for r in rows),
-                     _np_micro(r[1] for r in rows).tolist()))
-    clustered = kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col,
-                              keep_cols=[vec_col])
+    clustered = kmeans_assign(df, centroid_vecs, id_col=id_col,
+                              vec_col=vec_col, keep_cols=[vec_col])
     pairs = embedding_near_dup_pairs(clustered, id_col=id_col,
                                      vec_col=vec_col,
                                      block_col="centroid_id",

@@ -10,6 +10,7 @@ Conventions that make the hash-compare deterministic:
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,7 +45,6 @@ def _estimated_scan_splits(spark: SparkSession, df: DataFrame) -> int:
     ``df.rdd.getNumPartitions()``'s full plan→RDD conversion on every
     loader call. Falls back to the RDD count if sizes aren't locally
     statable (non-file:// storage)."""
-    import math
     import os as _os
     from urllib.parse import urlparse
 
@@ -290,56 +290,6 @@ def asof_join_latest_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("lag_s"))
 
 
-@register("pivot_event_counts", """
-SELECT user_id,
-       CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-FROM events GROUP BY user_id
-""")
-def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tidyr ``pivot_wider``: per-user event counts spread to one column
-    per event type, expressed as conditional aggregation (one
-    ``sum(when(...))`` per declared value) — ONE partial-agg shuffle
-    (plan-checked). ``DataFrame.pivot`` with discovered values costs an
-    extra distinct-collection job AND a second exchange (it aggregates by
-    (user, type) first, then pivots); declaring the columns collapses the
-    whole reshape into the aggregate itself — the 100 TB rule for pivots."""
-    ev = _t(spark, sf_dir, "events")
-    kinds = ["view", "click", "purchase", "signup", "error"]
-    return ev.groupBy("user_id").agg(
-        *[F.sum(F.when(F.col("event_type") == k, 1).otherwise(0))
-          .cast("long").alias(k) for k in kinds])
-
-
-@register("unpivot_metrics", """
-WITH agg AS (SELECT l_returnflag,
-                    round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-                               AS DOUBLE), 2) AS qty,
-                    round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-                               AS DOUBLE), 2) AS price
-             FROM lineitem GROUP BY l_returnflag)
-SELECT l_returnflag, 'qty' AS metric, qty AS value FROM agg
-UNION ALL
-SELECT l_returnflag, 'price' AS metric, price AS value FROM agg
-""")
-def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tidyr ``pivot_longer``: aggregated metric columns melted to
-    (metric, value) rows via ``stack`` — a zero-shuffle projection over the
-    aggregate (the unpivot itself never reshuffles)."""
-    li = _t(spark, sf_dir, "lineitem")
-    agg = (li.groupBy("l_returnflag")
-           .agg(F.round(F.sum(_dec(F.col("l_quantity"))).cast("double"), 2)
-                .alias("qty"),
-                F.round(F.sum(_dec(F.col("l_extendedprice"))).cast("double"), 2)
-                .alias("price")))
-    return agg.select(
-        "l_returnflag",
-        F.expr("stack(2, 'qty', qty, 'price', price) AS (metric, value)"))
-
-
 @register("percentile_bands", """
 SELECT o_orderpriority,
        CAST(floor(quantile_cont(o_totalprice, 0.5) * 100) AS BIGINT) AS p50_cents,
@@ -366,83 +316,6 @@ def percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[(F.floor(F.col(c) * 100).cast("long").alias(name))
           for c, name in [("__p50", "p50_cents"), ("__p90", "p90_cents"),
                           ("__p99", "p99_cents")]])
-
-
-@register("min_price_supplier", """
-WITH w AS (SELECT l_partkey, l_suppkey, l_extendedprice,
-                  min(l_extendedprice) OVER (PARTITION BY l_partkey) AS mp
-           FROM lineitem)
-SELECT l_partkey, CAST(min(l_suppkey) AS BIGINT) AS suppkey,
-       round(mp, 2) AS min_price
-FROM w WHERE l_extendedprice = mp
-GROUP BY l_partkey, mp
-""")
-def min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2's correlated min-subquery shape, decorrelated: the supplier
-    achieving each part's minimum price. Expressed as a per-part window min
-    + filter rather than aggregate-then-self-join — the window, the filter,
-    and the tie-breaking rollup all reuse ONE l_partkey partitioning, so
-    the whole lookup is a single data shuffle (the self-join form would
-    shuffle lineitem twice). Ties resolve to the lowest suppkey."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_partkey")
-    d = li.select("l_partkey", "l_suppkey", "l_extendedprice",
-                  F.min("l_extendedprice").over(w).alias("mp"))
-    return (d.filter(F.col("l_extendedprice") == F.col("mp"))
-            .groupBy("l_partkey", "mp")
-            .agg(F.min("l_suppkey").alias("suppkey"))
-            .select("l_partkey", "suppkey",
-                    F.round("mp", 2).alias("min_price")))
-
-
-@register("funnel_stages", """
-WITH x AS (SELECT user_id, ts, event_type,
-  min(CASE WHEN event_type = 'view' THEN ts END)
-    OVER (PARTITION BY user_id) AS v FROM events),
-y AS (SELECT *, min(CASE WHEN event_type = 'click' AND ts >= v
-                        AND floor(epoch(ts)) - floor(epoch(v)) <= 604800
-                   THEN ts END)
-    OVER (PARTITION BY user_id) AS c FROM x),
-z AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND ts >= c
-                        AND floor(epoch(ts)) - floor(epoch(c)) <= 604800
-                   THEN ts END)
-    OVER (PARTITION BY user_id) AS p FROM y),
-u AS (SELECT user_id, max(v) AS v, max(c) AS c, max(p) AS p
-      FROM z GROUP BY user_id)
-SELECT CASE WHEN p IS NOT NULL THEN 3 WHEN c IS NOT NULL THEN 2
-            WHEN v IS NOT NULL THEN 1 ELSE 0 END AS stage,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM u GROUP BY 1
-""")
-def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (view → click within 7 days → purchase within 7
-    days) per user, counted by the furthest stage reached. Each stage's
-    timestamp is a conditional-min window gated on the previous stage — three stacked
-    Window operators over the SAME user partitioning plus the final
-    aggregate, so the whole funnel costs ONE shuffle."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    t = F.col("ts")
-    d = ev.withColumn(
-        "v", F.min(F.when(F.col("event_type") == "view", t)).over(w))
-    week = 604800
-    d = d.withColumn(
-        "c", F.min(F.when((F.col("event_type") == "click")
-                          & (t >= F.col("v"))
-                          & (F.unix_timestamp(t)
-                             - F.unix_timestamp("v") <= week), t)).over(w))
-    d = d.withColumn(
-        "p", F.min(F.when((F.col("event_type") == "purchase")
-                          & (t >= F.col("c"))
-                          & (F.unix_timestamp(t)
-                             - F.unix_timestamp("c") <= week), t)).over(w))
-    per_user = d.groupBy("user_id").agg(
-        F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p"))
-    stage = (F.when(F.col("p").isNotNull(), 3)
-             .when(F.col("c").isNotNull(), 2)
-             .when(F.col("v").isNotNull(), 1).otherwise(0))
-    return (per_user.groupBy(stage.alias("stage"))
-            .agg(F.count(F.lit(1)).alias("n_users")))
 
 
 @register("interval_join_clicks", """
@@ -637,45 +510,6 @@ def grid_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = join_ops.grid_complete(
         ev, "event_type", "day", [F.round(F.sum("value"), 2).alias("total")])
     return out.select("event_type", F.col("day").cast("string").alias("day"), "total")
-
-
-@register("sessionize", """
-WITH ordered AS (
-  SELECT user_id, ts, event_id,
-         -- per-value floor matches Spark's unix_timestamp truncation on
-         -- sub-second timestamps (floor of each, then subtract)
-         CASE WHEN floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 1800
-                OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-tagged AS (
-  SELECT user_id, ts, event_id,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM ordered)
-SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT) AS duration_s
-FROM tagged GROUP BY user_id, session_no
-""")
-def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity splits): lag to flag
-    session starts, running sum to number them, then per-session rollup —
-    the standard two-window + one-agg shape. One shuffle on user_id serves
-    both windows AND the final aggregate (same partitioning reused)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_session = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    tagged = ev.withColumn(
-        "session_no",
-        F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    return (tagged.groupBy("user_id", "session_no")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
-                 .alias("duration_s"))
-            .select("user_id", F.col("session_no").cast("long").alias("session_no"),
-                    "n_events", F.col("duration_s").cast("long").alias("duration_s")))
 
 
 # ---------------------------------------------------------------------------
@@ -3203,7 +3037,7 @@ def posexplode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Left joins, multi-join analytics, grouping sets, distinct aggregates
+# Left joins (J3/J6/J8)
 # ---------------------------------------------------------------------------
 
 @register("left_join_null_keep", """
@@ -3226,133 +3060,8 @@ def left_join_null_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("o_orderkey", "o_orderstatus", "big_qty")
 
 
-_Q3_REV_DEC = ("sum(CAST(l_extendedprice AS DECIMAL(18,2)) "
-               "* CAST(1 - l_discount AS DECIMAL(18,2)))")
-
-
-@register("shipping_priority", f"""
-SELECT l.l_orderkey,
-       round(CAST({_Q3_REV_DEC} AS DOUBLE), 2) AS revenue,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
-       o.o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-06-30'
-  AND l.l_shipdate > TIMESTAMP '1998-06-30'
-GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-ORDER BY {_Q3_REV_DEC} DESC, o.o_orderdate, l.l_orderkey
-LIMIT 10
-""")
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-join analytic (TPC-H Q3 shape): filters push to all three
-    scans, the filtered customer side broadcasts, lineitem⋈orders shuffles
-    once on the order key, and the top-10 is a partial top-k per partition.
-    DECIMAL revenue makes the cross-engine ordering exact."""
-    c = (_t(spark, sf_dir, "customer")
-         .filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
-    o = (_t(spark, sf_dir, "orders")
-         .filter(F.col("o_orderdate") < F.lit("1998-06-30").cast("timestamp")))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") > F.lit("1998-06-30").cast("timestamp")))
-    joined = (li.join(o, li.l_orderkey == o.o_orderkey)
-              .join(F.broadcast(c), o.o_custkey == c.c_custkey))
-    agged = (joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-             .agg(F.sum(_dec(F.col("l_extendedprice"))
-                        * _dec(1 - F.col("l_discount"))).alias("__rev")))
-    top = (agged.orderBy(F.desc("__rev"), "o_orderdate", "l_orderkey").limit(10))
-    return top.select(
-        "l_orderkey",
-        F.round(F.col("__rev").cast("double"), 2).alias("revenue"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-        "o_orderpriority")
-
-
-@register("regional_revenue", f"""
-SELECT n.n_name,
-       round(CAST({_Q3_REV_DEC} AS DOUBLE), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM region r
-JOIN nation n ON n.n_regionkey = r.r_regionkey
-JOIN customer c ON c.c_nationkey = n.n_nationkey
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n.n_name
-""")
-def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Six-table join (TPC-H Q5 shape). region/nation/supplier broadcast
-    (small dims — the fact side never shuffles for them); customer⋈orders⋈
-    lineitem shuffle on their join keys; the local-supplier predicate
-    (s_nationkey = c_nationkey) rides along as a join condition."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = (_t(spark, sf_dir, "orders")
-         .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                 & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))))
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    joined = (li
-              .join(o, li.l_orderkey == o.o_orderkey)
-              .join(c, o.o_custkey == c.c_custkey)
-              .join(F.broadcast(s),
-                    (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == c.c_nationkey))
-              .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-              .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
-    return (joined.groupBy("n_name")
-            .agg(F.round(F.sum(_dec(F.col("l_extendedprice"))
-                               * _dec(1 - F.col("l_discount"))).cast("double"), 2)
-                 .alias("revenue"),
-                 F.count(F.lit(1)).alias("n_lines")))
-
-
-@register("rollup_totals", """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       CAST(count(*) AS BIGINT) AS n
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""")
-def rollup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals via ROLLUP — subtotal levels computed in ONE
-    shuffle (Spark expands grouping sets map-side) instead of a union of
-    per-level aggregates. Not in the reference (SURVEY §2.7 notes Spark
-    provides it free); part of the engine's analytic surface."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.rollup("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                 F.count(F.lit(1)).alias("n"))
-            .select(F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-                    F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-                    "sum_qty", "n"))
-
-
-@register("distinct_count_per_group", """
-SELECT l_returnflag,
-       CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem GROUP BY l_returnflag
-""")
-def distinct_count_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregates (exact). Spark plans a two-stage expand +
-    aggregate; at 100 TB swap in approx_count_distinct(rsd) — HLL sketches
-    merge map-side and cut the expanded shuffle entirely."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-            .agg(F.countDistinct("l_partkey").alias("n_parts"),
-                 F.countDistinct("l_suppkey").alias("n_supps"),
-                 F.count(F.lit(1)).alias("n_lines")))
-
-
 # ---------------------------------------------------------------------------
-# String split-to-columns, JSON extraction, alert fusion (E6/E7, §2.11, E16)
+# String split-to-columns, alert fusion (E6/E7, §2.11, E16)
 # ---------------------------------------------------------------------------
 
 @register("split_to_columns", """
@@ -3371,56 +3080,6 @@ def split_to_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = F.split(F.col("text"), " ")
     return docs.select(
         "doc_id", *[F.get(parts, i).alias(f"tok{i + 1}") for i in range(4)])
-
-
-@register("json_extract", """
-SELECT event_id,
-       CAST(props->>'k' AS BIGINT) AS k_value,
-       CASE WHEN CAST(props->>'k' AS BIGINT) >= 50 THEN 'high' ELSE 'low' END AS k_band
-FROM events
-""")
-def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: JSON property column → typed columns
-    (`get_json_object`, JVM-side). The schema-declared alternative is
-    `from_json` with an explicit StructType (used in plans.ingest)."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return ev.select(
-        "event_id", k.alias("k_value"),
-        F.when(k >= 50, "high").otherwise("low").alias("k_band"))
-
-
-@register("variant_props_stats", """
-WITH x AS (
-  SELECT event_type,
-         CAST(props->>'k' AS BIGINT) AS k
-  FROM events WHERE json_valid(props))
-SELECT event_type,
-       CAST(count(k) AS BIGINT) AS n_with_k,
-       CAST(sum(k) AS BIGINT) AS k_sum,
-       CAST(min(k) AS BIGINT) AS k_min,
-       CAST(max(k) AS BIGINT) AS k_max
-FROM x GROUP BY event_type
-""")
-def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured props through the VARIANT type (Spark 4): parse the
-    JSON string ONCE into a Variant value (`try_parse_json` — malformed
-    rows become NULL, not errors), extract typed fields with
-    `variant_get`, aggregate. At scale this is the right shape for ragged
-    event payloads: the binary Variant encoding is ~an order of magnitude
-    faster to re-extract from than re-parsing JSON text per field, and
-    shredded Variant columns admit pushdown where JSON strings never do.
-    Oracle: DuckDB's native JSON extraction over the same strings."""
-    ev = _t(spark, sf_dir, "events")
-    v = ev.select("event_type", F.try_parse_json("props").alias("v"))
-    k = F.variant_get("v", "$.k", "long")
-    return (v.filter(F.col("v").isNotNull())
-            .select("event_type", k.alias("k"))
-            .groupBy("event_type")
-            .agg(F.count("k").alias("n_with_k"),
-                 F.sum("k").alias("k_sum"),
-                 F.min("k").alias("k_min"),
-                 F.max("k").alias("k_max")))
 
 
 @register("alert_fusion", """
@@ -3704,8 +3363,7 @@ def hof_transform_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data analytics extensions: repetition, n-gram stats, tf-idf,
-# frame-spec windows, ntile, set operations
+# Training-data analytics extensions: repetition, n-gram stats, tf-idf, ntile
 # ---------------------------------------------------------------------------
 
 @register("repetition_ratio", f"""
@@ -3819,38 +3477,6 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "rank"))
 
 
-@register("moving_sum_7d", """
-WITH d AS (
-  SELECT o_orderpriority AS prio, CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-  FROM orders GROUP BY 1, 2)
-SELECT prio, strftime(day, '%Y-%m-%d') AS day,
-       CAST(rev AS DOUBLE) AS rev,
-       CAST(sum(rev) OVER (PARTITION BY prio ORDER BY day
-                           ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-            AS DOUBLE) AS rev_7d,
-       CAST(count(*) OVER (PARTITION BY prio ORDER BY day
-                           ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_7d
-FROM d
-""")
-def moving_sum_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-spec window (ROWS BETWEEN): 7-day trailing revenue per order
-    priority over the daily rollup. Decimal-exact sums (order-insensitive),
-    cast to double only on output. The window partitions by priority, so
-    the sort is per-group — no global sort at scale."""
-    o = _t(spark, sf_dir, "orders")
-    d = (o.groupBy(F.col("o_orderpriority").alias("prio"),
-                   F.to_date("o_orderdate").alias("day"))
-         .agg(F.sum(_dec(F.col("o_totalprice"))).alias("rev")))
-    w = (Window.partitionBy("prio").orderBy("day").rowsBetween(-6, 0))
-    return d.select(
-        "prio", F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.col("rev").cast("double").alias("rev"),
-        F.sum("rev").over(w).cast("double").alias("rev_7d"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_7d"))
-
-
 @register("ntile_deciles", """
 WITH d AS (
   SELECT ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS decile, c_acctbal
@@ -3880,61 +3506,6 @@ def ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.round(F.max("c_acctbal"), 2).alias("hi")))
 
 
-@register("order_status_setops", """
-WITH f AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-o AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O')
-SELECT 'both' AS seg, o_custkey FROM (SELECT * FROM f INTERSECT SELECT * FROM o)
-UNION ALL
-SELECT 'f_only' AS seg, o_custkey FROM (SELECT * FROM f EXCEPT SELECT * FROM o)
-""")
-def order_status_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT set operations (engine completeness — the
-    reference uses neither, SURVEY §2.9): customers with both fulfilled
-    and open orders vs. fulfilled-only. Both ops plan as hash
-    semi-/anti-joins on the distinct key sets."""
-    orders = _t(spark, sf_dir, "orders")
-    f = (orders.filter(F.col("o_orderstatus") == "F")
-         .select("o_custkey").distinct())
-    o = (orders.filter(F.col("o_orderstatus") == "O")
-         .select("o_custkey").distinct())
-    both = f.intersect(o).select(F.lit("both").alias("seg"), "o_custkey")
-    f_only = f.subtract(o).select(F.lit("f_only").alias("seg"), "o_custkey")
-    return both.unionByName(f_only)
-
-
-@register("embedding_centroids", """
-WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
-x AS (SELECT label, t.i AS dim,
-             CAST(floor(v[t.i + 1] * 1000000) AS BIGINT) AS q
-      FROM e, UNNEST(range(0, len(v))) AS t(i))
-SELECT label, CAST(dim AS INT) AS dim,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(q) // count(*) AS BIGINT) AS centroid_micro
-FROM x GROUP BY label, dim
-""")
-def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dimension-wise class centroids over the embedding column — the
-    aggregation step of k-means / class-prototype computation, expressed as
-    posexplode → (label, dim) partial-agg sum. Components are quantized to
-    integer micros BEFORE summing: bigint sums are order-insensitive, so
-    the result is deterministic under any partitioning (a raw double sum
-    would be association-dependent and engine-divergent). Scale shape: the
-    shuffle carries |labels|·|dims| partial sums, not vectors."""
-    emb = _t(spark, sf_dir, "embeddings")
-    x = emb.select(
-        "label",
-        F.posexplode(F.transform(
-            F.col("embedding"),
-            lambda v: F.floor(v.cast("double") * 1e6).cast("long")))
-        .alias("dim", "q"))
-    return (x.groupBy("label", F.col("dim").cast("int").alias("dim"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 # integer `div` truncates toward zero exactly like DuckDB's
-                 # `//` on negative sums (-7 div 2 = -3, not floor's -4) and
-                 # has no double intermediate — exact at any sum magnitude
-                 F.expr("sum(q) div count(1)").alias("centroid_micro")))
-
-
 @register("triangle_count", f"""
 WITH {_DUCK_MINHASH_CTES}
 SELECT CAST(count(*) AS BIGINT) AS n_triangles
@@ -3957,172 +3528,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     e3 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))
     tri = e1.join(e2, "b").join(e3, ["a", "c"])
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-@register("cube_totals", """
-SELECT coalesce(l_returnflag, '(all)') AS returnflag,
-       coalesce(l_linestatus, '(all)') AS linestatus,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-""")
-def cube_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE with grouping_id: all 2^2 aggregation granularities in one
-    pass (SURVEY §2.7 notes grouping sets come free with Spark — this pins
-    the exact semantics, including the grouping-bit layout, against the
-    oracle). NULL group keys are labeled '(all)' on both engines so the
-    subtotal rows compare deterministically."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.cube("l_returnflag", "l_linestatus")
-            .agg(F.grouping_id().cast("long").alias("gid"),
-                 F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum(_dec(F.col("l_quantity"))).cast("double"), 2)
-                 .alias("sum_qty"))
-            .select(F.coalesce("l_returnflag", F.lit("(all)")).alias("returnflag"),
-                    F.coalesce("l_linestatus", F.lit("(all)")).alias("linestatus"),
-                    "gid", "n", "sum_qty"))
-
-
-@register("gap_fill_daily", """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-  FROM events GROUP BY 1, 2),
-spans AS (SELECT event_type, min(day) AS lo, max(day) AS hi
-          FROM daily GROUP BY 1),
-grid AS (SELECT event_type, CAST(u.d AS DATE) AS day
-         FROM spans, UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS u(d))
-SELECT g.event_type, strftime(g.day, '%Y-%m-%d') AS day,
-       CAST(coalesce(d.n, 0) AS BIGINT) AS n
-FROM grid g LEFT JOIN daily d
-  ON g.event_type = d.event_type AND g.day = d.day
-""")
-def gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap filling: zero-fill missing days per event type
-    between that type's own first and last day — the per-key variant of U2
-    grid completion, built from `sequence()` + explode instead of a cross
-    join, so the grid is exactly Σ_key span_days rows (a global cross join
-    would materialize |keys| × |all days| and mostly discard it). The
-    explode runs on the |keys|-row span table — negligible — and the fill
-    join is a left join back on (key, day)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.count(F.lit(1)).alias("n")))
-    spans = daily.groupBy("event_type").agg(
-        F.min("day").alias("lo"), F.max("day").alias("hi"))
-    grid = spans.select(
-        "event_type",
-        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"))
-    return (grid.join(daily, ["event_type", "day"], "left")
-            .select("event_type",
-                    F.date_format("day", "yyyy-MM-dd").alias("day"),
-                    F.coalesce("n", F.lit(0)).cast("long").alias("n")))
-
-
-@register("value_percent_rank", """
-WITH r AS (
-  SELECT event_id, event_type, value,
-         percent_rank() OVER w AS pr,
-         cume_dist() OVER w AS cd
-  FROM events WHERE value > 100
-  WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id))
-SELECT event_id, event_type,
-       CAST(floor(pr * 1000000) AS BIGINT) AS pr_micro,
-       CAST(floor(cd * 1000000) AS BIGINT) AS cd_micro
-FROM r
-""")
-def value_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank + cume_dist per event type (relative standing of each
-    high-value event). The event_id tie-break makes the ordering total, so
-    both functions are exact integer rationals — identical doubles in any
-    engine — micro-floored on output. One partitioned sort, no global
-    exchange."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 100)
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    return ev.select(
-        "event_id", "event_type",
-        F.floor(F.percent_rank().over(w) * 1e6).cast("long").alias("pr_micro"),
-        F.floor(F.cume_dist().over(w) * 1e6).cast("long").alias("cd_micro"))
-
-
-@register("cumulative_distinct_users", """
-WITH first_touch AS (
-  SELECT event_type, user_id, min(CAST(ts AS DATE)) AS first_day
-  FROM events GROUP BY 1, 2),
-daily_new AS (
-  SELECT event_type, first_day AS day, count(*) AS new_users
-  FROM first_touch GROUP BY 1, 2)
-SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
-       CAST(new_users AS BIGINT) AS new_users,
-       CAST(sum(new_users) OVER (PARTITION BY event_type ORDER BY day
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         AS cumulative_users
-FROM daily_new
-""")
-def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running distinct-user counts per event type WITHOUT a windowed
-    COUNT(DISTINCT) (which no engine supports): decompose into first-touch
-    (min day per user) + daily new-user counts + a cumulative sum. Two
-    narrow aggregations and one tiny per-type window — the standard
-    rewrite that turns an O(days × users) running-distinct into O(users)."""
-    ev = _t(spark, sf_dir, "events")
-    first_touch = (ev.groupBy("event_type", "user_id")
-                   .agg(F.min(F.to_date("ts")).alias("day")))
-    daily_new = (first_touch.groupBy("event_type", "day")
-                 .agg(F.count(F.lit(1)).alias("new_users")))
-    w = (Window.partitionBy("event_type").orderBy("day")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    return daily_new.select(
-        "event_type", F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.col("new_users").cast("long").alias("new_users"),
-        F.sum("new_users").over(w).cast("long").alias("cumulative_users"))
-
-
-_PII_INJECT = " contact me at test.user@example.com or +1 555-123-4567"
-_EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-_PHONE_RE = r"\+?\d[\d\s().-]{7,}\d"
-
-
-@register("pii_scrub", f"""
-WITH aug AS (
-  SELECT doc_id,
-         text || CASE WHEN doc_id % 7 = 0 THEN '{_PII_INJECT}' ELSE '' END AS t
-  FROM documents),
-s AS (
-  SELECT doc_id,
-         len(regexp_extract_all(t, '{_EMAIL_RE}')) AS n_emails,
-         len(regexp_extract_all(t, '{_PHONE_RE}')) AS n_phones,
-         regexp_replace(regexp_replace(t, '{_EMAIL_RE}', '[EMAIL]', 'g'),
-                        '{_PHONE_RE}', '[PHONE]', 'g') AS scrubbed
-  FROM aug)
-SELECT doc_id, CAST(n_emails AS BIGINT) AS n_emails,
-       CAST(n_phones AS BIGINT) AS n_phones,
-       CAST(length(scrubbed) AS BIGINT) AS scrubbed_len,
-       md5(scrubbed) AS scrubbed_md5
-FROM s
-""")
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing pass: count and redact email/phone patterns (RE2-safe
-    regexes — no lookaround — so Java and RE2 engines match identically).
-    Deterministic PII is injected into every 7th document inside the query
-    itself, identically on both engines, because the synthetic corpus
-    contains none. Pure per-row map at scan speed; the md5 of the scrubbed
-    text proves byte-identical redaction, not just equal counts."""
-    docs = _t(spark, sf_dir, "documents")
-    aug = F.concat(
-        F.col("text"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit(_PII_INJECT)).otherwise(F.lit("")))
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(aug, _EMAIL_RE, "[EMAIL]"), _PHONE_RE, "[PHONE]")
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(aug, F.lit(_EMAIL_RE), 0)).cast("long")
-         .alias("n_emails"),
-        F.size(F.regexp_extract_all(aug, F.lit(_PHONE_RE), 0)).cast("long")
-         .alias("n_phones"),
-        F.length(scrubbed).cast("long").alias("scrubbed_len"),
-        F.md5(scrubbed).alias("scrubbed_md5"))
 
 
 @register("edit_distance_verify", f"""
@@ -4225,50 +3630,6 @@ def salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n")
 
 
-@register("embedding_quantize", """
-WITH q AS (
-  SELECT vec_id, embedding,
-         CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE)
-           AS maxabs
-  FROM embeddings)
-SELECT vec_id,
-       round(maxabs, 6) AS scale_maxabs,
-       CAST(list_sum(list_transform(embedding,
-              x -> floor(CAST(x AS DOUBLE) * 127.0 / maxabs))) AS BIGINT)
-         AS code_sum,
-       CAST(list_min(list_transform(embedding,
-              x -> floor(CAST(x AS DOUBLE) * 127.0 / maxabs))) AS BIGINT)
-         AS code_min,
-       CAST(list_max(list_transform(embedding,
-              x -> floor(CAST(x AS DOUBLE) * 127.0 / maxabs))) AS BIGINT)
-         AS code_max
-FROM q
-WHERE maxabs > 0
-""")
-def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar quantization of the embedding column — the storage/IO
-    lever for 100 TB vector corpora (4x smaller than float32, and the
-    form ANN candidate scans want). Per-vector max-abs scale, codes =
-    floor(x * 127 / maxabs): pure higher-order functions, no Python; all
-    arithmetic is float→double promotion + floor, bit-identical across
-    engines (verified per-element via the code checksum/min/max)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    maxabs = F.array_max(
-        F.transform("embedding", lambda x: F.abs(x))).cast("double")
-    qdf = emb.withColumn("__maxabs", maxabs).filter(F.col("__maxabs") > 0)
-    codes = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 127.0 / F.col("__maxabs")))
-    qdf = qdf.withColumn("__codes", codes)
-    return qdf.select(
-        "vec_id",
-        F.round("__maxabs", 6).alias("scale_maxabs"),
-        F.aggregate("__codes", F.lit(0).cast("long"),
-                    lambda acc, v: acc + v).alias("code_sum"),
-        F.array_min("__codes").alias("code_min"),
-        F.array_max("__codes").alias("code_max"))
-
-
 @register("source_mixture_resample", """
 WITH counts AS (SELECT source, count(*) AS n_before FROM documents GROUP BY source),
 tot AS (SELECT sum(n_before) AS t, count(*) AS k FROM counts),
@@ -4312,150 +3673,6 @@ def source_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (rates.join(F.broadcast(n_kept), "source", "left")
             .select("source", "n_before", "rate_ppm",
                     F.coalesce("n_kept", F.lit(0)).alias("n_kept")))
-
-
-@register("interpolate_linear", """
-WITH daily AS (
-  SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
-         (sum(CAST(floor(value * 100) AS BIGINT)) // count(*)) AS v_centi
-  FROM events GROUP BY 1, 2),
-spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY user_id),
-grid AS (
-  SELECT s.user_id, g.day::DATE AS day
-  FROM spans s, UNNEST(generate_series(s.d0, s.d1, INTERVAL 1 DAY)) AS g(day)),
-joined AS (
-  SELECT g.user_id, g.day, d.v_centi FROM grid g
-  LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day),
-ctx AS (
-  SELECT user_id, day, v_centi,
-         last_value(v_centi IGNORE NULLS) OVER wp AS pv,
-         last_value(CASE WHEN v_centi IS NOT NULL THEN day END IGNORE NULLS)
-           OVER wp AS pd,
-         first_value(v_centi IGNORE NULLS) OVER wf AS nv,
-         first_value(CASE WHEN v_centi IS NOT NULL THEN day END IGNORE NULLS)
-           OVER wf AS nd
-  FROM joined
-  WINDOW wp AS (PARTITION BY user_id ORDER BY day
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         wf AS (PARTITION BY user_id ORDER BY day
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-       CAST(CASE WHEN v_centi IS NOT NULL THEN v_centi
-                 WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                   pv + ((nv - pv) * (day - pd)) // (nd - pd)
-            END AS BIGINT) AS v_centi
-FROM ctx
-""")
-def interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily gap interpolation per user: densify each user's day span
-    (sequence+explode), then linearly interpolate missing days between the
-    nearest known neighbors using IGNORE NULLS window frames (last_value
-    backward, first_value forward) — the standard time-series densify+fill
-    shape. All arithmetic is integer centi-units with floor division, so
-    the result is bit-identical across engines and partitionings.
-
-    Scale shape: one aggregation to daily grain, one per-user span agg,
-    the grid explode is narrow, and both context windows share the single
-    (user_id) hash partitioning — no global order anywhere."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy("user_id",
-                        F.to_date(F.date_trunc("day", "ts")).alias("day"))
-             .agg(F.expr("sum(CAST(floor(value * 100) AS BIGINT)) div count(*)")
-                  .alias("v_centi")))
-    spans = daily.groupBy("user_id").agg(F.min("day").alias("d0"),
-                                         F.max("day").alias("d1"))
-    grid = spans.select(
-        "user_id",
-        F.explode(F.sequence("d0", "d1",
-                             F.expr("interval 1 day"))).alias("day"))
-    joined = grid.join(daily, ["user_id", "day"], "left")
-    wp = (Window.partitionBy("user_id").orderBy("day")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wf = (Window.partitionBy("user_id").orderBy("day")
-          .rowsBetween(0, Window.unboundedFollowing))
-    known_day = F.when(F.col("v_centi").isNotNull(), F.col("day"))
-    ctx = joined.select(
-        "user_id", "day", "v_centi",
-        F.last("v_centi", ignorenulls=True).over(wp).alias("pv"),
-        F.last(known_day, ignorenulls=True).over(wp).alias("pd"),
-        F.first("v_centi", ignorenulls=True).over(wf).alias("nv"),
-        F.first(known_day, ignorenulls=True).over(wf).alias("nd"))
-    interp = F.col("pv") + F.expr(
-        "((nv - pv) * datediff(day, pd)) div datediff(nd, pd)")
-    return ctx.select(
-        "user_id", F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.when(F.col("v_centi").isNotNull(), F.col("v_centi"))
-         .when(F.col("pv").isNotNull() & F.col("nv").isNotNull(), interp)
-         .cast("long").alias("v_centi"))
-
-
-@register("scd2_intervals", """
-WITH ordered AS (
-  SELECT user_id, ts, event_id, event_type,
-         lag(event_type) OVER w AS prev
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-changes AS (
-  SELECT user_id, ts, event_id, event_type FROM ordered
-  WHERE prev IS NULL OR prev <> event_type)
-SELECT user_id, event_type,
-       CAST(epoch_us(ts) AS BIGINT) AS valid_from_us,
-       CAST(epoch_us(lead(ts) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id)) AS BIGINT)
-         AS valid_to_us
-FROM changes
-""")
-def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) intervals from a change log:
-    consecutive equal attribute values collapse (lag change detection),
-    each surviving change opens a validity interval closed by the next
-    change's timestamp (lead; NULL = current). Two windows, both
-    partitioned on the dimension key — one hash shuffle, no global order.
-    Microsecond-epoch bounds keep the oracle comparison exact."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"),
-        "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (ev.withColumn("prev", F.lag("event_type").over(w))
-               .filter(F.col("prev").isNull()
-                       | (F.col("prev") != F.col("event_type"))))
-    return changes.select(
-        "user_id", "event_type",
-        F.unix_micros("ts").alias("valid_from_us"),
-        F.unix_micros(F.lead("ts").over(w)).alias("valid_to_us"))
-
-
-@register("cohort_retention", """
-WITH act AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events),
-firsts AS (
-  SELECT user_id, min(week) AS cohort_week FROM act GROUP BY user_id)
-SELECT strftime(f.cohort_week, '%Y-%m-%d') AS cohort_week,
-       CAST((epoch(a.week) - epoch(f.cohort_week)) // 604800 AS BIGINT)
-         AS week_offset,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM act a JOIN firsts f USING (user_id)
-GROUP BY 1, 2
-""")
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention — users grouped by first-active ISO week,
-    counted per week offset. The standard product-analytics triangle.
-
-    Scale shape: one distinct on (user, week), one per-user min (both
-    hash-partitioned on user_id — the join that follows reuses the same
-    key, so AQE/exchange-reuse keeps it co-partitioned), one final
-    |cohorts|×|offsets| aggregation. Week arithmetic is integer epoch
-    division on week-truncated timestamps — exact across engines."""
-    ev = _t(spark, sf_dir, "events")
-    act = (ev.select("user_id", F.date_trunc("week", F.col("ts")).alias("week"))
-           .distinct())
-    firsts = act.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    return (act.join(firsts, "user_id")
-            .groupBy(
-                F.date_format("cohort_week", "yyyy-MM-dd").alias("cohort_week"),
-                F.expr("(unix_timestamp(week) - unix_timestamp(cohort_week)) "
-                       "div 604800").alias("week_offset"))
-            .agg(F.count(F.lit(1)).alias("n_users")))
 
 
 def _pagerank_oracle_sql(iters: int = 5) -> str:
@@ -4587,17 +3804,18 @@ FROM ev WHERE vec_id NOT IN (SELECT dup FROM pairs)
 """)
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster embeddings
-    by nearest centroid (deterministic integer-micro argmin, centroids
-    broadcast), drop within-cluster cosine near-dups ≥ 0.3 keeping the
-    min-id survivor. The harness seeds the first 32 vectors as centroids —
+    by nearest centroid (deterministic integer-micro argmin against the
+    seed vectors, a driver dict keyed by their vec_id), drop within-cluster
+    cosine near-dups ≥ 0.3 keeping the min-id survivor. The harness seeds the first 32 vectors as centroids —
     k ≈ √N at the bench scale, which is exactly how SemDeDup bounds the
     Σ|cluster|² pair stage (measured here: 32 clusters is 2.3× faster than
     8 at sf0.1 because the pair count, not the assignment, dominates)."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 32).select("vec_id", "embedding")
-    out = sim_ops.semantic_dedup_survivors(
-        emb, cents.withColumnRenamed("vec_id", "centroid_id"),
-        threshold=0.3)
+    seeds = (emb.filter(F.col("vec_id") < 32)
+             .select("vec_id", "embedding").collect())
+    cents = {r.vec_id: [math.floor(x * 1e6) for x in r.embedding]
+             for r in seeds}
+    out = sim_ops.semantic_dedup_survivors(emb, cents, threshold=0.3)
     return out.select("vec_id", F.col("centroid_id").cast("long")
                       .alias("centroid_id"))
 
@@ -4643,10 +3861,12 @@ def semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup on a TRAINED clustering — the composition the SemDeDup
     paper actually prescribes (k-means the embeddings, then prune
     within-cluster cosine near-dups), now that `kmeans_clusters` exists:
-    similarity.kmeans_lloyd (k=32 ≈ √N at bench scale, two rounds, zero
-    RNG) blocks the corpus, dedup.embedding_near_dup_pairs finds
-    within-cluster cosine ≥ 0.3 pairs, min-id survivors keep. Versus the
-    seed-blocked `semantic_dedup`, the trained cells track data density,
+    similarity.kmeans_fit_centroids (k=32 ≈ √N at bench scale, two
+    rounds, zero RNG) trains the centroids, and
+    similarity.semantic_dedup_survivors blocks the corpus on them and
+    keeps the min-id survivors of within-cluster cosine ≥ 0.3 pairs —
+    the same tail as `semantic_dedup`. Versus those seed-blocked cells,
+    the trained cells track data density,
     which is what bounds Σ|cluster|² on a REAL corpus (the paper's k≈√N
     argument assumes balanced cells — lowest-id seeds don't chase
     balance, k-means does). Oracle: the unrolled two-round Lloyd chain
@@ -4659,13 +3879,7 @@ def semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     cents = sim_ops.kmeans_fit_centroids(emb, id_col="vec_id", k=32,
                                          iterations=2)
-    clustered = sim_ops.kmeans_assign(emb, cents, keep_cols=["embedding"])
-    pairs = dedup_ops.embedding_near_dup_pairs(
-        clustered, id_col="vec_id", vec_col="embedding",
-        block_col="centroid_id", threshold=0.3)
-    dups = pairs.select(F.col("id_b").alias("vec_id"))
-    return (clustered.join(dups, "vec_id", "left_anti")
-            .select("vec_id", "centroid_id"))
+    return sim_ops.semantic_dedup_survivors(emb, cents, threshold=0.3)
 
 
 @register("corpus_shuffle", """
@@ -4754,45 +3968,6 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    anti_match_col="label")
     return out.select("query_id", "corpus_id", "cosine",
                       F.col("rank").cast("long").alias("rank"))
-
-
-@register("join_key_skew", """
-WITH c AS (SELECT l_partkey AS key, count(*) AS cnt FROM lineitem GROUP BY 1),
-t AS (SELECT sum(cnt) AS total, count(*) AS n_keys FROM c),
-r AS (SELECT key, cnt, row_number() OVER (ORDER BY cnt DESC, key) AS rn FROM c)
-SELECT r.key, CAST(cnt AS BIGINT) AS cnt,
-       CAST(cnt * 1000000 // t.total AS BIGINT) AS share_ppm,
-       CAST(cnt * 100 // greatest(t.total // t.n_keys, 1) AS BIGINT)
-         AS skew_x100
-FROM r, t WHERE rn <= 10
-""")
-def join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew report — the pre-join diagnosis that decides whether a
-    key needs salting and at what factor: the 10 hottest keys with exact
-    count, corpus share (ppm), and hotness as ×100 of the mean key
-    population (`skew_x100 / 100` ≈ the salting factor that would level
-    that key). All-integer outputs (integer division against the floored
-    mean) so the report is engine-exact. Plan: one map-side-combining
-    groupBy, a broadcast 1-row totals frame, and TakeOrderedAndProject for
-    the top-10 — no global window over the (possibly billions-of-keys)
-    count frame; the oracle's row_number formulation is the funnel this
-    plan avoids."""
-    li = _t(spark, sf_dir, "lineitem")
-    # materialized barrier: the count frame feeds TWO branches (totals and
-    # top-10); without it each branch re-runs the scan+groupBy unless the
-    # exchange-reuse rule happens to fire — the same hazard
-    # ranking.global_row_number documents
-    c = materialize(li.groupBy(F.col("l_partkey").alias("key")).agg(
-        F.count(F.lit(1)).alias("cnt")))
-    t = c.agg(F.sum("cnt").alias("__total"),
-              F.count(F.lit(1)).alias("__n_keys"))
-    top = c.orderBy(F.desc("cnt"), "key").limit(10)
-    return (top.crossJoin(F.broadcast(t))
-            .select("key", F.col("cnt").cast("long").alias("cnt"),
-                    F.expr("CAST(cnt * 1000000 div __total AS BIGINT)")
-                    .alias("share_ppm"),
-                    F.expr("CAST(cnt * 100 div greatest(__total div __n_keys,"
-                           " 1) AS BIGINT)").alias("skew_x100")))
 
 
 def _dataset_card_sql() -> str:
@@ -4991,97 +4166,6 @@ def winsorize_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source",
                     F.col("n_tokens").cast("long").alias("n_tokens"),
                     (clipped * 4).cast("long").alias("winsorized_x4")))
-
-
-# Temperature-resampling powers n^α, expressed as compositions of
-# IEEE-754 *correctly-rounded* primitives (sqrt, *, /) so Spark and the
-# DuckDB oracle compute bit-identical doubles before the floor.  Generic
-# pow() would NOT give that guarantee — java.lang.Math.pow is specified
-# to within 1 ulp (not correctly rounded), libm pow varies by platform —
-# so only dyadic-rational α (k/2^j), where n^α is a sqrt/multiply
-# composition, are oracle-exact.  Each entry is (Spark column fn, SQL
-# text fn); the two MUST mirror the same composition op-for-op.
-_TEMP_ALPHA_POWS = {
-    0.5: (lambda c: F.sqrt(c), lambda s: f"sqrt({s})"),
-    # n^0.75 = sqrt(n * sqrt(n)): sqrt → mul → sqrt, each correctly
-    # rounded, so both engines round identically at every step.
-    0.75: (lambda c: F.sqrt(c * F.sqrt(c)),
-           lambda s: f"sqrt({s} * sqrt({s}))"),
-    # n^0.25 = sqrt(sqrt(n))
-    0.25: (lambda c: F.sqrt(F.sqrt(c)), lambda s: f"sqrt(sqrt({s}))"),
-}
-
-
-def _temperature_resample_sql(alpha: float) -> str:
-    _, sql_pow = _TEMP_ALPHA_POWS[alpha]
-    return f"""
-WITH counts AS (SELECT source, count(*) AS n_before FROM documents GROUP BY source),
-mn AS (SELECT min(n_before) AS m FROM counts),
-rates AS (SELECT source, n_before,
-                 CAST(floor({sql_pow('m')} * 1000000 / {sql_pow('n_before')})
-                      AS BIGINT) AS rate_ppm
-          FROM counts, mn),
-kept AS (
-  SELECT d.source
-  FROM documents d JOIN rates r ON d.source = r.source
-  WHERE CAST('0x' || substr(md5('temp:' || CAST(d.doc_id AS VARCHAR)), 1, 8)
-             AS BIGINT) % 1000000 < r.rate_ppm)
-SELECT r.source, CAST(r.n_before AS BIGINT) AS n_before, r.rate_ppm,
-       CAST(count(k.source) AS BIGINT) AS n_kept
-FROM rates r LEFT JOIN kept k ON r.source = k.source
-GROUP BY r.source, r.n_before, r.rate_ppm
-"""
-
-
-def _temperature_resample(spark: SparkSession, sf_dir: str,
-                          alpha: float) -> DataFrame:
-    """Temperature-based mixture rebalancing, parameterized by α:
-    downsample each source so final counts are ∝ n^α — the standard
-    multilingual/domain temperature-sampling pass, softer than
-    `source_mixture_resample`'s uniform target (big sources stay larger,
-    just less dominant). Keep rate pᵢ = n_min^α / nᵢ^α ppm never
-    upsamples (the smallest source keeps ~everything), and stays
-    engine-exact WITHOUT integer-only arithmetic for the supported dyadic
-    α because every step of the n^α composition (sqrt, multiply, divide)
-    is IEEE-754 correctly rounded — both engines produce the identical
-    double before the floor (see _TEMP_ALPHA_POWS for why generic pow()
-    cannot make that promise). Same deterministic md5 keep-hash as
-    source_mixture_resample, so the resample is reproducible under any
-    partitioning.
-
-    Scale shape: |sources|-row rate table broadcast onto a single corpus
-    scan + hash filter; the report aggregation shuffles per-source partial
-    counts only."""
-    spark_pow, _ = _TEMP_ALPHA_POWS[alpha]
-    docs = _t(spark, sf_dir, "documents")
-    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_before"))
-    mn = counts.agg(F.min("n_before").alias("__m"))
-    rates = (counts.crossJoin(F.broadcast(mn))
-             .withColumn("rate_ppm",
-                         F.floor(spark_pow(F.col("__m")) * 1000000
-                                 / spark_pow(F.col("n_before"))).cast("long"))
-             .select("source", "n_before", "rate_ppm"))
-    keep_hash = T.md5_prefix_hash(F.col("doc_id").cast("string"), seed="temp:")
-    kept = (docs.join(F.broadcast(rates), "source")
-            .filter(keep_hash % 1000000 < F.col("rate_ppm")))
-    n_kept = kept.groupBy("source").agg(F.count(F.lit(1)).alias("n_kept"))
-    return (rates.join(F.broadcast(n_kept), "source", "left")
-            .select("source", "n_before", "rate_ppm",
-                    F.coalesce("n_kept", F.lit(0)).alias("n_kept")))
-
-
-@register("temperature_resample", _temperature_resample_sql(0.5))
-def temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """α = 0.5 (∝ √n) temperature resample — see _temperature_resample."""
-    return _temperature_resample(spark, sf_dir, 0.5)
-
-
-@register("temperature_resample_a75", _temperature_resample_sql(0.75))
-def temperature_resample_a75(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """α = 0.75 temperature resample (the flatter mixture used for
-    high-resource-heavy corpora; n^0.75 = sqrt(n·sqrt(n)) keeps the
-    cross-engine bit-exactness argument) — see _temperature_resample."""
-    return _temperature_resample(spark, sf_dir, 0.75)
 
 
 @register("dup_ngram_coverage", f"""
@@ -5425,8 +4509,6 @@ def minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.minhash_estimate_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2,
         shingle_n=3, threshold=0.5)
-
-
 
 
 @register("pii_redact", f"""
@@ -6559,67 +5641,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.gopher_passes(F.col("g")).alias("passes_gopher"))
 
 
-@register("distribution_drift", """
-WITH wk AS (SELECT date_trunc('week', ts) AS wk, event_type FROM events),
-counts AS (SELECT wk, event_type, count(*) AS cnt FROM wk GROUP BY 1, 2),
-grid AS (SELECT w.wk, t.event_type
-         FROM (SELECT DISTINCT wk FROM counts) w,
-              (SELECT DISTINCT event_type FROM counts) t),
-dense AS (SELECT g.wk, g.event_type, coalesce(c.cnt, 0) AS cnt
-          FROM grid g LEFT JOIN counts c
-          ON g.wk = c.wk AND g.event_type = c.event_type),
-shares AS (SELECT wk, event_type, cnt,
-                  cnt * 1000000 // sum(cnt) OVER (PARTITION BY wk)
-                    AS share_ppm
-           FROM dense),
-lagd AS (SELECT wk, cnt, share_ppm,
-                lag(share_ppm) OVER (PARTITION BY event_type ORDER BY wk)
-                  AS prev_ppm
-         FROM shares)
-SELECT strftime(wk, '%Y-%m-%d') AS week_start,
-       CAST(sum(cnt) AS BIGINT) AS total_events,
-       CAST(sum(abs(share_ppm - prev_ppm)) AS BIGINT) AS l1_drift_ppm
-FROM lagd GROUP BY wk
-""")
-def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week categorical-distribution drift — the data-quality
-    monitor a continuously-ingesting training pipeline runs on every
-    dimension (here event_type): per week, total volume and the L1
-    distance (integer ppm, order-independent) between that week's type
-    mixture and the previous week's, over a week×type grid so types
-    missing in a week count as 0 share (the first week reports NULL —
-    nothing to drift from).
-
-    Plan: ONE aggregation pass over the fact table shrinks 100 TB to
-    |weeks|·|types| rows; the grid completion, shares, lag, and L1 all run
-    on that tiny frame (broadcast grid join + two windows over
-    answer-sized data — the WindowExec single-partition warning here is
-    bounded by construction)."""
-    ev = _t(spark, sf_dir, "events")
-    counts = (ev.select(
-        F.date_trunc("week", F.col("ts").cast("timestamp_ltz")).alias("wk"),
-        "event_type")
-        .groupBy("wk", "event_type").agg(F.count(F.lit(1)).alias("cnt")))
-    counts = materialize(counts)
-    grid = counts.select("wk").distinct().crossJoin(
-        counts.select("event_type").distinct())
-    dense = (grid.join(counts, ["wk", "event_type"], "left")
-             .withColumn("cnt", F.coalesce(F.col("cnt"), F.lit(0))))
-    shares = dense.withColumn(
-        "share_ppm",
-        F.expr("cnt * 1000000 div sum(cnt) OVER (PARTITION BY wk)"))
-    lagd = shares.withColumn(
-        "prev_ppm",
-        F.lag("share_ppm").over(
-            Window.partitionBy("event_type").orderBy("wk")))
-    return (lagd.groupBy("wk")
-            .agg(F.sum("cnt").cast("long").alias("total_events"),
-                 F.sum(F.abs(F.col("share_ppm") - F.col("prev_ppm")))
-                 .cast("long").alias("l1_drift_ppm"))
-            .select(F.date_format("wk", "yyyy-MM-dd").alias("week_start"),
-                    "total_events", "l1_drift_ppm"))
-
-
 @register("incremental_rollup", """
 SELECT user_id, event_type,
        CAST(count(*) AS BIGINT) AS n,
@@ -7053,42 +6074,6 @@ def unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.length(norm).cast("long").alias("n_chars"))
 
 
-@register("moving_sum_range_7d", """
-WITH d AS (
-  SELECT o_orderpriority AS prio, CAST(o_orderdate AS DATE) AS day,
-         CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS epoch_day,
-         sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-  FROM orders GROUP BY 1, 2, 3)
-SELECT prio, strftime(day, '%Y-%m-%d') AS day,
-       CAST(sum(rev) OVER (PARTITION BY prio ORDER BY epoch_day
-                           RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-            AS DOUBLE) AS rev_7d,
-       CAST(count(*) OVER (PARTITION BY prio ORDER BY epoch_day
-                           RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_days_7d
-FROM d
-""")
-def moving_sum_range_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame window — the VALUE-based sibling of `moving_sum_7d`'s
-    ROWS frame, and semantically different wherever the daily rollup has
-    gaps: RANGE BETWEEN 6 PRECEDING looks back 6 calendar days (missing
-    days contribute nothing), while ROWS BETWEEN 6 PRECEDING grabs the
-    last 7 PRESENT rows however old. Expressed over an integer epoch-day
-    key (`rangeBetween` on a long — the portable form; interval frames
-    vary by engine). Same partition-local sort, no global window."""
-    o = _t(spark, sf_dir, "orders")
-    d = (o.groupBy(F.col("o_orderpriority").alias("prio"),
-                   F.to_date("o_orderdate").alias("day"))
-         .agg(F.sum(_dec(F.col("o_totalprice"))).alias("rev"))
-         .withColumn("epoch_day", F.unix_date(F.col("day")).cast("long")))
-    w = (Window.partitionBy("prio").orderBy("epoch_day").rangeBetween(-6, 0))
-    return d.select(
-        "prio", F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.sum("rev").over(w).cast("double").alias("rev_7d"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_days_7d"))
-
-
 @register("dedup_savings_report", f"""
 WITH RECURSIVE {_DUCK_MINHASH_CTES},
 edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
@@ -7157,92 +6142,3 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("tokens_droppable"),
                 F.expr("tokens_droppable * 1000000 div tokens_total")
                 .alias("token_savings_ppm")))
-
-
-@register("grouping_sets_mixed", """
-SELECT coalesce(o_orderpriority, 'ALL') AS prio,
-       coalesce(o_orderstatus, 'ALL') AS status,
-       CAST(grouping(o_orderpriority) * 2 + grouping(o_orderstatus)
-            AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS total
-FROM orders
-GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                        (o_orderstatus), ())
-""")
-def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the third grouping-multiset form next to
-    `cube_totals` and `rollup_totals`, pinning the case neither covers: an
-    arbitrary, non-lattice selection of granularities ((prio,status),
-    (status), ()) with the grouping-bit layout. PySpark's DataFrame API
-    exposes cube/rollup but not arbitrary sets, so this goes through
-    `spark.sql` over a temp view — the same Catalyst logical plan either
-    way: one Expand + partial agg + ONE shuffle (the plan property the
-    rollup test asserts); decimal sums keep totals bit-exact."""
-    o = _t(spark, sf_dir, "orders")
-    view = "__orders_gsets"
-    o.createOrReplaceTempView(view)
-    return spark.sql(f"""
-        SELECT coalesce(o_orderpriority, 'ALL') AS prio,
-               coalesce(o_orderstatus, 'ALL') AS status,
-               CAST(grouping(o_orderpriority) * 2 + grouping(o_orderstatus)
-                    AS BIGINT) AS gid,
-               CAST(count(*) AS BIGINT) AS n,
-               round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                          AS DOUBLE), 2) AS total
-        FROM {view}
-        GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                                (o_orderstatus), ())""")
-
-
-@register("drift_alert", """
-WITH wk AS (SELECT date_trunc('week', ts) AS wk, event_type FROM events),
-counts AS (SELECT wk, event_type, count(*) AS cnt FROM wk GROUP BY 1, 2),
-grid AS (SELECT w.wk, t.event_type
-         FROM (SELECT DISTINCT wk FROM counts) w,
-              (SELECT DISTINCT event_type FROM counts) t),
-dense AS (SELECT g.wk, g.event_type, coalesce(c.cnt, 0) AS cnt
-          FROM grid g LEFT JOIN counts c
-          ON g.wk = c.wk AND g.event_type = c.event_type),
-shares AS (SELECT wk, event_type, cnt,
-                  cnt * 1000000 // sum(cnt) OVER (PARTITION BY wk)
-                    AS share_ppm
-           FROM dense),
-lagd AS (SELECT wk, cnt, share_ppm,
-                lag(share_ppm) OVER (PARTITION BY event_type ORDER BY wk)
-                  AS prev_ppm
-         FROM shares),
-drift AS (SELECT wk, sum(abs(share_ppm - prev_ppm)) AS l1
-          FROM lagd GROUP BY wk),
-med AS (SELECT median(l1) AS m FROM drift WHERE l1 IS NOT NULL)
-SELECT strftime(wk, '%Y-%m-%d') AS week_start,
-       CAST(l1 AS BIGINT) AS l1_drift_ppm,
-       coalesce(l1 > 2 * m, false) AS drift_alert
-FROM drift, med
-""")
-def drift_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alerting on the drift monitor — the composition a pipeline actually
-    deploys: `distribution_drift`'s weekly L1 series, flagged where a week
-    exceeds 2× the median drift (the scale-free threshold that needs no
-    per-corpus tuning; the first week has nothing to drift
-    from: its l1 stays NULL and its alert is defined FALSE — no evidence,
-    no alert, and no NULL boolean for engines to render differently).
-    Reuses the drift query wholesale; the alert adds one
-    answer-sized median + a broadcast scalar join.
-
-    Composition note: the drift subplan appears TWICE below (the series
-    and its median), so the corpus-side aggregate inside
-    `distribution_drift` is in the plan twice. That is deliberate here —
-    the drift frame is answer-sized (|weeks|·|types| after ONE corpus
-    agg) and a barrier would cost more than the re-agg — but anyone
-    composing further layers on top should `materialize(drift)` first so
-    the corpus aggregate runs once."""
-    drift = distribution_drift(spark, sf_dir) \
-        .select("week_start", "l1_drift_ppm")
-    med = drift.filter(F.col("l1_drift_ppm").isNotNull()) \
-        .agg(F.median("l1_drift_ppm").alias("__m"))
-    return (drift.crossJoin(F.broadcast(med))
-            .select("week_start", "l1_drift_ppm",
-                    F.coalesce(F.col("l1_drift_ppm") > 2 * F.col("__m"),
-                               F.lit(False)).alias("drift_alert")))

@@ -1,5 +1,7 @@
 """Tests for dedup, similarity-search, and multimodal extension operators."""
 
+import math
+
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -958,6 +960,12 @@ def test_containment_stop_shingle_cap_defaults_finite(spark):
 # semantic dedup (SemDeDup-style)
 
 
+def _seed_centroids(rows, seed_ids):
+    """Seed rows as the {vec_id → micro-int vector} centroid dict."""
+    return {r.vec_id: [math.floor(x * 1e6) for x in r.embedding]
+            for r in rows if r.vec_id in seed_ids}
+
+
 def test_semantic_dedup_prunes_within_cluster_only(spark):
     rows = [
         # cluster around +x
@@ -970,8 +978,7 @@ def test_semantic_dedup_prunes_within_cluster_only(spark):
         Row(vec_id=21, embedding=[-0.9, 0.1]),    # same cluster, dissimilar -> kept
     ]
     df = spark.createDataFrame(rows)
-    cents = (df.filter(F.col("vec_id") < 2)
-             .select(F.col("vec_id").alias("centroid_id"), "embedding"))
+    cents = _seed_centroids(rows, {0, 1})
     out = S.semantic_dedup_survivors(df, cents, threshold=0.95)
     got = {r.vec_id: r.centroid_id for r in out.collect()}
     assert set(got) == {0, 1, 21}
@@ -987,7 +994,7 @@ def test_semantic_dedup_keeps_cross_cluster_near_dups(spark):
         Row(vec_id=1, embedding=[1.0, 0.05]),
     ]
     df = spark.createDataFrame(rows)
-    cents = df.select(F.col("vec_id").alias("centroid_id"), "embedding")
+    cents = _seed_centroids(rows, {0, 1})
     out = S.semantic_dedup_survivors(df, cents, threshold=0.9)
     assert sorted(r.vec_id for r in out.collect()) == [0, 1]
 

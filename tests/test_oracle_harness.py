@@ -138,3 +138,29 @@ def test_oracle_sweep_covers_head():
                  if line[3:].strip().startswith(SOURCE_PREFIXES)]
         assert not dirty, (
             f"uncommitted source changes not covered by the sweep: {dirty}")
+
+
+# Registry entries that call no package operator but each pin a SURVEY §2
+# item: alert fusion (§2.11, E4/E16), separate-to-columns (E6/E7), the
+# array HOF shape (N5), and the flagship scan→filter→agg that
+# ``__spark_entry__.entry()`` runs (A2/A6/E10).
+_BUILTIN_ONLY_KEPT = {"alert_fusion", "split_to_columns",
+                      "hof_transform_aggregate", "pricing_summary"}
+
+
+def test_registry_entries_exercise_package_code():
+    """An entry that calls no package operator checks Spark against
+    DuckDB, not this package, so the registry keeps only the four that
+    pin a SURVEY §2 item. Uses the same call analysis that writes
+    REGISTRY.md. The driver-order fallback sets in ``__spark_entry__``
+    name only live entries."""
+    import __spark_entry__
+    from gen_registry import _registry_ops
+    from peskas_malawi_data_pipeline_spark.queries import REGISTRY
+
+    builtin_only = {n for n, ops in _registry_ops().items() if not ops}
+    assert builtin_only <= _BUILTIN_ONLY_KEPT, sorted(
+        builtin_only - _BUILTIN_ONLY_KEPT)
+    for static in (__spark_entry__._DRIVER_CHECKED_R01_R02,
+                   __spark_entry__._JUDGE_CHECKED_R02):
+        assert static <= set(REGISTRY), sorted(static - set(REGISTRY))

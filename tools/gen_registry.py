@@ -77,18 +77,28 @@ def _gist(doc: str | None, limit: int = 200) -> str:
     return first.replace("|", "\\|").replace("``", "`")
 
 
-def main() -> None:
+def _registry_ops() -> dict[str, list[str]]:
+    """query name -> package operators its function calls, resolved
+    through the module's and the function's own import aliases."""
     from peskas_malawi_data_pipeline_spark import queries
-    from peskas_malawi_data_pipeline_spark.queries import REGISTRY
 
     module_aliases = _alias_map(inspect.getsource(queries))
-
-    rows = []
-    for name, (fn, sql) in REGISTRY.items():
+    out: dict[str, list[str]] = {}
+    for name, (fn, _sql) in queries.REGISTRY.items():
         fn_src = inspect.getsource(fn)
         local_aliases = dict(module_aliases)
         local_aliases.update(_alias_map(fn_src) if "import" in fn_src else {})
-        ops = _called_ops(fn_src, local_aliases)
+        out[name] = _called_ops(fn_src, local_aliases)
+    return out
+
+
+def main() -> None:
+    from peskas_malawi_data_pipeline_spark.queries import REGISTRY
+
+    registry_ops = _registry_ops()
+    rows = []
+    for name, (fn, sql) in REGISTRY.items():
+        ops = registry_ops[name]
         rows.append({
             "name": name,
             "ops": ", ".join(f"`{o}`" for o in ops) or "built-in DataFrame ops",
