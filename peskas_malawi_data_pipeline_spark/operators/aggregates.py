@@ -179,45 +179,3 @@ def grouped_percentile_cont(df: DataFrame, keys: Sequence[str],
                     .alias(name))
     return res.select(*keys, *outs)
 
-
-#: Merge functions for re-aggregating partial-aggregate state: a persisted
-#: partial named here merges with new partials of the same name. Counts
-#: merge by SUM (a count of counts is wrong); that's why the spec is
-#: per-column explicit rather than inferred.
-ROLLUP_MERGES = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-
-
-def incremental_rollup(state: DataFrame, batch_partials: DataFrame,
-                       keys: Sequence[str],
-                       merges: dict[str, str]) -> DataFrame:
-    """Incremental view maintenance for distributive aggregates: merge a
-    persisted per-key partial-aggregate ``state`` with a new batch's
-    partials — the O(increment) alternative to re-aggregating the full
-    history every run (the same persisted-state shape as
-    dedup.minhash_bands / substring_posting_counts, applied to rollups).
-
-    ``merges`` maps each measure column (present in BOTH frames) to its
-    merge semantics from :data:`ROLLUP_MERGES`. Only distributive/algebraic
-    measures belong here — sums, counts, min/max, and anything derivable
-    from them downstream (means = sum/count; variance via sum + sum of
-    squares). Holistic measures (exact percentiles, distinct counts) do
-    not merge; keep those on the full-scan path.
-
-    Plan: unionByName + ONE groupBy. The daily batch is partial-aggregated
-    at source (map-side combine shrinks it before any shuffle); the state
-    is already one row per key, so the merge shuffle moves |state| +
-    |batch keys| rows — independent of history volume. With the state
-    bucketed on ``keys`` (operators.layout.bucketed_write) its side of the
-    shuffle disappears entirely.
-    """
-    missing = [c for c in merges if c not in state.columns
-               or c not in batch_partials.columns]
-    if missing:
-        raise ValueError(f"measure columns absent from an input: {missing}")
-    overlap = [c for c in merges if c in keys]
-    if overlap:
-        raise ValueError(f"measure columns cannot also be keys: {overlap}")
-    merged = state.select(*keys, *merges).unionByName(
-        batch_partials.select(*keys, *merges))
-    return merged.groupBy(*keys).agg(
-        *[ROLLUP_MERGES[m](c).alias(c) for c, m in merges.items()])

@@ -1,9 +1,12 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
-SimHash, and n-gram Jaccard — all as DataFrame expressions over md5-based
-32-bit hashes (functions.text.md5_prefix_hash), which makes every signature
-bit-identical in any engine with md5 and therefore oracle-checkable.
+SimHash, n-gram Jaccard/containment, exact-substring spans and connected
+components — all as DataFrame expressions over md5-based hashes
+(functions.text.md5_prefix_hash), which makes every signature bit-identical
+in any engine with md5 and therefore oracle-checkable. Every operator is
+batch: it reads the whole corpus it is given and keeps no state between
+runs.
 
 Scale notes (100 TB):
 - exact dedup shuffles on a 16-byte digest — narrow key, near-uniform
@@ -11,9 +14,10 @@ Scale notes (100 TB):
 - MinHash-LSH's only wide operation is the band-bucket self-join; band keys
   are hashes (uniform), and the candidate-pair explosion is bounded by
   bucket size — cap monster buckets (boilerplate docs) with ``max_bucket``;
-- SimHash is a pure map (one pass, no shuffle) producing a 64-bit sketch;
-  near-dup lookup is a self-join on rotated prefixes (not implemented here;
-  signature generation is the per-row operator);
+- SimHash is a pure map (one pass, no shuffle) producing a ``bits``-bit
+  sketch (16 by default, up to 60); near-dup lookup is the banded
+  Hamming self-join of :func:`simhash_pairs` / :func:`sketch_hamming_pairs`,
+  capped per band bucket like the MinHash join;
 - n-gram Jaccard is the *verify* stage run only on candidate pairs.
 """
 
@@ -64,8 +68,7 @@ def last_cap_drops() -> dict[str, dict]:
 
 
 def _capped_barrier(df: DataFrame, partition_cols: Sequence[str],
-                    cap: int | None, site: str,
-                    weight_col: str | None = None) -> DataFrame:
+                    cap: int | None, site: str) -> DataFrame:
     """Materialize a derived index, dropping rows in over-``cap`` buckets
     of ``partition_cols`` — with the drop count OBSERVED, not silent.
 
@@ -77,18 +80,11 @@ def _capped_barrier(df: DataFrame, partition_cols: Sequence[str],
     materialized index keeps hot-bucket rows (filtered after the barrier,
     from materialized blocks); index storage is O(corpus bands) either
     way, so this trades nothing for the audit.
-
-    ``weight_col``: bucket size as Σ weight instead of a row count — how
-    a COMPACTED index row standing for a whole historical bucket
-    (:func:`compact_band_index`) keeps the cap triggering at exactly the
-    original cardinality.
     """
     if cap is None:
         return _index_barrier(df)
     w = Window.partitionBy(*partition_cols)
-    size = (F.sum(F.col(weight_col)).over(w) if weight_col
-            else F.count(F.lit(1)).over(w))
-    flagged = df.withColumn("__bucket_n", size)
+    flagged = df.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
     obs = Observation(f"cap:{site}:{next(_CAP_SEQ)}")
     flagged = flagged.observe(
         obs,
@@ -190,10 +186,8 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", num_hashes: int = 8,
                   band_size: int = 2, shingle_n: int = 3) -> DataFrame:
     """The banded MinHash signature index: (id, band_id, band_key) rows,
-    ``num_hashes/band_size`` per doc. This is the PERSISTABLE artifact of
-    LSH dedup — write it once per corpus snapshot and new batches join
-    against it (:func:`incremental_lsh_pairs`) instead of re-sketching the
-    whole corpus."""
+    ``num_hashes/band_size`` per doc — the input of
+    :func:`lsh_pairs_from_bands`."""
     assert num_hashes % band_size == 0
     sigs = minhash_signature(df.select(id_col, text_col), text_col,
                              num_hashes, shingle_n)
@@ -220,101 +214,6 @@ def bands_from_signature(sigs: DataFrame, id_col: str = "doc_id",
         ])).alias("band_id", "band_key"))
 
 
-def incremental_lsh_pairs(new_bands: DataFrame, index_bands: DataFrame,
-                          id_col: str = "doc_id",
-                          max_bucket: int | None = 1000,
-                          weight_col: str | None = None) -> DataFrame:
-    """Candidate pairs for an INCREMENTAL batch against a persisted band
-    index: every pair touches at least one new doc (new↔index and
-    new↔new); settled index↔index pairs are never recomputed.
-
-    This is the daily-run shape at 100 TB: the corpus sketch is computed
-    once and persisted (:func:`minhash_bands`), each increment sketches
-    only its own docs and band-joins the union — cost O(increment), not
-    O(corpus). ``max_bucket`` caps hot buckets over the union, so the
-    result equals a full-corpus run restricted to pairs involving new
-    docs.
-
-    ``weight_col``: set when ``index_bands`` is a COMPACTED index
-    (:func:`compact_band_index`) whose rows carry a bucket-cardinality
-    weight — the cap then counts Σ weight, so compaction never changes
-    which buckets the cap suppresses. New-batch rows weigh 1; an index
-    without the column gets weight 1 per row (uncompacted)."""
-    if weight_col is not None:
-        if weight_col not in index_bands.columns:
-            index_bands = index_bands.withColumn(
-                weight_col, F.lit(1).cast("long"))
-        new_bands = new_bands.withColumn(weight_col, F.lit(1).cast("long"))
-    u = (index_bands.withColumn("__new", F.lit(0))
-         .unionByName(new_bands.withColumn("__new", F.lit(1))))
-    u = _capped_barrier(u, ("band_id", "band_key"), max_bucket,
-                        "incremental_lsh_pairs", weight_col=weight_col)
-    left = u.filter(F.col("__new") == 1).select(
-        "band_id", "band_key", F.col(id_col).alias("__ia"))
-    right = u.select("band_id", "band_key", F.col(id_col).alias("__ib"))
-    return (left.join(right, ["band_id", "band_key"])
-            .filter(F.col("__ia") != F.col("__ib"))
-            .select(F.least("__ia", "__ib").alias("id_a"),
-                    F.greatest("__ia", "__ib").alias("id_b"))
-            .distinct())
-
-
-def compact_band_index(index: DataFrame, id_col: str = "doc_id",
-                       weight_col: str = "band_weight") -> DataFrame:
-    """RETENTION for the persisted LSH band index: collapse every
-    (band_id, band_key) bucket to ONE row — the min-id member as the
-    bucket REPRESENTATIVE, plus the bucket's cardinality as
-    ``weight_col``. The streaming/incremental dedup state otherwise
-    grows without bound (every batch appends its bands); compaction
-    bounds it at one row per DISTINCT bucket while preserving all
-    future results exactly:
-
-    - **Connectivity**: every member of an under-cap bucket was, when it
-      landed, band-joined against all earlier members
-      (:func:`incremental_lsh_pairs` — bucket size only grows, so it was
-      under the cap then too), hence the bucket's members are already
-      pairwise CONNECTED in the component snapshot. A future doc
-      colliding with the bucket pairs with the representative and merges
-      into the one component all members share — identical final
-      components, fewer (redundant) pairs. Pinned by a two-run replay
-      test and by the `dedup_state_compaction` oracle checksum.
-    - **Cap semantics**: the carried weight makes
-      ``incremental_lsh_pairs(..., weight_col=...)`` count the bucket at
-      its ORIGINAL cardinality, so a hot bucket the cap suppressed stays
-      suppressed after compacting to one row (without the weight, a
-      10⁶-row bucket would compact to 1 and silently start emitting
-      pairs the uncompacted run never would).
-
-    Idempotent (re-compacting a compacted index is a no-op: weights
-    re-sum to themselves), and safe to interleave with appends — compact
-    the (compacted ∪ new bands) union between batches. Plan: ONE
-    groupBy shuffle on uniform (band_id, band_key) hash keys over the
-    index (never the corpus); output ≤ input rows by construction."""
-    w = (F.col(weight_col).cast("long")
-         if weight_col in index.columns else F.lit(1).cast("long"))
-    return (index.withColumn("__w", w)
-            .groupBy("band_id", "band_key")
-            .agg(F.min(id_col).alias(id_col),
-                 F.sum("__w").cast("long").alias(weight_col)))
-
-
-def split_pair_store(pairs: DataFrame, watermark_batch: int,
-                     batch_col: str = "batch_id"
-                     ) -> tuple[DataFrame, DataFrame]:
-    """RETENTION for the accumulated pair store: split into (active,
-    archive) at a batch watermark. Pairs are consumed exactly once — the
-    micro-batch that discovers them feeds them to
-    :func:`incremental_components`; afterwards the component snapshot IS
-    the result and old pairs are pure audit trail. Archiving batches
-    ``< watermark_batch`` keeps the active store O(recent batches) while
-    the archive partition preserves the full provenance. Returns
-    ``(active, archived)`` — two filters over one scan (write archive
-    under e.g. ``pairs/archive/`` and truncate-and-load the active
-    store)."""
-    return (pairs.filter(F.col(batch_col) >= watermark_batch),
-            pairs.filter(F.col(batch_col) < watermark_batch))
-
-
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_hashes: int = 8,
                       band_size: int = 2, shingle_n: int = 3,
@@ -338,8 +237,7 @@ def lsh_pairs_from_bands(bands: DataFrame, id_col: str = "doc_id",
                          carry_cols: Sequence[str] = ()) -> DataFrame:
     """Candidate pairs from a prebuilt band index (:func:`minhash_bands`
     output) — use this when the index is computed once and consumed by
-    several stages (e.g. full-corpus pairs AND the persisted side of an
-    incremental join), so the expensive shingle → hash → signature map
+    several stages, so the expensive shingle → hash → signature map
     never re-runs per consumer.
 
     ``carry_cols``: extra columns that join into the bucket key and ride
@@ -730,22 +628,27 @@ def _validate_span_args(k: int, min_occurrences: int) -> None:
             f"duplicate), got {min_occurrences}")
 
 
-def _span_posts(df: DataFrame, id_col: str, text_col: str,
-                k: int) -> DataFrame:
-    """Position-aware k-shingle posting frame: (__id, pos, __sh), 1-based
-    start positions. Docs shorter than k tokens (or NULL text) yield NO
-    shingles — the otherwise-empty branch matters because
-    sequence(1, 0) would generate a DESCENDING [1, 0], not an empty
-    array."""
-    shingles_with_pos = T.bound(
-        T.tokens(F.col(text_col)),
+def _k_shingles(text: Column, k: int) -> Column:
+    """The k-token shingles of ``text`` in start order. Texts shorter than
+    k tokens (or NULL) yield NO shingles — the otherwise-empty branch
+    matters because sequence(1, 0) would generate a DESCENDING [1, 0],
+    not an empty array."""
+    return T.bound(
+        T.tokens(text),
         lambda t: F.when(
             F.size(t) >= k,
             F.transform(F.sequence(F.lit(1), F.size(t) - (k - 1)),
                         lambda i: F.concat_ws(" ", F.slice(t, i, k))))
         .otherwise(F.array().cast("array<string>")))
+
+
+def _span_posts(df: DataFrame, id_col: str, text_col: str,
+                k: int) -> DataFrame:
+    """Position-aware k-shingle posting frame: (__id, pos, __sh), 1-based
+    start positions."""
     return (df.select(F.col(id_col).alias("__id"),
-                      F.posexplode(shingles_with_pos).alias("__p0", "__sh"))
+                      F.posexplode(_k_shingles(F.col(text_col), k))
+                      .alias("__p0", "__sh"))
             .select("__id", (F.col("__p0") + 1).alias("pos"), "__sh"))
 
 
@@ -769,56 +672,6 @@ def _spans_from_marked(marked: DataFrame, id_col: str, k: int) -> DataFrame:
         (F.col("__last") + (k - 1)).cast("long").alias("span_end"),
         (F.col("__last") + (k - 1) - F.col("__start") + 1).cast("long")
         .alias("span_tokens"))
-
-
-def substring_posting_counts(df: DataFrame, text_col: str = "text",
-                             k: int = 5) -> DataFrame:
-    """The PERSISTABLE artifact of incremental substring dedup: corpus-wide
-    (shingle, occ) counts — write once per corpus snapshot (bucket by
-    ``shingle`` for shuffle-free daily joins: layout.bucketed_write) and
-    let each increment join against it instead of re-scanning the corpus
-    text (:func:`incremental_duplicated_spans`). Columns (shingle, occ)."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    # no positions needed for the index — plain shingle explode is cheaper
-    sh = T.bound(
-        T.tokens(F.col(text_col)),
-        lambda t: F.when(
-            F.size(t) >= k,
-            F.transform(F.sequence(F.lit(1), F.size(t) - (k - 1)),
-                        lambda i: F.concat_ws(" ", F.slice(t, i, k))))
-        .otherwise(F.array().cast("array<string>")))
-    return (df.select(F.explode(sh).alias("shingle"))
-            .groupBy("shingle").agg(F.count(F.lit(1)).cast("long")
-                                    .alias("occ")))
-
-
-def incremental_duplicated_spans(new_df: DataFrame, index_counts: DataFrame,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text", k: int = 5,
-                                 min_occurrences: int = 2) -> DataFrame:
-    """Incremental exact-substring dedup — the daily-batch shape: maximal
-    duplicated spans in the NEW batch, where a shingle counts as
-    duplicated when its occurrences across (persisted corpus index ∪ new
-    batch) reach ``min_occurrences``. Equals the full-corpus
-    :func:`duplicated_spans` restricted to new docs (occurrence counts are
-    global either way), at O(increment) cost: only the new batch is
-    tokenized; the corpus contributes its pre-computed
-    :func:`substring_posting_counts` (columns shingle, occ) through one
-    equi-join — shuffle-free when both sides are bucketed by shingle."""
-    _validate_span_args(k, min_occurrences)
-    posts = _span_posts(new_df, id_col, text_col, k)
-    new_counts = posts.groupBy("__sh").agg(
-        F.count(F.lit(1)).alias("__new_occ"))
-    idx = index_counts.select(F.col("shingle").alias("__sh"),
-                              F.col("occ").alias("__idx_occ"))
-    dup = (new_counts.join(idx, "__sh", "left")
-           .filter(F.col("__new_occ") + F.coalesce(F.col("__idx_occ"),
-                                                   F.lit(0))
-                   >= min_occurrences)
-           .select("__sh"))
-    marked = posts.join(dup, "__sh", "left_semi")
-    return _spans_from_marked(marked, id_col, k)
 
 
 def substring_dedup_stats(df: DataFrame, id_col: str = "doc_id",
@@ -912,8 +765,9 @@ def decontaminate_spans(df: DataFrame, eval_df: DataFrame,
     """
     _validate_span_args(k, 2)
     posts = _span_posts(df, id_col, text_col, k)
-    ev = (substring_posting_counts(eval_df, eval_text_col, k)
-          .select(F.col("shingle").alias("__sh")))
+    ev = (eval_df.select(F.explode(_k_shingles(F.col(eval_text_col), k))
+                         .alias("__sh"))
+          .distinct())
     if broadcast_eval:
         ev = F.broadcast(ev)
     marked = posts.join(ev, "__sh", "left_semi")
@@ -1024,144 +878,6 @@ def decontaminate_stats(df: DataFrame, eval_df: DataFrame,
                     F.when(F.col("n_tokens").isNotNull(),
                            F.coalesce(F.col("__n"), F.lit(0))).cast("long")
                     .alias("n_spans")))
-
-
-def incremental_components(prior: DataFrame, new_pairs: DataFrame,
-                           id_a: str = "id_a",
-                           id_b: str = "id_b") -> DataFrame:
-    """Update persisted duplicate-group assignments with a new batch's
-    candidate pairs — the daily-run companion to
-    :func:`incremental_lsh_pairs`, closing the incremental dedup loop
-    (sketch increment → candidate pairs → GROUP assignment) without ever
-    re-running components over the historical corpus graph.
-
-    ``prior`` is a stored (id, component) frame from an earlier run;
-    ``new_pairs`` are candidate pairs involving the increment (every pair
-    ``incremental_lsh_pairs`` emits touches ≥1 new doc). Each prior
-    assignment IS a star edge (member → component minimum), so the union
-    of prior stars + new pairs goes through
-    :func:`connected_components_star` with every prior component already
-    contracted to depth 1. Cost per run: O(|prior| + |new pairs|) rows
-    through a few star rounds, independent of how many historical
-    batches built ``prior``.
-
-    Returns (id, component) covering every prior id and every id in
-    ``new_pairs`` — singleton prior components keep their row (their star
-    edge is a self-loop), so the output is a full replacement snapshot.
-    Proven equal to a from-scratch ``connected_components_star`` over the
-    full pair history by test.
-    """
-    stars = prior.select(F.col("id").alias(id_a),
-                         F.col("component").alias(id_b))
-    return connected_components_star(
-        stars.unionByName(new_pairs.select(F.col(id_a), F.col(id_b))),
-        id_a=id_a, id_b=id_b)
-
-
-def pinned_incremental_split(prior_split: DataFrame, components: DataFrame,
-                             new_docs: DataFrame, doc_id: str = "doc_id",
-                             seed: str = "split:", train_pct: int = 80,
-                             valid_pct: int = 10) -> DataFrame:
-    """Incremental leakage-safe split with PINNED assignments — the
-    eval-set-stability companion to the batch group-aware split: when
-    tomorrow's batch adds a document that bridges two duplicate
-    components, the merged component's hash bucket moves, and a naive
-    re-run would silently migrate previously-assigned documents across
-    train/test — invalidating every metric computed on the old eval set.
-    Here previously-assigned documents KEEP their split unconditionally;
-    only new documents take a decision:
-
-    - a new doc whose (possibly merged) component contains previously
-      assigned docs INHERITS their pin — when the merge united prior
-      components with DIFFERENT pins, the pin of the smallest prior
-      group_key wins (deterministic in any engine), and every doc in
-      that component is flagged ``pin_conflict`` (the merge created
-      cross-split near-duplicates among OLD docs — unavoidable without
-      moving them; the flag is the audit trail an eval owner filters
-      on). Conflicts are answer-sized: derive the report with
-      ``out.filter("pin_conflict").select("group_key").distinct()``.
-    - a new doc in an all-new component gets the batch hash rule on its
-      component key (same md5 bucket arithmetic as ``hash_split``).
-
-    ``prior_split`` is the stored (doc_id, group_key, split[,
-    pin_conflict]) snapshot from the previous run (the flag column is
-    optional — a first batch coming from the batch split has none);
-    ``components`` the UPDATED (id, component) snapshot from
-    :func:`incremental_components` (docs with no pairs may be absent —
-    they key on their own id); ``new_docs`` the increment (ids already
-    in ``prior_split`` are ignored, so at-least-once replay is
-    absorbed). Returns the full replacement snapshot
-    (doc_id, group_key, split, pin_conflict). The flag is STICKY across
-    batches: once a component spans two splits it stays flagged in every
-    later snapshot (and infects components it later merges into) — an
-    eval owner must be able to trust a False at any point in history.
-
-    Scale shape: the DECISION work is O(increment + old docs in
-    increment-touched components) — the pin table is built only for
-    components the increment touches (broadcast semi-join; a component
-    the batch never touches cannot CHANGE its conflict state: its
-    membership is unchanged, so its stored flag passes through), then
-    broadcast into both output branches. The O(prior) part is only the
-    passthrough re-emit of the stored snapshot with refreshed group
-    keys — the same full-replacement contract as
-    :func:`incremental_components`. By-construction properties (pinned
-    by tests): no previously-assigned doc ever changes split across
-    replays, and a component never spans two splits unless
-    ``pin_conflict`` says so."""
-    prior_flag = (F.coalesce(F.col("pin_conflict").cast("boolean"),
-                             F.lit(False))
-                  if "pin_conflict" in prior_split.columns
-                  else F.lit(False))
-    comp = components.select(F.col("id").alias(doc_id), "component")
-    old_keyed = (prior_split.join(comp, doc_id, "left")
-                 .select(F.col(doc_id),
-                         F.coalesce("component", F.col("group_key"))
-                         .cast("long").alias("group_key"),
-                         F.col("group_key").alias("__prior_gk"),
-                         "split", prior_flag.alias("__prior_cf")))
-    new_keyed = (new_docs.select(F.col(doc_id))
-                 .join(prior_split.select(doc_id), doc_id, "left_anti")
-                 .join(comp, doc_id, "left")
-                 .select(F.col(doc_id),
-                         F.coalesce("component", F.col(doc_id))
-                         .cast("long").alias("group_key")))
-    # touched = components containing a new doc PLUS components whose old
-    # membership changed vs the prior snapshot (group_key moved). In
-    # contract the second set is a subset of the first (components only
-    # change through increment pairs), but an out-of-contract snapshot
-    # that merged old docs via pairs not involving any new doc would
-    # otherwise slip past the pin logic and silently break the
-    # "one component, one split unless flagged" guarantee.
-    touched = (new_keyed.select("group_key")
-               .unionByName(old_keyed
-                            .filter(F.col("group_key")
-                                    != F.col("__prior_gk"))
-                            .select("group_key"))
-               .distinct())
-    # pins only for increment-touched components: min prior group key's
-    # split wins; the flag = (any member already flagged) OR (>1
-    # distinct prior split — this merge created the conflict just now).
-    # min_by ties are benign — equal __prior_gk rows share one split.
-    pins = (old_keyed.join(F.broadcast(touched), "group_key")
-            .groupBy("group_key")
-            .agg(F.min_by("split", "__prior_gk").alias("__pin"),
-                 ((F.countDistinct("split") > 1) | F.max("__prior_cf"))
-                 .alias("pin_conflict")))
-    h = T.md5_prefix_hash(F.col("group_key").cast("string"), seed) % 100
-    hash_rule = (F.when(h < train_pct, "train")
-                 .when(h < train_pct + valid_pct, "valid")
-                 .otherwise("test"))
-    old_out = (old_keyed.join(F.broadcast(pins.drop("__pin")),
-                              "group_key", "left")
-               .select(doc_id, "group_key", "split",
-                       F.coalesce("pin_conflict", F.col("__prior_cf"))
-                       .alias("pin_conflict")))
-    new_out = (new_keyed.join(F.broadcast(pins), "group_key", "left")
-               .select(F.col(doc_id), F.col("group_key"),
-                       F.coalesce("__pin", hash_rule).alias("split"),
-                       F.coalesce("pin_conflict", F.lit(False))
-                       .alias("pin_conflict")))
-    return old_out.unionByName(new_out)
 
 
 def fused_near_dup(corpus: DataFrame, edges: dict[str, DataFrame],

@@ -1457,126 +1457,6 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2, shingle_n=3)
 
 
-@register("incremental_dedup_pairs", f"""
-WITH {_DUCK_MINHASH_CTES}
-SELECT id_a, id_b FROM mh_pairs
-WHERE id_a % 7 = 0 OR id_b % 7 = 0
-""")
-def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dedup: the ``doc_id % 7 == 0`` slice plays the
-    day's new batch, the rest the persisted band index
-    (dedup.minhash_bands) — only the new docs are sketched, then band-join
-    the union (dedup.incremental_lsh_pairs). Oracle: the full-corpus LSH
-    pairs restricted to pairs touching a new doc — exactly what the
-    incremental path must reproduce, at O(increment) sketch cost."""
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    index_bands = dedup_ops.minhash_bands(
-        old, num_hashes=8, band_size=2, shingle_n=3)
-    new_bands = dedup_ops.minhash_bands(
-        new, num_hashes=8, band_size=2, shingle_n=3)
-    return dedup_ops.incremental_lsh_pairs(new_bands, index_bands,
-                                           max_bucket=1000)
-
-
-@register("dedup_state_compaction", f"""
-WITH RECURSIVE {_DUCK_MINHASH_CTES},
-old_bands AS (SELECT * FROM bands WHERE doc_id % 7 <> 0),
-new_b AS (SELECT * FROM bands WHERE doc_id % 7 = 0),
-compacted AS (SELECT band_id, band_key, min(doc_id) AS doc_id,
-                     CAST(count(*) AS BIGINT) AS wgt
-              FROM old_bands GROUP BY band_id, band_key),
-u AS (SELECT band_id, band_key, doc_id, wgt, 0 AS is_new FROM compacted
-      UNION ALL
-      SELECT band_id, band_key, doc_id, CAST(1 AS BIGINT), 1 FROM new_b),
-uw AS (SELECT *, sum(wgt) OVER (PARTITION BY band_id, band_key) AS bw
-       FROM u),
-uf AS (SELECT * FROM uw WHERE bw <= 1000),
-ip AS (SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
-              greatest(a.doc_id, b.doc_id) AS id_b
-       FROM (SELECT * FROM uf WHERE is_new = 1) a
-       JOIN uf b USING (band_id, band_key)
-       WHERE a.doc_id <> b.doc_id),
-edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
-          UNION SELECT id_b, id_a FROM mh_pairs),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach(src, dst) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-comp AS (SELECT src AS id, CAST(min(dst) AS BIGINT) AS component
-         FROM reach GROUP BY src)
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM old_bands) AS index_rows_before,
-  (SELECT CAST(count(*) AS BIGINT) FROM compacted) AS index_rows_after,
-  (SELECT CAST(sum(wgt) AS BIGINT) FROM compacted) AS index_weight_after,
-  (SELECT CAST(count(CASE WHEN wgt > 1000 THEN 1 END) AS BIGINT)
-   FROM compacted) AS overcap_buckets,
-  (SELECT CAST(count(*) AS BIGINT) FROM ip) AS increment_pairs,
-  (SELECT CAST(count(*) AS BIGINT) FROM comp) AS n_component_docs,
-  (SELECT CAST(sum(CAST('0x' || substr(md5('cc:' ||
-      CAST(id AS VARCHAR) || ':' || CAST(component AS VARCHAR)), 1, 10)
-      AS BIGINT)) AS BIGINT) FROM comp) AS component_checksum
-""")
-def dedup_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band-index RETENTION audit (dedup.compact_band_index): the old
-    corpus's band index compacts to one representative row per bucket
-    (min id + carried cardinality weight), the ``doc_id % 7`` increment
-    band-joins the COMPACTED index (weight-aware cap), components update
-    incrementally — and the final component snapshot must equal the
-    full-corpus batch closure bit-for-bit, proven by the
-    ``component_checksum`` column (Σ md5-hash over (id, component) rows:
-    the oracle computes it from the UNCOMPACTED relational closure, so a
-    hash match IS the invariance proof — compaction changed state size,
-    not results). Also audited: rows before/after (the retention win),
-    weight conservation (Σ weight after == rows before), over-cap
-    buckets (suppressed buckets stay suppressed through the carried
-    weight), and the increment's pair count against the compacted index
-    (pairs touch representatives only — fewer rows, same closure).
-    Why it's safe: every under-cap bucket's members are already pairwise
-    connected (each was band-joined against all earlier members when it
-    landed), so a future doc pairing with the representative joins the
-    one component they all share. Plan: one groupBy over the index
-    (never the corpus) for compaction; the rest is the standard
-    incremental pipeline + answer-sized one-row aggregates."""
-    docs = _t(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old_bands = materialize(dedup_ops.minhash_bands(
-        old, num_hashes=8, band_size=2, shingle_n=3))
-    compacted = materialize(dedup_ops.compact_band_index(old_bands))
-    new_bands = dedup_ops.minhash_bands(
-        new, num_hashes=8, band_size=2, shingle_n=3)
-    inc_pairs = materialize(dedup_ops.incremental_lsh_pairs(
-        new_bands, compacted, max_bucket=1000, weight_col="band_weight"))
-    prior = dedup_ops.connected_components_star(
-        dedup_ops.lsh_pairs_from_bands(old_bands, max_bucket=1000))
-    comp = dedup_ops.incremental_components(prior, inc_pairs)
-    rb = old_bands.agg(
-        F.count(F.lit(1)).cast("long").alias("index_rows_before"))
-    ra = compacted.agg(
-        F.count(F.lit(1)).cast("long").alias("index_rows_after"),
-        F.sum("band_weight").cast("long").alias("index_weight_after"),
-        F.sum((F.col("band_weight") > 1000).cast("long")).cast("long")
-        .alias("overcap_buckets"))
-    ipc = inc_pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("increment_pairs"))
-    h = T.md5_prefix_hash(
-        F.concat(F.col("id").cast("string"), F.lit(":"),
-                 F.col("component").cast("string")),
-        seed="cc:", hex_chars=10)
-    cs = comp.agg(
-        F.count(F.lit(1)).cast("long").alias("n_component_docs"),
-        F.sum(h).cast("long").alias("component_checksum"))
-    return (rb.crossJoin(F.broadcast(ra)).crossJoin(F.broadcast(ipc))
-            .crossJoin(F.broadcast(cs))
-            .select("index_rows_before", "index_rows_after",
-                    "index_weight_after", "overcap_buckets",
-                    "increment_pairs", "n_component_docs",
-                    "component_checksum"))
-
-
 _DUCK_COMPONENTS_SQL = f"""
 WITH RECURSIVE {_DUCK_MINHASH_CTES},
 edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
@@ -1775,104 +1655,6 @@ def group_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keyed.select("doc_id", "group_key", split.alias("split"))
 
 
-@register("pinned_incremental_split", f"""
-WITH RECURSIVE {_DUCK_MINHASH_CTES},
-edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
-          UNION SELECT id_b, id_a FROM mh_pairs),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach(src, dst) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-comp_new AS (SELECT src AS id, min(dst) AS component FROM reach GROUP BY src),
-oedges AS (SELECT a, b FROM edges WHERE a % 7 <> 0 AND b % 7 <> 0),
-onodes AS (SELECT DISTINCT a AS id FROM oedges),
-oreach(src, dst) AS (
-  SELECT id, id FROM onodes
-  UNION
-  SELECT r.src, e.b FROM oreach r JOIN oedges e ON r.dst = e.a),
-comp_old AS (SELECT src AS id, min(dst) AS component
-             FROM oreach GROUP BY src),
-old_split AS (
-  SELECT doc_id, gk_old,
-         CASE WHEN hv % 100 < 80 THEN 'train'
-              WHEN hv % 100 < 90 THEN 'valid' ELSE 'test' END AS split
-  FROM (SELECT doc_id, gk_old,
-               CAST('0x' || substr(md5('split:' ||
-                    CAST(gk_old AS VARCHAR)), 1, 8) AS BIGINT) AS hv
-        FROM (SELECT d.doc_id,
-                     CAST(coalesce(co.component, d.doc_id) AS BIGINT)
-                       AS gk_old
-              FROM documents d LEFT JOIN comp_old co ON d.doc_id = co.id
-              WHERE d.doc_id % 7 <> 0))),
-keyed AS (SELECT d.doc_id,
-                 CAST(coalesce(cf.component, d.doc_id) AS BIGINT)
-                   AS group_key
-          FROM documents d LEFT JOIN comp_new cf ON d.doc_id = cf.id),
-pins AS (SELECT k.group_key,
-                arg_min(o.split, o.gk_old) AS pinned_split,
-                count(DISTINCT o.split) > 1 AS pin_conflict
-         FROM keyed k JOIN old_split o USING (doc_id)
-         GROUP BY k.group_key)
-SELECT k.doc_id, k.group_key, o.split,
-       coalesce(p.pin_conflict, FALSE) AS pin_conflict
-FROM keyed k JOIN old_split o USING (doc_id)
-LEFT JOIN pins p USING (group_key)
-UNION ALL
-SELECT k.doc_id, k.group_key,
-       coalesce(p.pinned_split,
-                CASE WHEN k.hv % 100 < 80 THEN 'train'
-                     WHEN k.hv % 100 < 90 THEN 'valid'
-                     ELSE 'test' END) AS split,
-       coalesce(p.pin_conflict, FALSE) AS pin_conflict
-FROM (SELECT doc_id, group_key,
-             CAST('0x' || substr(md5('split:' ||
-                  CAST(group_key AS VARCHAR)), 1, 8) AS BIGINT) AS hv
-      FROM keyed WHERE doc_id % 7 = 0) k
-LEFT JOIN pins p USING (group_key)
-""")
-def pinned_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental group-aware split with PINNED assignments
-    (dedup.pinned_incremental_split) — eval-set stability under corpus
-    growth, the missing piece of the leakage story: the ``doc_id % 7``
-    slice plays the day's new batch; the persisted state is the old
-    corpus's band index, its component snapshot, AND its split
-    assignment. The increment is sketched, band-joined against the index
-    (O(increment)), components update incrementally, old docs keep their
-    split unconditionally, new docs inherit their component's pin (min
-    prior group key wins on merge conflicts, which are flagged). Oracle:
-    a two-closure replay — old-corpus components give the prior split,
-    full-corpus components the merged keys — with the identical pin/
-    conflict rule in relational form. Property pinned by test: replaying
-    the batches never moves a previously-assigned doc."""
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    index_bands = materialize(dedup_ops.minhash_bands(
-        old, num_hashes=8, band_size=2, shingle_n=3))
-    prior_comp = materialize(dedup_ops.connected_components_star(
-        dedup_ops.lsh_pairs_from_bands(index_bands)))
-    # the stored split snapshot a previous batch run would have written:
-    # the batch group-aware rule over the OLD corpus's components
-    h_old = T.md5_prefix_hash(F.col("group_key").cast("string"),
-                              "split:") % 100
-    prior_split = (old.join(
-        F.broadcast(prior_comp.withColumnRenamed("id", "doc_id")),
-        "doc_id", "left")
-        .select("doc_id",
-                F.coalesce("component", F.col("doc_id")).cast("long")
-                .alias("group_key"))
-        .select("doc_id", "group_key",
-                F.when(h_old < 80, "train").when(h_old < 90, "valid")
-                .otherwise("test").alias("split")))
-    new_pairs = dedup_ops.incremental_lsh_pairs(
-        dedup_ops.minhash_bands(new, num_hashes=8, band_size=2,
-                                shingle_n=3),
-        index_bands, max_bucket=1000)
-    comp = dedup_ops.incremental_components(prior_comp, new_pairs)
-    return dedup_ops.pinned_incremental_split(prior_split, comp, new)
-
-
 @register("split_leakage_report", f"""
 WITH RECURSIVE {_DUCK_MINHASH_CTES},
 edges AS (SELECT id_a AS a, id_b AS b FROM mh_pairs
@@ -1986,37 +1768,6 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_ops.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2, shingle_n=3)
     return dedup_ops.connected_components_star(pairs)
-
-
-@register("incremental_dedup_groups", _DUCK_COMPONENTS_SQL)
-def incremental_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full incremental dedup loop at O(increment) cost: the
-    ``doc_id % 7 == 0`` slice plays the day's new batch; the persisted
-    state is the OLD corpus's band index AND its (id, component) snapshot.
-    The increment is sketched, band-joined against the index
-    (dedup.incremental_lsh_pairs), and the new pairs update the stored
-    assignments via dedup.incremental_components — prior components enter
-    as depth-1 star edges, so star contraction converges in ~2 rounds
-    regardless of corpus history. Oracle: the from-scratch recursive-CTE
-    closure over the FULL corpus — the incremental path must reproduce the
-    full recompute exactly (it does; caps never trigger at oracle scale,
-    see incremental_lsh_pairs on cap semantics)."""
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    # ONE sketch pass over the old corpus: the materialized band index is
-    # what production persists, and both consumers below (prior-state
-    # rebuild + incremental join) read it — without the barrier each
-    # consumer would re-run the shingle→hash→signature map over old.
-    index_bands = materialize(dedup_ops.minhash_bands(
-        old, num_hashes=8, band_size=2, shingle_n=3))
-    prior = dedup_ops.connected_components_star(
-        dedup_ops.lsh_pairs_from_bands(index_bands))
-    new_bands = dedup_ops.minhash_bands(
-        new, num_hashes=8, band_size=2, shingle_n=3)
-    new_pairs = dedup_ops.incremental_lsh_pairs(new_bands, index_bands,
-                                                max_bucket=1000)
-    return dedup_ops.incremental_components(prior, new_pairs)
 
 
 _DUCK_SIMHASH_CTE = f"""toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
@@ -2842,59 +2593,6 @@ def ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(work, "coarse")))
     coded = spark.read.parquet(os.path.join(work, "coded"))
     out = sim_ops.ivf_pq_search_coded(q, coded, cb2, coarse2,
-                                      k=3, nprobe=2)
-    return out.select("query_id", "corpus_id", "adc_dist",
-                      F.col("rank").cast("long").alias("rank"))
-
-
-@register("ann_index_incremental", REGISTRY["ann_ivf_pq_topk"][1])
-def ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL maintenance of the persisted ANN index — the third
-    leg of build/serve/MAINTAIN: the quantizer artifacts are trained
-    ONCE on the initial corpus and frozen (production retrains offline,
-    not per append); a later vector batch pays only its OWN encode —
-    one pure-map `ivf_pq_encode_corpus` pass over the increment,
-    appended as a new coded version — and search reads the union of
-    versions. Because coding is a pure per-row function of the frozen
-    artifacts, incremental-build ≡ full-rebuild EXACTLY, and the oracle
-    is `ann_ivf_pq_topk`'s SQL verbatim (the split is at the id median,
-    so the initial slice contains the 8 lowest-id vectors — the frozen
-    lowest-id artifacts equal the full-corpus ones by construction and
-    the equality is testable, not just claimed).
-
-    Scale shape: a daily embedding append at 100 TB re-encodes nothing
-    — increment bytes in, increment code rows out; the only full-corpus
-    cost remaining is the (offline, optional) artifact retrain."""
-    import os
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    half = c.agg(F.max("corpus_id")).collect()[0][0] // 2
-    old = c.filter(F.col("corpus_id") <= half)
-    inc = c.filter(F.col("corpus_id") > half)
-    cb = sim_ops.pq_codebook(old, m=4, k_centroids=8)
-    coarse = sim_ops.ivf_coarse_centroids(old, n_centroids=8)
-
-    work = _index_dir("peskas_ann_inc_")
-    sim_ops.codebook_to_table(spark, cb) \
-        .write.mode("overwrite").parquet(os.path.join(work, "codebook"))
-    sim_ops.coarse_to_table(spark, coarse) \
-        .write.mode("overwrite").parquet(os.path.join(work, "coarse"))
-    sim_ops.ivf_pq_encode_corpus(old, cb, coarse) \
-        .write.mode("overwrite").parquet(os.path.join(work, "coded/v0"))
-    # the daily append: only the increment is encoded, nothing re-read
-    cb_r = sim_ops.codebook_from_table(
-        spark.read.parquet(os.path.join(work, "codebook")))
-    coarse_r = sim_ops.coarse_from_table(
-        spark.read.parquet(os.path.join(work, "coarse")))
-    sim_ops.ivf_pq_encode_corpus(inc, cb_r, coarse_r) \
-        .write.mode("overwrite").parquet(os.path.join(work, "coded/v1"))
-
-    coded = spark.read.parquet(os.path.join(work, "coded/v0"),
-                               os.path.join(work, "coded/v1"))
-    out = sim_ops.ivf_pq_search_coded(q, coded, cb_r, coarse_r,
                                       k=3, nprobe=2)
     return out.select("query_id", "corpus_id", "adc_dist",
                       F.col("rank").cast("long").alias("rank"))
@@ -4357,27 +4055,6 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), k=5, min_occurrences=2)
 
 
-@register("incremental_substring_spans", f"""
-WITH {_DUCK_SPAN_CTES}
-SELECT doc_id, span_start, span_end, span_tokens FROM spans
-WHERE doc_id % 7 = 0
-""")
-def incremental_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental substring dedup: the ``doc_id % 7 == 0`` slice plays
-    the day's new batch, the rest the persisted corpus — only the new
-    docs are tokenized, the corpus contributes its pre-computed shingle
-    counts (dedup.substring_posting_counts) through one equi-join. Oracle:
-    the full-corpus span set restricted to new docs — exactly what the
-    O(increment) path must reproduce (occurrence counts are global either
-    way)."""
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    index = dedup_ops.substring_posting_counts(old, k=5)
-    return dedup_ops.incremental_duplicated_spans(
-        new, index, k=5, min_occurrences=2)
-
-
 # Span-level DECONTAMINATION twins: the doc_id % 17 == 0 slice plays the
 # eval/benchmark suite, the rest the training corpus. Same k=5 islands
 # machinery as _DUCK_SPAN_CTES, but a shingle is marked when it appears
@@ -5639,51 +5316,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("g.alpha_word_ppm").alias("alpha_word_ppm"),
         F.col("g.n_stop_hits").alias("n_stop_hits"),
         T.gopher_passes(F.col("g")).alias("passes_gopher"))
-
-
-@register("incremental_rollup", """
-SELECT user_id, event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_value,
-       CAST(epoch_us(min(ts)) AS BIGINT) AS min_ts_us,
-       CAST(epoch_us(max(ts)) AS BIGINT) AS max_ts_us
-FROM events GROUP BY user_id, event_type
-""")
-def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance (aggregates.incremental_rollup): the
-    per-(user, event_type) rollup — count, exact decimal sum, min/max
-    event time — maintained as persisted partial state plus a day's batch,
-    WITHOUT rescanning history. The first half of the log (by event id)
-    plays the persisted state, the second the new batch; the oracle is the
-    full-history aggregate, so the merge's correctness statement
-    (incremental == recompute) is itself the driver-checked invariant.
-
-    Plan: each half partial-aggregates independently (map-side combine),
-    then ONE merge groupBy over |keys| rows — cost independent of history
-    size; with the state bucketed on the key its shuffle side vanishes.
-    Decimal sums keep the merge order-insensitive and bit-exact."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type",
-        _dec(F.col("value")).alias("__v"),
-        F.col("ts").cast("timestamp_ltz").alias("ts"))
-    thr = ev.agg(F.expr("max(event_id) div 2").alias("__thr"))
-    ev = ev.crossJoin(F.broadcast(thr))
-    partial = lambda df: df.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("__v").alias("sum_value"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"))
-    state = partial(ev.filter(F.col("event_id") <= F.col("__thr")))
-    batch = partial(ev.filter(F.col("event_id") > F.col("__thr")))
-    merged = agg_ops.incremental_rollup(
-        state, batch, ["user_id", "event_type"],
-        {"n": "count", "sum_value": "sum", "min_ts": "min", "max_ts": "max"})
-    return merged.select(
-        "user_id", "event_type", F.col("n").cast("long").alias("n"),
-        F.round(F.col("sum_value").cast("double"), 2).alias("sum_value"),
-        F.unix_micros("min_ts").alias("min_ts_us"),
-        F.unix_micros("max_ts").alias("max_ts_us"))
 
 
 _DUCK_ZMAP_SKIP = """

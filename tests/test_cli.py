@@ -93,7 +93,9 @@ def test_cli_six_stage_dag(spark, tmp_path):
 def test_cli_stages_run_no_job_after_write(spark, tmp_path, monkeypatch):
     """run_stage counts its rows during the write, so no stage runs a
     Spark job after its output is written; export-landings, a projection
-    of the stored `validated` table, runs exactly one job: its write."""
+    of the stored `validated` table, runs exactly one job: its write.
+    Every stage's job count on this fixture is pinned, so a stage that
+    gains a Spark job fails here."""
     import uuid
 
     from peskas_malawi_data_pipeline_spark import cli
@@ -121,7 +123,8 @@ def test_cli_stages_run_no_job_after_write(spark, tmp_path, monkeypatch):
         tracker = sc.statusTracker()
         jobs[stage] = len(tracker.getJobIdsForGroup(f"stage.{tag}.{stage}"))
         assert tracker.getJobIdsForGroup(f"after.{tag}.{stage}") == [], stage
-    assert jobs["export-landings"] == 1
+    assert jobs == {"ingest": 3, "preprocess": 2, "validate": 9, "merge": 8,
+                    "export-landings": 1, "export-tracks": 3}
 
 
 def test_cli_ingest_unknown_pinned_form_fails_fast(spark, tmp_path):

@@ -662,23 +662,6 @@ def test_pagerank_integer_hand_computed(spark):
     assert got2 == got
 
 
-def test_incremental_lsh_equals_full_run_restriction(spark):
-    """Incremental band-join against a persisted index reproduces exactly
-    the full-corpus pairs that involve a new doc — the correctness contract
-    of the O(increment) daily dedup path."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    full = {(r.id_a, r.id_b) for r in D.minhash_lsh_pairs(
-        docs, num_hashes=8, band_size=2, shingle_n=3).collect()}
-    want = {(a, b) for a, b in full if a % 7 == 0 or b % 7 == 0}
-
-    new = docs.filter(F.col("doc_id") % 7 == 0)
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    got = {(r.id_a, r.id_b) for r in D.incremental_lsh_pairs(
-        D.minhash_bands(new, num_hashes=8, band_size=2, shingle_n=3),
-        D.minhash_bands(old, num_hashes=8, band_size=2, shingle_n=3)).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_connected_components_property_random_graphs(spark):
     """Property: star contraction equals a union-find ground truth
     (minimum id per component) on randomized graphs — chains, cliques,
@@ -747,31 +730,6 @@ def test_pagerank_invariant_to_partitioning_and_checkpointing(spark):
         assert got == ref
 
 
-def test_incremental_components_equals_full_recompute(spark):
-    """incremental_components(prior snapshot, new pairs) must equal
-    connected_components_star over the full pair history — including pairs that
-    BRIDGE two previously-separate components, extend one, or introduce
-    brand-new nodes, with singletons surviving as their own component."""
-    import random
-
-    rng = random.Random(11)
-    old_pairs = [(rng.randrange(25), rng.randrange(25)) for _ in range(30)]
-    old_pairs += [(30, 30)]                      # singleton component
-    new_pairs = [(rng.randrange(35), rng.randrange(35)) for _ in range(10)]
-    new_pairs += [(0, 30), (40, 41)]             # bridge + brand-new nodes
-
-    old_df = spark.createDataFrame(old_pairs, ["id_a", "id_b"])
-    new_df = spark.createDataFrame(new_pairs, ["id_a", "id_b"])
-
-    prior = D.connected_components_star(old_df)
-    got = {(r.id, r.component) for r in
-           D.incremental_components(prior, new_df).collect()}
-    want = {(r.id, r.component) for r in
-            D.connected_components_star(
-                old_df.unionByName(new_df)).collect()}
-    assert got == want
-
-
 def test_simhash_wide_sketch_disperses(spark):
     """bits=60 — the saturation lever: wide sketches must actually use the
     high bits (values above 2^32), stay deterministic, keep the ≤32-bit
@@ -803,9 +761,6 @@ def test_graph_operators_empty_input(spark):
 
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert D.connected_components_star(empty_pairs).count() == 0
-    assert D.incremental_components(
-        spark.createDataFrame([], "id long, component long"),
-        empty_pairs).count() == 0
     empty_edges = spark.createDataFrame([], "src long, dst long")
     assert G.pagerank_integer(empty_edges, iterations=2).count() == 0
 
@@ -847,8 +802,7 @@ def test_barrier_uses_reliable_checkpoints_when_configured(spark, tmp_path):
 def test_fourth_review_regressions(spark):
     """Pin the fourth review pass's fixes: NULL-text rows all survive exact
     dedup (missing content is not duplicate content); a self-pair singleton
-    keeps its component row (star contraction used to drop it — the exact
-    shape incremental_components feeds);
+    keeps its component row (star contraction used to drop it);
     simhash_pairs rejects a max_hamming that voids the pigeonhole recall
     guarantee; NULL-keyed groups get LocScaleB bounds and alerts."""
     from peskas_malawi_data_pipeline_spark.operators import validation as V
@@ -1403,42 +1357,6 @@ def test_minhash_estimate_pairs_estimator_semantics(spark):
     assert D.last_cap_drops()["minhash_estimate_pairs"]["cap"] == 1
 
 
-def test_incremental_substring_spans_equal_full_restricted(spark):
-    """O(increment) substring dedup must equal the full-corpus run
-    restricted to new docs — on the hand corpus AND on a random
-    small-vocabulary corpus with several increment splits."""
-    import random
-
-    docs = _span_docs(spark)
-    full = {(r.doc_id, r.span_start, r.span_end, r.span_tokens)
-            for r in D.duplicated_spans(docs, k=5).collect()}
-    for pred in [F.col("doc_id") % 2 == 0, F.col("doc_id") <= 2]:
-        new, old = docs.filter(pred), docs.filter(~pred)
-        idx = D.substring_posting_counts(old, k=5)
-        got = {(r.doc_id, r.span_start, r.span_end, r.span_tokens)
-               for r in D.incremental_duplicated_spans(new, idx,
-                                                       k=5).collect()}
-        new_ids = {r.doc_id for r in new.collect()}
-        want = {t for t in full if t[0] in new_ids}
-        assert got == want, (got, want)
-
-    rng = random.Random(23)
-    vocab = [f"w{j}" for j in range(6)]
-    rows = [Row(doc_id=i, text=" ".join(rng.choice(vocab)
-                                        for _ in range(rng.randint(0, 25))))
-            for i in range(60)]
-    rdf = spark.createDataFrame(rows, "doc_id int, text string")
-    new, old = rdf.filter(F.col("doc_id") % 5 == 0), \
-        rdf.filter(F.col("doc_id") % 5 != 0)
-    idx = D.substring_posting_counts(old, k=3)
-    got = {(r.doc_id, r.span_start, r.span_end)
-           for r in D.incremental_duplicated_spans(new, idx, k=3).collect()}
-    want = {(r.doc_id, r.span_start, r.span_end)
-            for r in D.duplicated_spans(rdf, k=3).collect()
-            if r.doc_id % 5 == 0}
-    assert got == want
-
-
 def test_prefix_jaccard_pairs_complete_vs_bruteforce(spark):
     """Completeness property of the AllPairs/PPJoin prefix filter: for
     random corpora and several thresholds, dedup.prefix_jaccard_pairs
@@ -1865,82 +1783,6 @@ def test_bpe_apply_counts_auto_local_is_bounded_jobs(spark):
     assert after - before <= 10
 
 
-def test_pinned_incremental_split_stability_and_conflicts(spark):
-    """pinned_incremental_split properties: (1) previously-assigned docs
-    NEVER change split — across a merge that moves their component key,
-    and across a second batch replay; (2) a new doc bridging two prior
-    components inherits the pin of the SMALLEST prior group key, and
-    every doc of the merged component is conflict-flagged iff the prior
-    pins disagreed; (3) an all-new component takes the batch hash rule
-    on its key; (4) re-offering an already-assigned doc as new is a
-    no-op (at-least-once replay)."""
-    from peskas_malawi_data_pipeline_spark.functions import text as T
-    from peskas_malawi_data_pipeline_spark.operators import dedup
-
-    def hash_split_of(spark, key):
-        return spark.range(1).select(
-            (T.md5_prefix_hash(F.lit(str(key)), "split:") % 100)
-            .alias("h")).collect()[0].h
-
-    def rule(h):
-        return "train" if h < 80 else ("valid" if h < 90 else "test")
-
-    # prior state: components {1,2} and {5,6}, singleton 9; stored splits
-    # chosen to DISAGREE so the bridge must conflict
-    prior_comp = spark.createDataFrame(
-        [(1, 1), (2, 1), (5, 5), (6, 5)], "id long, component long")
-    prior_split = spark.createDataFrame(
-        [(1, 1, "train"), (2, 1, "train"), (5, 5, "test"), (6, 5, "test"),
-         (9, 9, "valid")], "doc_id long, group_key long, split string")
-    # batch 1: 14 bridges both prior components; (15,16) all-new pair;
-    # 17 pairless; 9 re-offered (already assigned)
-    pairs1 = spark.createDataFrame(
-        [(2, 14), (6, 14), (15, 16)], "id_a long, id_b long")
-    comp1 = dedup.incremental_components(prior_comp, pairs1)
-    new1 = spark.createDataFrame([(14,), (15,), (16,), (17,), (9,)],
-                                 "doc_id long")
-    out1 = dedup.pinned_incremental_split(prior_split, comp1, new1)
-    rows1 = {r.doc_id: (r.group_key, r.split, r.pin_conflict)
-             for r in out1.collect()}
-    assert len(rows1) == len(out1.collect())          # no duplicate docs
-    # (1) old docs keep their split (group keys may move: 5,6 → 1)
-    assert {i: rows1[i][1] for i in (1, 2, 5, 6, 9)} == {
-        1: "train", 2: "train", 5: "test", 6: "test", 9: "valid"}
-    assert rows1[5][0] == 1 and rows1[6][0] == 1
-    # (2) bridge doc inherits min prior group key's pin, conflict flagged
-    # on the whole merged component
-    assert rows1[14] == (1, "train", True)
-    assert all(rows1[i][2] for i in (1, 2, 5, 6))
-    assert not any(rows1[i][2] for i in (9, 15, 16, 17))
-    # (3) all-new components take the hash rule on their key
-    assert rows1[15] == (15, rule(hash_split_of(spark, 15)), False)
-    assert rows1[16][1] == rows1[15][1]
-    assert rows1[17] == (17, rule(hash_split_of(spark, 17)), False)
-    # (4) re-offered doc 9 kept its stored row exactly
-    assert rows1[9] == (9, "valid", False)
-
-    # batch 2 replay: 20 joins the (15,16) group — every batch-0/1 doc
-    # keeps its split; 20 inherits the group's batch-1 pin
-    prior_split2 = out1          # carries the sticky pin_conflict column
-    comp2 = dedup.incremental_components(
-        comp1, spark.createDataFrame([(16, 20)], "id_a long, id_b long"))
-    out2 = dedup.pinned_incremental_split(
-        prior_split2, comp2, spark.createDataFrame([(20,)], "doc_id long"))
-    rows2 = {r.doc_id: (r.group_key, r.split, r.pin_conflict)
-             for r in out2.collect()}
-    for i, (gk, split, _c) in rows1.items():
-        assert rows2[i][1] == split, i
-    assert rows2[20] == (15, rows1[15][1], False)
-    # a component spans two splits ONLY where pin_conflict says so
-    by_gk = {}
-    for i, (gk, split, c) in rows2.items():
-        by_gk.setdefault(gk, []).append((split, c))
-    for gk, members in by_gk.items():
-        splits = {s for s, _ in members}
-        if len(splits) > 1:
-            assert all(c for _, c in members), gk
-
-
 def test_fused_near_dup_bridges_modalities(spark):
     """fused_near_dup: a text-dup pair (1,2) chained to an image-dup pair
     (2,3) forms ONE group — the cross-modal bridge neither stream sees
@@ -2078,112 +1920,6 @@ def test_bpe_encode_ids_vocab_limit_raises(spark):
     import pytest
     with pytest.raises(ValueError, match="local_vocab_limit"):
         bpe.bpe_encode_ids(df, [("a b", "ab")], local_vocab_limit=2)
-
-
-def test_compact_band_index_replay_equivalence(spark):
-    """Two-run replay: a 3-batch incremental dedup chain (bands → pairs →
-    components → pinned split) with the band index COMPACTED between
-    batches produces byte-identical final components and split snapshots
-    to the never-compacted run, with strictly fewer index rows; weight
-    conservation holds; compaction is idempotent."""
-    from peskas_malawi_data_pipeline_spark.operators import dedup as D
-
-    texts = [
-        "alpha beta gamma delta epsilon zeta", "alpha beta gamma delta",
-        "one two three four five six", "one two three four five",
-        "quick brown fox jumps over dog", "quick brown fox jumps over",
-        "unique standalone document text here now",
-    ]
-    rows = [(i * 10 + j, t + f" tail{j}")
-            for i, t in enumerate(texts) for j in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    batches = [df.filter(F.col("doc_id") % 3 == k) for k in range(3)]
-
-    def run(compact: bool):
-        index = None
-        comp = spark.createDataFrame([], "id long, component long")
-        split = spark.createDataFrame(
-            [], "doc_id long, group_key long, split string,"
-                " pin_conflict boolean")
-        n_index_rows = 0
-        for b in batches:
-            nb = D.minhash_bands(b, num_hashes=8, band_size=2, shingle_n=3)
-            idx = index if index is not None else nb.limit(0)
-            pairs = D.incremental_lsh_pairs(
-                nb, idx, max_bucket=1000,
-                weight_col="band_weight" if compact else None)
-            comp = D.incremental_components(comp, pairs)
-            split = D.pinned_incremental_split(split, comp,
-                                               b.select("doc_id"))
-            comp = spark.createDataFrame(comp.collect(),
-                                         "id long, component long")
-            split = spark.createDataFrame(
-                split.collect(), "doc_id long, group_key long,"
-                                 " split string, pin_conflict boolean")
-            merged = (idx.drop("band_weight").unionByName(nb)
-                      if "band_weight" in idx.columns
-                      else idx.unionByName(nb))
-            if compact:
-                merged = D.compact_band_index(merged)
-            index = spark.createDataFrame(merged.collect(), merged.schema)
-            n_index_rows = index.count()
-        return (set(map(tuple, comp.collect())),
-                set(map(tuple, split.collect())), n_index_rows)
-
-    comp_a, split_a, rows_a = run(compact=False)
-    comp_b, split_b, rows_b = run(compact=True)
-    assert comp_a == comp_b
-    assert split_a == split_b
-    assert rows_b < rows_a          # retention actually shrank the state
-
-
-def test_compact_band_index_preserves_cap_suppression(spark):
-    """A bucket the cap suppressed keeps being suppressed after
-    compaction: the carried weight makes the weight-aware join see the
-    ORIGINAL cardinality, so compacting a hot bucket to one row never
-    resurrects its pairs; an unweighted join over the same compacted
-    index WOULD emit them (the bug the weight exists to prevent)."""
-    from peskas_malawi_data_pipeline_spark.operators import dedup as D
-
-    # synthetic band index: one hot bucket with 5 members (cap 4)
-    idx = spark.createDataFrame(
-        [(i, 0, "hot") for i in range(5)] + [(90, 1, "cold")],
-        "doc_id long, band_id int, band_key string")
-    new = spark.createDataFrame([(100, 0, "hot"), (101, 1, "cold")],
-                                "doc_id long, band_id int,"
-                                " band_key string")
-    full = D.incremental_lsh_pairs(new, idx, max_bucket=4)
-    assert {tuple(r) for r in full.collect()} == {(90, 101)}
-
-    compacted = D.compact_band_index(idx)
-    got = D.incremental_lsh_pairs(new, compacted, max_bucket=4,
-                                  weight_col="band_weight")
-    assert {tuple(r) for r in got.collect()} == {(90, 101)}
-    # sanity: dropping the weight resurrects the suppressed bucket
-    unweighted = D.incremental_lsh_pairs(
-        new, compacted.drop("band_weight"), max_bucket=4)
-    assert (0, 100) in {tuple(r) for r in unweighted.collect()}
-    # idempotence: re-compacting the compacted index is a no-op
-    again = D.compact_band_index(compacted)
-    assert sorted(map(tuple, again.collect())) \
-        == sorted(map(tuple, compacted.collect()))
-
-
-def test_split_pair_store_watermark(spark):
-    """split_pair_store: active/archive partition at the batch watermark —
-    disjoint, exhaustive, and the active side keeps exactly the batches
-    the incremental pipeline may still replay."""
-    from peskas_malawi_data_pipeline_spark.operators import dedup as D
-
-    pairs = spark.createDataFrame(
-        [(1, 2, 0), (2, 3, 1), (3, 4, 2), (4, 5, 3)],
-        "id_a long, id_b long, batch_id long")
-    active, archived = D.split_pair_store(pairs, watermark_batch=2)
-    act = {tuple(r) for r in active.collect()}
-    arc = {tuple(r) for r in archived.collect()}
-    assert act == {(3, 4, 2), (4, 5, 3)}
-    assert arc == {(1, 2, 0), (2, 3, 1)}
-    assert act | arc == {tuple(r) for r in pairs.collect()}
 
 
 def test_exact_rerank_matches_bruteforce_on_shortlist(spark):
@@ -2585,48 +2321,3 @@ def test_decontaminate_flags_overlapping_docs(spark):
     assert len(out) > 0
     assert all(r.n_overlap >= 1 for r in out)
     assert all(r.doc_id % 19 != 0 for r in out)  # eval slice never flagged
-
-
-def test_incremental_lsh_pairs_arrival_order_invariant(spark):
-    """Growing a band index batch by batch with incremental_lsh_pairs
-    accumulates EXACTLY the batch LSH pair set under any arrival order and
-    batching: two adversarial landings — duplicate cluster members split
-    across batches, and reverse order — both equal the single-shot batch
-    run, and replaying a batch (at-least-once delivery) changes nothing
-    after the terminal DISTINCT."""
-    from peskas_malawi_data_pipeline_spark.core.barrier import materialize
-
-    rows = []
-    for g in range(6):
-        base = " ".join(f"g{g}w{j}" for j in range(15))
-        for m in range(3):
-            rows.append(Row(doc_id=g * 10 + m,
-                            text=base + (" tail" if m == 2 else "")))
-    for i in range(40):
-        rows.append(Row(doc_id=1000 + i, text=f"unique {i} " * 5 + f"x{i}"))
-    df = spark.createDataFrame(rows)
-
-    want = {(r.id_a, r.id_b) for r in D.minhash_lsh_pairs(
-        df, num_hashes=8, band_size=2, shingle_n=3).collect()}
-    assert len(want) >= 6          # clusters actually pair
-
-    def run_stream(batches):
-        index, acc = None, []
-        for ids in batches:
-            batch = df.filter(F.col("doc_id").isin(ids))
-            nb = materialize(D.minhash_bands(
-                batch, num_hashes=8, band_size=2, shingle_n=3))
-            idx = index if index is not None else nb.limit(0)
-            acc.extend((r.id_a, r.id_b) for r in
-                       D.incremental_lsh_pairs(nb, idx,
-                                               max_bucket=1000).collect())
-            index = materialize(idx.unionByName(nb))
-        return set(acc)
-
-    ids = [r.doc_id for r in rows]
-    split = [ids[0::3], ids[1::3], ids[2::3]]       # cluster members split
-    assert run_stream(split) == want
-    assert run_stream([list(reversed(ids))[i::2] for i in range(2)]) == want
-    # at-least-once replay: a re-delivered batch re-appends its pairs AND
-    # its bands; both are absorbed by set semantics
-    assert run_stream(split + [split[1]]) == want

@@ -271,49 +271,6 @@ def test_form_schema_unknown_form_raises(spark):
             "dialect_a_kobo", "dialect_b_kobo")
 
 
-def test_incremental_rollup_equals_full_aggregate(spark):
-    """Property: partial-aggregate state merged with a batch's partials
-    (aggregates.incremental_rollup) equals re-aggregating the full data,
-    for every merge class — and unknown measure columns are rejected."""
-    import random
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.operators import aggregates as A
-
-    rng = random.Random(5)
-    rows = [(rng.randint(0, 9), rng.randint(-50, 50)) for _ in range(400)]
-    df = spark.createDataFrame(rows, "k int, v int")
-    partial = lambda d: d.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"),
-        F.min("v").alias("mn"), F.max("v").alias("mx"))
-    half = len(rows) // 2
-    merged = A.incremental_rollup(
-        partial(spark.createDataFrame(rows[:half], "k int, v int")),
-        partial(spark.createDataFrame(rows[half:], "k int, v int")),
-        ["k"], {"n": "count", "s": "sum", "mn": "min", "mx": "max"})
-    want = {r.k: (r.n, r.s, r.mn, r.mx) for r in partial(df).collect()}
-    got = {r.k: (r.n, r.s, r.mn, r.mx) for r in merged.collect()}
-    assert got == want
-
-    with pytest.raises(ValueError, match="absent"):
-        A.incremental_rollup(partial(df), partial(df), ["k"],
-                             {"nope": "sum"})
-
-
-def test_incremental_rollup_rejects_key_as_measure(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from peskas_malawi_data_pipeline_spark.operators import aggregates as A
-
-    d = spark.createDataFrame([(1, 2)], "k int, v int") \
-        .groupBy("k").agg(F.sum("v").alias("v"))
-    with pytest.raises(ValueError, match="keys"):
-        A.incremental_rollup(d, d, ["k"], {"k": "sum"})
-
-
 def test_operator_argument_guards(spark):
     """Round-6 review hardening: degenerate arguments error up front
     instead of silently degrading (full-table 'sample', NULL tiles,
