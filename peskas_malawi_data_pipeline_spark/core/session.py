@@ -19,7 +19,20 @@ defaults are chosen for correctness-at-scale first:
   but makes the warm DAG and the first ANN result slower in wall time. The
   flags go in ``defaultJavaOptions``, which Spark puts before a caller's
   ``extraJavaOptions``, and act only when ``get_spark`` launches the JVM (the
-  CLI, the tests, perfbench); under spark-submit pass them with ``--conf``.
+  CLI, the tests, perfbench); under spark-submit pass them with ``--conf``;
+- Python workers forked from the package's own daemon
+  (``peskas_malawi_data_pipeline_spark.worker_daemon``). PySpark's worker
+  calls ``importlib.invalidate_caches()`` on every task, and on Python 3.11
+  each of the 16 cached zip finders (``pyspark.zip``, the py4j zip, the
+  spark-core jar) then re-reads its archive directory: about 0.17 CPU s per
+  task before any work, 0.016 s with the daemon's finders, which skip the
+  re-read. A ``corpus_ann`` search request runs 4 such tasks. Python 3.13's
+  finders only drop their cache entry there, but still re-read on the next
+  import. The daemon starts as ``python -m``, so ``get_spark`` puts the
+  package's parent directory first on ``spark.executorEnv.PYTHONPATH``:
+  workers can then import it wherever the driver could, whatever the working
+  directory and ``PYTHONPATH``. Under spark-submit, executors must be able to
+  import the package when the daemon starts (SCALE.md §11).
 """
 
 from __future__ import annotations
@@ -27,6 +40,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the package, for the workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -56,6 +73,8 @@ _DEFAULTS = {
         " -XX:Tier4MinInvocationThreshold=6000"
         " -XX:Tier4CompileThreshold=150000"
         " -XX:Tier4BackEdgeThreshold=400000",
+    # see the module docstring
+    "spark.python.daemon.module": "peskas_malawi_data_pipeline_spark.worker_daemon",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     "spark.ui.enabled": "false",
 }
@@ -76,6 +95,9 @@ def get_spark(app_name: str = "peskas_malawi_data_pipeline_spark",
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH"))
+        if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

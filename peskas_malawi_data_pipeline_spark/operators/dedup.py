@@ -970,10 +970,11 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     Each round is two edge rewrites; each rewrite is ONE window-aggregate
     shuffle on the node id plus a distinct. Edges only ever move toward the
     component minimum, so the edge set shrinks toward a star per component;
-    fixpoint is detected with an order-independent checksum (count +
-    xxhash64 sum) instead of a compare-join. Returns (id, component) for
-    every node appearing in ``pairs``, the component being its minimum id
-    (the canonical keeper). Raises ``RuntimeError`` when ``max_rounds``
+    the fixpoint is the first round whose output repeats its input's
+    order-independent checksum (count + xxhash64 sum; no compare-join), so
+    an input that is already a star forest stops after round 1. Returns
+    (id, component) for every node appearing in ``pairs``, the component
+    being its minimum id (the canonical keeper). Raises ``RuntimeError`` when ``max_rounds``
     rounds pass without the checksum repeating: unconverged labels would
     split components silently.
     """
@@ -984,24 +985,39 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                                      F.col("src").alias("dst")))
                 .filter(F.col("src") != F.col("dst")).distinct())
 
+    def materialize_checked(df: DataFrame, edge: Column):
+        """``materialize(df)`` with the count and xxhash64 sum of its rows
+        where ``edge`` holds: an order-independent checksum of the edge set
+        that an Observation takes during the materialize action, with no
+        job of its own. The sum is decimal, because a long sum of 64-bit
+        hashes overflows ANSI."""
+        obs = Observation()
+        out = materialize(df.observe(
+            obs, F.count(F.when(edge, 1)).alias("cnt"),
+            F.sum(F.when(edge, F.xxhash64("src", "dst")
+                         .cast("decimal(27,0)"))).alias("hsh")))
+        met = obs.get
+        return out, (met["cnt"], met["hsh"])
+
     # checkpoint before the loop: round 1 and the node frame otherwise each
     # re-evaluate the upstream candidate pipeline. The node set comes from
     # the BASE frame (before canon drops self-loops): a node whose only
     # pair is (x, x) — e.g. a singleton star edge from a prior snapshot —
     # must still get its output row.
-    base = materialize(
+    loop = F.col("src") == F.col("dst")
+    base, prev_chk = materialize_checked(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"),
                             F.col(id_a).alias("dst")))
-        .distinct())
+        .distinct(), ~loop)
     # nodes is consumed exactly once (the final left join) and derives
     # from the materialized base blocks — a second barrier here bought
     # nothing and cost a full action cascade (r14)
     nodes = base.select(F.col("src").alias("id")).distinct()
-    edges = base.filter(F.col("src") != F.col("dst"))
-
-    from pyspark.sql import Observation
-    prev_chk = None
+    edges = base.filter(~loop)
+    # prev_chk is the checksum of edges, which already has canon's shape
+    # (both orientations, no self-loops, distinct): a round whose output
+    # repeats it is the fixpoint, and a star forest stops after round 1
     for _ in range(max_rounds):
         # large-star: every neighbor v > u re-points at m = min(Γ(u) ∪ {u}).
         # Emitted edges always run big→small, which is exactly the
@@ -1023,16 +1039,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
         lo = lo.withColumn("m", mn)
         small = (lo.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
                  .union(lo.select(F.col("src"), F.col("m").alias("dst"))))
-        # fixpoint checksum rides the materialize action as an
-        # Observation — no separate count+hash job per round.
-        # decimal accumulator: a long sum of 64-bit hashes overflows ANSI
-        obs = Observation()
-        edges = materialize(canon(small).observe(
-            obs, F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(27,0)"))
-            .alias("hsh")))
-        met = obs.get
-        chk = (met["cnt"], met["hsh"])
+        edges, chk = materialize_checked(canon(small), F.lit(True))
         if chk == prev_chk:
             break
         prev_chk = chk

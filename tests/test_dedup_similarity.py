@@ -617,6 +617,29 @@ def test_connected_components_star_raises_when_rounds_run_out(spark):
         D.connected_components_star(chain, max_rounds=2)
 
 
+def test_connected_components_star_forest_stops_after_round_one(spark):
+    """A star forest (each component a star on its minimum id, the shape of
+    ``corpus_ann``'s disjoint near-dup pairs) is already the fixpoint. The
+    base frame's checksum seeds the loop, so round 1 repeats it and stops
+    instead of running a second round only to see the checksum repeat.
+    Pinned as the Spark jobs of the call plus a collect."""
+    sc = spark.sparkContext
+    edges = [(2 * i, 2 * i + 1) for i in range(20)]
+    edges += [(100, 100 + k) for k in range(1, 6)]
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    group = "test.components.star_forest"
+    sc.setJobGroup(group, group)
+    try:
+        got = {(r.id, r.component)
+               for r in D.connected_components_star(pairs).collect()}
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == {(x, min(e)) for e in edges for x in e}
+    assert jobs == 11           # one round; a second round is 5 more
+
+
 def test_multimodal_resize_downscale_and_passthrough(spark):
     import hashlib
 

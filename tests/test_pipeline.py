@@ -461,50 +461,6 @@ def test_full_pipeline_composes_into_one_lazy_plan(spark, raw, devices):
     assert len(rows) > 0 and all(r.n_pings >= 1 for r in rows)
 
 
-def test_streaming_incremental_validate_matches_batch(spark, raw, tmp_path):
-    """Production shape for incremental validation at scale: the robust
-    LocScaleB bounds are a nightly BATCH artifact (a scalar per metric);
-    the landing stream applies them as literals — pure stateless
-    projections, no stream-side aggregation, so arbitrarily late data
-    never recomputes history. The streamed alerts must equal the batch
-    validate stage's on the same rows (same bounds, same masking)."""
-    from peskas_malawi_data_pipeline_spark.operators import validation as V
-    from peskas_malawi_data_pipeline_spark.plans.validate import DEFAULT_K
-
-    pre = preprocess.preprocess_landings(raw)
-    batch = validate.validate_counts_fused(pre).select(
-        "survey_id", "catch_taxon", "n_fishers", "n_boats")
-
-    # nightly artifact: one row of bounds, collected driver-side
-    b = V.loc_scale_bounds_multi(
-        pre, {"n_fishers": (DEFAULT_K["k_nfishers"], "expm1"),
-              "n_boats": (DEFAULT_K["k_nboats"], "expm1")}).first()
-
-    src = str(tmp_path / "landing")
-    pre_mat = pre
-    pre_mat.write.parquet(src)
-    stream = spark.readStream.schema(pre_mat.schema).parquet(src)
-
-    def masked(col, ub):
-        v = F.col(col)
-        bad = (v < 0) | (F.lit(ub).isNotNull() & (v > F.lit(ub)))
-        return F.when(~bad, v)
-
-    streamed = stream.select(
-        "survey_id", "catch_taxon",
-        masked("n_fishers", b["n_fishers_upper"]).alias("n_fishers"),
-        masked("n_boats", b["n_boats_upper"]).alias("n_boats"))
-    out = str(tmp_path / "out")
-    (streamed.writeStream.format("parquet")
-     .option("checkpointLocation", str(tmp_path / "ckpt"))
-     .option("path", out).trigger(availableNow=True).start()
-     .awaitTermination(120))
-
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-
-
 def test_grid_complete_null_key_level_and_salted_join_guard(spark):
     """tidyr::complete parity — NA is a regular key level: a NULL-keyed
     group keeps its aggregate in its own grid cell (a plain '=' join would
