@@ -24,15 +24,16 @@ defaults are chosen for correctness-at-scale first:
   (``peskas_malawi_data_pipeline_spark.worker_daemon``). PySpark's worker
   calls ``importlib.invalidate_caches()`` on every task, and on Python 3.11
   each of the 16 cached zip finders (``pyspark.zip``, the py4j zip, the
-  spark-core jar) then re-reads its archive directory: about 0.17 CPU s per
-  task before any work, 0.016 s with the daemon's finders, which skip the
-  re-read. A ``corpus_ann`` search request runs 4 such tasks. Python 3.13's
-  finders only drop their cache entry there, but still re-read on the next
-  import. The daemon starts as ``python -m``, so ``get_spark`` puts the
-  package's parent directory first on ``spark.executorEnv.PYTHONPATH``:
-  workers can then import it wherever the driver could, whatever the working
-  directory and ``PYTHONPATH``. Under spark-submit, executors must be able to
-  import the package when the daemon starts (SCALE.md §11).
+  spark-core jar) then re-reads its archive directory: 0.19-0.24 CPU s per
+  task before any work on 4 local cores, against 0.016-0.019 s with the
+  daemon's finders, which skip the re-read. A ``corpus_ann`` search request
+  runs 4 such tasks. Python 3.13's finders only drop their cache entry
+  there, but still re-read the directory on the next import. The daemon
+  starts as ``python -m``, so ``get_spark`` puts the package's parent
+  directory first on ``spark.executorEnv.PYTHONPATH``: workers can then
+  import it wherever the driver could, whatever the working directory and
+  ``PYTHONPATH``. Under spark-submit, executors must be able to import the
+  package when the daemon starts (SCALE.md §11).
 """
 
 from __future__ import annotations

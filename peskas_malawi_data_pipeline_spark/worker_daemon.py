@@ -6,7 +6,7 @@ calls ``importlib.invalidate_caches()`` once per task, so that files shipped
 with ``addPyFile`` become importable. On Python 3.11 and 3.12 that makes
 every cached ``zipimport.zipimporter`` re-read its whole archive directory:
 one per package path inside ``pyspark.zip``, the py4j zip and the
-spark-core jar, about 0.15 CPU s per task before the task does any work.
+spark-core jar, about 0.2 CPU s per task before the task does any work.
 
 An archive on a worker's path does not change while the worker lives (Spark
 never overwrites a file it already serves under that name), so the finders
