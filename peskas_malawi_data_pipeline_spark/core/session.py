@@ -75,7 +75,8 @@ _DEFAULTS = {
         " -XX:Tier4CompileThreshold=150000"
         " -XX:Tier4BackEdgeThreshold=400000",
     # see the module docstring
-    "spark.python.daemon.module": "peskas_malawi_data_pipeline_spark.worker_daemon",
+    "spark.python.daemon.module":
+        "peskas_malawi_data_pipeline_spark.worker_daemon",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     "spark.ui.enabled": "false",
 }

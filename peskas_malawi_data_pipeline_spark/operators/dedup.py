@@ -974,9 +974,9 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     order-independent checksum (count + xxhash64 sum; no compare-join), so
     an input that is already a star forest stops after round 1. Returns
     (id, component) for every node appearing in ``pairs``, the component
-    being its minimum id (the canonical keeper). Raises ``RuntimeError`` when ``max_rounds``
-    rounds pass without the checksum repeating: unconverged labels would
-    split components silently.
+    being its minimum id (the canonical keeper). Raises ``RuntimeError``
+    when ``max_rounds`` rounds pass without the checksum repeating:
+    unconverged labels would split components silently.
     """
     def canon(df: DataFrame) -> DataFrame:
         """Both orientations, self-loops dropped, deduped."""
