@@ -40,8 +40,8 @@ _DRIVER_CHECKED_R01_R02 = {
     "quality_scores", "hash_split", "quota_sample", "length_histogram",
     "pack_chunks", "pack_greedy", "pack_utilization", "weighted_sample",
     "fingerprint_groups", "exact_dedup", "minhash_lsh_pairs",
-    "near_dedup_survivors", "dedup_components_star", "simhash",
-    "simhash_pairs", "jaccard_pairs", "embedding_near_dup", "alert_fusion",
+    "near_dedup_survivors", "dedup_components_star", "jaccard_pairs",
+    "embedding_near_dup", "alert_fusion",
 }
 # Judge-cleared via the independent tools/oracle_check.py sweep recorded in
 # VERDICT.md round 2 — they have exact-oracle evidence, so they yield their

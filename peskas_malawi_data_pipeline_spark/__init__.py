@@ -11,10 +11,10 @@ Spark-first:
   as one fused lazy plan per stage over Parquet/Delta-style storage;
 - the grouped robust-outlier kernel (median/MAD "LocScaleB" bounds) as a
   two-pass DataFrame aggregation — no UDF in the hot path;
-- large-scale training-data extensions: dedup (exact / MinHash-LSH / SimHash /
-  n-gram Jaccard), similarity search (brute-force + LSH-bucketed cosine ANN),
-  text analysis (lang-id, quality, tokens, fingerprints), multimodal binary
-  columns.
+- large-scale training-data extensions: dedup (exact / MinHash-LSH candidates
+  verified by n-gram Jaccard / exact substrings), similarity search
+  (brute-force + LSH-bucketed cosine ANN), text analysis (lang-id, quality,
+  tokens, fingerprints), multimodal binary columns.
 
 Everything is built on the public Apache Spark DataFrame/SQL API.
 """

@@ -39,6 +39,7 @@ defaults are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+import shlex
 
 from pyspark.sql import SparkSession
 
@@ -82,24 +83,54 @@ _DEFAULTS = {
 }
 
 
+def _submitted_conf() -> dict[str, str]:
+    """The Spark properties the driver JVM was submitted with: under
+    spark-submit, the JVM's own (it started first, and PySpark connects to
+    it); otherwise the ``--master`` and ``--conf key=value`` arguments of
+    ``PYSPARK_SUBMIT_ARGS``, which PySpark launches the JVM with."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        from pyspark import SparkConf, SparkContext
+        SparkContext._ensure_initialized()
+        return dict(SparkConf().getAll())
+    args = [part for arg in shlex.split(
+                os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+            for part in (arg.split("=", 1) if arg.startswith("--") else [arg])]
+    conf = {}
+    for flag, value in zip(args, args[1:]):
+        if flag in ("--conf", "-c") and "=" in value:
+            key, value = value.split("=", 1)
+            conf[key] = value
+        elif flag == "--master":
+            conf["spark.master"] = value
+    return conf
+
+
 def get_spark(app_name: str = "peskas_malawi_data_pipeline_spark",
               master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test harness;
-    on a real cluster, leave it unset and submit through spark-submit.
+    ``master`` defaults to the submitted master, else to
+    ``local[$SPARK_GRAFT_CPUS]`` for the test harness; on a real cluster,
+    leave it unset and submit through spark-submit.
+
+    A default fills only a key that was not submitted (spark-submit's
+    ``--conf``, or ``--conf`` in ``PYSPARK_SUBMIT_ARGS``); ``extra_conf``
+    wins over both. PySpark copies every builder option over the submitted
+    value, so setting a default there would discard the submitted one.
     """
+    submitted = _submitted_conf()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = submitted.get("spark.master", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
+    conf = {k: v for k, v in _DEFAULTS.items() if k not in submitted}
     if extra_conf:
         conf.update(extra_conf)
-    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH"))
-        if p)
+    path_key = "spark.executorEnv.PYTHONPATH"
+    conf[path_key] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT,
+                    conf.get(path_key, submitted.get(path_key))) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,10 +1,11 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
-SimHash, n-gram Jaccard/containment, exact-substring spans and connected
-components — all as DataFrame expressions over md5-based hashes
-(functions.text.md5_prefix_hash), which makes every signature bit-identical
-in any engine with md5 and therefore oracle-checkable. Every operator is
+n-gram Jaccard/containment, exact-substring spans, a banded Hamming join over
+integer sketches and connected components — all as DataFrame expressions
+over md5-based hashes (functions.text.md5_prefix_hash), which makes every
+signature bit-identical in any engine with md5 and therefore
+oracle-checkable. Every operator is
 batch: it reads the whole corpus it is given and keeps no state between
 runs.
 
@@ -14,11 +15,13 @@ Scale notes (100 TB):
 - MinHash-LSH's only wide operation is the band-bucket self-join; band keys
   are hashes (uniform), and the candidate-pair explosion is bounded by
   bucket size — cap monster buckets (boilerplate docs) with ``max_bucket``;
-- SimHash is a pure map (one pass, no shuffle) producing a ``bits``-bit
-  sketch (16 by default, up to 60); near-dup lookup is the banded
-  Hamming self-join of :func:`simhash_pairs` / :func:`sketch_hamming_pairs`,
-  capped per band bucket like the MinHash join;
-- n-gram Jaccard is the *verify* stage run only on candidate pairs.
+- near-duplicate text has one candidate generator (MinHash-LSH) and one
+  verifier (:func:`jaccard_pairs`), the MinHash near-dup pass of Lee et
+  al. (ACL 2022); n-gram Jaccard is the *verify* stage run only on
+  candidate pairs;
+- :func:`sketch_hamming_pairs` is the banded Hamming self-join over
+  integer sketches (perceptual image hashes), capped per band bucket like
+  the MinHash join.
 """
 
 from __future__ import annotations
@@ -39,21 +42,6 @@ _CAP_SEQ = itertools.count()
 # site -> {"dropped_rows", "total_rows", "cap"} for the most recent run of
 # each capped candidate generator in this process (see last_cap_drops).
 _LAST_CAP_DROPS: dict[str, dict] = {}
-
-
-# site -> most recent pre-shuffle cost forecast (see last_cost_reports).
-_LAST_COST_REPORTS: dict[str, dict] = {}
-
-
-def last_cost_reports() -> dict[str, dict]:
-    """Pre-shuffle cost-forecast audit — the sibling channel to
-    :func:`last_cap_drops` for operators that stay EXACT rather than
-    capping: for each forecasting operator that has run in this process,
-    the most recent estimate (e.g. ``prefix_jaccard_pairs`` records
-    ``{"est_candidate_pairs", "max_bucket", "budget"}``). An estimate
-    over budget also logs a warning at forecast time naming the scale
-    alternative; this accessor is for tests and monitoring glue."""
-    return {k: dict(v) for k, v in _LAST_COST_REPORTS.items()}
 
 
 def last_cap_drops() -> dict[str, dict]:
@@ -259,140 +247,14 @@ def lsh_pairs_from_bands(bands: DataFrame, id_col: str = "doc_id",
             .select(*carry_cols, "id_a", "id_b").distinct())
 
 
-def minhash_estimate_pairs(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", num_hashes: int = 8,
-                           band_size: int = 2, shingle_n: int = 3,
-                           threshold: float = 0.5,
-                           max_bucket: int | None = 1000) -> DataFrame:
-    """LSH candidate pairs scored by the MinHash ESTIMATE — the fraction
-    of agreeing signature slots, an unbiased estimator of Jaccard
-    similarity (Broder 1997) — instead of an exact shingle re-verify.
-    This is the 100 TB verify when re-reading text is the expensive part:
-    the signature already sitting in the band index IS the verifier, so
-    the corpus is touched exactly once (the signature map). Returns
-    (id_a, id_b, n_agree, est_jaccard) with est_jaccard ≥ ``threshold``;
-    n_agree/num_hashes is exactly representable for power-of-two
-    num_hashes, keeping the estimate cross-engine bit-identical.
-
-    Plan: one signature pass; the banded index CARRIES the signature so
-    candidate scoring needs no second join against the corpus; hot
-    buckets capped + audited like every other candidate generator
-    (:func:`last_cap_drops`)."""
-    assert num_hashes % band_size == 0
-    sigs = minhash_signature(df.select(id_col, text_col), text_col,
-                             num_hashes, shingle_n)
-    n_bands = num_hashes // band_size
-    banded = sigs.select(
-        id_col, "minhash",
-        F.posexplode(F.array(*[
-            F.concat_ws("_", *[F.col("minhash")[b * band_size + r]
-                               .cast("string") for r in range(band_size)])
-            for b in range(n_bands)
-        ])).alias("band_id", "band_key"))
-    banded = _capped_barrier(banded, ("band_id", "band_key"), max_bucket,
-                             "minhash_estimate_pairs")
-    left = banded.select("band_id", "band_key",
-                         F.col(id_col).alias("id_a"),
-                         F.col("minhash").alias("__sa"))
-    right = banded.select("band_id", "band_key",
-                          F.col(id_col).alias("id_b"),
-                          F.col("minhash").alias("__sb"))
-    cand = (left.join(right, ["band_id", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "__sa", "__sb").distinct())
-    n_agree = F.aggregate(
-        F.zip_with(F.col("__sa"), F.col("__sb"),
-                   lambda x, y: (x == y).cast("long")),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return (cand.select("id_a", "id_b", n_agree.alias("n_agree"))
-            .withColumn("est_jaccard",
-                        F.col("n_agree") / F.lit(float(num_hashes)))
-            .filter(F.col("est_jaccard") >= threshold))
-
-
-def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
-    """Per-doc SimHash sketch over word tokens: each token hashes to ``bits``
-    bits (md5-derived); each bit position accumulates +1/−1 across distinct
-    tokens; the sign vector packs into one integer. Pure map, no shuffle.
-
-    ``bits`` up to 60 is supported — the sketch-width lever for corpora
-    that saturate 32 bits (shared-vocabulary boilerplate; see SCALE.md
-    §10). ≤32 bits reads 8 md5 hex chars (kept byte-stable for the
-    cross-engine oracles); wider sketches read 15 hex chars (60 bits,
-    still < 2^63 so the conv→long cast never overflows).
-    """
-    if bits > 60:
-        raise ValueError(f"simhash bits must be <= 60, got {bits}")
-    # Hash each distinct token once (one md5 per token, not per token×bit),
-    # expand each hash to its ±1 bit-vote vector, then ONE fold accumulates
-    # all `bits` votes per traversal step — the token array is walked once,
-    # not once per bit (VERDICT r01 "What's wrong" #2).
-    n_hex = 8 if bits <= 32 else 15
-    hashes = F.transform(
-        F.array_distinct(T.tokens(F.col(text_col))),
-        lambda t: F.conv(F.substring(F.md5(F.concat(F.lit("sh:"), t)), 1, n_hex),
-                         16, 10).cast("long"))
-    bitvotes = F.transform(hashes, lambda h: F.array(*[
-        F.when(F.shiftright(h, b).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
-        for b in range(bits)]))
-    votes = F.aggregate(
-        bitvotes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, v: F.zip_with(acc, v, lambda a, x: a + x))
-    tmp = df.withColumn("__votes", votes)
-    # pack the sign vector into one integer with a second fold; 2^b via
-    # pow(double) is a power of two, exactly representable for every b
-    # here, and the long cast is safe for b <= 60
-    packed = F.aggregate(
-        F.col("__votes"),
-        F.struct(F.lit(0).cast("long").alias("v"), F.lit(0).alias("b")),
-        lambda acc, x: F.struct(
-            (acc["v"] + F.when(x > 0, F.pow(F.lit(2.0), acc["b"]).cast("long"))
-                         .otherwise(F.lit(0).cast("long"))).alias("v"),
-            (acc["b"] + F.lit(1)).alias("b")),
-        lambda acc: acc["v"])
-    return tmp.withColumn("simhash", packed.cast("long")).drop("__votes")
-
-
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", bits: int = 16, bands: int = 4,
-                  max_hamming: int = 3,
-                  max_bucket: int | None = 1000) -> DataFrame:
-    """SimHash near-duplicate pairs: band the ``bits``-bit sketch into
-    ``bands`` contiguous bit-slices, self-join on (band index, band value) —
-    any pair within ``max_hamming`` of each other collides on ≥1 band when
-    ``max_hamming < bands`` (pigeonhole) — then verify with exact Hamming
-    distance (bit_count of xor, JVM-side).
-
-    Scale shape: the sketch is a pure map evaluated ONCE into a
-    materialized (id, sketch, band) index; the only shuffle is the band
-    equi-join on small uniform integer keys; the verify runs only on
-    candidates. Returns (id_a, id_b, hamming).
-
-    ``max_bucket`` caps hot band buckets, same as the MinHash twin
-    (:func:`lsh_pairs_from_bands`): a band value shared by b docs —
-    empty/near-empty docs all sketching to 0, or shared boilerplate
-    saturating a narrow sketch — otherwise contributes O(b²) join rows
-    with no bound (the repo's 10× probe measured an 86.6× wall blow-up on
-    the uncapped join, SCALE.md §10d). Capping weakens the pigeonhole
-    recall guarantee ONLY for docs inside capped buckets (their pairs may
-    be missed — a lower bound, never false positives, since the Hamming
-    verify still gates every emitted pair); drops are observed into
-    :func:`last_cap_drops` and logged. ``max_bucket=None`` opts out.
-    """
-    sigs = simhash(df.select(id_col, text_col), text_col, bits)
-    return sketch_hamming_pairs(sigs, "simhash", id_col, bits, bands,
-                                max_hamming, max_bucket, "simhash_pairs")
-
-
 def sketch_hamming_pairs(sigs: DataFrame, sketch_col: str,
                          id_col: str, bits: int, bands: int,
                          max_hamming: int, max_bucket: int | None,
                          site: str) -> DataFrame:
     """Banded Hamming near-dup join over ANY integer-sketch frame — the
-    band/cap/verify machinery shared by text SimHash
-    (:func:`simhash_pairs`) and perceptual image hashes
-    (multimodal.perceptual_hash → queries ``image_near_dup``): band the
+    band/cap/verify machinery behind perceptual image hashes
+    (multimodal.perceptual_hash → queries ``image_near_dup`` and
+    ``cross_modal_dedup``): band the
     ``bits``-bit sketch into ``bands`` contiguous bit-slices, self-join
     on (band index, band value) — any pair within ``max_hamming``
     collides on ≥1 band when ``max_hamming < bands`` (pigeonhole) — then
@@ -461,11 +323,6 @@ def jaccard_pairs(df: DataFrame, block_col: str, id_col: str = "doc_id",
 
     The default ``threshold=0.2`` keeps the all-default call on the safe
     capped inverted-index path (matching the registry query).
-    BREAKING CHANGE (round 6, recorded in CHANGES_r6/r7): the default was
-    0.0 through round 5 — an all-default call now returns a SMALLER pair
-    set (zero/low-overlap pairs dropped) on a different execution path;
-    callers wanting the old behavior must pass ``threshold=0.0,
-    allow_all_pairs=True`` explicitly.
     ``threshold <= 0`` must also emit zero-overlap pairs, so it falls back to
     the all-pairs block join with array_intersect/array_union — a path where
     ``max_shingle_df`` CANNOT apply (there is no posting index to cap), so
@@ -962,10 +819,11 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     """Duplicate GROUPS from candidate pairs: connected components by
     alternating large-star / small-star edge rewrites (Kiveris et al.,
     *Connected Components in MapReduce and Beyond*, SoCC'14). This is the
-    step that turns pairwise near-dup evidence (MinHash/SimHash/Jaccard)
-    into dedup decisions; it converges in O(log² n) rounds regardless of
-    graph diameter, so long transitive near-dup chains cost no more
-    rounds than shallow boilerplate stars.
+    step that turns pairwise near-dup evidence (MinHash-LSH pairs,
+    Jaccard-verified pairs, sketch Hamming pairs) into dedup decisions; it
+    converges in O(log² n) rounds regardless of graph diameter, so long
+    transitive near-dup chains cost no more rounds than shallow
+    boilerplate stars.
 
     Each round is two edge rewrites; each rewrite is ONE window-aggregate
     shuffle on the node id plus a distinct. Edges only ever move toward the
@@ -1083,201 +941,3 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     cos = F.when(denom > 0, dot(F.col("v_a"), F.col("v_b")) / denom)
     return (pairs.select("id_a", "id_b", cos.alias("cosine"))
             .filter(F.col("cosine") >= threshold))
-
-
-def _prefix_posting_frames(df: DataFrame, id_col: str, text_col: str,
-                           shingle_n: int,
-                           tau_ppm: int) -> tuple[DataFrame, DataFrame]:
-    """Shared construction for the AllPairs/PPJoin family: the
-    materialized shingle-set frame ``(id, s, n)`` and the LAZY
-    prefix-posting frame ``(id, n, pos0, tok)`` under the rarest-first
-    (df, tok) total order with exact integer-ppm prefix lengths. Both
-    :func:`prefix_jaccard_pairs` and :func:`prefix_join_cost_report`
-    build from here, so the cost estimate prices exactly the posting
-    frame the join would shuffle."""
-    sets = materialize(df.select(
-        F.col(id_col).alias("id"),
-        T.word_shingles(F.col(text_col), shingle_n).alias("s"))
-        # long from the start: every ppm bound below multiplies n by up to
-        # 1e6, which overflows int32 at ~2148 shingles — ANSI job crash,
-        # or silent filter falsehood (dropped qualifying pairs) without
-        .withColumn("n", F.size("s").cast("long"))
-        .filter(F.col("n") > 0))
-    post = sets.select("id", F.explode("s").alias("tok"))
-    dfreq = post.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # rarest-first rank per doc; (df, tok) is a total order so prefixes
-    # are deterministic in both engines
-    ranked = (post.join(dfreq, "tok")
-              .groupBy("id")
-              .agg(F.array_sort(F.collect_list(F.struct("df", "tok")))
-                   .alias("ordered")))
-    # ⌈τ·n⌉ in exact integer ppm arithmetic: a double τ·n landing one ulp
-    # ABOVE an integer would over-ceil and shorten the prefix — a silent
-    # completeness hole. (One ulp below only lengthens it: still exact.)
-    ceil_tau_n = F.expr(f"(({tau_ppm} * n) + 999999) div 1000000")
-    pref = (sets.join(ranked, "id")
-            .select("id", "n",
-                    F.slice(F.col("ordered"), 1,
-                            (F.col("n") - ceil_tau_n + 1)
-                            .cast("int")).alias("prefix")))
-    posting = pref.select(
-        "id", "n", F.posexplode("prefix.tok").alias("pos0", "tok"))
-    return sets, posting
-
-
-def prefix_join_cost_report(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", shingle_n: int = 3,
-                            threshold: float = 0.5) -> DataFrame:
-    """Answer-sized (1-row) cost estimate for the prefix-filtered join
-    BEFORE its candidate shuffle runs: how many candidate matches the
-    prefix-posting self-join would generate on THIS corpus at THIS
-    threshold. :func:`prefix_jaccard_pairs` is deliberately uncapped (its
-    algebraic completeness is the point), so its safety valve is this
-    forecast, not a lossy drop: on a saturated corpus — flat shingle-df
-    distribution, where rarest-first prefixes have nothing rare to pick
-    (SCALE.md §10f measured 5.9× at 10×) — the estimate goes superlinear
-    and the engine says so up front, naming the banded MinHash path
-    (:func:`minhash_lsh_pairs`) as the scale alternative.
-
-    Columns: ``n_docs`` (docs with ≥1 shingle — every one contributes ≥1
-    prefix posting), ``n_prefix_postings``, ``n_prefix_tokens`` (distinct
-    bucket keys), ``max_bucket`` (hottest prefix bucket), and
-    ``est_candidate_pairs`` = Σ c·(c−1)/2 over prefix buckets — the EXACT
-    row count the candidate join produces before its size/positional
-    filters (same-id and duplicate-token collisions included, which is
-    what the shuffle pays for). One posting-frame aggregation; everything
-    after is answer-sized.
-    """
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    tau_ppm = int(round(threshold * 1_000_000))
-    sets, posting = _prefix_posting_frames(
-        df, id_col, text_col, shingle_n, tau_ppm)
-    buckets = posting.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    stats = buckets.agg(
-        F.count(F.lit(1)).cast("long").alias("n_prefix_tokens"),
-        F.sum("c").cast("long").alias("n_prefix_postings"),
-        F.max("c").cast("long").alias("max_bucket"),
-        F.sum(F.expr("c * (c - 1) div 2")).cast("long")
-        .alias("est_candidate_pairs"))
-    docs = sets.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    return docs.crossJoin(stats).select(
-        "n_docs", "n_prefix_postings", "n_prefix_tokens", "max_bucket",
-        "est_candidate_pairs")
-
-
-def prefix_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", shingle_n: int = 3,
-                         threshold: float = 0.5,
-                         candidate_budget: int | None = 100_000_000
-                         ) -> DataFrame:
-    """EXACT all-pairs Jaccard ≥ ``threshold`` over the whole corpus via
-    prefix filtering (AllPairs/PPJoin, Xiao et al. WWW'08) — no blocking
-    key, no LSH recall loss: the completeness guarantee is algebraic.
-
-    EAGER BY DEFAULT: with ``candidate_budget`` set (the default),
-    CONSTRUCTING this DataFrame materializes the posting frame and runs
-    the forecast aggregate (Spark jobs at call time, before the returned
-    frame is ever executed) — measured ~1.75× call-to-first-result at
-    sf0.1 vs the lazy path, amortizing as the join grows because both
-    self-join sides reuse the materialized blocks. Pass
-    ``candidate_budget=None`` for a fully lazy plan with no forecast.
-
-    Two shingle sets with J ≥ τ overlap in ≥ ⌈τ·|x|⌉ elements, so under
-    any global total order of shingles, each set's PREFIX — its first
-    ``|x| − ⌈τ·|x|⌉ + 1`` elements — must intersect the other's (skipping
-    a whole prefix leaves too few elements to reach the bound). Ordering
-    shingles rarest-first makes prefixes the LEAST collide-prone elements:
-    the posting index inverts only prefixes, and stop-shingle hot buckets
-    disappear by construction rather than by cap — which is what keeps
-    this path exact while ``jaccard_pairs``'s full inverted index needs
-    ``max_shingle_df``. The size filter (min ≥ τ·max, checked in exact
-    integer ppm) prunes candidates before verification, and PPJoin's
-    positional filter tightens it: a match on the token at 1-based prefix
-    position i of x / j of y bounds the pair's overlap by
-    ``min(i, j) + min(|x|−i, |y|−j)`` (≤ min(i,j)−1 shared tokens can
-    precede the match, the match itself is 1, ≤ min of the suffix sizes
-    can follow), which must reach the pair's equivalent overlap bound
-    ``⌈τ·(|x|+|y|)/(1+τ)⌉``. The bound is true for EVERY match — not just
-    the pair's first shared token — so filtering each match and
-    de-duplicating keeps completeness. All bounds are exact integer
-    ppm arithmetic (no float boundary can drop a qualifying pair).
-
-    Plan: one document-frequency aggregation over postings, one shuffle
-    join to rank shingles, one prefix-posting self-join (Σ prefix-bucket²,
-    bounded by rare-first ordering), then exact verification ONLY on
-    candidates via set intersection. Output: (id_a, id_b, n_inter,
-    n_union, jac_ppm) — integers, engine-exact.
-
-    ``candidate_budget``: before the candidate shuffle runs, the posting
-    frame is materialized and priced (:func:`prefix_join_cost_report`'s
-    aggregate — exact Σ c·(c−1)/2 over prefix buckets); the figure is
-    recorded in :func:`last_cost_reports` and a warning naming the banded
-    MinHash alternative is logged when it exceeds the budget. The
-    operator still runs — completeness is its contract; the forecast
-    exists so a saturated corpus is flagged BEFORE the shuffle, not
-    after. ``None`` disables the check (and the posting materialization).
-    """
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    tau_ppm = int(round(threshold * 1_000_000))
-    sets, posting = _prefix_posting_frames(
-        df, id_col, text_col, shingle_n, tau_ppm)
-    if candidate_budget is not None:
-        # materialize once: the forecast aggregate and both self-join
-        # sides then read the same blocks instead of re-deriving the
-        # dfreq/rank/slice lineage
-        posting = materialize(posting)
-        est = (posting.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-               .agg(F.sum(F.expr("c * (c - 1) div 2")).cast("long")
-                    .alias("p"),
-                    F.max("c").cast("long").alias("m")).collect()[0])
-        report = {"est_candidate_pairs": int(est["p"] or 0),
-                  "max_bucket": int(est["m"] or 0),
-                  "budget": candidate_budget}
-        _LAST_COST_REPORTS["prefix_jaccard_pairs"] = report
-        if report["est_candidate_pairs"] > candidate_budget:
-            _CAP_LOG.warning(
-                "prefix_jaccard_pairs: forecast %d candidate matches "
-                "exceeds budget %d — the corpus's shingle-frequency "
-                "distribution is too flat for prefix filtering (hottest "
-                "prefix bucket: %d postings); use the banded MinHash "
-                "path (minhash_lsh_pairs) as the candidate generator and "
-                "keep this operator as the exact verify inside blocks "
-                "(SCALE.md §10f)",
-                report["est_candidate_pairs"], candidate_budget,
-                report["max_bucket"])
-    # equivalent-overlap bound o_min = ⌈τ(n_a+n_b)/(1+τ)⌉, exact in ppm
-    o_min = F.expr(f"(({tau_ppm} * (a.n + b.n)) + {1_000_000 + tau_ppm} - 1) "
-                   f"div {1_000_000 + tau_ppm}")
-    # positional upper bound from this match (pos0 is 0-based; i = pos0+1)
-    o_ub = (F.least(F.col("a.pos0"), F.col("b.pos0")) + 1
-            + F.least(F.col("a.n") - (F.col("a.pos0") + 1),
-                      F.col("b.n") - (F.col("b.pos0") + 1)))
-    cand = (posting.alias("a")
-            .join(posting.alias("b"), "tok")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .filter(F.least(F.col("a.n"), F.col("b.n")) * 1_000_000
-                    >= F.lit(tau_ppm)
-                    * F.greatest(F.col("a.n"), F.col("b.n")))
-            .filter(o_ub >= o_min)
-            .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"))
-            .distinct())
-    verify = (cand
-              .join(sets.select(F.col("id").alias("id_a"),
-                                F.col("s").alias("__sa"),
-                                F.col("n").alias("n_a")), "id_a")
-              .join(sets.select(F.col("id").alias("id_b"),
-                                F.col("s").alias("__sb"),
-                                F.col("n").alias("n_b")), "id_b"))
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
-    scored = verify.select(
-        "id_a", "id_b", inter.alias("n_inter"),
-        (F.col("n_a") + F.col("n_b") - inter).cast("long").alias("n_union"))
-    return (scored
-            .filter(F.col("n_inter") * 1_000_000
-                    >= F.lit(tau_ppm) * F.col("n_union"))
-            .select("id_a", "id_b", "n_inter", "n_union",
-                    F.expr("n_inter * 1000000 div n_union")
-                    .alias("jac_ppm")))

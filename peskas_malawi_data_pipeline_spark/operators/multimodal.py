@@ -113,8 +113,7 @@ PHASH_SCHEMA = StructType([
 def _fake_phash(payload: bytes | None) -> int | None:
     """Deterministic stand-in for the perceptual-hash kernel: the first
     15 hex chars (60 bits — kept under 2^63 so the value is SQL-exact in
-    any BIGINT engine, same width lever as the wide SimHash) of
-    sha256(payload). Stable across runs/engines; NULL payload → NULL."""
+    any BIGINT engine) of sha256(payload). Stable across runs/engines; NULL payload → NULL."""
     if payload is None:
         return None
     return int(hashlib.sha256(bytes(payload)).hexdigest()[:15], 16)

@@ -1416,7 +1416,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fuzzy dedup extension (MinHash-LSH, SimHash, n-gram Jaccard)
+# Fuzzy dedup extension (MinHash-LSH candidates, n-gram Jaccard verify)
 # ---------------------------------------------------------------------------
 
 _DUCK_SHINGLES = ("list_distinct(list_transform(range(1, greatest(len(t)-2,1)+1), "
@@ -1768,50 +1768,6 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_ops.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2, shingle_n=3)
     return dedup_ops.connected_components_star(pairs)
-
-
-_DUCK_SIMHASH_CTE = f"""toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
-hs AS (SELECT doc_id,
-  list_transform(list_distinct(t),
-                 x -> CAST('0x' || substr(md5('sh:' || x), 1, 8) AS BIGINT)) AS h
-  FROM toks),
-sig AS (SELECT doc_id, CAST({' + '.join(
-    f"(CASE WHEN coalesce(list_sum(list_transform(h, v -> CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END)), 0) > 0 THEN {2**b} ELSE 0 END)"
-    for b in range(32))} AS BIGINT) AS simhash
-FROM hs)"""
-
-
-@register("simhash", f"""
-WITH {_DUCK_SIMHASH_CTE}
-SELECT doc_id, simhash FROM sig
-""")
-def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash sketch per document (pure map, no shuffle)."""
-    out = dedup_ops.simhash(_t(spark, sf_dir, "documents"), bits=32)
-    return out.select("doc_id", "simhash")
-
-
-@register("simhash_pairs", f"""
-WITH {_DUCK_SIMHASH_CTE},
-bands AS (
-  SELECT doc_id, simhash, t.b AS band_id, (simhash >> (t.b * 8)) & 255 AS band_val
-  FROM sig, UNNEST([0, 1, 2, 3]) AS t(b)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                  a.simhash AS sh_a, b.simhash AS sh_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id)
-SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
-""")
-def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup lookup: band the sketch (4×8 bits), equi-join on
-    band value (pigeonhole guarantees recall for hamming < bands), verify
-    exact Hamming with bit_count(xor) — completes the SimHash dedup path.
-    A 16-bit sketch saturates on a shared-vocabulary corpus (near cross-
-    product within bands); 32 bits keeps band collisions discriminative."""
-    return dedup_ops.simhash_pairs(
-        _t(spark, sf_dir, "documents"), bits=32, bands=4, max_hamming=3)
 
 
 @register("jaccard_pairs", f"""
@@ -2879,9 +2835,9 @@ def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the binary media schema; operators.multimodal.perceptual_hash sketches
     each image to a 60-bit perceptual hash (pixel kernel behind the codec
     seam — the deterministic sha256 stub here, a real dHash where PIL
-    exists), then dedup.sketch_hamming_pairs — the same banded machinery
-    as simhash_pairs — emits pairs within Hamming ≤ 3 (4×15-bit bands,
-    pigeonhole-complete, hot buckets capped + audited). With the stub
+    exists), then dedup.sketch_hamming_pairs (the banded Hamming join)
+    emits pairs within Hamming ≤ 3 (4×15-bit bands, pigeonhole-complete,
+    hot buckets capped + audited like the MinHash join). With the stub
     kernel only exact payload duplicates collide (Hamming 0), which is
     what makes the full path oracle-checkable; injected-kernel tests
     cover the near-miss banding. The harness corpus has NO duplicate
@@ -4164,30 +4120,6 @@ def decontaminate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.decontaminate_segments(corpus, ev, k=5)
 
 
-@register("minhash_estimate_pairs", f"""
-WITH {_DUCK_MINHASH_CTES},
-scored AS (
-  SELECT p.id_a, p.id_b,
-         CAST({' + '.join(f'(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)'
-                          for i in range(8))} AS BIGINT) AS n_agree
-  FROM mh_pairs p
-  JOIN sig a ON a.doc_id = p.id_a
-  JOIN sig b ON b.doc_id = p.id_b)
-SELECT id_a, id_b, n_agree, n_agree / 8.0 AS est_jaccard
-FROM scored WHERE n_agree / 8.0 >= 0.5
-""")
-def minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidates verified by the MinHash estimate (fraction of
-    agreeing signature slots — Broder's unbiased Jaccard estimator)
-    instead of an exact shingle re-verify: the one-corpus-pass dedup shape
-    for when re-reading text is the expensive part. n_agree/8 is binary-
-    exact, so the estimate hash-matches across engines. Oracle scores the
-    same banded candidates by joining the signature CTE onto both sides."""
-    return dedup_ops.minhash_estimate_pairs(
-        _t(spark, sf_dir, "documents"), num_hashes=8, band_size=2,
-        shingle_n=3, threshold=0.5)
-
-
 @register("pii_redact", f"""
 WITH inj AS (SELECT doc_id, {_PII_INJECT_SQL} AS t FROM documents)
 SELECT doc_id,
@@ -5379,81 +5311,6 @@ def zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append(layout_ops.skip_report(zmap, lo, hi)
                    .select(F.lit(name).alias("layout"), "*"))
     return out[0].unionByName(out[1])
-
-
-@register("prefix_jaccard_pairs", f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
-sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS s FROM toks
-       WHERE len({_DUCK_SHINGLES}) > 0),
-ex AS (SELECT doc_id, unnest(s) AS tok FROM sh),
-cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM ex a JOIN ex b USING (tok) WHERE a.doc_id < b.doc_id),
-scored AS (SELECT id_a, id_b,
-    CAST(len(list_intersect(ta.s, tb.s)) AS BIGINT) AS n_inter,
-    CAST(len(ta.s) + len(tb.s) - len(list_intersect(ta.s, tb.s)) AS BIGINT)
-      AS n_union
-  FROM cand
-  JOIN sh ta ON ta.doc_id = id_a
-  JOIN sh tb ON tb.doc_id = id_b)
-SELECT id_a, id_b, n_inter, n_union,
-       CAST(n_inter * 1000000 // n_union AS BIGINT) AS jac_ppm
-FROM scored WHERE n_inter * 1000000 >= 800000 * n_union
-""")
-def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT corpus-wide Jaccard ≥ 0.8 (the near-exact-duplicate band) via
-    prefix filtering (dedup.prefix_jaccard_pairs — AllPairs/PPJoin): the
-    no-recall-loss alternative to MinHash-LSH, with hot shingle buckets
-    eliminated by the rarest-first prefix construction instead of a lossy
-    cap. The oracle is deliberately the NAIVE full inverted index + exact
-    verification, so a completeness bug in the prefix/size/positional
-    filters would surface as missing rows, not agree by construction.
-    Prefix length scales with (1−τ)·|set|, so the high-τ band is also the
-    cheap one; the synthetic corpus's FLAT shingle-frequency distribution
-    (every shingle df≈95 at 10×: no rare shingles for prefixes to exploit)
-    is the documented worst case — see SCALE.md §10f."""
-    return dedup_ops.prefix_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), shingle_n=3, threshold=0.8)
-
-
-@register("prefix_join_cost_report", f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
-sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS s FROM toks
-       WHERE len({_DUCK_SHINGLES}) > 0),
-szs AS (SELECT doc_id, s, CAST(len(s) AS BIGINT) AS n FROM sh),
-ex AS (SELECT doc_id, n, unnest(s) AS tok FROM szs),
-dfreq AS (SELECT tok, COUNT(*) AS df FROM ex GROUP BY tok),
-rk AS (SELECT doc_id, n, tok,
-       row_number() OVER (PARTITION BY doc_id ORDER BY df, tok) AS rn
-       FROM ex JOIN dfreq USING (tok)),
-pref AS (SELECT doc_id, tok FROM rk
-         WHERE rn <= n - ((500000 * n + 999999) // 1000000) + 1),
-buckets AS (SELECT tok, COUNT(*) AS c FROM pref GROUP BY tok),
-stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_prefix_tokens,
-                 CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_prefix_postings,
-                 CAST(COALESCE(MAX(c), 0) AS BIGINT) AS max_bucket,
-                 CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT)
-                   AS est_candidate_pairs
-          FROM buckets),
-docs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM sh)
-SELECT n_docs, n_prefix_postings, n_prefix_tokens, max_bucket,
-       est_candidate_pairs
-FROM docs, stats
-""")
-def prefix_join_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-shuffle cost forecast for the exact prefix-filtered join
-    (dedup.prefix_join_cost_report): the EXACT candidate-match volume
-    Σ c·(c−1)/2 over rarest-first prefix buckets at τ=0.5, priced from
-    one posting aggregation BEFORE any pair is generated. This is the
-    mechanical form of SCALE.md §10f's "flat-df corpus is the worst
-    case" knowledge: prefix_jaccard_pairs consults the same figure
-    against its candidate_budget and warns toward minhash_lsh_pairs when
-    the corpus is too saturated for prefix filtering. τ=0.5 (vs the
-    pairs query's 0.8) exercises the long-prefix regime where the
-    forecast matters most. The oracle replays the identical rarest-first
-    (df, tok) ranking and exact integer-ppm prefix lengths via a window
-    rank instead of Spark's array_sort+slice."""
-    return dedup_ops.prefix_join_cost_report(
-        _t(spark, sf_dir, "documents"), shingle_n=3, threshold=0.5)
 
 
 _MARKUP_INJECT_SQL = (

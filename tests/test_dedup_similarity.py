@@ -36,14 +36,6 @@ def test_minhash_lsh_finds_near_dups_not_distinct(spark):
     assert not any(4 in p for p in got)     # unrelated doc never pairs
 
 
-def test_simhash_close_for_near_dups(spark):
-    out = {r.doc_id: r.simhash for r in D.simhash(_docs(spark), bits=16).collect()}
-    assert out[1] == out[5] == out[2]       # identical token multisets
-    ham_near = bin(out[1] ^ out[3]).count("1")
-    ham_far = bin(out[1] ^ out[4]).count("1")
-    assert ham_near < ham_far
-
-
 def test_jaccard_pairs_exact_values(spark):
     df = _docs(spark).withColumn("block", F.lit(1))
     pairs = {(r.id_a, r.id_b): r.jaccard
@@ -753,30 +745,6 @@ def test_pagerank_invariant_to_partitioning_and_checkpointing(spark):
         assert got == ref
 
 
-def test_simhash_wide_sketch_disperses(spark):
-    """bits=60 — the saturation lever: wide sketches must actually use the
-    high bits (values above 2^32), stay deterministic, keep the ≤32-bit
-    path byte-stable (8-hex oracle parity), and reject bits > 60."""
-    import pytest as _pytest
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta token{i} epsilon zeta") for i in range(40)],
-        ["doc_id", "text"])
-    wide = {r.doc_id: r.simhash for r in D.simhash(docs, bits=60).collect()}
-    assert any(v >= (1 << 32) for v in wide.values())
-    assert wide == {r.doc_id: r.simhash
-                    for r in D.simhash(docs, bits=60).collect()}
-    # wide sketches separate docs a 16-bit sketch would collide
-    narrow = {r.doc_id: r.simhash for r in D.simhash(docs, bits=16).collect()}
-    assert len(set(wide.values())) >= len(set(narrow.values()))
-    # banded pair generation still works on the wide sketch
-    pairs = D.simhash_pairs(docs, bits=60, bands=6, max_hamming=3)
-    for r in pairs.collect():
-        assert r.hamming <= 3
-    with _pytest.raises(ValueError, match="<= 60"):
-        D.simhash(docs, bits=64)
-
-
 def test_graph_operators_empty_input(spark):
     """Empty candidate/edge frames must yield empty results, not hang the
     fixpoint loops or crash the checksum/convergence logic."""
@@ -826,8 +794,8 @@ def test_fourth_review_regressions(spark):
     """Pin the fourth review pass's fixes: NULL-text rows all survive exact
     dedup (missing content is not duplicate content); a self-pair singleton
     keeps its component row (star contraction used to drop it);
-    simhash_pairs rejects a max_hamming that voids the pigeonhole recall
-    guarantee; NULL-keyed groups get LocScaleB bounds and alerts."""
+    sketch_hamming_pairs rejects a max_hamming that voids the pigeonhole
+    recall guarantee; NULL-keyed groups get LocScaleB bounds and alerts."""
     from peskas_malawi_data_pipeline_spark.operators import validation as V
 
     docs = spark.createDataFrame(
@@ -843,8 +811,9 @@ def test_fourth_review_regressions(spark):
 
     import pytest as _pytest
     with _pytest.raises(ValueError, match="pigeonhole"):
-        D.simhash_pairs(docs.filter("text is not null"),
-                        bits=16, bands=4, max_hamming=4)
+        D.sketch_hamming_pairs(
+            spark.createDataFrame([(1, 0), (2, 0)], "doc_id long, sk long"),
+            "sk", "doc_id", 16, 4, 4, None, "pigeonhole_check")
 
     vals = spark.createDataFrame(
         [("g", 10.0), ("g", 11.0), ("g", 12.0), ("g", 1000.0),
@@ -1047,43 +1016,47 @@ def test_containment_property_vs_python_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# hot-bucket caps: simhash_pairs cap + observed (non-silent) drop audit
+# hot-bucket caps: banded sketch join cap + observed (non-silent) drop audit
 
 
-def test_simhash_pairs_hot_bucket_cap(spark):
-    """simhash_pairs must cap hot band buckets like its MinHash twin: a
-    boilerplate clique whose identical sketches land every member in the
+def _sketch_clique(spark):
+    """Literal 32-bit sketches: an 8-row clique sharing one sketch (ids
+    10-17) and a pair sharing a second (ids 1, 2). The two sketches differ
+    in every 8-bit band, so the clique and the pair share no band bucket."""
+    return spark.createDataFrame(
+        [(i, 0x11111111) for i in range(10, 18)]
+        + [(1, 0x22222222), (2, 0x22222222)], "doc_id long, sketch long")
+
+
+def _sketch_pairs(df, max_bucket):
+    """32-bit sketches in 4 bands, pairs within Hamming 3."""
+    return D.sketch_hamming_pairs(df, "sketch", "doc_id", 32, 4, 3,
+                                  max_bucket, "sketch_pairs")
+
+
+def test_sketch_hamming_pairs_hot_bucket_cap(spark):
+    """The banded sketch join must cap hot band buckets like its MinHash
+    twin: a clique whose identical sketches land every member in the
     same bucket of every band would otherwise emit O(clique²) pairs with
     no bound (the 10× probe measured 86.6× wall on the uncapped join,
     SCALE.md §10d). Cap-drop semantics: capped-bucket pairs vanish (lower
     bound — never false positives, the Hamming verify still gates), pairs
     outside capped buckets survive untouched."""
-    clique = [Row(doc_id=i, text="boilerplate footer terms and conditions "
-                                 "apply") for i in range(10, 18)]
-    pair = [Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
-            Row(doc_id=2, text="the quick brown fox jumps over the lazy dog")]
-    df = spark.createDataFrame(clique + pair)
+    df = _sketch_clique(spark)
 
     uncapped = {(r.id_a, r.id_b)
-                for r in D.simhash_pairs(df, bits=32, bands=4, max_hamming=3,
-                                         max_bucket=None).collect()}
+                for r in _sketch_pairs(df, max_bucket=None).collect()}
     # 8-clique (28 pairs) + the (1, 2) exact dup
     assert (1, 2) in uncapped and len(uncapped) == 29
 
     capped = {(r.id_a, r.id_b)
-              for r in D.simhash_pairs(df, bits=32, bands=4, max_hamming=3,
-                                       max_bucket=4).collect()}
+              for r in _sketch_pairs(df, max_bucket=4).collect()}
     assert capped == {(1, 2)}
 
     # a cap ABOVE every bucket size changes nothing
     lax = {(r.id_a, r.id_b)
-           for r in D.simhash_pairs(df, bits=32, bands=4, max_hamming=3,
-                                    max_bucket=1000).collect()}
+           for r in _sketch_pairs(df, max_bucket=1000).collect()}
     assert lax == uncapped
-
-    import inspect
-    default = inspect.signature(D.simhash_pairs).parameters["max_bucket"].default
-    assert isinstance(default, int) and default > 0
 
 
 def test_cap_drops_are_observed_not_silent(spark):
@@ -1091,24 +1064,22 @@ def test_cap_drops_are_observed_not_silent(spark):
     dropped (VERDICT r5 #2): the metric rides the index barrier's own job
     via Observation — zero extra Spark jobs — and lands in
     last_cap_drops() for monitoring, with a warning logged when nonzero."""
+    _sketch_pairs(_sketch_clique(spark), max_bucket=4).collect()
+    m = D.last_cap_drops()["sketch_pairs"]
+    # the 8-row clique occupies all 4 bands: 32 of the 40 index rows drop
+    assert m == {"dropped_rows": 32, "total_rows": 40, "cap": 4}
+
+    # not triggered -> zero drops recorded (and nothing dropped)
+    _sketch_pairs(_sketch_clique(spark), max_bucket=1000).collect()
+    m = D.last_cap_drops()["sketch_pairs"]
+    assert m["dropped_rows"] == 0 and m["total_rows"] == 40
+
+    # the MinHash band cap and the stop-shingle posting cap audit too
     clique = [Row(doc_id=i, text="boilerplate footer terms and conditions "
                                  "apply") for i in range(10, 18)]
     pair = [Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
             Row(doc_id=2, text="the quick brown fox jumps over the lazy dog")]
     df = spark.createDataFrame(clique + pair)
-
-    D.simhash_pairs(df, bits=32, bands=4, max_hamming=3, max_bucket=4).collect()
-    m = D.last_cap_drops()["simhash_pairs"]
-    # the 8-doc clique occupies all 4 bands: 32 of the 40 index rows drop
-    assert m == {"dropped_rows": 32, "total_rows": 40, "cap": 4}
-
-    # not triggered -> zero drops recorded (and nothing dropped)
-    D.simhash_pairs(df, bits=32, bands=4, max_hamming=3,
-                    max_bucket=1000).collect()
-    m = D.last_cap_drops()["simhash_pairs"]
-    assert m["dropped_rows"] == 0 and m["total_rows"] == 40
-
-    # the MinHash band cap and the stop-shingle posting cap audit too
     D.minhash_lsh_pairs(df, num_hashes=8, band_size=2, max_bucket=4).collect()
     mh = D.last_cap_drops()["lsh_pairs_from_bands"]
     assert mh["cap"] == 4 and mh["dropped_rows"] > 0
@@ -1128,13 +1099,11 @@ def test_cap_observation_resolves_under_reliable_checkpoint(spark, tmp_path):
     sc = spark.sparkContext
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        clique = [Row(doc_id=i, text="boilerplate footer terms") for i in
-                  range(6)]
-        df = spark.createDataFrame(clique)
-        out = D.simhash_pairs(df, bits=32, bands=4, max_hamming=3,
-                              max_bucket=2).collect()
+        df = spark.createDataFrame([(i, 0x11111111) for i in range(6)],
+                                   "doc_id long, sketch long")
+        out = _sketch_pairs(df, max_bucket=2).collect()
         assert out == []
-        m = D.last_cap_drops()["simhash_pairs"]
+        m = D.last_cap_drops()["sketch_pairs"]
         assert m == {"dropped_rows": 24, "total_rows": 24, "cap": 2}
     finally:
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
@@ -1352,175 +1321,6 @@ def test_decontaminate_segments_edge_docs(spark):
     assert set(got) == {4, 5}
     assert got[4] == (1, 1, 6, "p q r s t u")
     assert got[5] == (1, 1, 10, "m m m m m m m m m m")
-
-
-def test_minhash_estimate_pairs_estimator_semantics(spark):
-    """The signature-slot agreement fraction behaves like an estimator:
-    identical/normalized duplicates score 1.0, near-dups score high,
-    unrelated docs never reach the threshold, and the n_agree/num_hashes
-    arithmetic is exact (n_agree a long, estimate a power-of-two ratio)."""
-    out = {(r.id_a, r.id_b): (r.n_agree, r.est_jaccard)
-           for r in D.minhash_estimate_pairs(_docs(spark), num_hashes=8,
-                                             band_size=2,
-                                             threshold=0.5).collect()}
-    assert out[(1, 2)] == (8, 1.0) and out[(1, 5)] == (8, 1.0)
-    assert (1, 3) in out and out[(1, 3)][0] >= 4     # near-dup: most slots
-    assert not any(4 in p for p in out)              # unrelated never passes
-
-    # threshold=1.0 keeps only exact-signature pairs
-    strict = {(r.id_a, r.id_b)
-              for r in D.minhash_estimate_pairs(_docs(spark), num_hashes=8,
-                                                band_size=2,
-                                                threshold=1.0).collect()}
-    assert strict == {(1, 2), (1, 5), (2, 5)}
-
-    # the cap audits through the shared machinery
-    D.minhash_estimate_pairs(_docs(spark), num_hashes=8, band_size=2,
-                             threshold=0.5, max_bucket=1).collect()
-    assert D.last_cap_drops()["minhash_estimate_pairs"]["cap"] == 1
-
-
-def test_prefix_jaccard_pairs_complete_vs_bruteforce(spark):
-    """Completeness property of the AllPairs/PPJoin prefix filter: for
-    random corpora and several thresholds, dedup.prefix_jaccard_pairs
-    returns EXACTLY the brute-force Jaccard->=tau pair set (prefix and
-    size filters must never drop a qualifying pair)."""
-    import random
-
-    from peskas_malawi_data_pipeline_spark.operators import dedup
-
-    rng = random.Random(17)
-    vocab = [f"w{i}" for i in range(30)]
-    docs = [(i, " ".join(rng.choices(vocab, k=rng.randint(0, 12))))
-            for i in range(60)]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-
-    def shingles(text, n=3):
-        t = [w for w in text.lower().split() if w]
-        if not t:
-            return set()
-        if len(t) < n:
-            return {" ".join(t)}
-        return {" ".join(t[i:i + n]) for i in range(len(t) - n + 1)}
-
-    sets = {i: shingles(tx) for i, tx in docs}
-    for tau in (0.3, 0.5, 0.8):
-        tau_ppm = int(round(tau * 1_000_000))
-        want = set()
-        for a in range(60):
-            for b in range(a + 1, 60):
-                sa, sb = sets[a], sets[b]
-                if not sa or not sb:
-                    continue
-                inter = len(sa & sb)
-                union = len(sa | sb)
-                if inter * 1_000_000 >= tau_ppm * union:
-                    want.add((a, b, inter, union))
-        got = {(r.id_a, r.id_b, r.n_inter, r.n_union)
-               for r in dedup.prefix_jaccard_pairs(
-                   df, threshold=tau).collect()}
-        assert got == want, (tau, got ^ want)
-
-
-def _brute_prefix_report(sets, tau_ppm):
-    """Python replay of the rarest-first prefix construction: per doc,
-    rank distinct shingles by (df, tok), keep the first
-    n − ⌈τ·n⌉ + 1, and price the bucket self-join."""
-    import collections
-
-    sets = {i: s for i, s in sets.items() if s}
-    df = collections.Counter(tok for s in sets.values() for tok in s)
-    buckets = collections.Counter()
-    for s in sets.values():
-        n = len(s)
-        plen = n - ((tau_ppm * n + 999_999) // 1_000_000) + 1
-        for tok in sorted(s, key=lambda t: (df[t], t))[:plen]:
-            buckets[tok] += 1
-    return {
-        "n_docs": len(sets),
-        "n_prefix_postings": sum(buckets.values()),
-        "n_prefix_tokens": len(buckets),
-        "max_bucket": max(buckets.values()) if buckets else 0,
-        "est_candidate_pairs": sum(c * (c - 1) // 2
-                                   for c in buckets.values()),
-    }
-
-
-def test_prefix_join_cost_report_matches_bruteforce(spark):
-    """prefix_join_cost_report prices EXACTLY the posting frame the join
-    would shuffle: every column equals a Python replay of the rarest-
-    first prefix construction, on both a random and a saturated corpus."""
-    import random
-
-    from peskas_malawi_data_pipeline_spark.operators import dedup
-
-    rng = random.Random(23)
-    vocab = [f"w{i}" for i in range(12)]
-    corpora = {
-        "random": [(i, " ".join(rng.choices(vocab, k=rng.randint(0, 10))))
-                   for i in range(40)],
-        # the SCALE.md §10f worst case in miniature: every doc is the
-        # same text, so every shingle has flat df and prefixes buy nothing
-        "flat": [(i, "a b c d e f") for i in range(15)],
-    }
-    for tau in (0.5, 0.8):
-        tau_ppm = int(round(tau * 1_000_000))
-        for name, docs in corpora.items():
-            df = spark.createDataFrame(docs, "doc_id int, text string")
-
-            def shingles(text, n=3):
-                t = [w for w in text.lower().split() if w]
-                if not t:
-                    return set()
-                if len(t) < n:
-                    return {" ".join(t)}
-                return {" ".join(t[i:i + n]) for i in range(len(t) - n + 1)}
-
-            want = _brute_prefix_report(
-                {i: shingles(tx) for i, tx in docs}, tau_ppm)
-            got = dedup.prefix_join_cost_report(
-                df, threshold=tau).collect()[0].asDict()
-            assert got == want, (name, tau, got, want)
-
-
-def test_prefix_join_budget_warns_toward_minhash(spark, caplog):
-    """The saturated-corpus fallback is mechanical, not tribal knowledge
-    (VERDICT r6 #2): when the forecast exceeds candidate_budget the
-    operator records it in last_cost_reports() and logs a warning naming
-    the banded MinHash path — BUT still returns the complete exact pair
-    set (completeness is the operator's contract; the budget is a
-    forecast, never a cap)."""
-    import logging
-
-    from peskas_malawi_data_pipeline_spark.operators import dedup
-
-    # 15 identical docs: est pairs = C(15,2) per prefix bucket — way past
-    # a budget of 10, and the true answer is all 105 pairs
-    df = spark.createDataFrame([(i, "a b c d e f") for i in range(15)],
-                               "doc_id int, text string")
-    with caplog.at_level(
-            logging.WARNING,
-            logger="peskas_malawi_data_pipeline_spark.operators.dedup"):
-        got = dedup.prefix_jaccard_pairs(df, threshold=0.5,
-                                         candidate_budget=10).collect()
-    assert len(got) == 15 * 14 // 2          # still complete
-    rep = dedup.last_cost_reports()["prefix_jaccard_pairs"]
-    assert rep["budget"] == 10 and rep["est_candidate_pairs"] > 10
-    assert rep["max_bucket"] == 15
-    assert any("minhash_lsh_pairs" in r.message for r in caplog.records)
-
-    # within budget: audit updated, no warning
-    caplog.clear()
-    small = spark.createDataFrame(
-        [(0, "a b c d e f"), (1, "q r s t u v")], "doc_id int, text string")
-    with caplog.at_level(
-            logging.WARNING,
-            logger="peskas_malawi_data_pipeline_spark.operators.dedup"):
-        dedup.prefix_jaccard_pairs(small, threshold=0.5,
-                                   candidate_budget=10).collect()
-    rep = dedup.last_cost_reports()["prefix_jaccard_pairs"]
-    assert rep["est_candidate_pairs"] <= 10
-    assert not any("minhash_lsh_pairs" in r.message for r in caplog.records)
 
 
 def test_bpe_fit_matches_textbook_reference(spark):
@@ -1833,22 +1633,6 @@ def test_fused_near_dup_bridges_modalities(spark):
     assert out[5] == (5, 5, 0, 1) and out[6] == (5, 5, 0, 1)
     # singleton
     assert out[4] == (4, 4, 0, 0)
-
-
-def test_prefix_jaccard_pairs_survives_int32_ppm_overflow(spark):
-    """Regression: documents with >2148 shingles push n*1e6 past int32;
-    the ppm size/prefix bounds must run in long arithmetic or qualifying
-    pairs crash (ANSI) / silently vanish (non-ANSI)."""
-    from peskas_malawi_data_pipeline_spark.operators import dedup
-
-    words = [f"w{i}" for i in range(2600)]
-    a = " ".join(words)
-    b = " ".join(words[:-1] + ["zz"])          # near-identical twin
-    df = spark.createDataFrame([(0, a), (1, b), (2, "tiny doc here")],
-                               "doc_id int, text string")
-    out = dedup.prefix_jaccard_pairs(df, threshold=0.8).collect()
-    assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
-    assert out[0].n_union > 2148               # the overflow regime
 
 
 def _reference_encode_ids(text, merges):

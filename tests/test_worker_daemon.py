@@ -98,3 +98,47 @@ def test_session_from_another_directory_runs_python_tasks(tmp_path):
                           timeout=300)
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "RESULT 3 10" in proc.stdout
+
+
+def test_session_keeps_submit_time_conf(tmp_path):
+    """``get_spark``'s defaults fill only keys that were not submitted: a
+    ``--master`` or ``--conf`` in ``PYSPARK_SUBMIT_ARGS`` keeps its value,
+    ``extra_conf`` still wins over both, and the workers' ``PYTHONPATH``
+    holds the package's parent followed by the submitted value."""
+    site = str(tmp_path / "site")
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from peskas_malawi_data_pipeline_spark.core import get_spark
+
+        spark = get_spark("submit-conf", extra_conf={{
+            "spark.sql.autoBroadcastJoinThreshold": "5678"}})
+        sc = spark.sparkContext
+        path = sc.parallelize([0], 1).map(
+            lambda _: __import__("os").environ["PYTHONPATH"]).collect()[0]
+        print("RESULT", sc.master,
+              spark.conf.get("spark.sql.shuffle.partitions"),
+              spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+              sc.getConf().get("spark.executorEnv.PYTHONPATH"), path)
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYSPARK_PYTHON=sys.executable,
+               PYSPARK_SUBMIT_ARGS=(
+                   "--master local[1]"
+                   " --conf spark.sql.shuffle.partitions=77"
+                   " --conf spark.sql.autoBroadcastJoinThreshold=1234"
+                   f" --conf spark.executorEnv.PYTHONPATH={site}"
+                   " pyspark-shell"))
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    want_path = os.pathsep.join((REPO, site))
+    result = next(line for line in proc.stdout.splitlines()
+                  if line.startswith("RESULT "))
+    _, master, partitions, threshold, conf_path, worker_path = result.split()
+    assert (master, partitions, threshold) == ("local[1]", "77", "5678")
+    assert conf_path == want_path
+    assert want_path in worker_path      # after PySpark's own entries
