@@ -62,9 +62,9 @@ def select_ordered(df: DataFrame, ordered: Sequence[str | Column]) -> DataFrame:
 
 def filter_not_in(df: DataFrame, column: str, values: Iterable) -> DataFrame:
     """P8 — exclusion filter (`catch_taxon != "0" & != "no_catch"`,
-    `R/validation-functions.R:186,255`). NULLs are kept, matching R where
-    NA != "0" is NA and `filter` drops it — NOTE the reference's `&` of two
-    `!=` drops NA rows; we reproduce that: NULL taxon rows are dropped.
+    `R/validation-functions.R:186,255`). NULLs are dropped, matching R
+    where NA != "0" is NA and `filter` drops it: the reference's `&` of two
+    `!=` drops NA rows, and so does this filter.
     """
     # NULL isin -> NULL; ~NULL -> NULL; filter drops it — matching R.
     return df.filter(~F.col(column).isin(list(values)))

@@ -7,14 +7,15 @@ consistent MAD), bounds = location ± k·scale, back-transformed per call site
 (`exp(bounds)−1` in alert_outlier `:51`; `exp(bounds)` in the grouped bounds
 builders `:191,260-263` — quirk Q3, preserved).
 
-Spark-first: a two-pass grouped aggregation with exact medians — pass 1
-median(log1p(x)) per group, join back (broadcast — the bounds relation has
-one row per group), pass 2 median(|y − med|). No UDF, no custom Catalyst
-rule. At 100 TB swap F.median for percentile_approx via ``approx=True``:
-same shape, sketch-mergeable, single-digit-ppm error.
+Spark-first: :func:`loc_scale_bounds` is the one kernel. It fits any number
+of value columns, globally or per key group, in a two-pass grouped
+aggregation with exact medians — pass 1 median(log1p(x)) per group, joined
+back by :func:`bounds_join` (broadcast — the bounds relation has one row per
+group), pass 2 median(|y − med|). No UDF, no custom Catalyst rule. At 100 TB
+the two ``F.median`` calls become ``percentile_approx`` (SCALE.md §6).
 
 Guards (reference `alert_outlier`, `R/validation-functions.R:29-46`):
-  - logt requires non-negative x: rows with x<0 are excluded from the
+  - log1p requires non-negative x: rows with x<0 are excluded from the
     stats (log1p would NaN-poison the median);
   - all-NULL or all-zero groups produce no bounds (NULL);
   - MAD ≤ 0 (constant group) produces no bounds.
@@ -22,6 +23,7 @@ Guards (reference `alert_outlier`, `R/validation-functions.R:29-46`):
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 from typing import Sequence
 
@@ -29,153 +31,89 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAD_CONSISTENCY = 1.4826
+_BACK_TRANSFORMS = {"exp": F.exp, "expm1": F.expm1}
 
 
-def _median(col: Column, approx: bool) -> Column:
-    return F.percentile_approx(col, 0.5, 100000) if approx else F.median(col)
+def bounds_join(df: DataFrame, bounds: DataFrame,
+                keys: Sequence[str]) -> DataFrame:
+    """Left-join a bounds relation (one row per key group) onto ``df`` with a
+    broadcast; a cross join when ``keys`` is empty (one global row).
 
-
-def _guarded_bounds(med: Column, mad_raw: Column, absmax: Column,
-                    k: float, back_transform: str) -> tuple[Column, Column]:
-    """(lower, upper) from a group's (median, raw MAD, max |x|): the one
-    place the LocScaleB bound arithmetic, back-transform dispatch, and
-    degenerate-group guard live — shared by the per-column and fused
-    multi-column paths so they cannot drift apart."""
-    scale = mad_raw * MAD_CONSISTENCY
-    lo_y, hi_y = med - k * scale, med + k * scale
-    if back_transform == "exp":
-        lo, hi = F.exp(lo_y), F.exp(hi_y)
-    elif back_transform == "expm1":
-        lo, hi = F.expm1(lo_y), F.expm1(hi_y)
-    elif back_transform == "none":
-        lo, hi = lo_y, hi_y
-    else:
-        raise ValueError(f"unknown back_transform: {back_transform}")
-    # Guards: all-zero group (max |x| == 0) or degenerate MAD -> no bounds.
-    valid = (absmax > 0) & (mad_raw > 0)
-    return F.when(valid, lo), F.when(valid, hi)
-
-
-def loc_scale_bounds(df: DataFrame, value: str, keys: Sequence[str] = (),
-                     k: float = 3.0, logt: bool = True,
-                     back_transform: str = "exp",
-                     approx: bool = False) -> DataFrame:
-    """A3 — grouped LocScaleB bounds: one row per key group with
-    ``lower_bound``/``upper_bound`` (reference `get_bounds` + group-split,
-    `R/validation-functions.R:183-195,252-264,392-395`).
-
-    ``back_transform``: 'exp' (`exp(bounds)`, the grouped bounds builders),
-    'expm1' (`exp(bounds)-1`, alert_outlier), or 'none' (bounds in y-space).
-    Empty ``keys`` gives the global (A4) variant as a 1-row DataFrame.
+    Key equality is NULL-SAFE: dplyr's group_by keeps NA as a regular group
+    level and its joins match NA to NA, so the reference fits and applies
+    bounds for e.g. the NULL-gear group; a plain equi-join would strand
+    every NULL-keyed row from its own bounds. The bounds side's keys are
+    renamed first (both sides usually descend from one frame, so same-name
+    references would be ambiguous), and the output puts the keys first, as
+    a USING join does.
     """
-    y = F.log1p(F.col(value)) if logt else F.col(value)
-    base = df.filter(F.col(value).isNotNull())
-    if logt:
-        base = base.filter(F.col(value) >= 0)
-    base = base.select(*keys, y.alias("__y"), F.col(value).alias("__x"))
+    if not keys:
+        return df.crossJoin(F.broadcast(bounds))
+    renamed = bounds.toDF(*[f"__b_{c}" if c in keys else c
+                            for c in bounds.columns])
+    cond = [df[c].eqNullSafe(F.col(f"__b_{c}")) for c in keys]
+    joined = df.join(F.broadcast(renamed), cond, "left")
+    rest = [c for c in df.columns if c not in keys]
+    return joined.select(*keys, *rest,
+                         *[c for c in bounds.columns if c not in keys])
 
+
+def loc_scale_bounds(df: DataFrame, specs: dict,
+                     keys: Sequence[str] = ()) -> DataFrame:
+    """A3/A4 — LocScaleB bounds for every value column in ``specs`` (column
+    -> ``(k, back_transform)``), one row per key group with ``{col}_lower`` /
+    ``{col}_upper`` (reference `get_bounds` + group-split,
+    `R/validation-functions.R:183-195,252-264,392-395`). Empty ``keys``
+    gives the global variant as a 1-row DataFrame.
+
+    ``back_transform``: 'exp' (`exp(bounds)`, the grouped bounds builders)
+    or 'expm1' (`exp(bounds)-1`, alert_outlier). All columns share one
+    median pass and one MAD pass; a row enters a column's fit only where
+    that column is ≥ 0, so each column's bounds equal its own one-column
+    fit. Rows where no value column is ≥ 0 are dropped first, so a group
+    with no fittable row has no bounds row.
+    """
     gb = list(keys)
-    med = (base.groupBy(*gb).agg(_median(F.col("__y"), approx).alias("__med"),
-                                 F.max(F.abs(F.col("__x"))).alias("__absmax")))
-    # Bounds relation: |groups| rows — broadcast back onto the data.
-    # NULL-SAFE key equality: dplyr's group_by keeps NA as a regular group
-    # level (the reference fits bounds for e.g. the NULL-gear group), so a
-    # plain equi-join here would strand every NULL-keyed row from its own
-    # medians and silently skip outlier detection for those groups. The
-    # med side's keys are renamed first — both sides descend from df, so
-    # same-name references would be ambiguous.
-    if gb:
-        med_r = med
-        for c in gb:
-            med_r = med_r.withColumnRenamed(c, f"__m_{c}")
-        cond = None
-        for c in gb:
-            e = base[c].eqNullSafe(F.col(f"__m_{c}"))
-            cond = e if cond is None else (cond & e)
-        with_med = (base.join(F.broadcast(med_r), cond, "inner")
-                    .drop(*[f"__m_{c}" for c in gb]))
-    else:
-        with_med = base.crossJoin(F.broadcast(med))
-    mad = (with_med.groupBy(*gb)
-           .agg(_median(F.abs(F.col("__y") - F.col("__med")), approx).alias("__mad_raw"),
-                F.first("__med").alias("__med"),
-                F.first("__absmax").alias("__absmax")))
+    fit = {c: F.when(F.col(c) >= 0, F.col(c)) for c in specs}
+    base = (df.filter(reduce(operator.or_, [F.col(c) >= 0 for c in specs]))
+            .select(*gb, *[x.alias(f"__x_{c}") for c, x in fit.items()]))
 
-    lo, hi = _guarded_bounds(F.col("__med"), F.col("__mad_raw"),
-                             F.col("__absmax"), k, back_transform)
-    return mad.select(*gb, lo.alias("lower_bound"), hi.alias("upper_bound"))
+    def y(c: str) -> Column:
+        return F.log1p(F.col(f"__x_{c}"))
 
-
-def loc_scale_bounds_multi(df: DataFrame, specs: dict,
-                           approx: bool = False) -> DataFrame:
-    """Fused GLOBAL LocScaleB bounds for several value columns at once —
-    the SURVEY §4.3 single-pass shape for the validate stage: instead of
-    one 2-pass aggregate + broadcast per validated variable, ONE 2-pass
-    aggregate computes every variable's (median, MAD) side by side and
-    yields a single 1-row frame with ``{col}_lower`` / ``{col}_upper``
-    for each, so the caller broadcasts exactly once.
-
-    ``specs`` maps column name -> (k, back_transform). Per-column guards
-    (negatives excluded from the fit, all-zero or constant column → NULL
-    bounds) match :func:`loc_scale_bounds` with ``logt=True`` exactly —
-    filters become ``F.when`` inside the aggregates, which NULL-skip.
-    """
-    def fit(col: str) -> Column:
-        # rows entering the fit: non-NULL and >= 0 (logt guard)
-        return F.when(F.col(col) >= 0, F.col(col))
-
-    pass1 = df.agg(*[a for col in specs for a in (
-        _median(F.log1p(fit(col)), approx).alias(f"__med_{col}"),
-        F.max(F.abs(fit(col))).alias(f"__absmax_{col}"))])
-
-    with_med = df.crossJoin(F.broadcast(pass1))
-    pass2 = with_med.agg(*[a for col in specs for a in (
-        _median(F.abs(F.log1p(fit(col)) - F.col(f"__med_{col}")), approx)
-        .alias(f"__mad_{col}"),
-        F.first(f"__med_{col}").alias(f"__med_{col}"),
-        F.first(f"__absmax_{col}").alias(f"__absmax_{col}"))])
+    med = base.groupBy(*gb).agg(*[a for c in specs for a in (
+        F.median(y(c)).alias(f"__med_{c}"),
+        F.max(F.abs(F.col(f"__x_{c}"))).alias(f"__absmax_{c}"))])
+    mad = bounds_join(base, med, gb).groupBy(*gb).agg(*[a for c in specs for a in (
+        F.median(F.abs(y(c) - F.col(f"__med_{c}"))).alias(f"__mad_{c}"),
+        F.first(f"__med_{c}").alias(f"__med_{c}"),
+        F.first(f"__absmax_{c}").alias(f"__absmax_{c}"))])
 
     outs = []
-    for col, (k, back_transform) in specs.items():
-        lo, hi = _guarded_bounds(F.col(f"__med_{col}"), F.col(f"__mad_{col}"),
-                                 F.col(f"__absmax_{col}"), k, back_transform)
-        outs += [lo.alias(f"{col}_lower"), hi.alias(f"{col}_upper")]
-    return pass2.select(*outs)
+    for c, (k, back_transform) in specs.items():
+        back = _BACK_TRANSFORMS[back_transform]
+        m, mad_raw = F.col(f"__med_{c}"), F.col(f"__mad_{c}")
+        scale = mad_raw * MAD_CONSISTENCY
+        # Guards: all-zero group (max |x| == 0) or degenerate MAD -> no bounds.
+        valid = (F.col(f"__absmax_{c}") > 0) & (mad_raw > 0)
+        outs += [F.when(valid, back(m - k * scale)).alias(f"{c}_lower"),
+                 F.when(valid, back(m + k * scale)).alias(f"{c}_upper")]
+    return mad.select(*gb, *outs)
 
 
 def alert_outlier(df: DataFrame, value: str, alert_if_low, alert_if_high,
-                  keys: Sequence[str] = (), k: float = 3.0, logt: bool = True,
-                  approx: bool = False,
-                  alert_name: str = "alert",
-                  bounds_transform: str | None = None) -> DataFrame:
+                  keys: Sequence[str] = (), k: float = 3.0) -> DataFrame:
     """A4 — per-row outlier alert (reference `alert_outlier`,
     `R/validation-functions.R:21-58`): compute (grouped or global) LocScaleB
-    bounds, broadcast-join them back, emit ``alert_if_low``/``alert_if_high``
-    where the value crosses a bound, NULL otherwise.
+    bounds with the expm1 back-transform, broadcast-join them back, emit
+    ``alert_if_low``/``alert_if_high`` in column ``alert`` where the value
+    crosses a bound, NULL otherwise.
     """
-    if bounds_transform is None:
-        # the back-transform undoes the log1p fit: exponentiating RAW-space
-        # bounds (logt=False) would be numerically meaningless
-        bounds_transform = "expm1" if logt else "none"
-    bounds = loc_scale_bounds(df, value, keys=keys, k=k, logt=logt,
-                              back_transform=bounds_transform, approx=approx)
-    if keys:
-        gb = list(keys)
-        b_r = bounds
-        for c in gb:
-            b_r = b_r.withColumnRenamed(c, f"__b_{c}")
-        cond = None
-        for c in gb:
-            e = df[c].eqNullSafe(F.col(f"__b_{c}"))   # NA group keeps bounds
-            cond = e if cond is None else (cond & e)
-        joined = (df.join(F.broadcast(b_r), cond, "left")
-                  .drop(*[f"__b_{c}" for c in gb]))
-    else:
-        joined = df.crossJoin(F.broadcast(bounds))
-    v = F.col(value)
-    alert = (F.when(v.isNotNull() & F.col("lower_bound").isNotNull() & (v < F.col("lower_bound")), F.lit(alert_if_low))
-             .when(v.isNotNull() & F.col("upper_bound").isNotNull() & (v > F.col("upper_bound")), F.lit(alert_if_high)))
-    return joined.withColumn(alert_name, alert).drop("lower_bound", "upper_bound")
+    bounds = loc_scale_bounds(df, {value: (k, "expm1")}, keys)
+    v, lo, hi = F.col(value), F.col(f"{value}_lower"), F.col(f"{value}_upper")
+    alert = F.when(v < lo, F.lit(alert_if_low)).when(v > hi, F.lit(alert_if_high))
+    return (bounds_join(df, bounds, keys).withColumn("alert", alert)
+            .drop(f"{value}_lower", f"{value}_upper"))
 
 
 def mask_where(df: DataFrame, value_cols: Sequence[str], alert_col: str) -> DataFrame:

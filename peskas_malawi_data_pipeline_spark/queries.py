@@ -579,12 +579,11 @@ def robust_bounds_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     log1p(x), exp back-transform (quirk Q3 call-site variant)."""
     li = _t(spark, sf_dir, "lineitem")
     bounds = val_ops.loc_scale_bounds(
-        li, "l_quantity", keys=["l_returnflag"], k=2.5, logt=True,
-        back_transform="exp")
+        li, {"l_quantity": (2.5, "exp")}, keys=["l_returnflag"])
     return bounds.select(
         "l_returnflag",
-        F.round("lower_bound", 4).alias("lower_bound"),
-        F.round("upper_bound", 4).alias("upper_bound"))
+        F.round("l_quantity_lower", 4).alias("lower_bound"),
+        F.round("l_quantity_upper", 4).alias("upper_bound"))
 
 
 @register("outlier_alert", """
@@ -617,7 +616,7 @@ def outlier_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     out = val_ops.alert_outlier(
         ev, "value", alert_if_low=8, alert_if_high=9,
-        keys=["event_type"], k=3.0, logt=True, bounds_transform="expm1")
+        keys=["event_type"], k=3.0)
     return out.select("event_id", F.col("alert").cast("int").alias("alert"))
 
 
@@ -669,12 +668,12 @@ FROM events e, bounds b
 def outlier_alert_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — the reference's TRUE global variant (whole-column LocScaleB
     bounds, alert_outlier R/validation-functions.R:21-58): a 1-row bounds
-    relation cross-joined (broadcast) onto every row — the pattern used by
-    validate_nfishers/validate_nboats."""
+    relation cross-joined (broadcast) onto every row — the shape of the
+    validate stage's alerts 2 and 3 (plans.validate.validate_landings)."""
     ev = _t(spark, sf_dir, "events")
     out = val_ops.alert_outlier(
         ev, "value", alert_if_low=8, alert_if_high=9,
-        keys=[], k=3.0, logt=True, bounds_transform="expm1")
+        keys=[], k=3.0)
     return out.select("event_id", F.col("alert").cast("int").alias("alert"))
 
 

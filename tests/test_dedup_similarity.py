@@ -819,8 +819,8 @@ def test_fourth_review_regressions(spark):
         [("g", 10.0), ("g", 11.0), ("g", 12.0), ("g", 1000.0),
          (None, 10.0), (None, 11.0), (None, 12.0), (None, 1000.0)],
         "grp string, v double")
-    bounds = {r.grp: r.upper_bound for r in V.loc_scale_bounds(
-        vals, "v", keys=["grp"], k=2.0).collect()}
+    bounds = {r.grp: r.v_upper for r in V.loc_scale_bounds(
+        vals, {"v": (2.0, "exp")}, keys=["grp"]).collect()}
     assert bounds["g"] is not None
     assert bounds[None] is not None          # NA group gets bounds too
     alerts = V.alert_outlier(vals, "v", 1, 2, keys=["grp"], k=2.0)

@@ -225,26 +225,65 @@ def test_validate_dates_masks_and_strict_parity(spark):
     assert strict["b"].landing_date is not None
 
 
+_VALIDATE_INPUT = ("i long, survey_id string, landing_date timestamp, "
+                   "submission_date timestamp, n_fishers double, "
+                   "n_boats double, gear string, catch_taxon string, "
+                   "weight_type string, catch_kg double, price_kg double, "
+                   "catch_price double")
+
+
+def _validate_input(spark, rows):
+    """A small validate-stage input: the columns validate_landings reads,
+    with valid dates and NULL wherever a row dict names no value."""
+    names = [f.split()[0] for f in _VALIDATE_INPUT.split(", ")]
+    base = dict(landing_date=dt.datetime(2024, 1, 1),
+                submission_date=dt.datetime(2024, 1, 2))
+    return spark.createDataFrame(
+        [tuple({**base, "survey_id": f"s{r['i']}", **r}.get(c) for c in names)
+         for r in rows], _VALIDATE_INPUT)
+
+
 def test_validate_nfishers_negative_and_outlier(spark):
     vals = [3.0, 4.0, 5.0, 3.0, 4.0, 5.0, 4.0, -2.0, 400.0]
-    df = spark.createDataFrame([Row(i=i, n_fishers=v) for i, v in enumerate(vals)])
-    out = {r.i: r for r in validate.validate_nfishers(df).collect()}
-    assert out[7].alert_nfishers == 2 and out[7].n_fishers is None   # negative
-    assert out[8].alert_nfishers == 2 and out[8].n_fishers is None   # outlier
-    assert out[0].alert_nfishers is None and out[0].n_fishers == 3.0
+    df = _validate_input(spark, [dict(i=i, n_fishers=v)
+                                 for i, v in enumerate(vals)])
+    out = {r.i: r for r in validate.validate_landings(df).collect()}
+    assert out[7].alert_number == "2" and out[7].n_fishers is None   # negative
+    assert out[8].alert_number == "2" and out[8].n_fishers is None   # outlier
+    assert out[0].alert_number == "" and out[0].n_fishers == 3.0
 
 
 def test_validate_pricekg_masks_three_columns(spark):
-    rows = [Row(i=i, catch_taxon="usipa", price_kg=1000.0 + i * 10,
-                catch_kg=5.0, catch_price=5000.0) for i in range(12)]
-    rows.append(Row(i=99, catch_taxon="usipa", price_kg=10_000_000.0,
-                    catch_kg=5.0, catch_price=50_000_000.0))
-    df = spark.createDataFrame(rows)
-    out = {r.i: r for r in validate.validate_pricekg(df).collect()}
+    rows = [dict(i=i, catch_taxon="usipa", price_kg=1000.0 + i * 10,
+                 catch_kg=5.0, catch_price=5000.0) for i in range(12)]
+    rows.append(dict(i=99, catch_taxon="usipa", price_kg=10_000_000.0,
+                     catch_kg=5.0, catch_price=50_000_000.0))
+    df = _validate_input(spark, rows)
+    out = {r.i: r for r in validate.validate_landings(df).collect()}
     bad = out[99]
-    assert bad.alert_pricekg == 4
+    assert bad.alert_number == "4"
     assert bad.price_kg is None and bad.catch_kg is None and bad.catch_price is None
     assert out[0].price_kg is not None
+
+
+def test_validate_catch_null_gear_group_gets_its_bounds(spark):
+    """The catch rule (alert 4, ``include_catch=True``) fits and applies
+    bounds for a NULL-gear group exactly as for a named gear: dplyr keeps
+    NA as a group level and its joins match NA to NA."""
+    rows = []
+    for g, gear in enumerate(["gillnet", None]):
+        rows += [dict(i=100 * g + j, gear=gear, catch_taxon="usipa",
+                      weight_type="total", catch_kg=float(10 + j))
+                 for j in range(12)]
+        rows.append(dict(i=100 * g + 99, gear=gear, catch_taxon="usipa",
+                         weight_type="total", catch_kg=5000.0))
+    df = _validate_input(spark, rows)
+    out = {r.i: r for r in
+           validate.validate_landings(df, include_catch=True).collect()}
+    for g in (0, 1):
+        assert out[100 * g + 99].alert_number == "4"
+        assert out[100 * g + 99].catch_kg is None
+        assert out[100 * g].alert_number == "" and out[100 * g].catch_kg == 10.0
 
 
 def test_validate_imeis_all_cases(spark, devices):
@@ -365,55 +404,6 @@ def test_validate_bounds_joins_are_broadcast(preprocessed):
     # every bounds relation (1 row or |groups| rows) broadcasts back; the
     # 100 TB fact side must never shuffle for a validator join
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
-
-
-def test_validate_counts_fused_parity(spark):
-    """The fused alerts-2+3 pass (one bounds aggregate + one broadcast,
-    SURVEY §4.3) is bit-identical to the sequential
-    validate_nboats(validate_nfishers(df)) formulation, including negatives,
-    NULLs, and masking."""
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(120):
-        nf = rng.choice([None, -2.0, float(rng.randint(1, 6))])
-        nb = rng.choice([None, -1.0, float(rng.randint(1, 4))])
-        rows.append(Row(i=i, n_fishers=nf, n_boats=nb))
-    rows += [Row(i=900, n_fishers=5000.0, n_boats=2.0),
-             Row(i=901, n_fishers=3.0, n_boats=4000.0)]
-    df = spark.createDataFrame(rows, "i long, n_fishers double, n_boats double")
-
-    seq = validate.validate_nboats(validate.validate_nfishers(df))
-    fused = validate.validate_counts_fused(df)
-    cols = ["i", "n_fishers", "n_boats", "alert_nfishers", "alert_nboats"]
-    a = {tuple(r) for r in seq.select(*cols).collect()}
-    b = {tuple(r) for r in fused.select(*cols).collect()}
-    assert a == b
-    # the outliers and negatives actually fired in this fixture
-    got = {r.i: r for r in fused.collect()}
-    assert got[900].alert_nfishers == 2 and got[900].n_fishers is None
-    assert got[901].alert_nboats == 3 and got[901].n_boats is None
-
-
-def test_validate_stage_single_bounds_exchange(preprocessed):
-    """Plan shape: the fused validate stage computes ONE global-bounds
-    pass for alerts 2+3 instead of one aggregate + broadcast per variable.
-    Printed plan trees duplicate shared subtrees, so we compare against the
-    sequential formulation: fusion must strictly shrink the broadcast-join
-    count (measured 6 vs 24 on this fixture)."""
-    fused_plan = validate.validate_landings(preprocessed) \
-        ._jdf.queryExecution().executedPlan().toString()
-    seq = validate.validate_pricekg(validate.validate_nboats(
-        validate.validate_nfishers(validate.validate_dates(preprocessed))))
-    seq_plan = seq._jdf.queryExecution().executedPlan().toString()
-    n_fused = fused_plan.count("BroadcastNestedLoopJoin")
-    n_seq = seq_plan.count("BroadcastNestedLoopJoin")
-    assert n_fused < n_seq
-    # and the fused stage carries at most the two structural cross joins
-    # (bounds computation + bounds application), each possibly re-printed
-    # inside downstream build sides
-    assert n_fused <= 6
 
 
 # ------------------------------------------------- end-to-end composition

@@ -13,18 +13,19 @@ def _bounds(spark, values, k=3.0, back="exp", keys=False):
     rows = [Row(g="a" if not keys or i % 2 == 0 else "b", x=float(v) if v is not None else None)
             for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, "g string, x double")
-    return V.loc_scale_bounds(df, "x", keys=["g"] if keys else [], k=k,
-                              back_transform=back)
+    return (V.loc_scale_bounds(df, {"x": (k, back)}, ["g"] if keys else [])
+            .withColumnRenamed("x_lower", "lower_bound")
+            .withColumnRenamed("x_upper", "upper_bound"))
 
 
-def _py_locscaleb(xs, k):
+def _py_locscaleb(xs, k, back=math.exp):
     """Reference formula, computed independently in Python:
     median(log1p) ± k·1.4826·median(|log1p−med|), exp back-transform."""
     import statistics
     ys = sorted(math.log1p(x) for x in xs)
     med = statistics.median(ys)
     mad = statistics.median(sorted(abs(y - med) for y in ys))
-    return (math.exp(med - k * 1.4826 * mad), math.exp(med + k * 1.4826 * mad))
+    return (back(med - k * 1.4826 * mad), back(med + k * 1.4826 * mad))
 
 
 def test_bounds_match_independent_formula(spark):
@@ -84,15 +85,51 @@ def test_fuse_alerts_skips_nulls(spark):
     assert [r.alert_number for r in out] == ["1-4", "", "3-4"]
 
 
-def test_approx_variant_close_to_exact(spark):
-    # The 100 TB path: percentile_approx sketches must land near exact.
-    xs = list(range(1, 2000)) + [50000]
-    exact = _bounds(spark, xs, k=3.0).collect()[0]
-    rows = [Row(g="a", x=float(v)) for v in xs]
-    df = spark.createDataFrame(rows, "g string, x double")
-    approx = V.loc_scale_bounds(df, "x", keys=["g"], k=3.0,
-                                back_transform="exp", approx=True).collect()[0]
-    assert approx.upper_bound == pytest.approx(exact.upper_bound, rel=0.02)
+def test_two_column_fit_equals_one_column_fits(spark):
+    """Property: one two-column grouped LocScaleB fit equals each column's
+    one-column fit exactly, over random frames with NULL values, negatives,
+    a NULL key group, an all-zero group, a constant group and a group only
+    one column can fit; and it equals the independent Python formula on
+    every group that has bounds."""
+    import random
+
+    specs = {"x": (2.5, "exp"), "y": (3.0, "expm1")}
+    back = {"exp": math.exp, "expm1": math.expm1}
+    rng = random.Random(5)
+
+    def draw(value):
+        u = rng.random()
+        return None if u < 0.15 else -1.0 if u < 0.3 else value
+
+    for trial in range(3):
+        rows = [(g, draw(float(rng.randint(0, 40))), draw(rng.uniform(0, 500)))
+                for g in ("a", "b", None) for _ in range(rng.randint(20, 40))]
+        rows += [("zero", 0.0, 0.0)] * 4 + [("const", 5.0, 7.0)] * 5
+        rows += [("x_only", 3.0, -2.0), ("x_only", 9.0, None),
+                 ("x_only", 4.0, -1.0), ("none", -1.0, None)]
+        df = spark.createDataFrame(rows, "g string, x double, y double")
+        both = {r.g: r for r in V.loc_scale_bounds(df, specs, ["g"]).collect()}
+        assert "none" not in both
+        assert both[None].x_upper is not None and both[None].y_upper is not None
+        for col, (k, b) in specs.items():
+            one = {r.g: r for r in
+                   V.loc_scale_bounds(df, {col: (k, b)}, ["g"]).collect()}
+            assert set(one) <= set(both), trial
+            for g, r in both.items():
+                got = (r[f"{col}_lower"], r[f"{col}_upper"])
+                if g in one:
+                    assert got == (one[g][f"{col}_lower"],
+                                   one[g][f"{col}_upper"]), (trial, g, col)
+                else:
+                    assert got == (None, None), (trial, g, col)
+                if g in ("zero", "const"):
+                    assert got == (None, None), (trial, g, col)
+                if got[0] is not None:
+                    xs = [v for v in (row[1 if col == "x" else 2]
+                                      for row in rows if row[0] == g)
+                          if v is not None and v >= 0]
+                    want = _py_locscaleb(xs, k, back[b])
+                    assert got == pytest.approx(want, rel=1e-12), (trial, g, col)
 
 
 def test_global_ntile_property_random_frames(spark):
