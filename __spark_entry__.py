@@ -47,7 +47,7 @@ _DRIVER_CHECKED_R01_R02 = {
 # VERDICT.md round 2 — they have exact-oracle evidence, so they yield their
 # window slot to the names that have none.
 _JUDGE_CHECKED_R02 = {
-    "pagerank_bipartite", "decontaminate_ngram_overlap", "multimodal_resize",
+    "decontaminate_ngram_overlap", "multimodal_resize",
     "triangle_count", "source_mixture_resample", "ntile_deciles",
 }
 

@@ -13,8 +13,9 @@ Spark-first:
   two-pass DataFrame aggregation — no UDF in the hot path;
 - large-scale training-data extensions: dedup (exact / MinHash-LSH candidates
   verified by n-gram Jaccard / exact substrings), similarity search
-  (brute-force + LSH-bucketed cosine ANN), text analysis (lang-id, quality,
-  tokens, fingerprints), multimodal binary columns.
+  (integer-L2 IVF-PQ ANN with an exact brute-force L2 baseline), text
+  analysis (lang-id, quality, tokens, fingerprints), multimodal binary
+  columns.
 
 Everything is built on the public Apache Spark DataFrame/SQL API.
 """

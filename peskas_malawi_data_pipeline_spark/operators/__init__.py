@@ -1,9 +1,9 @@
-from . import (aggregates, dedup, graph, joins, layout, multimodal, packing,
+from . import (aggregates, dedup, joins, layout, multimodal, packing,
                ranking, relational, sampling, similarity, structural,
                validation)
 
 __all__ = [
-    "aggregates", "dedup", "graph", "joins", "layout", "multimodal",
+    "aggregates", "dedup", "joins", "layout", "multimodal",
     "packing", "ranking", "relational", "sampling", "similarity",
     "structural", "validation",
 ]

@@ -917,9 +917,9 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              block_col: str | None = None,
                              threshold: float = 0.95) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a blocking key (or LSH
-    bucket from similarity.hyperplane_lsh_buckets). Cosine is computed with
-    higher-order functions (zip_with dot product) — JVM-side, no UDF.
+    """Embedding-cosine near-duplicate pairs within a blocking key (such as
+    a k-means ``centroid_id``). Cosine is computed with higher-order
+    functions (zip_with dot product) — JVM-side, no UDF.
 
     Norms are computed once per vector BEFORE the self-join (one dot product
     per pair instead of three); cos = dot(a,b)/(‖a‖·‖b‖) evaluates the same

@@ -1,10 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline, and an LSH-bucketed variant
-as the 100 TB scale path. Dot products use higher-order functions
-(``zip_with`` + ``aggregate``) — evaluated in the JVM, no Python UDF.
-Nearest-centroid work (k-means, PQ codes, IVF lists) runs through one numpy
-``mapInPandas`` kernel, :func:`_pq_code_frame`.
+One nearest-neighbour engine on integer-micro squared L2: product
+quantization searched by ADC, over coarse IVF inverted lists or flat, with
+:func:`brute_force_l2_topk` as its exact baseline and :func:`exact_rerank`
+as its second stage. Every distance is an exact BIGINT, so rankings are
+engine-portable. Nearest-centroid work (k-means, PQ codes, IVF lists) runs
+through one numpy ``mapInPandas`` kernel, :func:`_pq_code_frame`.
+:func:`dot` and :func:`l2_norm` (higher-order functions, evaluated in the
+JVM) serve the cosine of ``dedup.embedding_near_dup_pairs``.
 """
 
 from __future__ import annotations
@@ -24,161 +27,6 @@ def dot(a: Column, b: Column) -> Column:
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
                               F.lit(0.0), lambda acc, v: acc + v))
-
-
-def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
-                     query_id: str = "query_id", corpus_id: str = "corpus_id",
-                     vec_col: str = "embedding",
-                     round_digits: int | None = 6,
-                     anti_match_col: str | None = None) -> DataFrame:
-    """Exact top-k cosine neighbors of each query vector over the corpus.
-
-    Plan shape: broadcast the (small) query set against the corpus — the
-    corpus is never shuffled; per-corpus-partition partial top-k via
-    row_number window on (query, −similarity). For large query sets,
-    block-partition the queries and union. ``round_digits`` + corpus-id
-    tie-break makes the selection deterministic across summation orders.
-
-    ``anti_match_col``: when set (a column present in BOTH frames), only
-    pairs whose values DIFFER are considered — the hard-negative mining
-    restriction (nearest neighbors with a different class/label/source).
-    Rows with a NULL value never match an inequality and are excluded,
-    same as in any SQL engine.
-    """
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    extra_q = [F.col(anti_match_col).alias("__qm")] if anti_match_col else []
-    extra_c = [F.col(anti_match_col).alias("__cm")] if anti_match_col else []
-    q = queries.select(F.col(query_id), vd.alias("__qv"),
-                       l2_norm(vd).alias("__qn"), *extra_q)
-    c = corpus.select(F.col(corpus_id), vd.alias("__cv"),
-                      l2_norm(vd).alias("__cn"), *extra_c)
-    cond = F.col(query_id) != F.col(corpus_id)
-    if anti_match_col:
-        cond = cond & (F.col("__qm") != F.col("__cm"))
-    scored = c.join(F.broadcast(q), cond)
-    denom = F.col("__qn") * F.col("__cn")
-    sim = F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom)
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = scored.select(query_id, corpus_id, sim.alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(corpus_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def hyperplane_lsh_buckets(df: DataFrame, vec_col: str = "embedding",
-                           planes: Sequence[Sequence[float]] | None = None,
-                           n_axis_planes: int = 8,
-                           bucket_name: str = "bucket") -> DataFrame:
-    """Sign-LSH bucket id per vector: bit i = (vec · planeᵢ > 0).
-
-    ``planes=None`` uses the first ``n_axis_planes`` coordinate axes
-    (axis-aligned hyperplanes) — fully deterministic and engine-portable.
-    Supplying random-projection planes (seeded, generated once driver-side)
-    gives classic SRP-LSH; they broadcast as literals into the expression.
-    Pure map: no shuffle — the bucket id then serves as the blocking key for
-    a bucket-local join (candidate generation at 100 TB instead of n²).
-    """
-    v = F.col(vec_col)
-    if planes is None:
-        bits = [F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-                for i in range(n_axis_planes)]
-    else:
-        bits = []
-        for i, plane in enumerate(planes):
-            lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-            d = dot(F.transform(v, lambda x: x.cast("double")), lit_plane)
-            bits.append(F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return df.withColumn(bucket_name, bucket.cast("long"))
-
-
-def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
-             query_id: str = "query_id", corpus_id: str = "corpus_id",
-             vec_col: str = "embedding", n_axis_planes: int = 8) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH bucket,
-    then exact cosine rank within the bucket. One equi-join on the bucket id
-    (shuffle both sides on a small uniform key) instead of a full cross
-    product — the IVF/LSH scale path.
-    """
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qb = hyperplane_lsh_buckets(
-        queries.select(F.col(query_id), vd.alias("__qv"),
-                       l2_norm(vd).alias("__qn")), "__qv",
-        n_axis_planes=n_axis_planes)
-    cb = hyperplane_lsh_buckets(
-        corpus.select(F.col(corpus_id), vd.alias("__cv"),
-                      l2_norm(vd).alias("__cn")), "__cv",
-        n_axis_planes=n_axis_planes)
-    cand = cb.join(F.broadcast(qb), "bucket").filter(F.col(query_id) != F.col(corpus_id))
-    denom = F.col("__qn") * F.col("__cn")
-    sim = F.round(F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom), 6)
-    scored = cand.select(query_id, corpus_id, sim.alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(corpus_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
-             n_centroids: int = 16, nprobe: int = 2,
-             query_id: str = "query_id", corpus_id: str = "corpus_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into inverted
-    lists by nearest centroid, then search only each query's ``nprobe``
-    closest lists. The 100 TB shape: centroid assignment is a broadcast
-    join + per-row argmax (narrow); the search is an equi-join on the list
-    id — candidate volume is |corpus|·nprobe/n_centroids instead of
-    |corpus| per query.
-
-    Centroids are the ``n_centroids`` lowest-id corpus vectors —
-    deterministic (no RNG, reproducible across runs/engines); swap in
-    k-means centroids computed offline for better recall at equal cost.
-    """
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = (corpus.orderBy(corpus_id).limit(n_centroids)
-             .select(F.col(corpus_id).alias("__cent_seed"), vd.alias("__cv")))
-    cents = cents.select(
-        # global window over the n_centroids-row seed frame only (bounded
-        # by construction) — the "No Partition Defined" WindowExec warning
-        # this triggers is expected and harmless
-        F.row_number().over(Window.orderBy("__cent_seed")).alias("centroid_id"),
-        F.col("__cv").alias("__cent_vec"),
-        l2_norm(F.col("__cv")).alias("__cent_norm"))
-
-    def assign(df: DataFrame, id_col: str, n_lists: int) -> DataFrame:
-        """id → its n_lists nearest centroid ids (rank ≤ n_lists)."""
-        base = df.select(F.col(id_col), vd.alias("__v"), l2_norm(vd).alias("__n"))
-        scored = base.crossJoin(F.broadcast(cents))
-        denom = F.col("__n") * F.col("__cent_norm")
-        sim = F.when(denom > 0, dot(F.col("__v"), F.col("__cent_vec")) / denom)
-        w = Window.partitionBy(id_col).orderBy(F.desc_nulls_last(sim),
-                                               F.col("centroid_id"))
-        return (scored.withColumn("__r", F.row_number().over(w))
-                .filter(F.col("__r") <= n_lists)
-                .select(id_col, "centroid_id", "__v", "__n"))
-
-    corpus_lists = assign(corpus.select(corpus_id, vec_col), corpus_id, 1) \
-        .withColumnRenamed("__v", "__cv2").withColumnRenamed("__n", "__cn2")
-    query_lists = assign(queries.select(query_id, vec_col), query_id, nprobe)
-
-    # broadcast the query side: the list id has only n_centroids distinct
-    # values, so a shuffled join on it would funnel the corpus into
-    # n_centroids partitions (worst-case skew); broadcasting the (small by
-    # construction) probe set keeps the corpus partitioning untouched
-    cand = F.broadcast(query_lists).join(corpus_lists, "centroid_id") \
-        .filter(F.col(query_id) != F.col(corpus_id))
-    denom = F.col("__n") * F.col("__cn2")
-    sim = F.round(F.when(denom > 0, dot(F.col("__v"), F.col("__cv2")) / denom), 6)
-    # no distinct: each corpus row lives in exactly ONE inverted list
-    # (assign rank==1) and a query probes nprobe DISTINCT lists, so every
-    # (query, corpus) pair appears at most once — a dedup here would be a
-    # full extra shuffle of the widest intermediate for nothing
-    scored = cand.select(query_id, corpus_id, sim.alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(corpus_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 def _micro(col: Column) -> Column:
@@ -637,7 +485,10 @@ def brute_force_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
     EQUAL for a corpus row to be eligible (the filtered-search exact
     baseline: top-k among the query's own tenant/category only) — the
     equality rides the same broadcast join, so the filter costs
-    nothing extra."""
+    nothing extra.
+
+    A NULL vector (or one with a NULL component) has a NULL distance and
+    is never a neighbour; a NULL query gets no rows."""
     q = queries.select(F.col(query_id), _micro(F.col(vec_col)).alias("__qv"),
                        *[F.col(m).alias(f"__q_{m}") for m in match_cols])
     c = corpus.select(F.col(corpus_id), _micro(F.col(vec_col)).alias("__cv"),
@@ -649,7 +500,8 @@ def brute_force_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
         F.zip_with("__qv", "__cv", lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
     scored = (c.join(F.broadcast(q), cond)
-              .select(query_id, corpus_id, d2.alias("l2_d2")))
+              .select(query_id, corpus_id, d2.alias("l2_d2"))
+              .filter(F.col("l2_d2").isNotNull()))
     w = Window.partitionBy(query_id).orderBy("l2_d2", corpus_id)
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
@@ -667,8 +519,8 @@ def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
     cost of k' exact distances per query instead of |corpus|. Same
     distance/tie contract as :func:`brute_force_l2_topk` (exact BIGINTs,
     ties → lowest corpus id), so reranked results are directly
-    comparable to the exact baseline. Returns (query_id, corpus_id,
-    l2_d2, rank).
+    comparable to the exact baseline, NULL vectors included. Returns
+    (query_id, corpus_id, l2_d2, rank).
 
     Plan: the shortlist is answer-sized (|queries|·k') — BROADCAST it
     into one pure-map pass over the corpus (the corpus never shuffles,
@@ -683,7 +535,8 @@ def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
     d2 = F.aggregate(
         F.zip_with("__qv", "__cv", lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = short.select(query_id, corpus_id, d2.alias("l2_d2"))
+    scored = (short.select(query_id, corpus_id, d2.alias("l2_d2"))
+              .filter(F.col("l2_d2").isNotNull()))
     w = Window.partitionBy(query_id).orderBy("l2_d2", corpus_id)
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))

@@ -1818,7 +1818,7 @@ FROM m
 """)
 def lsh_pair_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-generator quality for the TEXT near-dup family, pinned
-    in ppm like `ann_recall_at_k` pins ANN: the MinHash/LSH pair stream
+    in ppm like `ann_pq_recall` pins ANN: the MinHash/LSH pair stream
     (8 hashes, 4 bands of 2) scored against exact shingle-Jaccard ≥ 0.2
     truth within source blocks (the block bounds the exact verify;
     candidates are restricted to the same blocks so precision/recall
@@ -2275,69 +2275,8 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search extension (brute-force + LSH ANN)
+# Similarity search extension (integer-L2 PQ and IVF-PQ ANN)
 # ---------------------------------------------------------------------------
-
-_DUCK_COS = ("list_dot_product(qv, cv) / "
-             "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))")
-
-
-@register("ann_bruteforce_topk", f"""
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv FROM embeddings),
-s AS (SELECT query_id, corpus_id, round({_DUCK_COS}, 6) AS cosine
-      FROM q, c WHERE query_id <> corpus_id),
-r AS (SELECT query_id, corpus_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, corpus_id) AS rank
-      FROM s)
-SELECT query_id, corpus_id, cosine, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 5
-""")
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast query set, corpus never shuffled."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    out = sim_ops.brute_force_topk(q, c, k=5)
-    return out.select("query_id", "corpus_id", "cosine",
-                      F.col("rank").cast("long").alias("rank"))
-
-
-@register("ann_lsh_topk", f"""
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv,
-           {' + '.join(f'(CASE WHEN embedding[{i+1}] > 0 THEN {1 << i} ELSE 0 END)' for i in range(8))} AS bucket
-           FROM embeddings WHERE vec_id < 20),
-c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv,
-      {' + '.join(f'(CASE WHEN embedding[{i+1}] > 0 THEN {1 << i} ELSE 0 END)' for i in range(8))} AS bucket
-      FROM embeddings),
-s AS (SELECT query_id, corpus_id, round({_DUCK_COS}, 6) AS cosine
-      FROM q JOIN c USING (bucket) WHERE query_id <> corpus_id),
-r AS (SELECT query_id, corpus_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, corpus_id) AS rank
-      FROM s)
-SELECT query_id, corpus_id, cosine, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 3
-""")
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k: candidates restricted to the query's
-    sign-LSH bucket (equi-join on bucket id instead of cross product)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20).select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    out = sim_ops.lsh_topk(q, c, k=3, n_axis_planes=8)
-    return out.select("query_id", "corpus_id", "cosine",
-                      F.col("rank").cast("long").alias("rank"))
-
-
-# cosine(v, centroid) with per-side norms multiplied the same way the Spark
-# op does (norm(v) * norm(cent)), so the doubles match bit-for-bit
-_DUCK_IVF_ASSIGN = ("CASE WHEN sqrt(list_dot_product(v, v)) * en > 0 THEN "
-                    "list_dot_product(v, ev) / "
-                    "(sqrt(list_dot_product(v, v)) * en) END")
-
 
 # Product-quantization twins: micro-int components → exact BIGINT squared
 # distances (same determinism stance as similarity.kmeans_assign), 64 dims
@@ -2591,51 +2530,6 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sim_ops.pq_codebook(c, m=4, k_centroids=8)
     out = sim_ops.pq_adc_topk(q, c, cb, k=3)
     return out.select("query_id", "corpus_id", "adc_dist",
-                      F.col("rank").cast("long").alias("rank"))
-
-
-@register("ann_ivf_topk", f"""
-WITH c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS v FROM embeddings),
-cents AS (SELECT row_number() OVER (ORDER BY corpus_id) AS centroid_id,
-                 v AS ev, sqrt(list_dot_product(v, v)) AS en
-          FROM (SELECT * FROM c ORDER BY corpus_id LIMIT 8)),
-ca AS (SELECT corpus_id, v, centroid_id,
-              row_number() OVER (PARTITION BY corpus_id
-                  ORDER BY ({_DUCK_IVF_ASSIGN}) DESC NULLS LAST, centroid_id) AS r
-       FROM c, cents),
-clists AS (SELECT corpus_id, centroid_id, v AS cv FROM ca WHERE r = 1),
-q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE vec_id < 20),
-qa AS (SELECT query_id, v, centroid_id,
-              row_number() OVER (PARTITION BY query_id
-                  ORDER BY ({_DUCK_IVF_ASSIGN}) DESC NULLS LAST, centroid_id) AS r
-       FROM q, cents),
-qlists AS (SELECT query_id, centroid_id, v AS qv FROM qa WHERE r <= 2),
-s AS (SELECT DISTINCT query_id, corpus_id,
-             round(CASE WHEN sqrt(list_dot_product(qv, qv)) *
-                             sqrt(list_dot_product(cv, cv)) > 0 THEN
-                   list_dot_product(qv, cv) /
-                   (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                   END, 6) AS cosine
-      FROM qlists JOIN clists USING (centroid_id)
-      WHERE query_id <> corpus_id),
-r2 AS (SELECT query_id, corpus_id, cosine,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, corpus_id) AS rank
-       FROM s)
-SELECT query_id, corpus_id, cosine, CAST(rank AS BIGINT) AS rank
-FROM r2 WHERE rank <= 3
-""")
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k: corpus partitioned into inverted lists by
-    nearest centroid (broadcast argmax), queries probe their nprobe=2
-    nearest of 8 lists — candidate volume |corpus|·nprobe/n_centroids.
-    Oracle replays the exact same list construction and probing in SQL."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20).select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    out = sim_ops.ivf_topk(q, c, k=3, n_centroids=8, nprobe=2)
-    return out.select("query_id", "corpus_id", "cosine",
                       F.col("rank").cast("long").alias("rank"))
 
 
@@ -3328,46 +3222,6 @@ def source_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("n_kept", F.lit(0)).alias("n_kept")))
 
 
-def _pagerank_oracle_sql(iters: int = 5) -> str:
-    """Unrolled integer-PageRank oracle: one CTE per iteration, mirroring
-    operators.graph.pagerank_integer's bigint arithmetic exactly."""
-    ctes = [
-        ("edges AS (SELECT DISTINCT l_orderkey*2 AS src, l_partkey*2+1 AS dst"
-         " FROM lineitem UNION"
-         " SELECT DISTINCT l_partkey*2+1, l_orderkey*2 FROM lineitem)"),
-        ("nodes AS (SELECT DISTINCT src AS id FROM edges"
-         " UNION SELECT DISTINCT dst FROM edges)"),
-        "deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src)",
-        "s0 AS (SELECT id, CAST(1000000 AS BIGINT) AS sc FROM nodes)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"s{i} AS (SELECT n.id, CAST(150000 + (85 * coalesce(g.s, 0)) // 100"
-            f" AS BIGINT) AS sc FROM nodes n LEFT JOIN"
-            f" (SELECT e.dst AS id, sum(s.sc // d.d) AS s"
-            f" FROM edges e JOIN s{i-1} s ON e.src = s.id"
-            f" JOIN deg d ON e.src = d.src GROUP BY e.dst) g ON n.id = g.id)")
-    return (f"WITH {', '.join(ctes)}"
-            f" SELECT id, sc AS score_micro FROM s{iters}")
-
-
-@register("pagerank_bipartite", _pagerank_oracle_sql())
-def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer PageRank over the order↔part bipartite graph — the
-    bounded-iteration algorithm shape (k joins + k aggregations over a
-    checkpointed static edge set; see operators.graph). Micro-unit bigint
-    scores make every engine and partitioning produce identical values,
-    so the unrolled-CTE oracle hash-matches exactly."""
-    from .operators import graph as graph_ops
-
-    li = _t(spark, sf_dir, "lineitem")
-    fwd = li.select((F.col("l_orderkey") * 2).alias("src"),
-                    (F.col("l_partkey") * 2 + 1).alias("dst")).distinct()
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
-    return graph_ops.pagerank_integer(edges, iterations=5)
-
-
 @register("decontaminate_ngram_overlap", f"""
 WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
 sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS s FROM toks),
@@ -3588,39 +3442,6 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("chunk_id").cast("long").alias("chunk_id"),
         T.token_count(F.col("chunk")).cast("long").alias("n_tokens"),
         F.md5("chunk").alias("chunk_md5"))
-
-
-@register("hard_negatives", f"""
-WITH q AS (SELECT vec_id AS query_id, label AS ql, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id < 8),
-c AS (SELECT vec_id AS corpus_id, label AS cl, embedding::DOUBLE[] AS cv
-      FROM embeddings),
-s AS (SELECT query_id, corpus_id, round({_DUCK_COS}, 6) AS cosine
-      FROM q, c WHERE query_id <> corpus_id AND ql <> cl),
-r AS (SELECT query_id, corpus_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, corpus_id) AS rank
-      FROM s)
-SELECT query_id, corpus_id, cosine, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 3
-""")
-def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training: each anchor's top-3
-    most-similar vectors with a DIFFERENT label — the near-miss examples a
-    retrieval/embedding model learns the most from. Same broadcast-anchor
-    plan as ann_bruteforce_topk (corpus never shuffles) with the label
-    inequality pushed into the join condition, so same-label pairs never
-    materialize."""
-    emb = _t(spark, sf_dir, "embeddings")
-    anchors = (emb.filter(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding",
-                       "label"))
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding",
-                        "label")
-    out = sim_ops.brute_force_topk(anchors, corpus, k=3,
-                                   anti_match_col="label")
-    return out.select("query_id", "corpus_id", "cosine",
-                      F.col("rank").cast("long").alias("rank"))
 
 
 def _dataset_card_sql() -> str:
@@ -4162,14 +3983,10 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANN recall harness (round 6): pins the approximation QUALITY of the LSH
-# and IVF scale paths against the exact brute-force baseline — the plan
-# shapes were already oracle-pinned, recall was not.
+# ANN recall harnesses: pin the approximation QUALITY of the PQ and IVF-PQ
+# paths against the exact integer-L2 baseline (brute_force_l2_topk) — the
+# plan shapes are oracle-pinned above, recall is pinned here.
 # ---------------------------------------------------------------------------
-
-_DUCK_ANN_BUCKET = " + ".join(
-    f"(CASE WHEN embedding[{i + 1}] > 0 THEN {1 << i} ELSE 0 END)"
-    for i in range(8))
 
 # data-scaled query-set size for the recall harnesses (identical rule in
 # both engines, so every oracle stays bit-green at every SF): ~n/10
@@ -4179,122 +3996,6 @@ _DUCK_ANN_BUCKET = " + ".join(
 # sf0.001 oracle-gate corpora (500 vectors) run 50.
 _DUCK_ANN_NQ = "(SELECT least(200, greatest(20, count(*) // 10)) " \
                "FROM embeddings)"
-
-_DUCK_ANN_RECALL_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id < {_DUCK_ANN_NQ}),
-c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv FROM embeddings),
-es AS (SELECT query_id, corpus_id, round({_DUCK_COS}, 6) AS cosine
-       FROM q, c WHERE query_id <> corpus_id),
-ex AS (SELECT query_id, corpus_id FROM (
-         SELECT query_id, corpus_id,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, corpus_id) AS rank
-         FROM es) WHERE rank <= 3),
-lq AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv,
-              {_DUCK_ANN_BUCKET} AS bucket
-       FROM embeddings WHERE vec_id < {_DUCK_ANN_NQ}),
-lc AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv,
-              {_DUCK_ANN_BUCKET} AS bucket
-       FROM embeddings),
-ls AS (SELECT query_id, corpus_id, round({_DUCK_COS}, 6) AS cosine
-       FROM lq JOIN lc USING (bucket) WHERE query_id <> corpus_id),
-lsh AS (SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine DESC, corpus_id) AS rank
-          FROM ls) WHERE rank <= 3),
-ic AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS v FROM embeddings),
-cents AS (SELECT row_number() OVER (ORDER BY corpus_id) AS centroid_id,
-                 v AS ev, sqrt(list_dot_product(v, v)) AS en
-          FROM (SELECT * FROM ic ORDER BY corpus_id LIMIT 8)),
-ica AS (SELECT corpus_id, v, centroid_id,
-               row_number() OVER (PARTITION BY corpus_id
-                   ORDER BY ({_DUCK_IVF_ASSIGN}) DESC NULLS LAST,
-                            centroid_id) AS r
-        FROM ic, cents),
-clists AS (SELECT corpus_id, centroid_id, v AS cv FROM ica WHERE r = 1),
-iq AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v FROM embeddings
-       WHERE vec_id < {_DUCK_ANN_NQ}),
-iqa AS (SELECT query_id, v, centroid_id,
-               row_number() OVER (PARTITION BY query_id
-                   ORDER BY ({_DUCK_IVF_ASSIGN}) DESC NULLS LAST,
-                            centroid_id) AS r
-        FROM iq, cents),
-qlists AS (SELECT query_id, centroid_id, v AS qv FROM iqa WHERE r <= 2),
-ivs AS (SELECT DISTINCT query_id, corpus_id,
-               round(CASE WHEN sqrt(list_dot_product(qv, qv)) *
-                               sqrt(list_dot_product(cv, cv)) > 0 THEN
-                     list_dot_product(qv, cv) /
-                     (sqrt(list_dot_product(qv, qv)) *
-                      sqrt(list_dot_product(cv, cv)))
-                     END, 6) AS cosine
-        FROM qlists JOIN clists USING (centroid_id)
-        WHERE query_id <> corpus_id),
-ivf AS (SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine DESC, corpus_id) AS rank
-          FROM ivs) WHERE rank <= 3),
-m AS (
-  SELECT 'lsh' AS method,
-         (SELECT count(*) FROM lsh JOIN ex USING (query_id, corpus_id)) AS hits,
-         (SELECT count(*) FROM lsh) AS approx_n,
-         (SELECT count(*) FROM ex) AS exact_n
-  UNION ALL
-  SELECT 'ivf',
-         (SELECT count(*) FROM ivf JOIN ex USING (query_id, corpus_id)),
-         (SELECT count(*) FROM ivf),
-         (SELECT count(*) FROM ex))
-SELECT method, CAST(hits AS BIGINT) AS hits,
-       CAST(approx_n AS BIGINT) AS approx_n,
-       CAST(exact_n AS BIGINT) AS exact_n,
-       CAST(hits * 1000000 // exact_n AS BIGINT) AS recall_ppm
-FROM m
-"""
-
-
-@register("ann_recall_at_k", _DUCK_ANN_RECALL_SQL)
-def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of both approximate ANN paths against the exact baseline,
-    on the SAME data-scaled query set (_ann_n_queries: ~n/10 clamped to
-    [20, 200] — 200 queries at the sf0.1 bench corpus for ~1666-ppm
-    recall granularity) and k=3 — micro-averaged
-    (Σ hits / Σ exact over all queries; identical to the per-query mean
-    when every query has exactly k exact neighbors). Fully deterministic
-    (rounded cosines + corpus-id tie-break on both engines), so the
-    approximation QUALITY is oracle-pinned, not just the plan shape.
-
-    Plan: the exact top-k frame is answer-sized — materialized once and
-    broadcast into a hit-marking left join per method; each method row is
-    a one-row aggregate, unioned. The corpus is scanned by each method's
-    own plan (brute-force broadcast, LSH bucket join, IVF probe join) and
-    never reshuffled beyond what those paths already do."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _ann_n_queries(emb, sf_dir)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    exact = materialize(
-        sim_ops.brute_force_topk(q, c, k=3).select("query_id", "corpus_id")
-        .withColumn("__hit", F.lit(1)))
-    exact_n = exact.agg(F.count(F.lit(1)).alias("exact_n"))
-    rows = []
-    for method, approx in (
-            ("lsh", sim_ops.lsh_topk(q, c, k=3, n_axis_planes=8)),
-            ("ivf", sim_ops.ivf_topk(q, c, k=3, n_centroids=8, nprobe=2))):
-        agg = (approx.select("query_id", "corpus_id")
-               .join(F.broadcast(exact), ["query_id", "corpus_id"], "left")
-               .agg(F.coalesce(F.sum("__hit"), F.lit(0)).alias("hits"),
-                    F.count(F.lit(1)).alias("approx_n"))
-               .crossJoin(F.broadcast(exact_n)))
-        rows.append(agg.select(
-            F.lit(method).alias("method"),
-            F.col("hits").cast("long").alias("hits"),
-            F.col("approx_n").cast("long").alias("approx_n"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.expr("CAST(hits * 1000000 DIV exact_n AS BIGINT)")
-            .alias("recall_ppm")))
-    return rows[0].unionByName(rows[1])
 
 
 def _duck_adc_blocks(x: str, cents: str) -> str:
@@ -4539,7 +4240,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     This closes the train-then-index loop: the clustering step the
     codebook docstrings pointed at now demonstrably feeds the index, and
     the approximation quality of all four configurations is pinned in
-    ppm like LSH/IVF already are in `ann_recall_at_k`.
+    ppm.
 
     Plan: the exact frame is answer-sized (materialized once, broadcast
     into each hit-join); each method runs its own production plan —

@@ -164,3 +164,21 @@ def test_registry_entries_exercise_package_code():
     for static in (__spark_entry__._DRIVER_CHECKED_R01_R02,
                    __spark_entry__._JUDGE_CHECKED_R02):
         assert static <= set(REGISTRY), sorted(static - set(REGISTRY))
+
+
+def test_registry_md_and_counts_match_the_registry():
+    """REGISTRY.md is generated: the committed file equals a fresh
+    ``gen_registry.render()``, and every count phrase in README.md and
+    COVERAGE.md gives ``len(REGISTRY)``. Runs no Spark job."""
+    import re
+
+    from gen_registry import COUNT_PHRASES, REPO, render
+    from peskas_malawi_data_pipeline_spark.queries import REGISTRY
+
+    with open(os.path.join(REPO, "REGISTRY.md")) as fh:
+        assert fh.read() == render(), "regenerate: python tools/gen_registry.py"
+    for fname, (pat, rep) in COUNT_PHRASES.items():
+        with open(os.path.join(REPO, fname)) as fh:
+            found = re.findall(pat, fh.read())
+        assert found and set(found) == {rep.format(n=len(REGISTRY))}, (
+            fname, found)

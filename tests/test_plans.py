@@ -377,13 +377,11 @@ def test_registry_wide_plan_hygiene(spark):
     queries inherit this gate automatically.
 
     Known-bounded global windows are exempted by name: their window input
-    is n_shards/n_centroids/|buckets| rows by construction."""
+    is n_shards/n_sources/|buckets| rows by construction."""
     import re
 
     BOUNDED_GLOBAL_WINDOW_OK = {
         "weighted_sample",   # 8-row shard-total prefix sum
-        "ann_ivf_topk",      # 16-row centroid seed numbering
-        "ann_recall_at_k",   # same 8-row centroid numbering via ivf_topk
         "ntile_deciles",     # |buckets|-row offset frame (ranking.global_ntile)
         "corpus_shuffle",    # |buckets|-row offset frame (ranking.shuffle_shards)
         "zone_map_skipping",   # |buckets|-row offset frame ×2 layouts
@@ -392,6 +390,8 @@ def test_registry_wide_plan_hygiene(spark):
                                # largest-remainder rank/leftover windows run
                                # AFTER the per-source aggregation
     }
+    assert BOUNDED_GLOBAL_WINDOW_OK <= set(REGISTRY), sorted(
+        BOUNDED_GLOBAL_WINDOW_OK - set(REGISTRY))
     utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
     offenders = {}
     for name, (fn, _sql) in REGISTRY.items():

@@ -311,12 +311,12 @@ def test_form_schema_unknown_form_raises(spark):
 def test_operator_argument_guards(spark):
     """Round-6 review hardening: degenerate arguments error up front
     instead of silently degrading (full-table 'sample', NULL tiles,
-    post-materialization ZeroDivisionError, negative pagerank base)."""
+    post-materialization ZeroDivisionError)."""
     import pytest
     from pyspark.sql import functions as F
 
     from peskas_malawi_data_pipeline_spark.operators import (
-        graph, ranking, sampling)
+        ranking, sampling)
 
     df = spark.createDataFrame([(i, 1) for i in range(10)], "doc_id int, w int")
     with pytest.raises(ValueError, match="n must be"):
@@ -325,14 +325,3 @@ def test_operator_argument_guards(spark):
         sampling.weighted_systematic_sample(df, "w", n=2, n_shards=0)
     with pytest.raises(ValueError, match="n_tiles"):
         ranking.global_ntile(df, ["w", "doc_id"], 0)
-    edges = spark.createDataFrame([(1, 2)], "a long, b long")
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        graph.pagerank_integer(edges, src="a", dst="b",
-                               checkpoint_interval=0)
-    with pytest.raises(ValueError, match="damping_pct"):
-        graph.pagerank_integer(edges, src="a", dst="b", damping_pct=150)
-
-    # dst column named 'id' must resolve (e-qualified contribution select)
-    e2 = spark.createDataFrame([(1, 2), (2, 1)], "src long, id long")
-    out = graph.pagerank_integer(e2, src="src", dst="id", iterations=2)
-    assert out.count() == 2
