@@ -1,7 +1,7 @@
 """Lineage-truncating materialization barrier for iterative operators.
 
-The iterative operators (connected components, PageRank, the LSH index
-builds) must truncate lineage at controlled points: without a barrier,
+The iterative operators (connected components, the distributed BPE fit)
+must truncate lineage at controlled points: without a barrier,
 either the upstream pipeline re-evaluates on both sides of a self-join, or
 fixpoint loops accumulate unbounded plans. HOW to truncate depends on the
 deployment:

@@ -466,6 +466,21 @@ def kmeans_centroids(df: DataFrame, assignment: DataFrame,
             for cid, dims in acc.items()}
 
 
+def _l2_rank(pairs: DataFrame, k: int, query_id: str,
+             corpus_id: str) -> DataFrame:
+    """Exact squared L2 of each pair's micro vectors ``__qv``/``__cv``,
+    top-``k`` per query, ties → lowest corpus id. NULL distances are
+    dropped before the window, which would otherwise rank them first."""
+    d2 = F.aggregate(
+        F.zip_with("__qv", "__cv", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"), lambda acc, x: acc + x)
+    scored = (pairs.select(query_id, corpus_id, d2.alias("l2_d2"))
+              .filter(F.col("l2_d2").isNotNull()))
+    w = Window.partitionBy(query_id).orderBy("l2_d2", corpus_id)
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
                         query_id: str = "query_id",
                         corpus_id: str = "corpus_id",
@@ -496,15 +511,7 @@ def brute_force_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
     cond = F.col(query_id) != F.col(corpus_id)
     for m in match_cols:
         cond = cond & (F.col(m) == F.col(f"__q_{m}"))
-    d2 = F.aggregate(
-        F.zip_with("__qv", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = (c.join(F.broadcast(q), cond)
-              .select(query_id, corpus_id, d2.alias("l2_d2"))
-              .filter(F.col("l2_d2").isNotNull()))
-    w = Window.partitionBy(query_id).orderBy("l2_d2", corpus_id)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _l2_rank(c.join(F.broadcast(q), cond), k, query_id, corpus_id)
 
 
 def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
@@ -532,14 +539,7 @@ def exact_rerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
     short = (c.join(F.broadcast(cands.select(query_id, corpus_id)),
                     corpus_id)
              .join(F.broadcast(q), query_id))
-    d2 = F.aggregate(
-        F.zip_with("__qv", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = (short.select(query_id, corpus_id, d2.alias("l2_d2"))
-              .filter(F.col("l2_d2").isNotNull()))
-    w = Window.partitionBy(query_id).orderBy("l2_d2", corpus_id)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _l2_rank(short, k, query_id, corpus_id)
 
 
 def semantic_dedup_survivors(df: DataFrame,
