@@ -38,7 +38,6 @@ _DRIVER_CHECKED_R01_R02 = {
     "robust_bounds_grouped", "outlier_alert", "coalesce_suffix_groups",
     "outlier_alert_global", "string_ops", "token_stats", "lang_id",
     "quality_scores", "hash_split", "quota_sample", "length_histogram",
-    "pack_chunks", "pack_greedy", "pack_utilization", "weighted_sample",
     "fingerprint_groups", "exact_dedup", "minhash_lsh_pairs",
     "near_dedup_survivors", "dedup_components_star", "jaccard_pairs",
     "embedding_near_dup", "alert_fusion",

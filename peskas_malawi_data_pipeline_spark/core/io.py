@@ -19,9 +19,10 @@ The new version is staged whole, then committed by atomically replacing
 ``_CURRENT`` (``os.replace``; the version-pointer pattern behind Delta's
 ``_delta_log`` and Iceberg's catalog pointer). Readers resolve the pointer
 at plan time and only ever see a whole committed version; a crash before the
-commit leaves the previous version live. Single writer per table: two
-concurrent writers stage the same version and the later commit wins.
-Local/HDFS-style paths only (the pointer goes through ``os``).
+commit leaves the previous version live. Precondition: one writer per table
+at a time. Nothing enforces it: two concurrent writers both stage into the
+same ``v<N+1>``, both commit, and the committed version can hold a mix of
+their files. Local/HDFS-style paths only (the pointer goes through ``os``).
 
 Like Delta's log and Iceberg's metadata, each version carries its schema:
 :func:`read_table` hands it to the reader, so opening a committed table

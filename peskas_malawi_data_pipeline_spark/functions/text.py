@@ -233,8 +233,7 @@ def fingerprint(col: Column) -> Column:
 
 def token_chunks(col: Column, size: int, overlap: int = 0) -> Column:
     """Overlapping token-window chunks of a document, as array<string> —
-    the RAG/pretraining document-splitting step (cf. pack_chunks, which
-    concatenates ACROSS documents; this splits WITHIN one).
+    the RAG/pretraining document-splitting step.
 
     Chunk i covers tokens [i·step, i·step + size) with step = size −
     overlap; the final chunk may be shorter, a document of ≤ size tokens

@@ -1,9 +1,7 @@
-from . import (aggregates, dedup, joins, layout, multimodal, packing,
-               ranking, relational, sampling, similarity, structural,
-               validation)
+from . import (aggregates, dedup, joins, layout, multimodal, ranking,
+               relational, similarity, structural, validation)
 
 __all__ = [
-    "aggregates", "dedup", "joins", "layout", "multimodal",
-    "packing", "ranking", "relational", "sampling", "similarity",
-    "structural", "validation",
+    "aggregates", "dedup", "joins", "layout", "multimodal", "ranking",
+    "relational", "similarity", "structural", "validation",
 ]

@@ -484,8 +484,8 @@ def bpe_apply_counts(df: DataFrame, merges, id_col: str = "doc_id",
                  F.sum("n_sub").cast("long").alias("n_subwords")))
 
 
-# document-boundary marker id used by sequence packing (packing.py
-# appends it after every document's ids) — reserved: no symbol maps to 0.
+# document-boundary marker id — reserved: no symbol maps to 0, so a
+# consumer that concatenates documents' ids can separate them with it.
 BOUNDARY_ID = 0
 
 

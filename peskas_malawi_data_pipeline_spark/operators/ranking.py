@@ -108,7 +108,7 @@ def shuffle_shards(df: DataFrame, id_col: str = "doc_id",
                    n_shards: int = 16, seed: str = "shuf:") -> DataFrame:
     """Deterministic global corpus shuffle into equal training shards —
     the pretraining-prep step that breaks source/time locality before
-    sequence packing. Adds ``shard`` (0..n_shards-1) and ``pos`` (0-based
+    documents are batched. Adds ``shard`` (0..n_shards-1) and ``pos`` (0-based
     position within the shard).
 
     Order is the md5 hash of the id (tie-broken by id — a total order), so

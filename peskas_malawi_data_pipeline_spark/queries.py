@@ -22,8 +22,6 @@ from .functions import text as T
 from .operators import aggregates as agg_ops
 from .operators import dedup as dedup_ops
 from .operators import joins as join_ops
-from .operators import packing as pack_ops
-from .operators import sampling as samp_ops
 from .operators import relational as rel_ops
 from .operators import similarity as sim_ops
 from .operators import validation as val_ops
@@ -882,7 +880,7 @@ SELECT CAST(least(floor(len(list_filter(string_split_regex(lower(trim(text)), '[
 FROM documents GROUP BY 1
 """)
 def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-length bucket histogram (sequence-packing planning: how many
+    """Token-length bucket histogram (context-length planning: how many
     docs land in each length band, and the token mass per band). One
     map-side-combined aggregation on a 9-value key."""
     docs = _t(spark, sf_dir, "documents")
@@ -891,498 +889,6 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (docs.groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(n).cast("long").alias("total_tokens")))
-
-
-_DUCK_PACK_BASE = f"""
-toks AS (SELECT doc_id, CAST(len({_DUCK_TOKS}) AS BIGINT) AS tok,
-         CAST(CAST('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 8 AS INT) AS shard
-         FROM documents)"""
-
-
-@register("pack_chunks", f"""
-WITH {_DUCK_PACK_BASE}
-SELECT doc_id, tok AS n_tokens, shard,
-       CAST(floor(coalesce(sum(tok) OVER w, 0) / 256) AS BIGINT) AS bin_id,
-       CAST(coalesce(sum(tok) OVER w, 0) % 256 AS BIGINT) AS bin_offset
-FROM toks
-WINDOW w AS (PARTITION BY shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-""")
-def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk sequence packing: documents laid back-to-back per
-    md5 shard, stream cut every 256 tokens — pure window arithmetic over an
-    exclusive running sum; one shuffle, no Python. The LLM-pretraining
-    packing scheme where documents may straddle window boundaries."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("tok"))
-    return pack_ops.pack_concat_chunks(docs, "tok", target=256, n_shards=8)
-
-
-@register("pack_greedy", f"""
-WITH RECURSIVE {_DUCK_PACK_BASE},
-seq AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-        FROM toks),
-rec(shard, rn, doc_id, tok, bin, fill) AS (
-  SELECT shard, rn, doc_id, tok, CAST(0 AS BIGINT), tok FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT s.shard, s.rn, s.doc_id, s.tok,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.bin ELSE r.bin + 1 END,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.fill + s.tok ELSE s.tok END
-  FROM rec r JOIN seq s ON s.shard = r.shard AND s.rn = r.rn + 1)
-SELECT doc_id, tok AS n_tokens, shard, bin AS bin_id
-FROM rec
-""")
-def pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy boundary-respecting packing (documents never straddle bins):
-    the per-document bin/fill recurrence is sequential within a shard, so it
-    runs as Arrow-batched applyInPandas per md5 shard — parallel across
-    shards, deterministic within. Oracle replays the identical recurrence
-    with a recursive CTE."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("tok"))
-    return pack_ops.pack_greedy_sequential(docs, "tok", target=256, n_shards=8)
-
-
-@register("pack_utilization", f"""
-WITH RECURSIVE {_DUCK_PACK_BASE},
-seq AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-        FROM toks),
-rec(shard, rn, doc_id, tok, bin, fill) AS (
-  SELECT shard, rn, doc_id, tok, CAST(0 AS BIGINT), tok FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT s.shard, s.rn, s.doc_id, s.tok,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.bin ELSE r.bin + 1 END,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.fill + s.tok ELSE s.tok END
-  FROM rec r JOIN seq s ON s.shard = r.shard AND s.rn = r.rn + 1)
-SELECT shard, bin AS bin_id, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(tok) AS BIGINT) AS tokens,
-       (CAST(sum(tok) AS BIGINT) * 1000000) // 256 AS util_micro
-FROM rec GROUP BY shard, bin
-""")
-def pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill statistics per packed bin (docs, tokens, utilization in integer
-    micro-units) — the packing-efficiency report that decides whether the
-    greedy budget is sized right for the corpus."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("tok"))
-    packed = pack_ops.pack_greedy_sequential(docs, "tok", target=256, n_shards=8)
-    return pack_ops.bin_utilization(packed, target=256)
-
-
-def _duck_greedy_rec(tag: str, order_by: str) -> str:
-    """One greedy-packing recursive chain over ``toks`` with the walk
-    order parameterized — shared by the policy-A/B oracle."""
-    return f"""seq{tag} AS (SELECT *, row_number() OVER (
-        PARTITION BY shard ORDER BY {order_by}) AS rn FROM toks),
-rec{tag}(shard, rn, doc_id, tok, bin, fill) AS (
-  SELECT shard, rn, doc_id, tok, CAST(0 AS BIGINT), tok
-  FROM seq{tag} WHERE rn = 1
-  UNION ALL
-  SELECT s.shard, s.rn, s.doc_id, s.tok,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.bin ELSE r.bin + 1 END,
-         CASE WHEN r.fill + s.tok <= 256 THEN r.fill + s.tok ELSE s.tok END
-  FROM rec{tag} r JOIN seq{tag} s
-    ON s.shard = r.shard AND s.rn = r.rn + 1)"""
-
-
-@register("pack_policy_waste", f"""
-WITH RECURSIVE {_DUCK_PACK_BASE},
-{_duck_greedy_rec("a", "doc_id")},
-{_duck_greedy_rec("b", "tok DESC, doc_id")},
-m AS (
-  SELECT 'id_order' AS policy,
-         count(*) AS n_docs,
-         (SELECT count(*) FROM (SELECT DISTINCT shard, bin FROM reca))
-           AS n_bins,
-         sum(tok) AS tokens
-  FROM reca
-  UNION ALL
-  SELECT 'tokens_desc', count(*),
-         (SELECT count(*) FROM (SELECT DISTINCT shard, bin FROM recb)),
-         sum(tok)
-  FROM recb)
-SELECT policy, CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_bins AS BIGINT) AS n_bins,
-       CAST(tokens AS BIGINT) AS tokens,
-       CAST((n_bins * 256 - tokens) * 1000000 // (n_bins * 256)
-            AS BIGINT) AS waste_ppm
-FROM m
-""")
-def pack_policy_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packing-policy A/B: greedy boundary-respecting packing in
-    arrival/id order vs length-DESCENDING order
-    (`packing.pack_greedy_sequential(order='tokens_desc')`), reported
-    as bins used and padding waste in integer ppm — the measurement
-    that decides whether re-sorting the corpus before packing pays for
-    itself. MEASURED VERDICT on this corpus: it does NOT — descending
-    order wastes MORE (152694 vs 129681 ppm at sf0.1) because the
-    single-open-bin sequential greedy strands each bin's tail that only
-    later small docs could fill; the classic first-fit-decreasing win
-    needs multiple open bins. Exactly the assumption an oracle-pinned
-    A/B exists to catch before someone adds a corpus-wide sort on
-    intuition. Oracle: the same recurrence as `pack_greedy`, unrolled
-    twice with the two walk orders."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("tok"))
-    rows = []
-    for policy, order in (("id_order", "id"),
-                          ("tokens_desc", "tokens_desc")):
-        packed = pack_ops.pack_greedy_sequential(
-            docs, "tok", target=256, n_shards=8, order=order)
-        agg = packed.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct(F.struct("shard", "bin_id")).cast("long")
-            .alias("n_bins"),
-            F.sum("n_tokens").cast("long").alias("tokens"))
-        rows.append(agg.select(
-            F.lit(policy).alias("policy"), "n_docs", "n_bins", "tokens",
-            F.expr("CAST((n_bins * 256 - tokens) * 1000000 "
-                   "DIV (n_bins * 256) AS BIGINT)").alias("waste_ppm")))
-    return rows[0].unionByName(rows[1])
-
-
-@register("batch_padding_plan", f"""
-WITH RECURSIVE {_DUCK_PACK_BASE},
-{_duck_greedy_rec("a", "doc_id")},
-{_duck_greedy_rec("b", "tok DESC, doc_id")},
-ba AS (SELECT shard, bin, max(tok) AS mx, count(*) AS c, sum(tok) AS s
-       FROM reca GROUP BY shard, bin),
-bb AS (SELECT shard, bin, max(tok) AS mx, count(*) AS c, sum(tok) AS s
-       FROM recb GROUP BY shard, bin),
-m AS (
-  SELECT 'id_order' AS policy, count(*) AS n_batches,
-         sum(mx * c) AS padded_tokens, sum(s) AS content_tokens
-  FROM ba
-  UNION ALL
-  SELECT 'tokens_desc', count(*), sum(mx * c), sum(s)
-  FROM bb)
-SELECT policy, CAST(n_batches AS BIGINT) AS n_batches,
-       CAST(padded_tokens AS BIGINT) AS padded_tokens,
-       CAST(content_tokens AS BIGINT) AS content_tokens,
-       CAST((padded_tokens - content_tokens) * 1000000 // padded_tokens
-            AS BIGINT) AS padding_ppm
-FROM m
-""")
-def batch_padding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PADDED-BATCH cost A/B — the inference/eval-side dual of
-    `pack_policy_waste`: when documents are batched WITHOUT
-    concatenation (rectangular attention batches padded to the batch
-    max, the serving/eval shape), the cost of a batch is
-    max_len × batch_size, so the metric that matters is PADDING, not
-    stranded bin capacity. The same greedy boundary-respecting batcher
-    is measured in arrival order vs length-sorted order
-    (`pack_greedy_sequential(order='tokens_desc')`): sorting clusters
-    similar lengths into the same batch, so each batch's max sits close
-    to its members — the OPPOSITE trade from packing, where the same
-    sort measurably HURT (pack_policy_waste). The pair pins that the
-    right corpus order depends on the downstream consumer: sorted for
-    padded batching, arrival for concat-packing — per-policy
-    padded/content token totals and padding ppm, all exact integers.
-    Plan: the two applyInPandas shard walks + one (shard, bin) groupBy
-    each + answer-sized finals."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("tok"))
-    rows = []
-    for policy, order in (("id_order", "id"),
-                          ("tokens_desc", "tokens_desc")):
-        packed = pack_ops.pack_greedy_sequential(
-            docs, "tok", target=256, n_shards=8, order=order)
-        per_bin = packed.groupBy("shard", "bin_id").agg(
-            F.max("n_tokens").alias("__mx"),
-            F.count(F.lit(1)).alias("__c"),
-            F.sum("n_tokens").alias("__s"))
-        agg = per_bin.agg(
-            F.count(F.lit(1)).cast("long").alias("n_batches"),
-            F.sum(F.col("__mx") * F.col("__c")).cast("long")
-            .alias("padded_tokens"),
-            F.sum("__s").cast("long").alias("content_tokens"))
-        rows.append(agg.select(
-            F.lit(policy).alias("policy"), "n_batches", "padded_tokens",
-            "content_tokens",
-            F.expr("CAST((padded_tokens - content_tokens) * 1000000 "
-                   "DIV padded_tokens AS BIGINT)").alias("padding_ppm")))
-    return rows[0].unionByName(rows[1])
-
-
-@register("weighted_sample", f"""
-WITH base AS (SELECT doc_id,
-  CAST(len({_DUCK_TOKS}) AS BIGINT) AS w,
-  CAST('0x' || substr(md5('samp:' || CAST(doc_id AS VARCHAR)), 1, 8)
-       AS BIGINT) AS key
-  FROM documents),
-tot AS (SELECT greatest(1, sum(w) // 50) AS stride FROM base),
-cum AS (SELECT doc_id, w, key,
-        sum(w) OVER (ORDER BY key % 8, key, doc_id
-                     ROWS UNBOUNDED PRECEDING) AS ci
-        FROM base)
-SELECT doc_id, w AS n_tokens, key AS sample_key
-FROM cum, tot
-WHERE (CASE WHEN ci <= stride // 2 THEN 0
-            ELSE (ci - stride // 2 - 1) // stride + 1 END)
-    > (CASE WHEN ci - w <= stride // 2 THEN 0
-            ELSE (ci - w - stride // 2 - 1) // stride + 1 END)
-""")
-def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted systematic sampling (~50 docs, probability ∝ token count):
-    deterministic md5 ordering, integer number-line arithmetic, and a
-    TWO-LEVEL prefix sum (per-shard cumsum + tiny broadcast shard offsets)
-    so no row-scale data ever passes through a single-partition window.
-    The oracle's plain global window is mathematically identical because
-    the global order is (shard, key, id) in both."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).cast("long").alias("n_tokens"))
-    return samp_ops.weighted_systematic_sample(
-        docs, "n_tokens", n=50, id_col="doc_id", n_shards=8)
-
-
-#: mixture design for the allocation query: graded weights over the 20
-#: synthetic sources, with src16..src19 deliberately ABSENT (weight 0 —
-#: excluded sources must still appear in the report with target 0).
-_MIX_WEIGHTS = {f"src{i}": (i % 5) + 1 for i in range(16)}
-_MIX_BUDGET = 1_000_000
-
-
-def _duck_weight_case(weights: dict[str, int]) -> str:
-    arms = " ".join(f"WHEN '{s}' THEN {w}"
-                    for s, w in sorted(weights.items()))
-    return f"CASE source {arms} ELSE 0 END"
-
-
-def _duck_mix_weight_case() -> str:
-    return _duck_weight_case(_MIX_WEIGHTS)
-
-
-@register("mixture_allocation", f"""
-WITH toks AS (SELECT source, {_DUCK_TOKS} AS t FROM documents),
-avail AS (SELECT source, CAST(sum(len(t)) AS BIGINT) AS available_tokens
-          FROM toks GROUP BY source),
-w AS (SELECT source, available_tokens,
-             CAST({_duck_mix_weight_case()} AS BIGINT) AS wgt
-      FROM avail),
-q AS (SELECT source, available_tokens,
-             CAST({_MIX_BUDGET} * wgt // {sum(_MIX_WEIGHTS.values())}
-                  AS BIGINT) AS quota,
-             ({_MIX_BUDGET} * wgt) % {sum(_MIX_WEIGHTS.values())} AS rem
-      FROM w),
-r AS (SELECT source, available_tokens, quota,
-             row_number() OVER (ORDER BY rem DESC, source) AS rk,
-             {_MIX_BUDGET} - sum(quota) OVER () AS leftover
-      FROM q),
-t AS (SELECT source, available_tokens,
-             CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
-                  AS BIGINT) AS target_tokens
-      FROM r)
-SELECT source, available_tokens, target_tokens,
-       CASE WHEN available_tokens > 0
-            THEN CAST(target_tokens * 1000000 // available_tokens
-                      AS BIGINT) END AS oversample_ppm
-FROM t
-""")
-def mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mixture token allocation (sampling.mixture_allocation):
-    a 1M-token budget apportioned across sources by largest-remainder
-    (Hamilton) over graded weights — targets sum EXACTLY to the budget,
-    deterministic remainder tie-break, all-integer arithmetic. Sources
-    outside the weight map (src16..19) report target 0; oversample_ppm
-    > 10⁶ flags sources that must repeat (epochs > 1) — the silent
-    mixture bug this report exists to catch. Plan: one per-source
-    aggregation over the corpus; the apportionment window runs on the
-    20-row answer frame."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "source", T.token_count(F.col("text")).cast("long")
-        .alias("n_tokens"))
-    return samp_ops.mixture_allocation(docs, _MIX_WEIGHTS, _MIX_BUDGET)
-
-
-@register("mixture_draw_stats", f"""
-WITH toks AS (SELECT source, doc_id,
-                     CAST(len({_DUCK_TOKS}) AS BIGINT) AS w
-              FROM documents),
-avail AS (SELECT source, CAST(sum(w) AS BIGINT) AS available_tokens
-          FROM toks GROUP BY source),
-wt AS (SELECT source, available_tokens,
-              CAST({_duck_mix_weight_case()} AS BIGINT) AS wgt
-       FROM avail),
-q AS (SELECT source, available_tokens,
-             CAST({_MIX_BUDGET} * wgt // {sum(_MIX_WEIGHTS.values())}
-                  AS BIGINT) AS quota,
-             ({_MIX_BUDGET} * wgt) % {sum(_MIX_WEIGHTS.values())} AS rm
-      FROM wt),
-r AS (SELECT source, available_tokens, quota,
-             row_number() OVER (ORDER BY rm DESC, source) AS rk,
-             {_MIX_BUDGET} - sum(quota) OVER () AS leftover
-      FROM q),
-t AS (SELECT source, available_tokens,
-             CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
-                  AS BIGINT) AS target_tokens
-      FROM r),
-base AS (SELECT source, doc_id, w,
-  CAST('0x' || substr(md5('mixdraw:' || CAST(doc_id AS VARCHAR)), 1, 8)
-       AS BIGINT) AS key
-  FROM toks),
-cum AS (SELECT source, doc_id, w,
-        sum(w) OVER (PARTITION BY source ORDER BY key % 8, key, doc_id
-                     ROWS UNBOUNDED PRECEDING) AS ci
-        FROM base),
-j AS (SELECT c.source, c.w, c.ci - c.w AS ce,
-             t.available_tokens, t.target_tokens,
-             CASE WHEN t.available_tokens > 0
-                  THEN t.target_tokens // t.available_tokens
-                  ELSE 0 END AS full_epochs,
-             CASE WHEN t.available_tokens > 0
-                  THEN t.target_tokens % t.available_tokens
-                  ELSE 0 END AS rem
-      FROM cum c JOIN t USING (source)),
-s AS (SELECT source,
-        CAST(max(available_tokens) AS BIGINT) AS available_tokens,
-        CAST(max(target_tokens) AS BIGINT) AS target_tokens,
-        CAST(max(full_epochs) AS BIGINT) AS full_epochs,
-        CAST(max(rem) AS BIGINT) AS frac_target,
-        CAST(coalesce(sum(CASE WHEN ce < rem THEN w END), 0) AS BIGINT)
-          AS drawn_frac_tokens,
-        CAST(count(CASE WHEN ce < rem THEN 1 END) AS BIGINT)
-          AS drawn_frac_docs,
-        CAST(max(CASE WHEN ce < rem THEN w END) AS BIGINT)
-          AS max_drawn_doc_tokens
-      FROM j GROUP BY source)
-SELECT source, available_tokens, target_tokens, full_epochs, frac_target,
-       drawn_frac_tokens, drawn_frac_docs, max_drawn_doc_tokens,
-       CAST(full_epochs * available_tokens + drawn_frac_tokens AS BIGINT)
-         AS drawn_total_tokens,
-       CAST(full_epochs * available_tokens + drawn_frac_tokens
-            - target_tokens AS BIGINT) AS overshoot,
-       (full_epochs * available_tokens + drawn_frac_tokens
-          = target_tokens)
-       OR (full_epochs * available_tokens + drawn_frac_tokens
-             - target_tokens < max_drawn_doc_tokens) AS within_one_doc
-FROM s
-""")
-def mixture_draw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mixture made EXECUTABLE: `mixture_allocation`'s Hamilton
-    targets fed to the physical draw (sampling.token_budget_prefix_draw
-    — full epochs + deterministic md5-ordered token prefix for the
-    remainder), with the drawn token totals audited per source. The
-    pinned property: ``within_one_doc`` is TRUE for every source —
-    ``0 ≤ drawn − target < tokens(last drawn doc)``, exact when the
-    remainder is 0 (the prefix analogue of landing within one sampling
-    stride; also property-tested in tests/test_packing.py). Oracle:
-    the allocation CTE chain + a per-source global window whose order
-    (shard, key, id) is mathematically identical to the operator's
-    two-level sharded prefix sum. Plan: one shuffle for the sharded
-    cumsum, broadcast offsets/targets, one per-source aggregate."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "source", "doc_id",
-        T.token_count(F.col("text")).cast("long").alias("n_tokens"))
-    alloc = materialize(samp_ops.mixture_allocation(
-        docs, _MIX_WEIGHTS, _MIX_BUDGET).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(docs, alloc)
-    return _mixture_draw_report(draw, alloc)
-
-
-def _mixture_draw_report(draw: DataFrame, alloc: DataFrame) -> DataFrame:
-    """Per-source audit of a token_budget_prefix_draw result against its
-    allocation: drawn fraction mass, the within-one-doc overshoot bound,
-    and the totals — shared by the whitespace-unit and subword-unit
-    draw queries."""
-    frac_w = F.when(F.col("in_fraction"), F.col("n_tokens"))
-    stats = (draw.groupBy("source")
-             .agg(F.max("full_epochs").alias("full_epochs"),
-                  F.coalesce(F.sum(frac_w), F.lit(0)).cast("long")
-                  .alias("drawn_frac_tokens"),
-                  F.count(frac_w).cast("long").alias("drawn_frac_docs"),
-                  F.max(frac_w).cast("long")
-                  .alias("max_drawn_doc_tokens")))
-    out = stats.join(F.broadcast(alloc), "source")
-    drawn_total = (F.col("full_epochs") * F.col("available_tokens")
-                   + F.col("drawn_frac_tokens"))
-    overshoot = drawn_total - F.col("target_tokens")
-    return out.select(
-        "source", "available_tokens", "target_tokens", "full_epochs",
-        F.when(F.col("available_tokens") > 0,
-               F.expr("target_tokens % available_tokens"))
-        .otherwise(F.lit(0)).cast("long").alias("frac_target"),
-        "drawn_frac_tokens", "drawn_frac_docs", "max_drawn_doc_tokens",
-        drawn_total.cast("long").alias("drawn_total_tokens"),
-        overshoot.cast("long").alias("overshoot"),
-        ((overshoot == 0)
-         | (overshoot < F.col("max_drawn_doc_tokens")))
-        .alias("within_one_doc"))
-
-
-@register("mixture_expanded_stats", f"""
-WITH toks AS (SELECT source, doc_id,
-                     CAST(len({_DUCK_TOKS}) AS BIGINT) AS w
-              FROM documents),
-avail AS (SELECT source, CAST(sum(w) AS BIGINT) AS available_tokens
-          FROM toks GROUP BY source),
-wt AS (SELECT source, available_tokens,
-              CAST({_duck_mix_weight_case()} AS BIGINT) AS wgt
-       FROM avail),
-q AS (SELECT source, available_tokens,
-             CAST({_MIX_BUDGET} * wgt // {sum(_MIX_WEIGHTS.values())}
-                  AS BIGINT) AS quota,
-             ({_MIX_BUDGET} * wgt) % {sum(_MIX_WEIGHTS.values())} AS rm
-      FROM wt),
-r AS (SELECT source, available_tokens, quota,
-             row_number() OVER (ORDER BY rm DESC, source) AS rk,
-             {_MIX_BUDGET} - sum(quota) OVER () AS leftover
-      FROM q),
-t AS (SELECT source, available_tokens,
-             CAST(quota + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
-                  AS BIGINT) AS target_tokens
-      FROM r),
-base AS (SELECT source, doc_id, w,
-  CAST('0x' || substr(md5('mixdraw:' || CAST(doc_id AS VARCHAR)), 1, 8)
-       AS BIGINT) AS key
-  FROM toks),
-cum AS (SELECT source, doc_id, w,
-        sum(w) OVER (PARTITION BY source ORDER BY key % 8, key, doc_id
-                     ROWS UNBOUNDED PRECEDING) AS ci
-        FROM base),
-ex AS (SELECT c.source, c.doc_id, c.w,
-              (CASE WHEN g.available_tokens > 0
-                    THEN g.target_tokens // g.available_tokens
-                    ELSE 0 END)
-              + (CASE WHEN c.ci - c.w <
-                      (CASE WHEN g.available_tokens > 0
-                            THEN g.target_tokens % g.available_tokens
-                            ELSE 0 END)
-                 THEN 1 ELSE 0 END) AS reps
-       FROM cum c JOIN t g USING (source))
-SELECT source,
-       CAST(sum(reps) AS BIGINT) AS expanded_docs,
-       CAST(count(CASE WHEN reps > 0 THEN 1 END) AS BIGINT)
-         AS distinct_docs,
-       CAST(sum(w * reps) AS BIGINT) AS expanded_tokens,
-       CAST(max(CASE WHEN reps > 0 THEN reps END) AS BIGINT) AS max_epoch
-FROM ex GROUP BY source HAVING sum(reps) > 0
-""")
-def mixture_expanded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mixture's physical MULTIPLICITY materialized
-    (sampling.expand_epochs): one row per (doc, epoch) — full-epoch
-    repeats plus the fraction copy — audited per source as expanded
-    row/token mass and the deepest epoch index. `mixture_draw_stats`
-    pins that the MULTISET totals hit the Hamilton targets; this query
-    pins the EXPANSION itself (the step a globally-shuffled training
-    mix runs), so expanded_tokens per source == full_epochs·available +
-    drawn_frac from the draw's own accounting. Pure map after the draw
-    (explode over a per-row epoch sequence); target-0 sources drop out
-    on both engines. Oracle: the allocation + prefix-draw chain with
-    reps aggregated arithmetically instead of exploded."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "source", "doc_id",
-        T.token_count(F.col("text")).cast("long").alias("n_tokens"))
-    alloc = materialize(samp_ops.mixture_allocation(
-        docs, _MIX_WEIGHTS, _MIX_BUDGET).drop("oversample_ppm"))
-    draw = samp_ops.token_budget_prefix_draw(docs, alloc)
-    expanded = samp_ops.expand_epochs(draw)
-    return (expanded.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("expanded_docs"),
-                 F.countDistinct("doc_id").cast("long")
-                 .alias("distinct_docs"),
-                 F.sum("n_tokens").cast("long").alias("expanded_tokens"),
-                 F.max("epoch_idx").cast("long").alias("max_epoch")))
 
 
 @register("fingerprint_groups", """
@@ -3427,8 +2933,7 @@ FROM (SELECT doc_id, UNNEST(cs) AS u FROM ch)
 """)
 def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document overlapping token-window chunking (64-token windows,
-    16-token overlap) — the RAG / long-context document-splitting step,
-    complementary to pack_chunks (which concatenates ACROSS documents).
+    16-token overlap) — the RAG / long-context document-splitting step.
     Pure higher-order functions: one tokenize per doc, slice+join per
     chunk, posexplode — no shuffle at all until a downstream consumer
     groups. Chunks are emitted as (id, ordinal, token count, md5) so the

@@ -9,8 +9,9 @@ process pool for the per-trip fan-out (`get_trips` R/ingestion.R:428-475,
   — each Arrow batch of trip ids issues its fetches inside the task, so the
   fan-out scales with the cluster, not one machine's process pool. The HTTP
   call is injected (``fetcher``) so tests/offline runs use a local directory
-  of per-trip CSVs; failures yield zero rows for that trip and are counted
-  via the ``fetch_ok`` column (reference drops failures silently).
+  of per-trip CSVs. A failed fetch or an unparseable body yields zero rows
+  for that trip, with no marker column, as the reference drops failures
+  silently: the output cannot tell a failed trip from one with no points.
 """
 
 from __future__ import annotations

@@ -170,16 +170,6 @@ def test_anti_join_prunes_filter_side_to_keys(spark):
     assert "GreaterThan(o_totalprice,300000.0)" in p
 
 
-def test_pack_chunks_single_shuffle(spark):
-    """Concat-chunk packing is one shuffle (the per-shard sort) and no
-    Python: the window arithmetic stays JVM-side."""
-    p = plan(spark, "pack_chunks", mode="simple")
-    # exactly one hash exchange (the shard window); the RoundRobin exchange
-    # is the loader's single-row-group parallelization, local-harness only
-    assert p.count("Exchange hashpartitioning") == 1
-    assert "Python" not in p and "ArrowEval" not in p
-
-
 def test_asof_join_is_single_window_not_range_join(spark):
     """asof_join: one hash exchange on the key (the window), never a
     broadcast-nested-loop or cartesian over the time ranges."""
@@ -377,18 +367,14 @@ def test_registry_wide_plan_hygiene(spark):
     queries inherit this gate automatically.
 
     Known-bounded global windows are exempted by name: their window input
-    is n_shards/n_sources/|buckets| rows by construction."""
+    is |buckets| rows by construction."""
     import re
 
     BOUNDED_GLOBAL_WINDOW_OK = {
-        "weighted_sample",   # 8-row shard-total prefix sum
         "ntile_deciles",     # |buckets|-row offset frame (ranking.global_ntile)
         "corpus_shuffle",    # |buckets|-row offset frame (ranking.shuffle_shards)
         "zone_map_skipping",   # |buckets|-row offset frame ×2 layouts
                                # (layout.zone_map_stats via global_row_number)
-        "mixture_allocation",  # n_sources-row apportionment frame: the
-                               # largest-remainder rank/leftover windows run
-                               # AFTER the per-source aggregation
     }
     assert BOUNDED_GLOBAL_WINDOW_OK <= set(REGISTRY), sorted(
         BOUNDED_GLOBAL_WINDOW_OK - set(REGISTRY))
